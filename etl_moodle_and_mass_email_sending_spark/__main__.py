@@ -31,7 +31,19 @@ def _spark():
     return get_spark(app_name="etl-moodle-cli")
 
 
+def _status_counts():
+    """The SENT and FAILED receipt counts, as aggregate columns."""
+    from pyspark.sql import functions as F
+
+    return [
+        F.count_if(F.col("status") == s).alias(s) for s in ("SENT", "FAILED")
+    ]
+
+
 def cmd_normalize(args: argparse.Namespace) -> int:
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
     from .plans.moodle import MoodleParams, normalize_to_moodle
     from .sinks.csv_single import write_csv_single
     from .sources.excel import (
@@ -50,12 +62,18 @@ def cmd_normalize(args: argparse.Namespace) -> int:
         password_year=args.password_year,
     )
     out = normalize_to_moodle(rename_participant_columns(raw), params)
-    write_csv_single(out, args.output)
-    print(f"wrote {out.count()} rows -> {args.output}")
+    # counted while the write runs: a count() would re-run the whole plan
+    written = Observation("normalize")
+    write_csv_single(
+        out.observe(written, F.count(F.lit(1)).alias("n")), args.output
+    )
+    print(f"wrote {written.get['n']} rows -> {args.output}")
     return 0
 
 
 def cmd_send(args: argparse.Namespace) -> int:
+    from pyspark.sql import Observation
+
     from .plans.mailer import render_messages
     from .sinks.csv_single import write_csv_single
     from .sinks.smtp import SmtpConfig, send_all
@@ -104,24 +122,17 @@ def cmd_send(args: argparse.Namespace) -> int:
     receipts = send_all(messages, cfg, already_sent=already)
     # EXACTLY ONE action may consume the receipt plan: it embeds the
     # side-effecting SMTP mapInPandas, so every extra action is a full
-    # re-send. Counts derive from the written file (or one aggregate).
+    # re-send. Counts are observed on the write (or are that one action).
     if args.receipts:
-        write_csv_single(receipts, args.receipts)
+        written = Observation("receipts")
+        write_csv_single(
+            receipts.observe(written, *_status_counts()), args.receipts
+        )
         print(f"receipts -> {args.receipts}")
-        done = spark.read.option("header", True).csv(args.receipts)
-        sent = done.where("status = 'SENT'").count()
-        failed = done.where("status = 'FAILED'").count()
+        counts = written.get
     else:
-        from pyspark.sql import functions as F
-
-        counts = {
-            r["status"]: r["n"]
-            for r in receipts.groupBy("status")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        sent = counts.get("SENT", 0)
-        failed = counts.get("FAILED", 0)
+        counts = receipts.agg(*_status_counts()).first()
+    sent, failed = counts["SENT"], counts["FAILED"]
     mode = "DRY-RUN " if args.dry_run else ""
     print(f"{mode}sent={sent} failed={failed} total={n}")
     return 0 if failed == 0 else 2
@@ -140,9 +151,10 @@ def cmd_preview(args: argparse.Namespace) -> int:
         print(f"{r.email} | {r.nombre} | {r.usuario}")
     if total > len(rows):
         print(f"... ({total - len(rows)} filas mas)")  # app.py:779
-    first = users.limit(1)
-    if first.count():
-        msg = render_messages(first, args.course_name, args.aula_url).first()
+    if total:
+        msg = render_messages(
+            users.limit(1), args.course_name, args.aula_url
+        ).first()
         print("--- subject ---")
         print(msg.subject)
         print("--- plain ---")
@@ -238,8 +250,8 @@ def cmd_send_stream(args: argparse.Namespace) -> int:
         course_name=args.course_name,
         aula_url=args.aula_url,
     )
-    sent = receipts.where("status = 'SENT'").count()
-    failed = receipts.where("status = 'FAILED'").count()
+    counts = receipts.agg(*_status_counts()).first()
+    sent, failed = counts["SENT"], counts["FAILED"]
     mode = "DRY-RUN " if args.dry_run else ""
     print(f"{mode}ledger: sent={sent} failed={failed} "
           f"(receipts parquet in {args.work_dir}/receipts)")

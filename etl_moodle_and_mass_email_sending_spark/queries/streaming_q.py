@@ -2335,10 +2335,11 @@ def stream_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # admissions never exceed total_cap, and the buffer holds
         # every still-unadmitted row of the first total_cap global
         # rows seen so far
-        assert admitted <= len(state["buf"]), (
-            "rate-limit head buffer underflow: staged replay produced "
-            "more batches than RATE_CHUNKS"
-        )
+        if admitted > len(state["buf"]):
+            raise RuntimeError(
+                "rate-limit head buffer underflow: staged replay produced "
+                "more batches than RATE_CHUNKS"
+            )
         n_admitted = admitted
         cents = sum(state["buf"][:admitted])
         del state["buf"][:admitted]

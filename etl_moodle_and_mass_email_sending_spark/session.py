@@ -39,8 +39,10 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # Testdata events.parquet stores TIMESTAMP(NANOS) which Spark's
-        # vectorized reader rejects; read as long and convert in catalog.
+        # An events.parquet written with TIMESTAMP(NANOS) would be rejected
+        # by Spark's vectorized reader; read such columns as long and
+        # convert in catalog. The current testbed stores microseconds
+        # without time zone, which reads as TIMESTAMP_NTZ instead.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Arrow for any pandas_udf / toPandas boundary.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -6,13 +6,13 @@ data model (SURVEY.md §1.1).
 
 Spark mapping (round 15, guide §4 — eliminate the Python boundary):
 header promotion used ``rdd.zipWithIndex``, which pickles EVERY row out
-to Python workers and back (two full row-format conversions). Row
-positions now come from the same arithmetic zipWithIndex applies, done
-in the JVM: a frozen ``monotonically_increasing_id`` encodes
-(partition << 33 | offset); a |partitions|-row cumulative-count frame
-(collected once, broadcast back — the repo's prefix-offsets idiom)
-turns that into the exact global position. No row crosses the Python
-boundary, and the plan is codegen'd end to end.
+to Python workers and back (two full row-format conversions). Only the
+first ``max(header_row + 1, data_start)`` rows are positional, so only
+they are addressed: a frozen ``monotonically_increasing_id`` tags every
+row, one bounded ``limit(...).collect()`` returns the leading rows in
+zipWithIndex order with their tags, and the data is every row whose tag
+is not among the dropped ones. No row crosses the Python boundary, and
+the data plan is a codegen'd filter over the checkpoint.
 Excel bytes are parsed by ``pd.read_excel`` when an engine wheel
 (openpyxl/xlrd) is importable, else by the repo's stdlib-only
 SpreadsheetML reader (:mod:`.xlsx_lite` — the format is public ECMA-376
@@ -45,39 +45,28 @@ def promote_header(
     """Row ``header_row`` becomes the column names; rows < ``data_start``
     are dropped (reference app.py:236–238).
 
-    Positions are zipWithIndex's arithmetic computed in the JVM (see the
-    module docstring): mid = partition << 33 | offset is FROZEN by an
-    eager localCheckpoint (mid is otherwise re-evaluated per action),
-    per-partition row counts collect to the driver (|partitions| rows,
-    bounded), and global position = cum_count_before(partition) +
-    offset via one broadcast join. Empty partitions simply don't appear
-    in the counts; partition order is zipWithIndex's (index-major).
+    ``_mid`` (``monotonically_increasing_id``) is FROZEN by an eager
+    localCheckpoint — it is otherwise re-evaluated per action, and the
+    drop filter below must see the tags the head collect saw. A limit
+    collect takes partitions in index order and rows in partition order,
+    which is zipWithIndex's order, so the head list is positions
+    0..n-1 exactly. Raises ``ValueError`` when the sheet has no row
+    ``header_row``.
     """
     from pyspark.sql import functions as F
 
-    spark = df.sparkSession
     base = df.withColumn(
         "_mid", F.monotonically_increasing_id()
     ).localCheckpoint()
-    pid = F.shiftright(F.col("_mid"), 33)
-    off = F.col("_mid") % F.lit(1 << 33)
-    counts = base.groupBy(pid.alias("_p")).agg(
-        F.count(F.lit(1)).alias("_n")
-    ).collect()
-    cum, offsets = 0, []
-    for r in sorted(counts, key=lambda r: r["_p"]):
-        offsets.append((r["_p"], cum))
-        cum += r["_n"]
-    offs = spark.createDataFrame(offsets, schema="_p long, _o long")
-    indexed = base.join(
-        F.broadcast(offs), pid == F.col("_p")
-    ).withColumn("_pos", off + F.col("_o"))
-    aux = ["_mid", "_p", "_o", "_pos"]
-    header_vals = (
-        indexed.filter(F.col("_pos") == header_row).drop(*aux).first()
-    )
-    names = _dedupe_header_names(header_vals)
-    data = indexed.filter(F.col("_pos") >= data_start).drop(*aux)
+    head = base.limit(max(header_row + 1, data_start)).collect()
+    if len(head) <= header_row:
+        raise ValueError(
+            f"sheet has {len(head)} rows; header row {header_row} "
+            "does not exist"
+        )
+    names = _dedupe_header_names(head[header_row][:-1])
+    dropped = [r["_mid"] for r in head[:data_start]]
+    data = base.filter(~F.col("_mid").isin(dropped)).drop("_mid")
     return data.toDF(*names)
 
 

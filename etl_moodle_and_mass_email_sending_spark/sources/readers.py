@@ -29,18 +29,6 @@ def read_csv_all_string(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def read_csv_inferred(spark: SparkSession, path: str) -> DataFrame:
-    """S3: header-ed CSV with schema inference (preview reader,
-    reference app.py:866)."""
-    check_exists(path)
-    return (
-        spark.read.option("header", True)
-        .option("inferSchema", True)
-        .option("encoding", "UTF-8")
-        .csv(path)
-    )
-
-
 def read_csv_headerless(spark: SparkSession, path: str) -> DataFrame:
     """Raw positional read (columns _c0.._cN, all string) — input to
     header promotion (op P1)."""

@@ -107,6 +107,29 @@ def _ledger_emails(spark: SparkSession, receipts_dir: str) -> DataFrame | None:
     return receipts.where(F.col("status") == "SENT").select("email").distinct()
 
 
+def _stream_session(spark: SparkSession) -> SparkSession:
+    """A clone of ``spark`` whose NEW checkpoints get one dedup state
+    partition per task slot of the host (``defaultParallelism``).
+
+    Spark records ``spark.sql.shuffle.partitions`` in a checkpoint's
+    offset log when the query first starts and restores it on every
+    restart, so this only sizes new checkpoints. The session default
+    (32) would run every micro-batch's state stage in waves of
+    near-empty tasks. Setting it on a clone leaves the caller's conf
+    untouched; the caller's streaming listeners are registered on the
+    clone so they still see the query's progress.
+    """
+    jclone = spark._jsparkSession.cloneSession()
+    for listener in spark._jsparkSession.streams().listListeners():
+        jclone.streams().addListener(listener)
+    clone = SparkSession(spark.sparkContext, jclone)
+    clone.conf.set(
+        "spark.sql.shuffle.partitions",
+        str(spark.sparkContext.defaultParallelism),
+    )
+    return clone
+
+
 def start_send_stream(
     spark: SparkSession,
     roster_dir: str,
@@ -124,8 +147,12 @@ def start_send_stream(
     *write* — i.e. a batch plan per micro-batch. Spark guarantees
     at-least-once foreachBatch execution; the ledger makes delivery
     effectively-once.
+
+    The query runs on :func:`_stream_session`'s clone of ``spark``, so
+    it is listed in the clone's ``streams``, not the caller's.
     """
-    users = stream_recipients(spark, roster_dir, stream_cfg)
+    session = _stream_session(spark)
+    users = stream_recipients(session, roster_dir, stream_cfg)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         sent = _ledger_emails(batch_df.sparkSession, stream_cfg.receipts_dir)

@@ -104,6 +104,117 @@ def test_cli_send_stream_dry_run(spark, tmp_path, capsys):
     assert "sent=2 failed=0" in capsys.readouterr().out  # ledger total
 
 
+def _recorded_shuffle_partitions(checkpoint, batch: int) -> str:
+    """spark.sql.shuffle.partitions as the offset log recorded it."""
+    import json
+
+    with open(os.path.join(checkpoint, "offsets", str(batch))) as f:
+        meta = json.loads(f.read().splitlines()[1])
+    return meta["conf"]["spark.sql.shuffle.partitions"]
+
+
+def test_cli_send_stream_state_partitions_sized_to_host(
+    spark, tmp_path, monkeypatch, capsys
+):
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from etl_moodle_and_mass_email_sending_spark.__main__ import _spark, main
+
+    class Progress(StreamingQueryListener):
+        batches = 0
+
+        def onQueryStarted(self, event):  # noqa: N802
+            pass
+
+        def onQueryIdle(self, event):  # noqa: N802
+            pass
+
+        def onQueryProgress(self, event):  # noqa: N802
+            Progress.batches += 1
+
+        def onQueryTerminated(self, event):  # noqa: N802
+            pass
+
+    # the session the CLI resolves carries a wider value than the host's
+    # task slots, as the session factory's default of 32 does
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE", "32")
+    session = _spark()
+    before = session.conf.get("spark.sql.shuffle.partitions")
+    assert before == "32"
+    roster, work = tmp_path / "roster", tmp_path / "work"
+    roster.mkdir()
+    (roster / "a.csv").write_text(
+        "email,nombre,usuario,contrasena\nana@x.cl,Ana,ana,pw\n",
+        encoding="utf-8",
+    )
+    listener = Progress()
+    session.streams.addListener(listener)
+    try:
+        assert main(["send-stream", str(roster), str(work)]) == 0
+        deadline = time.monotonic() + 10  # listener events are async
+        while not Progress.batches and time.monotonic() < deadline:
+            time.sleep(0.1)
+    finally:
+        session.streams.removeListener(listener)
+    assert "sent=1 failed=0" in capsys.readouterr().out
+    slots = str(spark.sparkContext.defaultParallelism)
+    assert _recorded_shuffle_partitions(work / "checkpoint", 0) == slots
+    assert session.conf.get("spark.sql.shuffle.partitions") == before
+    assert Progress.batches > 0  # the caller's listener saw the drain
+
+
+def test_cli_send_stream_resume_keeps_recorded_state_partitions(
+    spark, tmp_path, monkeypatch, capsys
+):
+    from etl_moodle_and_mass_email_sending_spark.__main__ import main
+    from etl_moodle_and_mass_email_sending_spark.streaming import send_stream
+
+    roster, work = tmp_path / "roster", tmp_path / "work"
+    roster.mkdir()
+    receipts = str(work / "receipts")
+    header = "email,nombre,usuario,contrasena\n"
+    (roster / "a.csv").write_text(
+        header + "ana@x.cl,Ana,ana,pw\nben@y.cl,Ben,ben,pw\n",
+        encoding="utf-8",
+    )
+    # first drain on a checkpoint created with 32 state partitions: the
+    # session default that drains inherited before the count was sized
+    # to the host
+    sized = send_stream._stream_session
+
+    def session_wide(spark):
+        clone = sized(spark)
+        clone.conf.set("spark.sql.shuffle.partitions", "32")
+        return clone
+
+    with monkeypatch.context() as m:
+        m.setattr(send_stream, "_stream_session", session_wide)
+        assert main(["send-stream", str(roster), str(work)]) == 0
+    last_first = (
+        spark.read.parquet(receipts).selectExpr("max(batch_id)").first()[0]
+    )
+    (roster / "b.csv").write_text(
+        header + "ben@y.cl,Ben,ben,pw\ncid@z.cl,Cid,cid,pw\n",
+        encoding="utf-8",
+    )
+    capsys.readouterr()
+    assert main(["send-stream", str(roster), str(work)]) == 0
+    assert "sent=3 failed=0" in capsys.readouterr().out
+    offsets = work / "checkpoint" / "offsets"
+    batches = sorted(int(b) for b in os.listdir(offsets) if b.isdigit())
+    assert batches[-1] > last_first
+    for b in batches:
+        assert _recorded_shuffle_partitions(work / "checkpoint", b) == "32"
+    stores = os.listdir(work / "checkpoint" / "state" / "0")
+    assert sum(d.isdigit() for d in stores) == 32
+    resumed = spark.read.parquet(receipts).where(f"batch_id > {last_first}")
+    assert [(r.email, r.status) for r in resumed.collect()] == [
+        ("cid@z.cl", "SENT")
+    ]
+
+
 def test_bench_line_guard_protects_comparison_set():
     """bench.py's printed-line truncation must never drop the r1-r3
     comparison queries, no matter how many cheap queries join HEADLINE —

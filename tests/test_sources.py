@@ -67,6 +67,49 @@ def test_header_promotion_duplicate_headers(spark, tmp_path):
     assert df.collect()[0]["col_2"] == "b"
 
 
+@pytest.mark.parametrize("header_row,data_start", [(3, 4), (1, 5), (2, 2)])
+def test_header_promotion_matches_zip_with_index(
+    spark, header_row, data_start
+):
+    """Positions are zipWithIndex's: partition index first, then row order
+    inside the partition — across empty leading partitions and a first
+    non-empty partition shorter than ``data_start``."""
+    from etl_moodle_and_mass_email_sending_spark.sources.excel import (
+        promote_header,
+    )
+
+    rows = [(f"a{i}", None if i % 5 == 0 else f"b{i}") for i in range(40)]
+    rows[header_row] = ("h1", "h2")
+    sizes = [0, 0, 2, 0, 3, 1, 0, 34]  # one list per partition, in order
+    parts, at = [], 0
+    for n in sizes:
+        parts.append(rows[at:at + n])
+        at += n
+    rdd = spark.sparkContext.parallelize(parts, len(parts)).flatMap(
+        lambda part: part
+    )
+    raw = spark.createDataFrame(rdd, "x string, y string")
+    assert raw.rdd.glom().map(len).collect() == sizes
+
+    indexed = raw.rdd.zipWithIndex().collect()
+    header = [r for r, i in indexed if i == header_row][0]
+    expected = [tuple(r) for r, i in indexed if i >= data_start]
+
+    out = promote_header(raw, header_row, data_start)
+    assert out.columns == list(header)
+    assert [tuple(r) for r in out.collect()] == expected
+
+
+def test_header_promotion_short_sheet_raises(spark):
+    from etl_moodle_and_mass_email_sending_spark.sources.excel import (
+        promote_header,
+    )
+
+    raw = spark.createDataFrame([("j",), ("j",), ("j",)], "x string")
+    with pytest.raises(ValueError, match="3 rows; header row 3"):
+        promote_header(raw, header_row=3, data_start=4)
+
+
 @pytest.mark.parametrize(
     "header,expected",
     [
