@@ -46,15 +46,6 @@ def _rx(style: str) -> re.Pattern:
     raise ValueError(f"style must be 'format' or 'template', got {style!r}")
 
 
-def pattern_vars(pattern: str, style: str = "format") -> list[str]:
-    """Distinct hole names, in first-appearance order."""
-    seen: list[str] = []
-    for _, var in _split(pattern, _rx(style)):
-        if var is not None and var not in seen:
-            seen.append(var)
-    return seen
-
-
 def compile_pattern(
     pattern: str,
     bindings: Mapping[str, Column],

@@ -172,16 +172,6 @@ def local_part(col: Column) -> Column:
     return F.split(col.cast("string"), "@").getItem(0)
 
 
-def non_blank(col: Column) -> Column:
-    """Predicate: non-null and non-blank after trim (reference app.py:308)."""
-    return col.isNotNull() & (F.length(F.trim(col.cast("string"))) > 0)
-
-
-def blank_to_null(col: Column) -> Column:
-    """'' (after trim) → NULL; used for reference's `or`-chain fallbacks."""
-    return F.nullif(F.trim(col.cast("string")), F.lit(""))
-
-
 # --------------------------------------------------------------------------
 # DuckDB side — SQL snippet generators (same constants).
 # --------------------------------------------------------------------------
@@ -236,6 +226,3 @@ def sql_title_case(expr: str) -> str:
 def sql_local_part(expr: str) -> str:
     return f"string_split(CAST({expr} AS VARCHAR), '@')[1]"
 
-
-def sql_blank_to_null(expr: str) -> str:
-    return f"nullif(trim(CAST({expr} AS VARCHAR)), '')"

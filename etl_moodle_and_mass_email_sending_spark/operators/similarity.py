@@ -229,18 +229,6 @@ def _duck_bucket(vec: str) -> str:
     return "(" + " || ".join(bits) + ")"
 
 
-def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, bucket) for every vector — the LSH index itself."""
-    v = _vectors(spark, sf_dir)
-    return v.select("vec_id", F.expr(_spark_bucket("vec")).alias("bucket"))
-
-
-def sql_ann_lsh_buckets() -> str:
-    return f"""
-    SELECT vec_id, {_duck_bucket('vec')} AS bucket FROM ({_DUCK_VECTORS})
-    """
-
-
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-K: exact cosine ranking restricted to the query's
     LSH bucket."""

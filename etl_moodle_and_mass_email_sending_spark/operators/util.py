@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -27,28 +28,39 @@ _SESSION_STAGE: dict[tuple, DataFrame] = {}
 # in staged_frame/staged_path must be atomic PER KEY: two threads asking
 # for the same key serialize (one builds, the other reuses), while
 # builds of different keys stay concurrent.
-_STAGE_LOCKS: dict[tuple, object] = {}
-_STAGE_LOCKS_GUARD = __import__("threading").Lock()
+_STAGE_LOCKS: dict[tuple, threading.Lock] = {}
+_STAGE_LOCKS_GUARD = threading.Lock()
 
 
-def _stage_lock(full_key: tuple):
+def _stage_lock(full_key: tuple) -> threading.Lock:
     with _STAGE_LOCKS_GUARD:
         lock = _STAGE_LOCKS.get(full_key)
         if lock is None:
-            lock = __import__("threading").Lock()
+            lock = threading.Lock()
             _STAGE_LOCKS[full_key] = lock
         return lock
 
 
+def _prune_stopped(entries: dict, session_of: Callable) -> list:
+    """Drop the ``entries`` whose session has stopped, with their build
+    locks, and return the dropped values. Runs under the lock guard, so
+    concurrent prunes cannot both drop (or look up) the same key."""
+    dropped = []
+    with _STAGE_LOCKS_GUARD:
+        for k, v in list(entries.items()):
+            try:
+                stopped = session_of(v).sparkContext._jsc is None
+            except Exception:
+                stopped = True
+            if stopped:
+                entries.pop(k, None)
+                _STAGE_LOCKS.pop(k, None)
+                dropped.append(v)
+    return dropped
+
+
 def _prune_session_stage() -> None:
-    for k in list(_SESSION_STAGE):
-        df = _SESSION_STAGE[k]
-        try:
-            stopped = df.sparkSession.sparkContext._jsc is None
-        except Exception:
-            stopped = True
-        if stopped:
-            del _SESSION_STAGE[k]
+    _prune_stopped(_SESSION_STAGE, lambda df: df.sparkSession)
 
 
 # Staging ledger (round 13, VERDICT r12 item 2): session-staging makes
@@ -136,15 +148,8 @@ _SESSION_PATHS: dict[tuple, tuple[str, SparkSession]] = {}
 def _prune_session_paths() -> None:
     import shutil
 
-    for k in list(_SESSION_PATHS):
-        path, sess = _SESSION_PATHS[k]
-        try:
-            stopped = sess.sparkContext._jsc is None
-        except Exception:
-            stopped = True
-        if stopped:
-            shutil.rmtree(path, ignore_errors=True)
-            del _SESSION_PATHS[k]
+    for path, _ in _prune_stopped(_SESSION_PATHS, lambda v: v[1]):
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def staged_path(

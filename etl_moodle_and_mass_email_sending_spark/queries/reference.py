@@ -270,16 +270,18 @@ register(
 
 def _send_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scale-safe stamp: the naive form is one global Window.orderBy (a
-    # single-task sort) — instead reuse the production sink's two-pass
-    # range-partition + broadcast-offsets stamp (sinks/smtp.py), and carry
+    # single-task sort) — instead use the production sink's two-pass
+    # range-partition + broadcast-offsets rank (sinks/smtp.py), and carry
     # the total as a broadcast one-row aggregate rather than a second
     # unpartitioned window. Identical output, no single-partition Exchange.
-    from ..sinks.smtp import _stamp_index_two_pass
+    from ..operators.util import two_pass_rank
 
     users = csv_variants.normalize_recipients(
         _variant_moodle_input(spark, sf_dir)
     )
-    stamped = _stamp_index_two_pass(users, "email", num_partitions=8)
+    stamped = two_pass_rank(
+        users, [F.col("email")], out_col="idx", num_partitions=8
+    )
     total = users.agg(F.count("*").alias("_total"))
     return stamped.crossJoin(F.broadcast(total)).select(
         F.col("idx").cast("bigint").alias("idx"),

@@ -26,7 +26,9 @@ deterministic, so two of them carry exact SQL oracles after all:
 
 from __future__ import annotations
 
+import os
 import uuid
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -35,6 +37,7 @@ from ..catalog import load_table
 from ..operators.util import scratch_dir
 from ..registry import register
 from ..streaming import windows as sw
+from ..streaming.replay import drain, land_batch, replay, staged_chunks
 
 GAP_SECONDS = 1800
 
@@ -391,18 +394,15 @@ def stream_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     in micro-batch 1, so the snapshot is exactly the batch latest-per-key
     — the SQL oracle (µs-truncated ts ordering, event_id tie-break, the
     same ordering the sink applies)."""
-    import os
-
     from ..streaming import upsert_stream
 
     base = scratch_dir("ups_q_")
     snap = os.path.join(base, "snapshot")
-    q = upsert_stream.start_upsert_stream(
+    drain(
         sw.stream_events(spark, sf_dir),
-        snap,
+        partial(upsert_stream.on_batch, snap),
         os.path.join(base, "ck"),
     )
-    q.awaitTermination()
     return spark.read.parquet(snap).select(
         "user_id", "event_id", "event_type", "value"
     )
@@ -420,84 +420,6 @@ SELECT user_id, event_id, event_type, value FROM (
 register("stream_upsert_latest", stream_upsert_latest, STREAM_UPSERT_LATEST_SQL)
 
 
-def _stage_ordered_chunks(
-    df,
-    order_col: str,
-    n_chunks: int = 4,
-    cache_key: tuple | None = None,
-) -> str:
-    """Stage a bounded frame as ``n_chunks`` single-file parquet chunks
-    (ordered ranges of ``order_col``, strictly increasing mtimes) under
-    a scratch dir, so a file-source replay with maxFilesPerTrigger=1
-    runs one REAL micro-batch per chunk in arrival order. Shared by the
-    sketch/dedup/decon streams. Test-harness staging, not an operator:
-    a production stream arrives pre-chunked by time. Round 13 (VERDICT
-    r12 item 6): the chunk assignment is two_pass_rank + ntile
-    arithmetic — exact ntile semantics (``order_col`` must be a total
-    order, which every caller's event_id/doc_id is) with no
-    unpartitioned data-sized window even in the harness path.
-
-    With ``cache_key`` the chunks are staged ONCE per session via
-    staged_path (ADVICE r8: bench's warm-up + timed re-invocations were
-    each writing a fresh full copy of the table); the chunking is
-    deterministic (ntile over a total order), so reuse is sound.
-    """
-    import os
-    import shutil
-
-    from ..operators.util import scratch_dir, staged_path
-
-    def _build(base: str) -> None:
-        from ..operators.util import two_pass_rank
-
-        stage = os.path.join(base, "stage")
-        os.makedirs(stage)
-        # exact ntile(n) over a total order, two-pass: the first
-        # (total % n) chunks get ceil(total/n) rows, the rest floor —
-        # computed from the two-pass global rank, no global sort
-        total = df.count()
-        q, r = divmod(total, n_chunks)
-        head = r * (q + 1)
-        oc = F.col(order_col) if isinstance(order_col, str) else order_col
-        ranked = two_pass_rank(df, [oc], out_col="_rk")
-        chunk = F.when(
-            F.col("_rk") <= head,
-            F.floor((F.col("_rk") - 1) / (q + 1)) + 1,
-        ).otherwise(
-            r + F.floor((F.col("_rk") - 1 - head) / max(q, 1)) + 1
-        )
-        chunked = ranked.withColumn(
-            "_chunk", chunk.cast("int")
-        ).drop("_rk")
-        t0 = 1_700_000_000
-        for i in range(1, n_chunks + 1):
-            part_dir = os.path.join(base, f"w{i}")
-            (
-                chunked.filter(F.col("_chunk") == i)
-                .drop("_chunk")
-                .coalesce(1)
-                .write.parquet(part_dir)
-            )
-            src = next(
-                f for f in os.listdir(part_dir) if f.endswith(".parquet")
-            )
-            dst = os.path.join(stage, f"chunk{i:02d}.parquet")
-            shutil.move(os.path.join(part_dir, src), dst)
-            os.utime(dst, (t0 + i, t0 + i))
-
-    if cache_key is not None:
-        # fold the projection + chunking into the key: several stagers
-        # share the events table under different column subsets
-        full_key = (*cache_key, df.schema.simpleString(), n_chunks)
-        base = staged_path(
-            df.sparkSession, full_key, _build, prefix="stage_"
-        )
-    else:
-        base = scratch_dir("stage_")
-        _build(base)
-    return os.path.join(base, "stage")
-
-
 def stream_near_dup_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Online MinHash-LSH near-dedup run as a REAL multi-batch stream:
     the dup corpus is staged as four arrival chunks (doc_id ranges,
@@ -509,8 +431,6 @@ def stream_near_dup_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     of how the replay batches — the staging only exercises the
     stateful-index path. The global-sort ntile here is staging harness,
     not operator: a production stream arrives pre-ordered by time."""
-    import os
-
     from ..operators import dedup
     from ..streaming import neardup_stream
 
@@ -524,24 +444,19 @@ def stream_near_dup_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # without exercising anything new — the admit/drop semantics are
     # batch-count-independent (docstring above), and the pytest
     # equivalence-vs-batch test covers the multi-batch path.
-    stage = _stage_ordered_chunks(
-        corpus, "doc_id", n_chunks=2, cache_key=("stage_ndf2", sf_dir)
-    )
-    docs = (
-        spark.readStream.schema(corpus.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
+    docs = replay(spark, corpus, "doc_id", 2, ("stage_ndf2", sf_dir))
     # 8 shuffle partitions for the per-batch LSH joins — the batches
     # are small slices; see state_shuffle (VERDICT r11 item 5)
     with sw.state_shuffle(spark, 8):
-        q = neardup_stream.start_near_dup_filter_stream(
+        drain(
             docs,
-            os.path.join(base, "store"),
-            os.path.join(base, "out"),
+            partial(
+                neardup_stream.on_batch,
+                os.path.join(base, "store"),
+                os.path.join(base, "out"),
+            ),
             os.path.join(base, "ck"),
         )
-        q.awaitTermination()
     return spark.read.parquet(os.path.join(base, "out"))
 
 
@@ -577,8 +492,6 @@ def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimate — is bit-identical to the batch sketch, which is what lets
     this approximate STREAMING aggregate hash-gate against the batch
     oracle exactly."""
-    import os
-
     from ..streaming import hll_stream
     from ..operators import sketches
 
@@ -586,19 +499,11 @@ def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", "event_id"
     )
-    stage = _stage_ordered_chunks(
-        ev, "event_id", n_chunks=2, cache_key=("stage_events", sf_dir)
-    )
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
+    stream = replay(spark, ev, "event_id", 2, ("stage_events", sf_dir))
     store = os.path.join(base, "store")
-    q = hll_stream.start_hll_stream(
-        stream, store, os.path.join(base, "ck")
+    drain(
+        stream, partial(hll_stream.on_batch, store), os.path.join(base, "ck")
     )
-    q.awaitTermination()
     regs = spark.read.parquet(os.path.join(store, "regs"))
     return sketches.hll_estimate(regs, "event_type")
 
@@ -622,8 +527,6 @@ def stream_cms_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id 0..99 probe spine. Counter addition is order-independent,
     so the streamed table — and every probe — is bit-identical to the
     batch sketch (the additive sibling of stream_hll_distinct)."""
-    import os
-
     from ..operators import sketches
     from ..streaming import cms_stream
 
@@ -631,19 +534,11 @@ def stream_cms_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id"
     )
-    stage = _stage_ordered_chunks(
-        ev, "event_id", n_chunks=2, cache_key=("stage_events", sf_dir)
-    )
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
+    stream = replay(spark, ev, "event_id", 2, ("stage_events", sf_dir))
     store = os.path.join(base, "store")
-    q = cms_stream.start_cms_stream(
-        stream, store, os.path.join(base, "ck")
+    drain(
+        stream, partial(cms_stream.on_batch, store), os.path.join(base, "ck")
     )
-    q.awaitTermination()
     counters = spark.read.parquet(os.path.join(store, "counters"))
     spine = spark.range(100).select(F.col("id").alias("user_id"))
     return sketches.cms_probe(counters, spine, "user_id")
@@ -695,8 +590,6 @@ def stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle applies unchanged (minus its exact-quantile twin columns,
     which would need every value retained — the thing the sketch
     exists to avoid)."""
-    import os
-
     from ..streaming import sample_stream
 
     base = scratch_dir("bks_q_")
@@ -706,22 +599,16 @@ def stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 2 chunks (round 12): the bottom-k sample is rank-mergeable and
     # bit-for-bit batch-count-independent (docstring above); two
     # batches still exercise the cross-batch store merge
-    stage = _stage_ordered_chunks(
-        ev, "event_id", n_chunks=2, cache_key=("stage_events", sf_dir)
-    )
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
+    stream = replay(spark, ev, "event_id", 2, ("stage_events", sf_dir))
     store = os.path.join(base, "store")
     # 8 shuffle partitions for the light per-batch sample maintenance
     # (hash + filter + per-group bottom-k; state_shuffle rationale)
     with sw.state_shuffle(spark, 8):
-        q = sample_stream.start_bottomk_stream(
-            stream, store, os.path.join(base, "ck")
+        drain(
+            stream,
+            partial(sample_stream.on_batch, store),
+            os.path.join(base, "ck"),
         )
-        q.awaitTermination()
     sample = spark.read.parquet(os.path.join(store, "sample"))
     counts = spark.read.parquet(os.path.join(store, "counts"))
     wr = Window.partitionBy("g").orderBy("_v", "_k")
@@ -771,8 +658,6 @@ def stream_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id 0..199 spine probes membership. Set union is idempotent and
     order-independent, so the streamed bitset — and every probe —
     matches the batch bloom exactly, no false negatives included."""
-    import os
-
     from ..operators.sketches import _bloom_buckets
     from ..streaming import bloom_stream
 
@@ -780,19 +665,11 @@ def stream_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id"
     )
-    stage = _stage_ordered_chunks(
-        ev, "event_id", n_chunks=2, cache_key=("stage_events", sf_dir)
-    )
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
+    stream = replay(spark, ev, "event_id", 2, ("stage_events", sf_dir))
     store = os.path.join(base, "store")
-    q = bloom_stream.start_bloom_stream(
-        stream, store, os.path.join(base, "ck")
+    drain(
+        stream, partial(bloom_stream.on_batch, store), os.path.join(base, "ck")
     )
-    q.awaitTermination()
     bits = spark.read.parquet(os.path.join(store, "bits"))
     spine = spark.range(200).select(F.col("id").alias("user_id"))
     probe = spine.select(
@@ -865,8 +742,6 @@ def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     benchmark slice's distinct n-gram set is the STATIC broadcast side.
     Docs arrive whole, so every verdict is complete within its batch
     and the exact batch oracle holds regardless of batching."""
-    import os
-
     from ..operators import text_analysis
     from ..streaming import decon_stream
 
@@ -882,21 +757,11 @@ def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     train = docs.filter(
         F.col("doc_id") % text_analysis.DECON_BENCH_MOD != 0
     )
-    stage = _stage_ordered_chunks(
-        train, "doc_id", n_chunks=2, cache_key=("stage_decon", sf_dir)
-    )
-    stream = (
-        spark.readStream.schema(train.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    q = decon_stream.start_decontaminate_stream(
-        stream,
-        bench,
-        os.path.join(base, "out"),
+    drain(
+        replay(spark, train, "doc_id", 2, ("stage_decon", sf_dir)),
+        partial(decon_stream.on_batch, bench, os.path.join(base, "out")),
         os.path.join(base, "ck"),
     )
-    q.awaitTermination()
     # drop the idempotency partition column (decon_stream.py writes
     # one batch_id partition per micro-batch)
     return spark.read.parquet(os.path.join(base, "out")).drop(
@@ -950,8 +815,6 @@ def stream_crawl_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (session-staged — the same index the batch dedup_incremental
     uses). Verdicts are per-doc and depend only on (doc, index), so
     the exact batch oracle holds regardless of chunking."""
-    import os
-
     from ..operators import dedup
     from ..streaming import crawl_dedup_stream
     from .llmdata import _staged_frozen_index
@@ -962,25 +825,20 @@ def stream_crawl_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the STATIC index (docstring above — oracle batch-count-
     # independent); two batches keep the multi-batch streaming shape,
     # chunks 3/4 only re-paid checkpoint orchestration
-    stage = _stage_ordered_chunks(
-        incoming, "doc_id", n_chunks=2, cache_key=("stage_crawl", sf_dir)
-    )
-    stream = (
-        spark.readStream.schema(incoming.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
+    stream = replay(spark, incoming, "doc_id", 2, ("stage_crawl", sf_dir))
     # 8 shuffle partitions for the per-batch LSH scoring joins — each
     # batch is a quarter-slice vs the broadcast-sized static index
     # (state_shuffle rationale, VERDICT r11 item 5)
     with sw.state_shuffle(spark, 8):
-        q = crawl_dedup_stream.start_crawl_dedup_stream(
+        drain(
             stream,
-            _staged_frozen_index(spark, sf_dir),
-            os.path.join(base, "out"),
+            partial(
+                crawl_dedup_stream.on_batch,
+                _staged_frozen_index(spark, sf_dir),
+                os.path.join(base, "out"),
+            ),
             os.path.join(base, "ck"),
         )
-        q.awaitTermination()
     # drop the idempotency partition column
     return spark.read.parquet(os.path.join(base, "out")).drop("batch_id")
 
@@ -1005,26 +863,15 @@ def stream_pii_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     two arrival chunks (round 12) through streaming/pii_stream.py's stateless
     foreachBatch scrubber. Verdicts are per-doc (pure scan-transform),
     so the exact batch oracle holds regardless of chunking."""
-    import os
-
     from ..streaming import pii_stream
 
     base = scratch_dir("pii_filter_")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    stage = _stage_ordered_chunks(
-        docs, "doc_id", n_chunks=2, cache_key=("stage_pii_docs", sf_dir)
-    )
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    q = pii_stream.start_pii_scrub_stream(
-        stream,
-        os.path.join(base, "out"),
+    drain(
+        replay(spark, docs, "doc_id", 2, ("stage_pii_docs", sf_dir)),
+        partial(pii_stream.on_batch, os.path.join(base, "out")),
         os.path.join(base, "ck"),
     )
-    q.awaitTermination()
     return spark.read.parquet(os.path.join(base, "out")).drop("batch_id")
 
 
@@ -1052,28 +899,17 @@ def stream_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     algebraic partial profile (streaming/profile_stream.py), and the
     registered result is the merge — equal to the batch profile
     because every statistic is algebraic."""
-    import os
-
     from ..streaming import profile_stream
 
     base = scratch_dir("profile_stream_")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value", "props"
     )
-    stage = _stage_ordered_chunks(
-        ev, "event_id", cache_key=("stage_profile_events", sf_dir)
-    )
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    q = profile_stream.start_profile_stream(
-        stream,
-        os.path.join(base, "out"),
+    drain(
+        replay(spark, ev, "event_id", 4, ("stage_profile_events", sf_dir)),
+        partial(profile_stream.on_batch, os.path.join(base, "out")),
         os.path.join(base, "ck"),
     )
-    q.awaitTermination()
     partials = spark.read.parquet(os.path.join(base, "out")).drop(
         "batch_id"
     )
@@ -1114,28 +950,17 @@ def stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-chunk mean value next to its deviation from the all-time mean.
     The replay chunks by event_id ntile with increasing mtimes, so
     batch b IS chunk b+1 and the oracle reproduces the batching."""
-    import os
-
     from ..streaming import drift_stream
 
     base = scratch_dir("drift_stream_")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    stage = _stage_ordered_chunks(
-        ev, "event_id", cache_key=("stage_drift_events", sf_dir)
-    )
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    q = drift_stream.start_drift_stream(
-        stream,
-        os.path.join(base, "out"),
+    drain(
+        replay(spark, ev, "event_id", 4, ("stage_drift_events", sf_dir)),
+        partial(drift_stream.on_batch, os.path.join(base, "out")),
         os.path.join(base, "ck"),
     )
-    q.awaitTermination()
     partials = spark.read.parquet(os.path.join(base, "out"))
     return drift_stream.drift_report(partials)
 
@@ -1179,29 +1004,21 @@ def stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunks by event_id ntile (same staged chunks as the drift
     monitor), so batch b IS chunk b+1 and the oracle reproduces the
     batching with windowed prior sums."""
-    import os
-
     from ..streaming import anomaly_stream
 
     base = scratch_dir("anomaly_stream_")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    stage = _stage_ordered_chunks(
-        ev, "event_id", cache_key=("stage_drift_events", sf_dir)
-    )
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    q = anomaly_stream.start_anomaly_stream(
-        stream,
-        os.path.join(base, "store"),
-        os.path.join(base, "flags"),
+    drain(
+        replay(spark, ev, "event_id", 4, ("stage_drift_events", sf_dir)),
+        partial(
+            anomaly_stream.on_batch,
+            os.path.join(base, "store"),
+            os.path.join(base, "flags"),
+        ),
         os.path.join(base, "ck"),
     )
-    q.awaitTermination()
     flags = spark.read.parquet(os.path.join(base, "flags"))
     return anomaly_stream.anomaly_report(flags)
 
@@ -1264,38 +1081,18 @@ def stream_split_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumers know both volume and arrival spread. The replay chunks by
     doc_id ntile, so batch b IS chunk b+1 and the oracle reproduces the
     batching."""
-    import os
-
     base = scratch_dir("split_sink_")
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source"
     )
-    stage = _stage_ordered_chunks(
-        docs, "doc_id", cache_key=("stage_split_docs", sf_dir)
-    )
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
     out = os.path.join(base, "routed")
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("source", "batch_id")
-            .parquet(out)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", os.path.join(base, "ck"))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        replay(spark, docs, "doc_id", 4, ("stage_split_docs", sf_dir)),
+        lambda batch_df, batch_id: land_batch(
+            batch_df, batch_id, out, "source"
+        ),
+        os.path.join(base, "ck"),
     )
-    q.awaitTermination()
     routed = spark.read.parquet(out)
     return routed.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -1326,30 +1123,24 @@ def stream_manifest_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/manifest_stream.py has the full contract). The replay
     chunks by (o_orderdate, o_orderkey) ntile — a total order — so
     batch b IS chunk b+1 and the oracle reproduces n_batches exactly."""
-    import os
-
     from ..streaming import manifest_stream
 
     base = scratch_dir("mfing_")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate"
     )
-    stage = _stage_ordered_chunks(
+    stream = replay(
+        spark,
         orders,
         F.struct("o_orderdate", "o_orderkey"),
-        cache_key=("stage_manifest_ingest", sf_dir),
+        4,
+        ("stage_manifest_ingest", sf_dir),
     )
-    stream = (
-        spark.readStream.schema(orders.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    q = manifest_stream.start_manifest_stream(
+    drain(
         stream,
-        os.path.join(base, "partials"),
+        partial(manifest_stream.on_batch, os.path.join(base, "partials")),
         os.path.join(base, "ck"),
     )
-    q.awaitTermination()
     return manifest_stream.read_manifest(
         spark, os.path.join(base, "partials")
     )
@@ -1388,21 +1179,11 @@ def stream_mixture_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     pointed at mixture targets instead of value means). The replay
     chunks by doc_id ntile, so batch b IS chunk b+1 and the oracle
     reproduces the batching exactly."""
-    import os
-
     from ..operators import text_analysis as ta
 
     base = scratch_dir("mixmon_")
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
-    )
-    stage = _stage_ordered_chunks(
-        docs, "doc_id", cache_key=("stage_mixmon_docs", sf_dir)
-    )
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
     )
     out = os.path.join(base, "partials")
 
@@ -1410,21 +1191,13 @@ def stream_mixture_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         part = batch_df.groupBy("source").agg(
             F.sum(F.expr(ta._N_TOKS_SPARK)).cast("bigint").alias("toks")
         )
-        (
-            part.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out)
-        )
+        land_batch(part, batch_id, out)
 
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", os.path.join(base, "ck"))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        replay(spark, docs, "doc_id", 4, ("stage_mixmon_docs", sf_dir)),
+        handle,
+        os.path.join(base, "ck"),
     )
-    q.awaitTermination()
     partials = spark.read.parquet(out)
     # The temperature plan needs only per-source n_tokens, and every
     # document lands in exactly one micro-batch — so the plan arm
@@ -1540,8 +1313,6 @@ def stream_fk_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
     idempotent batch_id partitions; the replay chunks by o_orderkey
     ntile, so batch b IS chunk b+1 and the oracle reproduces the
     batching."""
-    import os
-
     base = scratch_dir("fkg_")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey"
@@ -1550,14 +1321,6 @@ def stream_fk_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "customer")
         .filter(F.col("c_custkey") % 10 != 0)
         .select(F.col("c_custkey").alias("o_custkey"))
-    )
-    stage = _stage_ordered_chunks(
-        orders, "o_orderkey", cache_key=("stage_fk_orders", sf_dir)
-    )
-    stream = (
-        spark.readStream.schema(orders.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
     )
     out = os.path.join(base, "receipts")
 
@@ -1570,21 +1333,13 @@ def stream_fk_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count(F.lit(1)).cast("bigint").alias("n_orphan")
             )
         )
-        (
-            receipt.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out)
-        )
+        land_batch(receipt, batch_id, out)
 
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", os.path.join(base, "ck"))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        replay(spark, orders, "o_orderkey", 4, ("stage_fk_orders", sf_dir)),
+        handle,
+        os.path.join(base, "ck"),
     )
-    q.awaitTermination()
     r = spark.read.parquet(out)
     return r.select(
         (F.col("batch_id") + 1).cast("int").alias("chunk"),
@@ -1630,8 +1385,6 @@ def stream_quarantine_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     health report. Counts are additive, so the result is independent
     of how the files batch — the exact batch oracle
     (streaming/quarantine_stream.py has the architecture)."""
-    import os
-
     from ..queries.llmdata import _staged_jsonl_drop
     from ..sources.jsonl import DOCUMENTS_JSONL_SCHEMA
     from ..streaming import quarantine_stream
@@ -1653,12 +1406,11 @@ def stream_quarantine_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(drop)
     )
-    q = quarantine_stream.start_quarantine_stream(
+    drain(
         stream,
-        os.path.join(base, "out"),
+        partial(quarantine_stream.on_batch, os.path.join(base, "out")),
         os.path.join(base, "ck"),
     )
-    q.awaitTermination()
     return (
         spark.read.parquet(os.path.join(base, "out"))
         .groupBy("source")
@@ -1695,8 +1447,6 @@ def stream_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     list — is assembled from the summed partials and equals the batch
     ivf_append exactly (assignment is per-vector independent and
     counts are additive), so sql_ivf_append is the oracle verbatim."""
-    import os
-
     from ..operators import similarity
     from ..operators.similarity import APPEND_MOD, append_receipt
     from ..streaming import ivf_stream
@@ -1705,22 +1455,15 @@ def stream_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     frozen = v.filter(F.col("vec_id") % APPEND_MOD != 0)
     incoming = v.filter(F.col("vec_id") % APPEND_MOD == 0)
     cent = similarity._centroids(frozen).localCheckpoint()
-    stage = _stage_ordered_chunks(
-        incoming, "vec_id", cache_key=("stage_ivf_incoming", sf_dir)
+    stream = replay(
+        spark, incoming, "vec_id", 4, ("stage_ivf_incoming", sf_dir)
     )
     base = scratch_dir("ivf_append_feed_")
-    stream = (
-        spark.readStream.schema(incoming.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    q = ivf_stream.start_ivf_append_stream(
+    drain(
         stream,
-        cent,
-        os.path.join(base, "out"),
+        partial(ivf_stream.on_batch, cent, os.path.join(base, "out")),
         os.path.join(base, "ck"),
     )
-    q.awaitTermination()
     new = (
         spark.read.parquet(os.path.join(base, "out"))
         .groupBy("cid")
@@ -1793,19 +1536,8 @@ def stream_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     the JSON schema not the stream; the readout joins bounded key
     frames only. A production deployment points the same readout at a
     schema-registry table instead of batch 0."""
-    import os
-
     base = scratch_dir("schdrift_")
     feed = _enriched_props(spark, sf_dir)
-    stage = _stage_ordered_chunks(
-        feed, "event_id", n_chunks=2,
-        cache_key=("stage_schema_drift", sf_dir),
-    )
-    stream = (
-        spark.readStream.schema(feed.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
     out = os.path.join(base, "partials")
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
@@ -1816,21 +1548,13 @@ def stream_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("key")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_rows"))
         )
-        (
-            part.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out)
-        )
+        land_batch(part, batch_id, out)
 
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", os.path.join(base, "ck"))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        replay(spark, feed, "event_id", 2, ("stage_schema_drift", sf_dir)),
+        handle,
+        os.path.join(base, "ck"),
     )
-    q.awaitTermination()
     present = spark.read.parquet(out).select("batch_id", "key", "n_rows")
     baseline = (
         present.filter(F.col("batch_id") == 0)
@@ -1915,43 +1639,20 @@ def stream_backfill_handoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     the anti-join is co-located, and the batch side prunes to the
     overlap window (here the overlap chunk) rather than scanning
     history. Receipts are |event_type| rows."""
-    import os
-
     base = scratch_dir("handoff_")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type"
     )
-    stage = _stage_ordered_chunks(
-        ev, "event_id", n_chunks=4,
-        cache_key=("stage_backfill", sf_dir),
-    )
+    key = ("stage_backfill", sf_dir)
     batch_side = spark.read.parquet(
-        *[os.path.join(stage, f"chunk{i:02d}.parquet") for i in (1, 2, 3)]
-    )
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "chunk0[34].parquet")
-        .parquet(stage)
+        *staged_chunks(ev, "event_id", 4, key)[:3]
     )
     out = os.path.join(base, "tail")
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", os.path.join(base, "ck"))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        replay(spark, ev, "event_id", 4, key, first_chunk=3),
+        partial(land_batch, path=out),
+        os.path.join(base, "ck"),
     )
-    q.awaitTermination()
     tail = spark.read.parquet(out).select("event_id", "event_type")
     batch_keys = batch_side.select("event_id")
     net = tail.join(batch_keys, "event_id", "left_anti")
@@ -2061,22 +1762,9 @@ STATE_TTL_CHUNKS = 4
 
 
 def stream_state_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     base = scratch_dir("state_ttl_")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts"
-    )
-    stage = _stage_ordered_chunks(
-        ev,
-        F.struct("ts", "event_id"),
-        n_chunks=STATE_TTL_CHUNKS,
-        cache_key=("stage_state_ttl", sf_dir),
-    )
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
     )
     out = os.path.join(base, "audit")
     prev_state: list[str | None] = [None]  # driver-side: batches run sequentially
@@ -2146,22 +1834,17 @@ def stream_state_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_evicted"),
         ).withColumn("chunk", F.lit(batch_id + 1).cast("int"))
-        (
-            audit.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out)
-        )
+        land_batch(audit, batch_id, out)
         prev_state[0] = state_path
 
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", os.path.join(base, "ck"))
-        .trigger(availableNow=True)
-        .start()
+    stream = replay(
+        spark,
+        ev,
+        F.struct("ts", "event_id"),
+        STATE_TTL_CHUNKS,
+        ("stage_state_ttl", sf_dir),
     )
-    q.awaitTermination()
+    drain(stream, handle, os.path.join(base, "ck"))
     return spark.read.parquet(out).select(
         "chunk", "n_arrived", "n_new", "n_active", "n_evicted"
     )
@@ -2261,7 +1944,6 @@ RATE_CHUNKS = 4
 
 
 def stream_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     from decimal import Decimal as _Dec
 
     base = scratch_dir("rate_limit_")
@@ -2269,17 +1951,6 @@ def stream_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "ts",
         F.col("value").cast("decimal(18,2)").alias("v"),
-    )
-    stage = _stage_ordered_chunks(
-        ev,
-        F.struct("ts", "event_id"),
-        n_chunks=RATE_CHUNKS,
-        cache_key=("stage_rate_limit", sf_dir),
-    )
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
     )
     out = os.path.join(base, "audit")
     # Round 15 (VERDICT r14 item 6, guide §1.2/§2.4): the per-batch
@@ -2362,21 +2033,16 @@ def stream_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_deferred bigint, admitted_value double"
             ),
         )
-        (
-            audit.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out)
-        )
+        land_batch(audit, batch_id, out)
 
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", os.path.join(base, "ck"))
-        .trigger(availableNow=True)
-        .start()
+    stream = replay(
+        spark,
+        ev,
+        F.struct("ts", "event_id"),
+        RATE_CHUNKS,
+        ("stage_rate_limit", sf_dir),
     )
-    q.awaitTermination()
+    drain(stream, handle, os.path.join(base, "ck"))
     return spark.read.parquet(out).select(
         "chunk", "n_arrived", "n_admitted", "n_deferred", "admitted_value"
     )
@@ -2467,8 +2133,6 @@ CDC_STREAM_CHUNKS = 4
 
 
 def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from .windows import CDC_BASE_MOD, CDC_CHG_MOD, CDC_DEL_MOD
 
     base_dir = scratch_dir("cdc_apply_")
@@ -2500,17 +2164,6 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("_op.op").isNotNull())
         .select("o_orderkey", "_op.seq", "_op.op", "_op.val")
-    )
-    stage = _stage_ordered_chunks(
-        ops,
-        F.struct("o_orderkey", "seq"),
-        n_chunks=CDC_STREAM_CHUNKS,
-        cache_key=("stage_cdc_apply", sf_dir),
-    )
-    stream = (
-        spark.readStream.schema(ops.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
     )
     out = os.path.join(base_dir, "audit")
     # seed state: the base snapshot, staged once per session
@@ -2605,21 +2258,16 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rows_after",
             "value_after",
         )
-        (
-            audit.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out)
-        )
+        land_batch(audit, batch_id, out)
 
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", os.path.join(base_dir, "ck"))
-        .trigger(availableNow=True)
-        .start()
+    stream = replay(
+        spark,
+        ops,
+        F.struct("o_orderkey", "seq"),
+        CDC_STREAM_CHUNKS,
+        ("stage_cdc_apply", sf_dir),
     )
-    q.awaitTermination()
+    drain(stream, handle, os.path.join(base_dir, "ck"))
     return spark.read.parquet(out).select(
         "chunk",
         "n_ops",

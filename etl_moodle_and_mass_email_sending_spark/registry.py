@@ -27,230 +27,8 @@ def register(name: str, fn: QueryFn, oracle: str | None = None) -> None:
         _ORACLES[name] = oracle
 
 
-# The external correctness gate certifies exactly the first 50 registry
-# entries in iteration order. ROUND-15 ROTATION (VERDICT r14 item 2):
-#   (a) the 10 round-14 plan-rewritten query paths, never externally
-#       certified post-rewrite (only stream_state_ttl and
-#       rel_rfm_segments made the r14 window): stream_rate_limit,
-#       stream_cdc_apply, stream_anomaly, stream_mixture_monitor,
-#       rel_zorder_execute, rel_poisson_bootstrap, dedup_ngram_jaccard,
-#       sim_ivf_nprobe_sweep, sim_recall_at_k_sweep,
-#       sim_recall_after_recluster — each re-verified driver-sim green
-#       at sf0.001 AND sf0.01 this round (stream_rate_limit and
-#       rel_poisson_bootstrap changed AGAIN this round — head-buffer
-#       rewrite, overflow guard — so the window certifies the new
-#       code);
-#   (b) the 6 round-15 plan-changed names (standing policy):
-#       text_mixture_execute / llm_corpus_release / rel_deletion_audit
-#       (session-staged mixture plan), llm_ingest_health (thread-pool
-#       receipts build), sim_ann_recall (session-staged arms),
-#       rel_profile_table (flag-gated two-level distinct; default plan
-#       unchanged but the code path was restructured) — each
-#       driver-sim green at sf0.001 AND sf0.01 on the new code;
-#   (c) the 9 round-14 tail additions never externally certified:
-#       rel_cdc_merge, sim_index_tombstone, sim_spectral_health,
-#       text_bloom_decontaminate, rel_bitemporal_asof,
-#       sim_graph_ann_topk, text_watermark_detect, src_orc_documents,
-#       src_schema_evolution;
-#   (d) the 10 remaining r8-stale names (latest green == r8 in the
-#       union of CORRECTNESS_r01..r14): sim_pq_topk … text_zipf_fit;
-#   (e) the 13 round-14 window-free-sweep plan-changed names
-#       (standing policy: plan-changed names re-certify; listed in the
-#       round-14 notes below): rel_market_basket, rel_changepoint,
-#       rel_compaction_plan, rel_compaction_execute, text_burstiness,
-#       text_js_divergence, text_oov_rate, text_heaps_law,
-#       text_dsir_execute, ref_header_promotion, rel_kmv_setops,
-#       rel_event_paths, sim_dim_health;
-#   (f) 2 refresh slots for the oldest round-9 certifications
-#       (alphabetical head of the 49-name r9 cohort:
-#       dedup_cluster_quota, dedup_components; the remaining 47 drain
-#       from round 16).
-# After CORRECTNESS_r15 goes green, every plan in the registry matches
-# its last externally certified form and the staleness floor is r9
-# (47 names).
-# ROUND-14 ROTATION (kept for the ledger; superseded above;
-# VERDICT r13 items 1+6):
-#   (a) all 4 round-13 tail additions (stream_state_ttl, rel_scd2_asof,
-#       llm_release_diff, mm_keyframe_extract) — never externally
-#       certified; each driver-sim green at sf0.001 and sf0.01 when it
-#       was registered (standing promotion policy), independently
-#       re-run green by the round-13 judge (4/4), and re-run green
-#       again this round before promotion. NOTE: stream_state_ttl and
-#       mm_keyframe_extract changed THIS round (empty-chunk guard per
-#       ADVICE r13 #2; real-engine frame-byte extraction per ADVICE
-#       r13 #1), so the window certifies the new code;
-#   (b) the 5 round-7 stragglers (text_quality_score,
-#       text_source_mixture, text_stratified_sample, text_token_stats,
-#       text_tokenizer_fertility) — the only names still sitting at an
-#       r7 certification, explicitly deferred from the r13 window;
-#   (c) ref_send_counter — externally certified r10, but its plan was
-#       rewritten in round 13 (window-free two-pass prefix offsets,
-#       sinks/smtp.py + operators/util.py); plan-changed names
-#       re-certify (standing policy, VERDICT r13 item 1);
-#   (d) 40 refresh slots for the oldest round-8 certifications
-#       (alphabetical head of the 50-name r8 cohort, computed from the
-#       union of CORRECTNESS_r01..r13: latest green == r8;
-#       dedup_containment … sim_pq_distortion). The remaining 10
-#       (sim_pq_topk, text_idf_drift, text_length_histogram,
-#       text_pmi_collocations, text_repetition, text_sequence_pack,
-#       text_top_terms, text_train_val_split, text_vocab_coverage,
-#       text_zipf_fit) rotate first in round 15, followed by the
-#       49-name r9 cohort (VERDICT r13 item 6: no certification older
-#       than ~6 rounds).
-# After CORRECTNESS_r14 goes green, every registered query has an
-# external certification and the staleness floor is r8 (10 names,
-# listed above, drain first in r15).
-# ROUND-14 TAIL ADDITIONS (standing policy — driver-sim green at
-# sf0.001 AND sf0.01 before registration; rotate into the r15 window
-# with the 10 remaining r8-stale names): rel_cdc_merge,
-# sim_index_tombstone, sim_spectral_health, stream_rate_limit,
-# text_bloom_decontaminate, stream_cdc_apply, and (post-close-battery
-# continuation) rel_poisson_bootstrap, rel_bitemporal_asof,
-# sim_graph_ann_topk, text_watermark_detect, src_orc_documents,
-# src_schema_evolution.
-# ROUND-14 PLAN CHANGES needing r15 re-certification (standing
-# policy: plan-changed names re-certify; every one driver-sim green
-# at sf0.001 AND sf0.01 on the new plan this round). The round-14
-# window-free sweep (no unpartitioned WindowExec in any registered
-# plan — salted two-stage top-Ks → orderBy+limit, bounded global
-# running sums/maxes → two-pass helpers / broadcast triangular
-# joins) changed: rel_market_basket (r13), rel_changepoint (r10),
-# rel_compaction_plan (r11), rel_compaction_execute (r11),
-# text_burstiness (r13), text_js_divergence (r13), text_oov_rate
-# (r13), text_heaps_law (r13), text_dsir_execute (r12),
-# ref_header_promotion (r9), rel_kmv_setops (r12), rel_event_paths
-# (r10), sim_dim_health (r10) — the last three are the
-# empty-partition-spec window fixes (kmv merged top-k → orderBy+limit;
-# event_paths/dim_health share totals via lazily-checkpointed bounded
-# frames + broadcast 1-row aggregates). (rel_skyline,
-# rel_seasonality_index, text_pmi_collocations, text_idf_drift also
-# changed but certify in THIS round's window / the already-scheduled
-# r15 slots.)
-# ROUND-13 ROTATION (kept for the ledger; superseded above;
-# VERDICT r12 items 1+7):
-#   (a) all 13 round-12 tail additions — never externally certified;
-#       every one driver-sim green at sf0.001 and sf0.01 when it was
-#       registered (standing promotion policy), independently re-run
-#       green by the round-12 judge (13/13), and re-run green again
-#       this round before promotion. NOTE: llm_ingest_health and
-#       rel_ingest_freshness changed THIS round (ingest monitors now
-#       append to the materialized governance receipts table, VERDICT
-#       item 3; freshness oracle casts ns→us defensively, ADVICE r12),
-#       so the window certifies the new code;
-#   (b) ref_first_user_render — new this round (VERDICT item 7: the
-#       last pytest-only §2 row, A4 first-row selection, now
-#       oracle-gated; driver-sim green at sf0.001+sf0.01 before
-#       promotion);
-#   (c) 36 refresh slots for the oldest round-7 certifications
-#       (alphabetical head of the 41-name r7 cohort, computed from the
-#       union of CORRECTNESS_r01..r12: latest green == r7;
-#       mm_phash_hamming_hist … text_ppl_buckets). The remaining 5
-#       (text_quality_score, text_source_mixture,
-#       text_stratified_sample, text_token_stats,
-#       text_tokenizer_fertility) rotate in round 14 — one slot of the
-#       prescribed 37 went to (b), which VERDICT item 7 places in this
-#       window explicitly.
-# After CORRECTNESS_r13 goes green, every registered query has an
-# external certification and none is older than round 7 (5 r7
-# stragglers, named above, rotate first in r14).
-# ROUND-13 TAIL ADDITIONS (standing policy — driver-sim green at
-# sf0.001 AND sf0.01 before registration; rotate into the r14 window
-# with the 5 r7 stragglers): stream_state_ttl, rel_scd2_asof,
-# llm_release_diff, mm_keyframe_extract.
-# ROUND-12 ROTATION (kept for the ledger; superseded above;
-# VERDICT r11 item 1):
-#   (a) all 12 round-11 tail additions — never externally certified;
-#       every one driver-sim green at sf0.001 and sf0.01 when it was
-#       registered (standing promotion policy), independently re-run
-#       green by the round-11 judge (12/12), and re-run green again
-#       this round before promotion;
-#   (b) the 32 round-6-stale names — the oldest external
-#       certifications left in the ledger (computed from the union of
-#       CORRECTNESS_r01..r11: latest green == r6);
-#   (c) 6 refresh slots for the oldest round-7 certifications
-#       (alphabetical head of the 47-name r7 cohort:
-#       dedup_threshold_sweep, graph_assortativity,
-#       graph_clustering_coeff, mm_audio_fp_dedup, mm_decode_media,
-#       mm_extract_features; the rest rotate in later rounds).
-# After CORRECTNESS_r12 goes green, every registered query has an
-# external certification and none is older than round 7.
-# ROUND-11 ROTATION (kept for the ledger; superseded above;
-# VERDICT r10 item 1):
-#   (a) all 18 round-10 tail additions — never externally certified;
-#       every one driver-sim green at sf0.001 and sf0.01 when it was
-#       registered (standing promotion policy), independently re-run
-#       green by the round-10 judge, and re-run green again this
-#       round before promotion;
-#   (b) the 20 remaining round-5-stale names (the tail of the r5
-#       cohort after the r9/r10 refreshes) — the oldest external
-#       certifications left in the ledger;
-#   (c) 12 refresh slots for the oldest round-6 certifications
-#       (alphabetical head of the 44-name r6 cohort; the rest rotate
-#       in later rounds).
-# After CORRECTNESS_r11 goes green, every registered query has an
-# external certification and none is older than round 6.
-# ROUND-10 ROTATION (kept for the ledger; superseded above;
-# VERDICT r9 item 4):
-#   (a) all 34 round-9 tail additions — never externally certified
-#       (includes the five end-of-round-snapshot queries and the
-#       round-10-repaired src_manifest_scan: scan window moved inside
-#       the corpus date range, coalesce'd empty-selection oracle);
-#       every one driver-sim green at sf0.01 this round (standing
-#       promotion policy — run BEFORE promotion, recorded here);
-#   (b) text_contamination_direction — its IMPLEMENTATION changed this
-#       round (the gram-stream localCheckpoint replaced by a bounded
-#       bench_grams checkpoint, VERDICT r9 item 3), so the window
-#       certifies the new plan;
-#   (c) 15 refresh slots for the oldest round-5 certifications
-#       (alphabetical head of the remaining 35-name r5 cohort; the
-#       other 20 rotate in round 11).
-# After CORRECTNESS_r10 goes green, every registered query has an
-# external certification and none is older than round 5.
-# ROUND-9 ROTATION (VERDICT r8 item 1; kept for the ledger):
-#   (a) the 10 round-8 tail additions — never externally certified,
-#       all independently driver-sim green during the round-8 judging
-#       (standing promotion policy).  Two of them also changed THIS
-#       round, so the window certifies the new code:
-#       text_contamination_pairs (pre-join corpus distinct removed —
-#       raw gram stream now joins the broadcast evidence first, then
-#       countDistinct; VERDICT r8 #1) and dedup_source_shift
-#       (left-join + coalesce so fully-collapsed sources appear with
-#       keep_rate 0; ADVICE r8 #4);
-#   (b) the complete 27-name round-4 cohort — the stalest external
-#       certifications in the ledger (rel_incremental_agg /
-#       rel_kmv_distinct / rel_latest_per_key first, per the round-8
-#       plan);
-#   (c) 13 refresh slots for the oldest round-5 certifications
-#       (alphabetical head of the 48-name r5 cohort; the rest rotate
-#       in round 10).
-# After CORRECTNESS_r09 goes green, no registered query's last
-# external green is older than round 5.
-# ROUND-8 ROTATION (kept for the ledger; superseded above):
-#   (a) the 16 round-7 tail additions — never externally certified,
-#       all independently driver-sim green in the round-7 judging
-#       (standing promotion policy); four of them (rel_mad_outliers,
-#       graph_jaccard_neighbors, rel_ab_conversion_lift,
-#       mm_payload_byte_stats) were ALSO rewritten this round
-#       (histogram median / degree-cap fix / try_divide /
-#       variable-length payloads), so the window certifies the new
-#       code;
-#   (b) 3 queries whose IMPLEMENTATION changed this round and need
-#       their new code re-certified (standing policy): sim_pq_topk /
-#       sim_ivfpq_topk (session-staged codebooks + encodings),
-#       graph_two_hop (mid-vertex-only degree cap + capped oracle);
-#   (c) 12 refresh slots for the queries whose last external green is
-#       round 3 — the stalest certifications in the ledger;
-#   (d) 16 refresh slots for the oldest round-4 certifications
-#       (alphabetical head of the 45-name r4 cohort; three slots went
-#       to this round's rewrites of text_sequence_pack /
-#       text_top_terms / text_zipf_fit — the latter two are themselves
-#       r4-stale, so their certification doubles as the refresh; the
-#       remaining r4 names rotate in round 9, rel_incremental_agg /
-#       rel_kmv_distinct / rel_latest_per_key first).
-# Everything else stays registered and locally gated every round by
-# tests/test_oracle_parity.py and the tests/driver_sim.py sweep; new
-# round-8 additions start life in the tail (standing policy: promote
-# only after a driver-sim green, rotate into the window next round).
+# An external correctness gate certifies the first 50 entries in order:
+# _WINDOW puts recently re-planned and longest-uncertified names first.
 _WINDOW = [
     # (a) round-14 plan-rewritten paths (VERDICT r14 item 2 head list);
     # stream_rate_limit and rel_poisson_bootstrap changed again in

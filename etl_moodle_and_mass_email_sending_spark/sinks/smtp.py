@@ -140,39 +140,6 @@ def _build_message(sender: str, row):  # type: ignore[no-untyped-def]
     return msg
 
 
-def _stamp_index_two_pass(
-    messages: DataFrame, order_by: str, num_partitions: int
-) -> DataFrame:
-    """Global 1-based send order WITHOUT a single-task sort: range-partition
-    on the order key, then idx = (sum of earlier partitions' counts) +
-    per-partition row_number. The offsets frame is one row per partition —
-    broadcast — so the only data-sized operations are the range shuffle and
-    a partition-local sort (the two-pass zipWithIndex pattern, same as the
-    header-promotion path in sources/excel.py)."""
-    # localCheckpoint: counts and the stamp join both consume `ranged`;
-    # the barrier guarantees ONE evaluation of the range shuffle, so the
-    # sampled partition boundaries (and thus _pid) cannot diverge between
-    # the two jobs.
-    ranged = (
-        messages.repartitionByRange(num_partitions, F.col(order_by))
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    from ..operators.util import prefix_offsets
-
-    counts = ranged.groupBy("_pid").agg(F.count("*").alias("_v"))
-    # broadcast triangular self-join over the |partitions|-row carry
-    # frame — no WindowExec node (round 13, VERDICT r12 item 6)
-    offsets = prefix_offsets(counts, "sum")
-    wlocal = Window.partitionBy("_pid").orderBy(F.col(order_by))
-    return (
-        ranged.withColumn("_local", F.row_number().over(wlocal))
-        .join(F.broadcast(offsets), on="_pid")
-        .withColumn("idx", (F.col("_off") + F.col("_local")).cast("long"))
-        .drop("_pid", "_local", "_off")
-    )
-
-
 def send_all(
     messages: DataFrame,
     cfg: SmtpConfig = SmtpConfig(),
@@ -195,7 +162,15 @@ def send_all(
             how="left_anti",
         )
     if num_partitions and num_partitions > 1:
-        stamped = _stamp_index_two_pass(messages, order_by, num_partitions)
+        # distributed send order: range partitions + broadcast offsets,
+        # no single-task sort (imported here: the CLI never takes this
+        # branch and skips loading the operators package)
+        from ..operators.util import two_pass_rank
+
+        stamped = two_pass_rank(
+            messages, [F.col(order_by)], out_col="idx",
+            num_partitions=num_partitions,
+        )
     else:
         # single-task global sort: fine for roster-scale parity runs; pass
         # num_partitions>1 for the distributed two-pass stamp

@@ -7,11 +7,12 @@ keys (rows NOT being replaced), union the updates, and write a NEW
 snapshot directory, then swap it in.
 
 Durability, stated honestly: plain directories cannot give an atomic
-commit — the swap is rename(old-out) → rename(new-in), and a crash
-between the two renames leaves the data intact in ``<dir>.old`` (the
-next call recovers it automatically). A table format replaces this
-window with an atomic manifest commit; that's the upgrade path, not
-extra code here.
+commit. The swap is ``streaming.replay.swap_store``: the new snapshot
+is written in full into the sibling ``<dir>.staging``, then renamed in
+(``<dir>`` → ``<dir>.old``, staging → ``<dir>``); a crash between the
+two renames leaves the data intact in ``<dir>.old`` and the next call
+recovers it. A table format replaces this window with an atomic
+manifest commit; that's the upgrade path, not extra code here.
 
 Scale notes: the anti-join shuffles on the merge key, the unavoidable
 cost of key-level reconciliation without file-level pruning; a real
@@ -21,20 +22,11 @@ partitions containing update keys rewrite.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..operators.util import scratch_dir
-
-
-def _has_parquet(d: str) -> bool:
-    return os.path.isdir(d) and any(
-        f.endswith(".parquet") for _, _, fs in os.walk(d) for f in fs
-    )
+from ..streaming.replay import swap_store
 
 
 def merge_upsert(
@@ -54,14 +46,6 @@ def merge_upsert(
     changes per key); without it, duplicate update keys raise — silently
     writing both would break the one-row-per-key contract.
     """
-    old = snapshot_dir.rstrip("/") + ".old"
-    # crash recovery: a previous call that died mid-swap left the data
-    # in .old and no live snapshot — restore it before merging
-    if not os.path.isdir(snapshot_dir) and _has_parquet(old):
-        os.rename(old, snapshot_dir)
-    elif os.path.isdir(old):
-        shutil.rmtree(old)  # stale leftover from a completed swap
-
     if version_col is not None:
         w = Window.partitionBy(key).orderBy(F.col(version_col).desc())
         updates = (
@@ -83,27 +67,13 @@ def merge_upsert(
                 "resolve latest-wins inside the batch"
             )
 
-    staging = scratch_dir("upsert_")
-    try:
-        out = os.path.join(staging, "snapshot")
-        if _has_parquet(snapshot_dir):
-            current = spark.read.parquet(snapshot_dir)
-            kept = current.join(
-                updates.select(key).distinct(), on=key, how="left_anti"
-            )
-            merged = kept.unionByName(updates)
-        else:
-            merged = updates
-        writer = merged.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(out)
-        # swap: old snapshot aside, new one in, then drop the old
-        if os.path.isdir(snapshot_dir):
-            os.rename(snapshot_dir, old)
-        shutil.move(out, snapshot_dir)
-        if os.path.isdir(old):
-            shutil.rmtree(old)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+    def merged(prior: str | None) -> DataFrame:
+        if prior is None:
+            return updates
+        kept = spark.read.parquet(prior).join(
+            updates.select(key).distinct(), on=key, how="left_anti"
+        )
+        return kept.unionByName(updates)
+
+    swap_store(snapshot_dir, merged, partition_by)
     return snapshot_dir

@@ -31,6 +31,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .replay import land_batch
+
 SIGMA = 3.0
 
 
@@ -64,93 +66,72 @@ def anomaly_report(flags: DataFrame) -> DataFrame:
     )
 
 
-def start_anomaly_stream(
-    events_stream: DataFrame,
-    store_path: str,
-    flags_path: str,
-    checkpoint_path: str,
-):
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        prior = None
-        if os.path.exists(store_path):
-            partials = spark.read.parquet(store_path).filter(
-                F.col("batch_id") < batch_id
-            )
-            prior = prior_aggregate(partials)
-        # ONE pass over the batch computes the score counts AND the
-        # sufficient statistics (round 14, guide §1.2) — the split
-        # score_batch/batch_sufficient_stats form scanned and shuffled
-        # the batch twice per micro-batch for two aggregates over the
-        # same (event_type) keys. The combined |event_types|-row frame
-        # is checkpointed once and feeds both idempotent sinks.
-        base = _rounded(batch_df)
-        d = F.col("r").cast("decimal(15,6)")
-        stat_aggs = [
-            F.count("r").cast("bigint").alias("n_events"),
-            F.sum(d).cast("decimal(28,6)").alias("s"),
-            F.sum(d * d).cast("decimal(38,12)").alias("ss"),
-        ]
-        if prior is None:
-            combined = (
-                base.groupBy("event_type")
-                .agg(*stat_aggs)
-                .withColumn(
-                    "n_anomalies", F.lit(None).cast("bigint")
-                )
-                .localCheckpoint()
-            )
-        else:
-            joined = base.join(F.broadcast(prior), "event_type", "left")
-            mean = F.col("ps").cast("double") / F.col("pn")
-            var = F.col("pss").cast("double") / F.col("pn") - mean * mean
-            std = F.sqrt(F.greatest(var, F.lit(0.0)))
-            hit = F.when(
-                F.abs(F.col("r") - mean) > F.lit(SIGMA) * std, 1
-            ).otherwise(0)
-            combined = (
-                joined.groupBy("event_type")
-                .agg(
-                    *stat_aggs,
-                    F.sum(hit).cast("bigint").alias("_hits"),
-                    F.first("pn").alias("_pn"),
-                )
-                .select(
-                    "event_type",
-                    "n_events",
-                    "s",
-                    "ss",
-                    F.when(
-                        F.col("_pn").isNull(),
-                        F.lit(None).cast("bigint"),
-                    )
-                    .otherwise(F.col("_hits"))
-                    .alias("n_anomalies"),
-                )
-                .localCheckpoint()
-            )
-        (
-            combined.select("event_type", "n_events", "n_anomalies")
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(flags_path)
+def on_batch(
+    store_path: str, flags_path: str, batch: DataFrame, batch_id: int
+) -> None:
+    """Score one micro-batch against the partials of every earlier batch
+    in ``store_path``, land its flag counts in ``flags_path`` and its
+    own partials in ``store_path`` (both per-batch partitions)."""
+    spark = batch.sparkSession
+    prior = None
+    if os.path.exists(store_path):
+        partials = spark.read.parquet(store_path).filter(
+            F.col("batch_id") < batch_id
         )
-        (
-            combined.select(
-                "event_type", F.col("n_events").alias("n"), "s", "ss"
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(store_path)
+        prior = prior_aggregate(partials)
+    # ONE pass over the batch computes the score counts AND the
+    # sufficient statistics; the combined |event_types|-row frame is
+    # checkpointed once and feeds both idempotent sinks.
+    base = _rounded(batch)
+    d = F.col("r").cast("decimal(15,6)")
+    stat_aggs = [
+        F.count("r").cast("bigint").alias("n_events"),
+        F.sum(d).cast("decimal(28,6)").alias("s"),
+        F.sum(d * d).cast("decimal(38,12)").alias("ss"),
+    ]
+    if prior is None:
+        combined = (
+            base.groupBy("event_type")
+            .agg(*stat_aggs)
+            .withColumn("n_anomalies", F.lit(None).cast("bigint"))
+            .localCheckpoint()
         )
-
-    return (
-        events_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    else:
+        joined = base.join(F.broadcast(prior), "event_type", "left")
+        mean = F.col("ps").cast("double") / F.col("pn")
+        var = F.col("pss").cast("double") / F.col("pn") - mean * mean
+        std = F.sqrt(F.greatest(var, F.lit(0.0)))
+        hit = F.when(
+            F.abs(F.col("r") - mean) > F.lit(SIGMA) * std, 1
+        ).otherwise(0)
+        combined = (
+            joined.groupBy("event_type")
+            .agg(
+                *stat_aggs,
+                F.sum(hit).cast("bigint").alias("_hits"),
+                F.first("pn").alias("_pn"),
+            )
+            .select(
+                "event_type",
+                "n_events",
+                "s",
+                "ss",
+                F.when(
+                    F.col("_pn").isNull(),
+                    F.lit(None).cast("bigint"),
+                )
+                .otherwise(F.col("_hits"))
+                .alias("n_anomalies"),
+            )
+            .localCheckpoint()
+        )
+    land_batch(
+        combined.select("event_type", "n_events", "n_anomalies"),
+        batch_id,
+        flags_path,
+    )
+    land_batch(
+        combined.select("event_type", F.col("n_events").alias("n"), "s", "ss"),
+        batch_id,
+        store_path,
     )

@@ -11,7 +11,8 @@ State: ≤ BLOOM_BITS rows forever — the streaming watchlist/dedup-
 prefilter primitive (has this key EVER been seen?) at fixed state,
 where exact tracking needs unbounded per-key state.
 
-Same rename-swap crash discipline as the other sketch streams.
+The store commit is ``replay.swap_store``, like the other sketch
+streams.
 """
 
 from __future__ import annotations
@@ -22,56 +23,26 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.sketches import _bloom_buckets
+from .replay import swap_store
 
 
-def _has_parquet(d: str) -> bool:
-    return os.path.isdir(d) and any(
-        f.endswith(".parquet") for _, _, fs in os.walk(d) for f in fs
+def on_batch(
+    store_dir: str, batch: DataFrame, batch_id: int, key_col: str = "user_id"
+) -> None:
+    """Union one micro-batch's bloom bucket ids into ``<store_dir>/bits``
+    (read it back and probe)."""
+    if not batch.take(1):
+        return
+    bits = (
+        batch.filter(F.col(key_col).isNotNull())
+        .select(F.explode(_bloom_buckets(F.col(key_col))).alias("bit"))
+        .distinct()
     )
 
+    def merged(prior: str | None) -> DataFrame:
+        if prior is None:
+            return bits
+        prev = batch.sparkSession.read.parquet(prior)
+        return prev.unionByName(bits).distinct()
 
-def start_bloom_stream(
-    events: DataFrame,
-    store_dir: str,
-    checkpoint_dir: str,
-    key_col: str = "user_id",
-):
-    """Maintain the bloom bucket set from the event stream. Returns the
-    StreamingQuery; afterwards read ``<store>/bits`` and probe."""
-    bits_dir = os.path.join(store_dir, "bits")
-    old = bits_dir.rstrip("/") + ".old"
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        if not batch.take(1):
-            return
-        spark = batch.sparkSession
-        if not os.path.isdir(bits_dir) and _has_parquet(old):
-            os.rename(old, bits_dir)
-        bits = (
-            batch.filter(F.col(key_col).isNotNull())
-            .select(
-                F.explode(_bloom_buckets(F.col(key_col))).alias("bit")
-            )
-            .distinct()
-        )
-        if _has_parquet(bits_dir):
-            bits = (
-                spark.read.parquet(bits_dir).unionByName(bits).distinct()
-            )
-        bits = bits.localCheckpoint()  # reads the live dir; cut before swap
-        staging = bits_dir.rstrip("/") + ".staging"
-        bits.write.mode("overwrite").parquet(staging)
-        if os.path.isdir(bits_dir):
-            if os.path.isdir(old):
-                import shutil
-
-                shutil.rmtree(old)
-            os.rename(bits_dir, old)
-        os.rename(staging, bits_dir)
-
-    return (
-        events.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    swap_store(os.path.join(store_dir, "bits"), merged)

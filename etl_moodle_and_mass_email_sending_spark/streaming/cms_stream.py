@@ -13,9 +13,9 @@ about; it cannot enumerate heavy hitters without a candidate set
 (production pairs it with a heap of candidates). The registered query
 probes a fixed key spine.
 
-Same rename-swap crash discipline as hll_stream/merge_upsert; a crash
-between renames only re-merges the last batch, and the checkpoint's
-batch tracking prevents double-merging in normal operation.
+The store commit is ``replay.swap_store``; a crash between its renames
+restores the pre-batch counters, and the checkpoint replays the batch,
+so no batch is ever summed twice.
 """
 
 from __future__ import annotations
@@ -26,55 +26,26 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.sketches import cms_counters
+from .replay import swap_store
 
 
-def _has_parquet(d: str) -> bool:
-    return os.path.isdir(d) and any(
-        f.endswith(".parquet") for _, _, fs in os.walk(d) for f in fs
-    )
+def on_batch(
+    store_dir: str, batch: DataFrame, batch_id: int, key_col: str = "user_id"
+) -> None:
+    """Sum-merge one micro-batch's CMS counters into
+    ``<store_dir>/counters`` (read it back and call ``cms_probe``)."""
+    if not batch.take(1):
+        return
+    ctrs = cms_counters(batch, key_col)
 
+    def merged(prior: str | None) -> DataFrame:
+        if prior is None:
+            return ctrs
+        return (
+            batch.sparkSession.read.parquet(prior)
+            .unionByName(ctrs)
+            .groupBy("r", "bucket")
+            .agg(F.sum("_cnt").alias("_cnt"))
+        )
 
-def start_cms_stream(
-    events: DataFrame,
-    store_dir: str,
-    checkpoint_dir: str,
-    key_col: str = "user_id",
-):
-    """Maintain the CMS counter table from the event stream. Returns
-    the StreamingQuery; afterwards read ``<store>/counters`` and call
-    ``cms_probe``."""
-    ctr_dir = os.path.join(store_dir, "counters")
-    old = ctr_dir.rstrip("/") + ".old"
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        if not batch.take(1):
-            return
-        spark = batch.sparkSession
-        if not os.path.isdir(ctr_dir) and _has_parquet(old):
-            os.rename(old, ctr_dir)
-        ctrs = cms_counters(batch, key_col)
-        if _has_parquet(ctr_dir):
-            merged = (
-                spark.read.parquet(ctr_dir)
-                .unionByName(ctrs)
-                .groupBy("r", "bucket")
-                .agg(F.sum("_cnt").alias("_cnt"))
-            )
-        else:
-            merged = ctrs
-        staging = ctr_dir.rstrip("/") + ".staging"
-        merged.write.mode("overwrite").parquet(staging)
-        if os.path.isdir(ctr_dir):
-            if os.path.isdir(old):
-                import shutil
-
-                shutil.rmtree(old)
-            os.rename(ctr_dir, old)
-        os.rename(staging, ctr_dir)
-
-    return (
-        events.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    swap_store(os.path.join(store_dir, "counters"), merged)

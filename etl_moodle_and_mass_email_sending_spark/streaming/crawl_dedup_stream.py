@@ -24,37 +24,21 @@ no watermark to reason about.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..operators import dedup
+from .replay import land_batch
 
 
-def start_crawl_dedup_stream(
-    docs_stream: DataFrame,
+def on_batch(
     frozen_sigs: DataFrame,
     out_path: str,
-    checkpoint_path: str,
+    batch: DataFrame,
+    batch_id: int,
     threshold: float = dedup.NEAR_THRESHOLD,
-):
-    """Start the stream: docs_stream(doc_id, text) → parquet verdicts
-    (doc_id, n_frozen_matches, match_id, match_est, admitted) per
-    incoming doc. ``frozen_sigs`` is the static (doc_id, sig) index."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        verdicts = dedup.incremental_dedup(
-            frozen_sigs, batch_df, threshold=threshold
-        )
-        (
-            verdicts.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_path)
-        )
-
-    return (
-        docs_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+) -> None:
+    """Score one (doc_id, text) micro-batch against the static
+    (doc_id, sig) index ``frozen_sigs``; verdicts (doc_id,
+    n_frozen_matches, match_id, match_est, admitted) land in the batch's
+    own partition of ``out_path``."""
+    verdicts = dedup.incremental_dedup(frozen_sigs, batch, threshold=threshold)
+    land_batch(verdicts, batch_id, out_path)

@@ -29,65 +29,41 @@ from ..operators.text_analysis import (
     DECON_NGRAM,
     gram_stream,
 )
+from .replay import land_batch
 
 
-def start_decontaminate_stream(
-    docs_stream: DataFrame,
+def on_batch(
     bench_grams: DataFrame,
     out_path: str,
-    checkpoint_path: str,
+    batch: DataFrame,
+    batch_id: int,
     n: int = DECON_NGRAM,
-):
-    """Start the stream: docs_stream(doc_id, text) → parquet rows
-    (doc_id, n_hit_ngrams, n_grams, contaminated) per training doc.
-    ``bench_grams`` is a static (gram) frame."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        grams = gram_stream(batch_df, n)
-        hits = (
-            grams.join(F.broadcast(bench_grams), "gram")
-            .groupBy("doc_id")
-            .agg(F.count("*").alias("n_hit_ngrams"))
-        )
-        # n_grams from the SAME canonical tokenization the gram fan-out
-        # uses (a divergent re-tokenization here would break the exact
-        # oracle); short docs clamp to 0
-        docs = batch_df.select(
-            "doc_id",
-            F.greatest(
-                F.size(F.expr(_SPARK_TOKS)) - (n - 1), F.lit(0)
-            )
-            .cast("bigint")
-            .alias("n_grams"),
-        )
-        out = docs.join(hits, "doc_id", "left").select(
-            "doc_id",
-            F.coalesce(F.col("n_hit_ngrams"), F.lit(0))
-            .cast("bigint")
-            .alias("n_hit_ngrams"),
-            "n_grams",
-            (F.coalesce(F.col("n_hit_ngrams"), F.lit(0)) > 0).alias(
-                "contaminated"
-            ),
-        )
-        # Idempotent sink (ADVICE r8): plain append is at-least-once — a
-        # batch retried after a partial write would duplicate verdict
-        # rows even though the checkpoint marks the batch done. Writing
-        # each batch into its own batch_id=<id> partition and replacing
-        # ONLY that partition (dynamic partitionOverwriteMode) makes a
-        # replayed batch overwrite its own previous partial output, so
-        # the sink holds exactly-once row counts vs the batch oracle.
-        (
-            out.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_path)
-        )
-
-    return (
-        docs_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+) -> None:
+    """Stamp one (doc_id, text) micro-batch against the static (gram)
+    frame ``bench_grams``: rows (doc_id, n_hit_ngrams, n_grams,
+    contaminated) land in the batch's own partition of ``out_path`` (a
+    plain append would duplicate the verdicts of a batch retried after a
+    partial write)."""
+    hits = (
+        gram_stream(batch, n)
+        .join(F.broadcast(bench_grams), "gram")
+        .groupBy("doc_id")
+        .agg(F.count("*").alias("n_hit_ngrams"))
     )
+    # n_grams from the SAME canonical tokenization the gram fan-out
+    # uses (a divergent re-tokenization here would break the exact
+    # oracle); short docs clamp to 0
+    docs = batch.select(
+        "doc_id",
+        F.greatest(F.size(F.expr(_SPARK_TOKS)) - (n - 1), F.lit(0))
+        .cast("bigint")
+        .alias("n_grams"),
+    )
+    n_hit = F.coalesce(F.col("n_hit_ngrams"), F.lit(0))
+    out = docs.join(hits, "doc_id", "left").select(
+        "doc_id",
+        n_hit.cast("bigint").alias("n_hit_ngrams"),
+        "n_grams",
+        (n_hit > 0).alias("contaminated"),
+    )
+    land_batch(out, batch_id, out_path)

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .replay import land_batch
+
 
 def batch_partial_stats(batch_df: DataFrame) -> DataFrame:
     """One micro-batch → per-event_type algebraic partials."""
@@ -56,24 +58,7 @@ def drift_report(partials: DataFrame) -> DataFrame:
     )
 
 
-def start_drift_stream(
-    events_stream: DataFrame,
-    out_path: str,
-    checkpoint_path: str,
-):
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_partial_stats(batch_df)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_path)
-        )
-
-    return (
-        events_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+def on_batch(out_path: str, batch: DataFrame, batch_id: int) -> None:
+    """Land one micro-batch's partials in its own partition of
+    ``out_path``."""
+    land_batch(batch_partial_stats(batch), batch_id, out_path)

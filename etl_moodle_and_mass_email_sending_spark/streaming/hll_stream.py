@@ -11,10 +11,9 @@ needs per-key state (unbounded); the register store is m=64 rows per
 group forever. This is the state-size argument for sketches at
 100 TB/stream-scale, realized.
 
-The store swap reuses the ``merge_upsert`` crash-recovery discipline:
-new snapshot written beside the old, then rename-swap (idempotent
-under re-merge, so a crash between renames only costs a re-run of the
-last batch's merge).
+The store commit is ``replay.swap_store`` (new version written beside
+the old, then rename-swapped; a crash between the renames only costs a
+re-merge of the interrupted batch, which max-merge absorbs).
 """
 
 from __future__ import annotations
@@ -25,61 +24,30 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.sketches import hll_registers
+from .replay import swap_store
 
 
-def _has_parquet(d: str) -> bool:
-    return os.path.isdir(d) and any(
-        f.endswith(".parquet") for _, _, fs in os.walk(d) for f in fs
-    )
-
-
-def start_hll_stream(
-    events: DataFrame,
+def on_batch(
     store_dir: str,
-    checkpoint_dir: str,
+    batch: DataFrame,
+    batch_id: int,
     group_col: str = "event_type",
     key_col: str = "event_id",
-):
-    """Maintain per-group HLL register state from the event stream.
-    Returns the StreamingQuery (caller awaits termination, then reads
-    the register store and calls ``hll_estimate``)."""
-    regs_dir = os.path.join(store_dir, "regs")
-    old = regs_dir.rstrip("/") + ".old"
+) -> None:
+    """Max-merge one micro-batch's per-group HLL registers into
+    ``<store_dir>/regs`` (read it back and call ``hll_estimate``)."""
+    if not batch.take(1):
+        return
+    regs = hll_registers(batch.select(group_col, key_col), group_col, key_col)
 
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        if not batch.take(1):
-            return
-        spark = batch.sparkSession
-        # crash recovery: a previous merge that died mid-swap left the
-        # state only in .old — restore before merging (same discipline
-        # as sinks/upsert.py)
-        if not os.path.isdir(regs_dir) and _has_parquet(old):
-            os.rename(old, regs_dir)
-        regs = hll_registers(
-            batch.select(group_col, key_col), group_col, key_col
+    def merged(prior: str | None) -> DataFrame:
+        if prior is None:
+            return regs
+        return (
+            batch.sparkSession.read.parquet(prior)
+            .unionByName(regs)
+            .groupBy(group_col, "_idx")
+            .agg(F.max("_mj").alias("_mj"))
         )
-        if _has_parquet(regs_dir):
-            merged = (
-                spark.read.parquet(regs_dir)
-                .unionByName(regs)
-                .groupBy(group_col, "_idx")
-                .agg(F.max("_mj").alias("_mj"))
-            )
-        else:
-            merged = regs
-        staging = regs_dir.rstrip("/") + ".staging"
-        merged.write.mode("overwrite").parquet(staging)
-        if os.path.isdir(regs_dir):
-            if os.path.isdir(old):
-                import shutil
 
-                shutil.rmtree(old)
-            os.rename(regs_dir, old)
-        os.rename(staging, regs_dir)
-
-    return (
-        events.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    swap_store(os.path.join(store_dir, "regs"), merged)

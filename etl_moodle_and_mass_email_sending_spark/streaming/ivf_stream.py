@@ -25,33 +25,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.similarity import ivf_assign
+from .replay import land_batch
 
 
-def start_ivf_append_stream(
-    vec_stream: DataFrame,
-    cent: DataFrame,
-    out_path: str,
-    checkpoint_path: str,
-):
-    """Start the stream: (vec_id, vec) micro-batches → per-batch
-    partial (cid, n_new, batch_id) list-growth rows against the
-    static ``cent`` centroid table."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            ivf_assign(batch_df, cent, n_best=1)
-            .groupBy("cid")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_new"))
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_path)
-        )
-
-    return (
-        vec_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+def on_batch(
+    cent: DataFrame, out_path: str, batch: DataFrame, batch_id: int
+) -> None:
+    """Route one (vec_id, vec) micro-batch into the static ``cent``
+    centroid table; its partial (cid, n_new) list-growth rows land in the
+    batch's own partition of ``out_path``."""
+    growth = (
+        ivf_assign(batch, cent, n_best=1)
+        .groupBy("cid")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_new"))
     )
+    land_batch(growth, batch_id, out_path)

@@ -33,42 +33,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .replay import land_batch
 
-def start_manifest_stream(
-    orders_stream: DataFrame,
+
+def on_batch(
     partials_path: str,
-    checkpoint_path: str,
+    batch: DataFrame,
+    batch_id: int,
     date_col: str = "o_orderdate",
-):
-    """Drain ``orders_stream`` into a batch_id-partitioned manifest
-    partials table. Returns the StreamingQuery (caller awaits)."""
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        if not batch.take(1):
-            return
-        part = batch.groupBy(
-            (F.year(date_col) * 100 + F.month(date_col))
-            .cast("int")
-            .alias("file_mo")
-        ).agg(
-            F.min(date_col).alias("lo"),
-            F.max(date_col).alias("hi"),
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        )
-        (
-            part.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(partials_path)
-        )
-
-    return (
-        orders_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+) -> None:
+    """Land one orders micro-batch's per-month (lo, hi, n_rows) partials
+    in its own partition of ``partials_path``."""
+    if not batch.take(1):
+        return
+    month = F.year(date_col) * 100 + F.month(date_col)
+    part = batch.groupBy(month.cast("int").alias("file_mo")).agg(
+        F.min(date_col).alias("lo"),
+        F.max(date_col).alias("hi"),
+        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
     )
+    land_batch(part, batch_id, partials_path)
 
 
 def read_manifest(spark, partials_path: str) -> DataFrame:

@@ -48,115 +48,102 @@ def _bands_of(sigs: DataFrame) -> DataFrame:
     )
 
 
-def start_near_dup_filter_stream(
-    docs: DataFrame,
-    store_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-):
-    """Drain a (doc_id, text, ...) document stream through the LSH
-    filter. Decisions land in ``out_dir`` as (doc_id, n_earlier_dups,
-    dropped); the band/signature index accumulates under ``store_dir``.
-    Returns the StreamingQuery (caller awaits termination)."""
+def on_batch(
+    store_dir: str, out_dir: str, batch: DataFrame, batch_id: int
+) -> None:
+    """Filter one (doc_id, text, ...) micro-batch. Decisions land in
+    ``out_dir`` as (doc_id, n_earlier_dups, dropped); the band/signature
+    index accumulates under ``store_dir``."""
     bands_dir = os.path.join(store_dir, "bands")
     sigs_dir = os.path.join(store_dir, "sigs")
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        if not batch.take(1):
-            return
-        spark = batch.sparkSession
-        # sigs feed the band explode, the within-batch verify, and the
-        # index append — checkpoint so the shingle+minhash expression
-        # runs once (the batch minhash_lsh_pairs lesson)
-        sigs = minhash_signatures(batch).localCheckpoint()
-        bands = _bands_of(sigs)
-        new = bands.select(
-            F.col("doc_id").alias("doc"), "band", "key"
-        )
-        # earlier candidates: the stored index (all strictly earlier
-        # batches) plus smaller doc_ids within this batch
-        cand_within = (
-            bands.select(F.col("doc_id").alias("earlier"), "band", "key")
-            .join(new, on=["band", "key"])
-            .filter(F.col("earlier") < F.col("doc"))
-        )
-        have_store = os.path.isdir(bands_dir) and any(
-            f.endswith(".parquet") for f in os.listdir(bands_dir)
-        )
-        if have_store:
-            stored = spark.read.parquet(bands_dir).select(
-                F.col("doc_id").alias("earlier"), "band", "key"
-            )
-            cand_store = stored.join(new, on=["band", "key"]).filter(
-                F.col("earlier") < F.col("doc")
-            )
-            cand = cand_within.unionByName(cand_store)
-        else:
-            cand = cand_within
-        pairs = cand.select("earlier", "doc").distinct()
-        # signature fetch: the batch's own sigs plus the stored ones
-        # dropDuplicates: insurance against a recovery-replayed batch
-        # having double-appended index rows (decisions would otherwise
-        # double-count through the sig join)
-        all_sigs = (
-            sigs.unionByName(spark.read.parquet(sigs_dir))
-            if have_store
-            else sigs
-        ).dropDuplicates(["doc_id"])
-        est = (
-            F.size(
-                F.expr(
-                    "filter(zip_with(sig_e, sig_d, (x, y) -> x = y), v -> v)"
-                )
-            )
-            / F.lit(float(MINHASH_K))
-        ).alias("est")
-        dups = (
-            pairs.join(
-                all_sigs.select(
-                    F.col("doc_id").alias("earlier"),
-                    F.col("sig").alias("sig_e"),
-                ),
-                on="earlier",
-            )
-            .join(
-                sigs.select(
-                    F.col("doc_id").alias("doc"), F.col("sig").alias("sig_d")
-                ),
-                on="doc",
-            )
-            .select("earlier", "doc", est)
-            .filter(F.col("est") >= NEAR_THRESHOLD)
-            .groupBy("doc")
-            .agg(F.count("*").alias("n_earlier_dups"))
-        )
-        decisions = (
-            sigs.select("doc_id")
-            .join(
-                dups.withColumnRenamed("doc", "doc_id"), on="doc_id",
-                how="left",
-            )
-            .select(
-                "doc_id",
-                F.coalesce("n_earlier_dups", F.lit(0))
-                .cast("bigint")
-                .alias("n_earlier_dups"),
-                (F.coalesce("n_earlier_dups", F.lit(0)) > 0).alias(
-                    "dropped"
-                ),
-            )
-        )
-        decisions.write.mode("append").parquet(out_dir)
-        # grow the index AFTER the decisions are computed: a doc never
-        # matches itself, and a replayed batch (failure recovery)
-        # recomputes identical decisions because the candidate filter
-        # is earlier < doc, immune to its own rows being re-appended
-        bands.write.mode("append").parquet(bands_dir)
-        sigs.write.mode("append").parquet(sigs_dir)
-
-    return (
-        docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    if not batch.take(1):
+        return
+    spark = batch.sparkSession
+    # sigs feed the band explode, the within-batch verify, and the
+    # index append — checkpoint so the shingle+minhash expression
+    # runs once (the batch minhash_lsh_pairs lesson)
+    sigs = minhash_signatures(batch).localCheckpoint()
+    bands = _bands_of(sigs)
+    new = bands.select(
+        F.col("doc_id").alias("doc"), "band", "key"
     )
+    # earlier candidates: the stored index (all strictly earlier
+    # batches) plus smaller doc_ids within this batch
+    cand_within = (
+        bands.select(F.col("doc_id").alias("earlier"), "band", "key")
+        .join(new, on=["band", "key"])
+        .filter(F.col("earlier") < F.col("doc"))
+    )
+    have_store = os.path.isdir(bands_dir) and any(
+        f.endswith(".parquet") for f in os.listdir(bands_dir)
+    )
+    if have_store:
+        stored = spark.read.parquet(bands_dir).select(
+            F.col("doc_id").alias("earlier"), "band", "key"
+        )
+        cand_store = stored.join(new, on=["band", "key"]).filter(
+            F.col("earlier") < F.col("doc")
+        )
+        cand = cand_within.unionByName(cand_store)
+    else:
+        cand = cand_within
+    pairs = cand.select("earlier", "doc").distinct()
+    # signature fetch: the batch's own sigs plus the stored ones
+    # dropDuplicates: insurance against a recovery-replayed batch
+    # having double-appended index rows (decisions would otherwise
+    # double-count through the sig join)
+    all_sigs = (
+        sigs.unionByName(spark.read.parquet(sigs_dir))
+        if have_store
+        else sigs
+    ).dropDuplicates(["doc_id"])
+    est = (
+        F.size(
+            F.expr(
+                "filter(zip_with(sig_e, sig_d, (x, y) -> x = y), v -> v)"
+            )
+        )
+        / F.lit(float(MINHASH_K))
+    ).alias("est")
+    dups = (
+        pairs.join(
+            all_sigs.select(
+                F.col("doc_id").alias("earlier"),
+                F.col("sig").alias("sig_e"),
+            ),
+            on="earlier",
+        )
+        .join(
+            sigs.select(
+                F.col("doc_id").alias("doc"), F.col("sig").alias("sig_d")
+            ),
+            on="doc",
+        )
+        .select("earlier", "doc", est)
+        .filter(F.col("est") >= NEAR_THRESHOLD)
+        .groupBy("doc")
+        .agg(F.count("*").alias("n_earlier_dups"))
+    )
+    decisions = (
+        sigs.select("doc_id")
+        .join(
+            dups.withColumnRenamed("doc", "doc_id"), on="doc_id",
+            how="left",
+        )
+        .select(
+            "doc_id",
+            F.coalesce("n_earlier_dups", F.lit(0))
+            .cast("bigint")
+            .alias("n_earlier_dups"),
+            (F.coalesce("n_earlier_dups", F.lit(0)) > 0).alias(
+                "dropped"
+            ),
+        )
+    )
+    decisions.write.mode("append").parquet(out_dir)
+    # grow the index AFTER the decisions are computed: a doc never
+    # matches itself, and a replayed batch (failure recovery)
+    # recomputes identical decisions because the candidate filter
+    # is earlier < doc, immune to its own rows being re-appended
+    bands.write.mode("append").parquet(bands_dir)
+    sigs.write.mode("append").parquet(sigs_dir)

@@ -23,39 +23,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators import text_analysis
+from .replay import land_batch
 
 
-def start_pii_scrub_stream(
-    docs_stream: DataFrame,
-    out_path: str,
-    checkpoint_path: str,
-):
-    """Start the stream: docs_stream(doc_id, text) → parquet verdicts
-    (doc_id, n_emails, n_phones, has_pii) per doc. The scrubbed text
-    itself is computed in-batch (same expression the batch operator
-    uses) but only the audit columns land — the scrubbed payload would
-    go to the pipeline's landing sink in production."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        verdicts = text_analysis.scrub_pii(batch_df).select(
-            "doc_id",
-            "n_emails",
-            "n_phones",
-            ((F.col("n_emails") + F.col("n_phones")) > 0).alias(
-                "has_pii"
-            ),
-        )
-        (
-            verdicts.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_path)
-        )
-
-    return (
-        docs_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+def on_batch(out_path: str, batch: DataFrame, batch_id: int) -> None:
+    """Scrub one (doc_id, text) micro-batch; verdicts (doc_id, n_emails,
+    n_phones, has_pii) land in the batch's own partition of ``out_path``.
+    The scrubbed text itself is computed in-batch (same expression the
+    batch operator uses) but only the audit columns land — the scrubbed
+    payload would go to the pipeline's landing sink in production."""
+    verdicts = text_analysis.scrub_pii(batch).select(
+        "doc_id",
+        "n_emails",
+        "n_phones",
+        ((F.col("n_emails") + F.col("n_phones")) > 0).alias("has_pii"),
     )
+    land_batch(verdicts, batch_id, out_path)

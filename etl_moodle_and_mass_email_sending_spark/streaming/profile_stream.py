@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .replay import land_batch
+
 PROFILE_NUM = ["value", "user_id"]
 PROFILE_STR = ["event_type", "props"]
 
@@ -100,27 +102,7 @@ def merge_partials(partials: DataFrame) -> DataFrame:
     )
 
 
-def start_profile_stream(
-    events_stream: DataFrame,
-    out_path: str,
-    checkpoint_path: str,
-):
-    """Start the stream: per-batch partial profiles land in per-batch
-    ``batch_id`` partitions (idempotent overwrite)."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_partial_profile(batch_df)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_path)
-        )
-
-    return (
-        events_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+def on_batch(out_path: str, batch: DataFrame, batch_id: int) -> None:
+    """Land one micro-batch's partial profile in its own partition of
+    ``out_path``."""
+    land_batch(batch_partial_profile(batch), batch_id, out_path)

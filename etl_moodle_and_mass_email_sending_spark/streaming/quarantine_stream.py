@@ -23,31 +23,13 @@ files; the final read aggregates |sources|·|batches| partial rows.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..sources import jsonl
+from .replay import land_batch
 
 
-def start_quarantine_stream(
-    docs_stream: DataFrame, out_path: str, checkpoint_path: str
-):
-    """Start the stream: PERMISSIVE-parsed docs stream → per-batch
-    partial (source, n_docs, batch_id) health rows (corrupt lines
-    under ``__corrupt__``)."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            jsonl.jsonl_health(batch_df)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_path)
-        )
-
-    return (
-        docs_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+def on_batch(out_path: str, batch: DataFrame, batch_id: int) -> None:
+    """One PERMISSIVE-parsed micro-batch → partial (source, n_docs) health
+    rows (corrupt lines under ``__corrupt__``) in the batch's own
+    partition of ``out_path``."""
+    land_batch(jsonl.jsonl_health(batch), batch_id, out_path)

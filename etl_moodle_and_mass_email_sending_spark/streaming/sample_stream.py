@@ -12,8 +12,10 @@ State per group: k sample rows + one row count, forever. A per-group
 exact quantile would need every value retained; this is the streaming
 quantile answer at fixed state.
 
-Same rename-swap crash discipline as hll_stream; the dropDuplicates
-on (group, key) makes a recovery re-merge idempotent.
+The two stores commit through ``replay.swap_store`` one after the
+other; the dropDuplicates on (group, key) makes a re-merge of the sample
+idempotent, so a crash between the two commits only re-adds the batch
+to the counts it never reached.
 """
 
 from __future__ import annotations
@@ -24,84 +26,52 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..operators.sketches import QSK_K, _hash_frac
+from .replay import swap_store
 
 
-def _has_parquet(d: str) -> bool:
-    return os.path.isdir(d) and any(
-        f.endswith(".parquet") for _, _, fs in os.walk(d) for f in fs
-    )
-
-
-def start_bottomk_stream(
-    events: DataFrame,
+def on_batch(
     store_dir: str,
-    checkpoint_dir: str,
+    batch: DataFrame,
+    batch_id: int,
     group_col: str = "event_type",
     key_col: str = "event_id",
     value_col: str = "value",
     k: int = QSK_K,
-):
-    """Maintain per-group bottom-k hash samples (and exact row counts)
-    from the stream. Returns the StreamingQuery; afterwards read
-    ``<store>/sample`` and ``<store>/counts``."""
-    smp_dir = os.path.join(store_dir, "sample")
-    cnt_dir = os.path.join(store_dir, "counts")
+) -> None:
+    """Merge one micro-batch into the per-group bottom-k hash samples
+    (``<store_dir>/sample``) and exact row counts (``<store_dir>/counts``)."""
+    if not batch.take(1):
+        return
+    spark = batch.sparkSession
+    rows = batch.filter(F.col(value_col).isNotNull()).select(
+        F.col(group_col).alias("g"),
+        F.col(key_col).alias("_k"),
+        F.col(value_col).alias("_v"),
+    )
+    hashed = rows.withColumn("_frac", _hash_frac(F.col("_k")))
+    counts = rows.groupBy("g").agg(F.count("*").alias("n_rows"))
 
-    def _swap(frame: DataFrame, live: str) -> None:
-        old = live.rstrip("/") + ".old"
-        staging = live.rstrip("/") + ".staging"
-        frame.write.mode("overwrite").parquet(staging)
-        if os.path.isdir(live):
-            if os.path.isdir(old):
-                import shutil
-
-                shutil.rmtree(old)
-            os.rename(live, old)
-        os.rename(staging, live)
-
-    def _recover(live: str) -> None:
-        old = live.rstrip("/") + ".old"
-        if not os.path.isdir(live) and _has_parquet(old):
-            os.rename(old, live)
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        if not batch.take(1):
-            return
-        spark = batch.sparkSession
-        _recover(smp_dir)
-        _recover(cnt_dir)
-        rows = batch.filter(F.col(value_col).isNotNull()).select(
-            F.col(group_col).alias("g"),
-            F.col(key_col).alias("_k"),
-            F.col(value_col).alias("_v"),
+    def merged_sample(prior: str | None) -> DataFrame:
+        both = hashed if prior is None else (
+            spark.read.parquet(prior).unionByName(hashed)
         )
-        hashed = rows.withColumn("_frac", _hash_frac(F.col("_k")))
-        if _has_parquet(smp_dir):
-            hashed = spark.read.parquet(smp_dir).unionByName(hashed)
         w = Window.partitionBy("g").orderBy("_frac", "_k")
-        merged = (
-            hashed.dropDuplicates(["g", "_k"])
+        return (
+            both.dropDuplicates(["g", "_k"])
             .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") <= k)
             .drop("_rn")
         )
-        counts = rows.groupBy("g").agg(F.count("*").alias("n_rows"))
-        if _has_parquet(cnt_dir):
-            counts = (
-                spark.read.parquet(cnt_dir)
-                .unionByName(counts)
-                .groupBy("g")
-                .agg(F.sum("n_rows").alias("n_rows"))
-            )
-        # materialize both BEFORE swapping (they read the live dirs)
-        merged = merged.localCheckpoint()
-        counts = counts.localCheckpoint()
-        _swap(merged, smp_dir)
-        _swap(counts, cnt_dir)
 
-    return (
-        events.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    def merged_counts(prior: str | None) -> DataFrame:
+        if prior is None:
+            return counts
+        return (
+            spark.read.parquet(prior)
+            .unionByName(counts)
+            .groupBy("g")
+            .agg(F.sum("n_rows").alias("n_rows"))
+        )
+
+    swap_store(os.path.join(store_dir, "sample"), merged_sample)
+    swap_store(os.path.join(store_dir, "counts"), merged_counts)

@@ -21,34 +21,23 @@ from pyspark.sql.window import Window
 from ..sinks.upsert import merge_upsert
 
 
-def start_upsert_stream(
-    events: DataFrame,
+def on_batch(
     snapshot_dir: str,
-    checkpoint_dir: str,
+    batch: DataFrame,
+    batch_id: int,
     key: str = "user_id",
     ts_col: str = "ts",
-):
-    """Maintain a latest-event-per-user snapshot from the event stream.
-    Returns the StreamingQuery (caller awaits termination)."""
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        if not batch.take(1):
-            return
-        w = Window.partitionBy(key).orderBy(
-            F.col(ts_col).desc(), F.col("event_id").desc()
-        )
-        latest = (
-            batch.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        merge_upsert(
-            batch.sparkSession, snapshot_dir, latest, key=key,
-        )
-
-    return (
-        events.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+) -> None:
+    """Merge one micro-batch's latest event per ``key`` into the
+    snapshot."""
+    if not batch.take(1):
+        return
+    w = Window.partitionBy(key).orderBy(
+        F.col(ts_col).desc(), F.col("event_id").desc()
     )
+    latest = (
+        batch.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+    merge_upsert(batch.sparkSession, snapshot_dir, latest, key=key)

@@ -4348,44 +4348,3 @@ class TestWatermarkDetect:
         assert plain["n_docs"] == 2 and plain["n_scored"] == 1
         assert plain["n_flagged_z3"] == 0
         assert abs(plain["avg_z"]) < 3  # unwatermarked stays near gamma
-
-
-def test_staged_frame_builds_once_under_concurrency(spark):
-    """Round 15: staged builds are now reached from driver thread pools
-    (the ingest-receipt producers overlap, guide §2.6), so the
-    check-then-build sequence must be atomic PER KEY — concurrent
-    requests for one key build once and share the frame; distinct keys
-    stay concurrent."""
-    import threading
-    from concurrent.futures import ThreadPoolExecutor
-
-    from etl_moodle_and_mass_email_sending_spark.operators import util
-
-    calls = {"a": 0, "b": 0}
-    lock = threading.Lock()
-
-    def build(tag):
-        def _b():
-            with lock:
-                calls[tag] += 1
-            return spark.range(5).toDF("n")
-
-        return _b
-
-    key_a = ("stage_lock_test_a", "x")
-    key_b = ("stage_lock_test_b", "x")
-    with ThreadPoolExecutor(max_workers=8) as pool:
-        futs = [
-            pool.submit(
-                util.staged_frame,
-                spark,
-                key_a if i % 2 == 0 else key_b,
-                build("a" if i % 2 == 0 else "b"),
-            )
-            for i in range(8)
-        ]
-        frames = [f.result() for f in futs]
-    assert calls == {"a": 1, "b": 1}  # one build per key, ever
-    a_ids = {id(frames[i]._jdf) for i in range(0, 8, 2)}
-    assert all(f.count() == 5 for f in frames)
-    assert len(a_ids) == 1  # same shared frame object per key

@@ -1920,46 +1920,6 @@ def test_poisson_bootstrap_matches_python_oracle(spark_mod, rows):
         assert abs(row["boot_sd"] - round(bs, 6)) < 1e-6, g
 
 
-def test_poisson_bootstrap_overflow_guard_fires(spark_mod):
-    """Round 15 (VERDICT r14 item 9): a group whose 5x value mass could
-    breach the exact integer-cents window (2^53) must FAIL LOUDLY, not
-    return a silently wrapped/rounded replica sum."""
-    from decimal import Decimal
-
-    import pytest
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from etl_moodle_and_mass_email_sending_spark.functions.hashing import (
-        hash32,
-    )
-    from etl_moodle_and_mass_email_sending_spark.queries.finance import (
-        BOOT_SEED0,
-        poisson_bootstrap_ci,
-    )
-
-    spark = spark_mod
-    # 20 rows of 1e12 -> sum |v| = 2e13; 500 * 2e13 = 1e16 >= 2^53
-    df = spark.createDataFrame(
-        [(k, "hot", Decimal(10) ** 12) for k in range(20)],
-        schema=T.StructType(
-            [
-                T.StructField("key", T.LongType()),
-                T.StructField("grp", T.StringType()),
-                T.StructField("v", T.DecimalType(18, 2)),
-            ]
-        ),
-    )
-    prepared = df.select(
-        "grp",
-        "v",
-        hash32(F.col("key"), seed=BOOT_SEED0).alias("_ha"),
-        hash32(F.col("key"), seed=BOOT_SEED0 + 1).alias("_hb"),
-    )
-    with pytest.raises(Exception, match="integer-cents bound"):
-        poisson_bootstrap_ci(prepared, group_col="grp").collect()
-
-
 interval_strategy = st.lists(
     st.tuples(
         st.integers(min_value=0, max_value=40),  # vt_from day

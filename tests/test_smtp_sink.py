@@ -60,12 +60,15 @@ def test_two_pass_stamp_matches_global_sort(spark):
 def test_two_pass_stamp_plan_has_no_global_sort(spark):
     """The distributed stamp's plan must not contain a partition-less
     Window sort (the single-task funnel the two-pass path removes)."""
-    from etl_moodle_and_mass_email_sending_spark.sinks.smtp import (
-        _stamp_index_two_pass,
+    from pyspark.sql import functions as F
+
+    from etl_moodle_and_mass_email_sending_spark.operators.util import (
+        two_pass_rank,
     )
 
-    plan = _stamp_index_two_pass(
-        _messages(spark, n=23), "email", 4
+    plan = two_pass_rank(
+        _messages(spark, n=23), [F.col("email")], out_col="idx",
+        num_partitions=4,
     )._jdf.queryExecution().executedPlan().toString()
     for line in plan.splitlines():
         if "Window" in line:

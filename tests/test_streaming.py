@@ -319,20 +319,24 @@ class TestUpsertStream:
         import tempfile
 
         from etl_moodle_and_mass_email_sending_spark.catalog import load_table
+        from functools import partial
+
         from etl_moodle_and_mass_email_sending_spark.streaming import (
             upsert_stream,
             windows as sw,
+        )
+        from etl_moodle_and_mass_email_sending_spark.streaming.replay import (
+            drain,
         )
         from pyspark.sql import functions as F
 
         sf = "/root/testdata/sf0.001"
         snap = tempfile.mkdtemp(prefix="snap_stream_") + "/snapshot"
-        q = upsert_stream.start_upsert_stream(
+        drain(
             sw.stream_events(spark, sf),
-            snap,
+            partial(upsert_stream.on_batch, snap),
             tempfile.mkdtemp(prefix="ck_ups_"),
         )
-        q.awaitTermination()
         got = {
             (r["user_id"], r["event_id"])
             for r in spark.read.parquet(snap).collect()
