@@ -30,28 +30,31 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     if name == "events":
-        # events.ts is TIMESTAMP(NANOS) in parquet, which Spark rejects by
-        # default (PARQUET_TYPE_ILLEGAL).  Set the legacy conf HERE — not only
-        # in session.py — so load_table works in ANY SparkSession (the driver
-        # builds its own vanilla session).  Runtime-settable; verified to take
-        # effect before the read.
+        # The testbed stores events.ts as µs INT64
+        # Timestamp(isAdjustedToUTC=false); an event log written with
+        # TIMESTAMP(NANOS) would be rejected by default
+        # (PARQUET_TYPE_ILLEGAL).  Set the legacy conf HERE — not only in
+        # session.py — so load_table reads either layout in ANY
+        # SparkSession (the driver builds its own vanilla session).
+        # Runtime-settable; verified to take effect before the read.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
-        # events.ts is TIMESTAMP(NANOS) in parquet; with
-        # spark.sql.legacy.parquet.nanosAsLong it arrives as bigint nanos.
-        # Integer division truncates ns→µs.  NOTE: testbed timestamps are NOT
-        # micro-aligned, so any oracle SQL that outputs a raw ts must wrap it
-        # in CAST(ts AS TIMESTAMP) so DuckDB truncates to µs identically.
+        # Two layouts, one TIMESTAMP out:
+        # - TIMESTAMP(NANOS) arrives as bigint nanos under
+        #   spark.sql.legacy.parquet.nanosAsLong (LongType branch); integer
+        #   division truncates ns→µs, so oracle SQL that outputs a raw ts
+        #   wraps it in CAST(ts AS TIMESTAMP) for DuckDB to truncate alike.
+        # - µs Timestamp(isAdjustedToUTC=false) — the testbed's layout, also
+        #   what perfbench writes and what DuckDB COPY emits — arrives as
+        #   TIMESTAMP_NTZ (NTZ branch) and is cast to the session-zone
+        #   TIMESTAMP every downstream operator expects.
         from pyspark.sql import functions as F
         from pyspark.sql.types import LongType, TimestampNTZType
 
         if isinstance(df.schema["ts"].dataType, LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
         elif isinstance(df.schema["ts"].dataType, TimestampNTZType):
-            # an event log rewritten by another engine (e.g. DuckDB COPY)
-            # lands as µs TIMESTAMP_NTZ; normalize to the session-zone
-            # TIMESTAMP every downstream operator expects
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 

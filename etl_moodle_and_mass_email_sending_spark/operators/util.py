@@ -7,70 +7,82 @@ from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from pyspark.sql.window import Window, WindowSpec
 
 # ---------------------------------------------------------------------------
-# Session-scoped staged frames: expensive derived artifacts (LSH pair
-# lists, dedup clusters, PQ codebooks) that several registered queries —
-# and repeated invocations of the same query — consume. Each is built
-# and localCheckpoint'ed once per (SparkContext, key); on a cluster this
-# is the "train once, score many" shape (the codebook/cluster artifact
-# is tiny and session-lived, the corpus passes stay distributed).
-# Keyed by applicationId so a new session rebuilds; entries whose
-# context has been stopped are evicted on every access (ADVICE r6).
+# Session staging: expensive derived artifacts that several registered
+# queries — and repeated invocations of one query — consume are built
+# once per (applicationId, *key) and reused. Two shapes share ONE store:
+# frames (LSH pairs, dedup clusters, PQ codebooks, receipts; pinned by an
+# eager localCheckpoint — the cluster's "train once, score many") and
+# on-disk paths (replay chunks, JSONL/CSV/ORC drops, seeded state; built
+# into a scratch dir). Keyed by applicationId so a new session rebuilds;
+# entries whose session has stopped are evicted on every access, and a
+# pruned path's dir is deleted with it (ADVICE r6/r8).
 # ---------------------------------------------------------------------------
 
-_SESSION_STAGE: dict[tuple, DataFrame] = {}
+# (applicationId, *key) -> (frame or path, session)
+_STAGE: dict[tuple, tuple[object, SparkSession]] = {}
 
-# Per-key build locks (round 15): staged builds may now be reached from
-# driver thread pools (guide §2.6 — independent producer jobs overlap,
-# e.g. the ingest-receipts producers), so the check-then-build sequence
-# in staged_frame/staged_path must be atomic PER KEY: two threads asking
-# for the same key serialize (one builds, the other reuses), while
-# builds of different keys stay concurrent.
+# Per-key build locks (round 15): staged builds may be reached from
+# driver thread pools (guide §2.6 — e.g. the ingest-receipts producers),
+# so check-then-build must be atomic PER KEY: two threads asking for one
+# key serialize (one builds, the other reuses), while builds of
+# different keys stay concurrent.
 _STAGE_LOCKS: dict[tuple, threading.Lock] = {}
 _STAGE_LOCKS_GUARD = threading.Lock()
-
-
-def _stage_lock(full_key: tuple) -> threading.Lock:
-    with _STAGE_LOCKS_GUARD:
-        lock = _STAGE_LOCKS.get(full_key)
-        if lock is None:
-            lock = threading.Lock()
-            _STAGE_LOCKS[full_key] = lock
-        return lock
-
-
-def _prune_stopped(entries: dict, session_of: Callable) -> list:
-    """Drop the ``entries`` whose session has stopped, with their build
-    locks, and return the dropped values. Runs under the lock guard, so
-    concurrent prunes cannot both drop (or look up) the same key."""
-    dropped = []
-    with _STAGE_LOCKS_GUARD:
-        for k, v in list(entries.items()):
-            try:
-                stopped = session_of(v).sparkContext._jsc is None
-            except Exception:
-                stopped = True
-            if stopped:
-                entries.pop(k, None)
-                _STAGE_LOCKS.pop(k, None)
-                dropped.append(v)
-    return dropped
-
-
-def _prune_session_stage() -> None:
-    _prune_stopped(_SESSION_STAGE, lambda df: df.sparkSession)
-
 
 # Staging ledger (round 13, VERDICT r12 item 2): session-staging makes
 # the FIRST invocation pay the staged compute and every later one a
 # near-free warm read — so a regression inside a staged build is
-# invisible in its consumers' own bench entries. Every staged_frame /
-# staged_path build records its wall seconds here (keyed by the staging
-# key, appId stripped); bench.py ships the map as `staging_seconds`
-# alongside `queries` in BENCH_DETAIL/FULLBENCH.
+# invisible in its consumers' own bench entries. Every build records its
+# wall seconds here (keyed by the staging key, appId stripped); bench.py
+# ships the map as `staging_seconds` in BENCH_DETAIL/FULLBENCH.
 _STAGING_LEDGER: dict[str, float] = {}
+
+
+def _stage_lock(full_key: tuple) -> threading.Lock:
+    with _STAGE_LOCKS_GUARD:
+        return _STAGE_LOCKS.setdefault(full_key, threading.Lock())
+
+
+def _prune_stopped() -> None:
+    """Drop the entries whose session has stopped, with their build
+    locks, and delete the dirs of dropped paths. Runs under the lock
+    guard, so concurrent prunes cannot both drop the same key."""
+    import shutil
+
+    with _STAGE_LOCKS_GUARD:
+        for k, (value, session) in list(_STAGE.items()):
+            try:
+                stopped = session.sparkContext._jsc is None
+            except Exception:
+                stopped = True
+            if stopped:
+                _STAGE.pop(k, None)
+                _STAGE_LOCKS.pop(k, None)
+                if isinstance(value, str):
+                    shutil.rmtree(value, ignore_errors=True)
+
+
+def _staged(
+    spark: SparkSession, key: tuple, build: Callable[[], object]
+) -> object:
+    """Return ``build()``'s result for ``key``, building it once per
+    session under the key's lock and recording the build in the ledger."""
+    import time
+
+    _prune_stopped()
+    full_key = (spark.sparkContext.applicationId, *key)
+    with _stage_lock(full_key):
+        hit = _STAGE.get(full_key)
+        if hit is None:
+            t0 = time.perf_counter()
+            hit = _STAGE[full_key] = (build(), spark)
+            _STAGING_LEDGER[_ledger_key(key)] = round(
+                time.perf_counter() - t0, 3
+            )
+    return hit[0]
 
 
 def _ledger_key(key: tuple) -> str:
@@ -90,33 +102,12 @@ def staged_frame(
     """Return the checkpointed frame for ``key``, building it on first
     use in this session. ``key`` must include every input the build
     depends on (e.g. the sf_dir)."""
-    import time
-
-    _prune_session_stage()
-    full_key = (spark.sparkContext.applicationId, *key)
-    with _stage_lock(full_key):
-        df = _SESSION_STAGE.get(full_key)
-        if df is None:
-            t0 = time.perf_counter()
-            df = build().localCheckpoint()
-            _STAGING_LEDGER[_ledger_key(key)] = round(
-                time.perf_counter() - t0, 3
-            )
-            _SESSION_STAGE[full_key] = df
-    return df
+    return _staged(spark, key, lambda: build().localCheckpoint())
 
 
-# ---------------------------------------------------------------------------
-# Scratch + session-staged paths (ADVICE r8): every throwaway dir the
-# engine writes (stream checkpoints, replay chunks, JSONL drops) lives
-# under ONE process-scoped root removed at interpreter exit, and the
-# EXPENSIVE staged inputs (full-table replay chunks, JSONL drops) are
-# additionally cached per (applicationId, key) so bench's warm-up +
-# timed re-invocations reuse one staged copy instead of writing a fresh
-# full copy of the table per run. Paths of stopped sessions are deleted
-# eagerly on the next access (same eviction contract as staged_frame).
-# ---------------------------------------------------------------------------
-
+# Every throwaway dir the engine writes (stream checkpoints, replay
+# chunks, JSONL drops) lives under ONE process-scoped root removed at
+# interpreter exit (ADVICE r8).
 _SCRATCH_ROOT: str | None = None
 
 
@@ -142,42 +133,22 @@ def scratch_dir(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=scratch_root())
 
 
-_SESSION_PATHS: dict[tuple, tuple[str, SparkSession]] = {}
-
-
-def _prune_session_paths() -> None:
-    import shutil
-
-    for path, _ in _prune_stopped(_SESSION_PATHS, lambda v: v[1]):
-        shutil.rmtree(path, ignore_errors=True)
-
-
 def staged_path(
-    spark: SparkSession,
-    key: tuple,
-    build: Callable[[str], None],
-    prefix: str = "staged_",
+    spark: SparkSession, key: tuple, build: Callable[[str], None]
 ) -> str:
     """Return the on-disk staged artifact for ``key``, building it into
-    a scratch dir on first use in this session. ``key`` must include
-    every input the build depends on (e.g. the sf_dir); the build must
-    be deterministic, since later invocations read the first copy."""
-    import time
+    a scratch dir named after ``key[0]`` on first use in this session
+    (so bench re-invocations reuse one staged copy instead of writing a
+    fresh full copy per run). ``key`` must include every input the build
+    depends on (e.g. the sf_dir); the build must be deterministic, since
+    later invocations read the first copy."""
 
-    _prune_session_paths()
-    full_key = (spark.sparkContext.applicationId, *key)
-    with _stage_lock(full_key):
-        hit = _SESSION_PATHS.get(full_key)
-        if hit is not None:
-            return hit[0]
-        path = scratch_dir(prefix)
-        t0 = time.perf_counter()
+    def _build() -> str:
+        path = scratch_dir(f"{key[0]}_")
         build(path)
-        _STAGING_LEDGER[_ledger_key(key)] = round(
-            time.perf_counter() - t0, 3
-        )
-        _SESSION_PATHS[full_key] = (path, spark)
-    return path
+        return path
+
+    return _staged(spark, key, _build)
 
 
 def spread_for_compute(df: DataFrame) -> DataFrame:
@@ -200,36 +171,6 @@ def spread_for_compute(df: DataFrame) -> DataFrame:
     0.73 s → 0.20 s WITH the spread and switched it over.)
     """
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-
-
-def _ranged_with_offsets(
-    df: DataFrame,
-    order_by: list[Column],
-    offset_of: Column,
-    num_partitions: int | None,
-) -> tuple[DataFrame, DataFrame]:
-    """Range-partition ``df`` on ``order_by`` and compute one broadcastable
-    offset row per partition: ``_off`` = the sum of ``offset_of`` over all
-    EARLIER partitions. The building block of the two-pass (zipWithIndex
-    style) global prefix computations below — the only data-sized steps are
-    the range shuffle and a partition-local sort; the cross-partition
-    carry lives in a |partitions|-row frame.
-
-    localCheckpoint: both passes consume the ranged frame; the barrier
-    guarantees ONE evaluation of the range shuffle so the sampled
-    partition boundaries (and thus ``_pid``) cannot diverge between jobs.
-    (Same contract as sinks/smtp.py's send-order stamp, the pattern's
-    first user.)
-    """
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    ranged = (
-        df.repartitionByRange(n, *order_by)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    per_part = ranged.groupBy("_pid").agg(offset_of.alias("_v"))
-    offsets = prefix_offsets(per_part, "sum")
-    return ranged, offsets
 
 
 def prefix_offsets(per_part: DataFrame, kind: str) -> DataFrame:
@@ -266,6 +207,73 @@ def prefix_offsets(per_part: DataFrame, kind: str) -> DataFrame:
     return joined.groupBy("_pid").agg(off.alias("_off"))
 
 
+def _two_pass(
+    df: DataFrame,
+    group_col: str | None,
+    order_by: list[Column],
+    num_partitions: int | None,
+    carry: Column,
+    local: Callable[[WindowSpec], Column],
+    combine: Callable[[Column, Column], Column],
+    out_col: str,
+    kind: str = "sum",
+) -> DataFrame:
+    """The one two-pass (zipWithIndex-style) prefix computation behind
+    every ``two_pass_*`` helper. Range-partition on (``group_col``,
+    ``order_by``) and stamp ``_pid``; aggregate ``carry`` per
+    (group,) partition; offset each partition by the ``kind`` (sum/max)
+    of the carries of EARLIER partitions (of the same group); evaluate
+    ``local(window)`` over the partition-local ordered window; and emit
+    ``out_col = combine(_off, _local)``. The only data-sized steps are
+    the range shuffle and a partition-local sort; the cross-partition
+    carry lives in a |groups|·|partitions|-row frame that is broadcast.
+
+    localCheckpoint: both passes consume the ranged frame; the barrier
+    guarantees ONE evaluation of the range shuffle so the sampled
+    partition boundaries (and thus ``_pid``) cannot diverge between jobs.
+    """
+    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    keys = [group_col] if group_col else []
+    ranged = (
+        df.repartitionByRange(n, *map(F.col, keys), *order_by)
+        .withColumn("_pid", F.spark_partition_id())
+        .localCheckpoint()
+    )
+    per_part = ranged.groupBy(*keys, "_pid").agg(carry.alias("_v"))
+    if group_col:  # grouped carries are sums (counts or running sums)
+        woff = (
+            Window.partitionBy(group_col)
+            .orderBy("_pid")
+            .rowsBetween(Window.unboundedPreceding, -1)
+        )
+        offsets = per_part.select(
+            group_col,
+            "_pid",
+            F.coalesce(F.sum("_v").over(woff), F.lit(0)).alias("_off"),
+        )
+    else:
+        offsets = prefix_offsets(per_part, kind)
+    wlocal = Window.partitionBy("_pid", *keys).orderBy(*order_by)
+    return (
+        ranged.withColumn("_local", local(wlocal))
+        .join(F.broadcast(offsets), on=[*keys, "_pid"])
+        .withColumn(out_col, combine(F.col("_off"), F.col("_local")))
+        .drop("_pid", "_local", "_off")
+    )
+
+
+def _row_number(w: WindowSpec) -> Column:
+    return F.row_number().over(w)
+
+
+def _running(agg: Column) -> Callable[[WindowSpec], Column]:
+    return lambda w: agg.over(w.rowsBetween(Window.unboundedPreceding, 0))
+
+
+def _add_long(off: Column, local: Column) -> Column:
+    return (off + local).cast("long")
+
+
 def two_pass_rank(
     df: DataFrame,
     order_by: list[Column],
@@ -276,17 +284,9 @@ def two_pass_rank(
     sort: rank = (count of rows in earlier range partitions) +
     per-partition row_number. ``order_by`` must be a total order (include
     a tiebreaker column) for the result to be deterministic."""
-    ranged, offsets = _ranged_with_offsets(
-        df, order_by, F.count(F.lit(1)), num_partitions
-    )
-    wlocal = Window.partitionBy("_pid").orderBy(*order_by)
-    return (
-        ranged.withColumn("_local", F.row_number().over(wlocal))
-        .join(F.broadcast(offsets), on="_pid")
-        .withColumn(
-            out_col, (F.col("_off") + F.col("_local")).cast("long")
-        )
-        .drop("_pid", "_local", "_off")
+    return _two_pass(
+        df, None, order_by, num_partitions,
+        F.count(F.lit(1)), _row_number, _add_long, out_col,
     )
 
 
@@ -302,19 +302,9 @@ def two_pass_running_sum(
     of earlier partitions' totals. Exact when ``value_col`` is integral or
     decimal (partial sums reassociate); ``order_by`` must be a total
     order for determinism."""
-    ranged, offsets = _ranged_with_offsets(
-        df, order_by, F.sum(value_col), num_partitions
-    )
-    wlocal = (
-        Window.partitionBy("_pid")
-        .orderBy(*order_by)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        ranged.withColumn("_local", F.sum(value_col).over(wlocal))
-        .join(F.broadcast(offsets), on="_pid")
-        .withColumn(out_col, F.col("_off") + F.col("_local"))
-        .drop("_pid", "_local", "_off")
+    return _two_pass(
+        df, None, order_by, num_partitions,
+        F.sum(value_col), _running(F.sum(value_col)), Column.__add__, out_col,
     )
 
 
@@ -335,33 +325,50 @@ def two_pass_rank_in_groups(
     ranking: 30 languages × billions of docs would funnel each language
     through one task). ``order_by`` must totally order rows within a
     group."""
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    ranged = (
-        df.repartitionByRange(n, F.col(group_col), *order_by)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()
+    return _two_pass(
+        df, group_col, order_by, num_partitions,
+        F.count(F.lit(1)), _row_number, _add_long, out_col,
     )
-    counts = ranged.groupBy(group_col, "_pid").agg(
-        F.count(F.lit(1)).alias("_n")
+
+
+def two_pass_running_max(
+    df: DataFrame,
+    order_by: list[Column],
+    value_col: str,
+    out_col: str = "running_max",
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """Global running max of ``value_col`` in ``order_by`` order WITHOUT
+    an unpartitioned window: per-partition cumulative max + the max of
+    earlier partitions' maxima via the broadcast offsets frame (NULL for
+    the first partition; greatest() skips nulls). Exact for any orderable
+    type (max reassociates). Use it for watermark simulation and skyline
+    prefix-dominance, where the carried statistic is an extremum."""
+    return _two_pass(
+        df, None, order_by, num_partitions,
+        F.max(value_col), _running(F.max(value_col)),
+        lambda off, local: F.greatest(local, off), out_col, kind="max",
     )
-    woff = (
-        Window.partitionBy(group_col)
-        .orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.select(
-        group_col,
-        "_pid",
-        F.coalesce(F.sum("_n").over(woff), F.lit(0)).alias("_off"),
-    )
-    wlocal = Window.partitionBy("_pid", group_col).orderBy(*order_by)
-    return (
-        ranged.withColumn("_local", F.row_number().over(wlocal))
-        .join(F.broadcast(offsets), on=[group_col, "_pid"])
-        .withColumn(
-            out_col, (F.col("_off") + F.col("_local")).cast("long")
-        )
-        .drop("_pid", "_local", "_off")
+
+
+def two_pass_running_sum_in_groups(
+    df: DataFrame,
+    group_col: str,
+    order_by: list[Column],
+    value_col: str,
+    out_col: str = "running_sum",
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """Per-group running sum of ``value_col`` in ``order_by`` order
+    WITHOUT per-group global sorts — the grouped twin of
+    ``two_pass_running_sum``, built like ``two_pass_rank_in_groups``.
+    For FEW-and-HUGE groups (e.g. per-class weighted medians over a
+    value-domain rollup) where ``Window.partitionBy(group)`` would
+    funnel each group through one task. ``order_by`` must totally order
+    rows within a group; exact for integral / decimal ``value_col``."""
+    return _two_pass(
+        df, group_col, order_by, num_partitions,
+        F.sum(value_col), _running(F.sum(value_col)), Column.__add__, out_col,
     )
 
 
@@ -385,93 +392,4 @@ def ntile_from_rank(
             r + ((rank - 1 - big) / F.greatest(q, F.lit(1))).cast("long") + 1
         )
         .cast("int")
-    )
-
-
-def two_pass_running_max(
-    df: DataFrame,
-    order_by: list[Column],
-    value_col: str,
-    out_col: str = "running_max",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Global running max of ``value_col`` in ``order_by`` order WITHOUT
-    an unpartitioned window: per-partition cumulative max + the max of
-    earlier partitions' maxima via the broadcast offsets frame. Exact
-    for any orderable type (max reassociates). Completes the two-pass
-    family (rank / running-sum / grouped-rank): use it for watermark
-    simulation and skyline prefix-dominance, where the carried statistic
-    is an extremum, not a count."""
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    ranged = (
-        df.repartitionByRange(n, *order_by)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    per_part = ranged.groupBy("_pid").agg(F.max(value_col).alias("_v"))
-    # _off is NULL for the first partition; greatest() skips nulls
-    offsets = prefix_offsets(per_part, "max")
-    wlocal = (
-        Window.partitionBy("_pid")
-        .orderBy(*order_by)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        ranged.withColumn("_local", F.max(value_col).over(wlocal))
-        .join(F.broadcast(offsets), on="_pid")
-        .withColumn(
-            out_col, F.greatest(F.col("_local"), F.col("_off"))
-        )
-        .drop("_pid", "_local", "_off")
-    )
-
-
-def two_pass_running_sum_in_groups(
-    df: DataFrame,
-    group_col: str,
-    order_by: list[Column],
-    value_col: str,
-    out_col: str = "running_sum",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Per-group running sum of ``value_col`` in ``order_by`` order
-    WITHOUT per-group global sorts — the grouped twin of
-    ``two_pass_running_sum``, built like ``two_pass_rank_in_groups``:
-    range-partition on (group, order), sum per (group, partition), carry
-    each group's earlier-partition totals via a broadcast
-    |groups|·|partitions|-row offsets frame, add a partition-local
-    cumulative sum. For FEW-and-HUGE groups (e.g. per-class weighted
-    medians over a value-domain rollup) where ``Window.partitionBy(
-    group)`` would funnel each group through one task. ``order_by``
-    must totally order rows within a group; exact for integral /
-    decimal ``value_col``."""
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    ranged = (
-        df.repartitionByRange(n, F.col(group_col), *order_by)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    sums = ranged.groupBy(group_col, "_pid").agg(
-        F.sum(value_col).alias("_v")
-    )
-    woff = (
-        Window.partitionBy(group_col)
-        .orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = sums.select(
-        group_col,
-        "_pid",
-        F.coalesce(F.sum("_v").over(woff), F.lit(0)).alias("_off"),
-    )
-    wlocal = (
-        Window.partitionBy("_pid", group_col)
-        .orderBy(*order_by)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        ranged.withColumn("_local", F.sum(value_col).over(wlocal))
-        .join(F.broadcast(offsets), on=[group_col, "_pid"])
-        .withColumn(out_col, F.col("_off") + F.col("_local"))
-        .drop("_pid", "_local", "_off")
     )

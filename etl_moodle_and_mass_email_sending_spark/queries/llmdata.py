@@ -5,6 +5,7 @@ LSH-bucketed ANN), text analysis, and multimodal decode."""
 from __future__ import annotations
 
 from ..operators import components, dedup, multimodal, similarity, text_analysis
+from ..operators.util import staged_frame, staged_path
 from ..registry import register
 
 _CORPUS_SQL = dedup.sql_dup_corpus()
@@ -15,57 +16,31 @@ _CORPUS_SQL = dedup.sql_dup_corpus()
 # queries consume the MinHash-LSH pair generation and four of them the
 # full clustering on top — before this, each rebuilt the shingle →
 # signature → band-join pipeline (and the iterative CC) from scratch.
-# The staged frames are materialized once per (application, sf_dir) via
-# an eager localCheckpoint and shared; on a cluster this is the
-# persist()/checkpoint() of the curation DAG's common stage. Results are
-# bit-identical (the checkpoint only pins the already-deterministic
+# The staged frames are built once per (application, sf_dir) by
+# staged_frame (the one session store: per-key lock, eager
+# localCheckpoint, staging-ledger entry) and shared; on a cluster this is
+# the persist()/checkpoint() of the curation DAG's common stage. Results
+# are bit-identical (the checkpoint only pins the already-deterministic
 # frame), so every consumer keeps its oracle unchanged.
 # --------------------------------------------------------------------------
 
-_STAGED: dict[tuple, object] = {}
-
-
-def _prune_staged() -> None:
-    """Evict staged frames whose SparkContext has been stopped.
-
-    The cache is keyed by applicationId, so entries for dead sessions are
-    unreachable — without eviction they leak for the process lifetime in
-    long-lived multi-session hosts (ADVICE r6).
-    """
-    for k in list(_STAGED):
-        df = _STAGED[k]
-        try:
-            stopped = df.sparkSession.sparkContext._jsc is None
-        except Exception:
-            stopped = True
-        if stopped:
-            del _STAGED[k]
-
 
 def _staged_pairs(spark, sf_dir):
-    _prune_staged()
-    key = ("pairs", spark.sparkContext.applicationId, sf_dir)
-    df = _STAGED.get(key)
-    if df is None:
-        df = dedup.minhash_lsh_pairs(
-            dedup.dup_corpus(spark, sf_dir)
-        ).localCheckpoint()
-        _STAGED[key] = df
-    return df
+    return staged_frame(
+        spark,
+        ("pairs", sf_dir),
+        lambda: dedup.minhash_lsh_pairs(dedup.dup_corpus(spark, sf_dir)),
+    )
 
 
 def _staged_clusters(spark, sf_dir):
-    from ..operators.components import dedup_clusters
-
-    _prune_staged()
-    key = ("clusters", spark.sparkContext.applicationId, sf_dir)
-    df = _STAGED.get(key)
-    if df is None:
-        df = dedup_clusters(
+    return staged_frame(
+        spark,
+        ("clusters", sf_dir),
+        lambda: components.dedup_clusters(
             dedup.dup_corpus(spark, sf_dir), _staged_pairs(spark, sf_dir)
-        ).localCheckpoint()
-        _STAGED[key] = df
-    return df
+        ),
+    )
 
 
 register(
@@ -192,16 +167,6 @@ def _docs(spark, sf_dir):
     from ..catalog import load_table
 
     return load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
-
-
-def _staged_receipt(spark, key, build):
-    """Session-stage a BOUNDED receipt/verdict frame (round 12): an
-    eval or governance receipt is computed once per (session, corpus)
-    and read thereafter — the materialized-receipts pattern. Only for
-    bounded frames (rows ~ O(sections·keys), never O(corpus))."""
-    from ..operators.util import staged_frame
-
-    return staged_frame(spark, key, build)
 
 
 register(
@@ -1297,7 +1262,7 @@ register(
     # the 50-row eval receipt is computed once per (session, sf_dir)
     # and read thereafter — the receipts pattern (round 12); the five
     # constituent ANN methods keep their own per-call registrations
-    lambda spark, sf_dir: _staged_receipt(
+    lambda spark, sf_dir: staged_frame(
         spark,
         ("ann_recall_receipt", sf_dir),
         lambda: similarity.ann_recall_eval(spark, sf_dir),
@@ -2223,7 +2188,6 @@ def _staged_jsonl_drop(spark, sf_dir) -> str:
     import os
 
     from ..catalog import load_table
-    from ..operators.util import staged_path
 
     def _build(base: str) -> None:
         drop = os.path.join(base, "docs")
@@ -2238,9 +2202,7 @@ def _staged_jsonl_drop(spark, sf_dir) -> str:
             f.write("{truncated before any field\n")
             f.write("not json at all\n")
 
-    base = staged_path(
-        spark, ("jsonl_drop", sf_dir), _build, prefix="jsonl_"
-    )
+    base = staged_path(spark, ("jsonl_drop", sf_dir), _build)
     return os.path.join(base, "docs")
 
 
@@ -2279,8 +2241,6 @@ def _staged_frozen_index(spark, sf_dir):
     """The frozen snapshot's MinHash signature index, built once per
     (session, sf_dir) — the 'index once, score every crawl' artifact
     incremental dedup is shaped around."""
-    from ..operators.util import staged_frame
-
     return staged_frame(
         spark,
         ("frozen_sig_index", sf_dir),
@@ -2559,7 +2519,6 @@ def _staged_csv_drop(spark, sf_dir) -> str:
     import os
 
     from ..catalog import load_table
-    from ..operators.util import staged_path
 
     def _build(base: str) -> None:
         drop = os.path.join(base, "docs")
@@ -2577,9 +2536,7 @@ def _staged_csv_drop(spark, sf_dir) -> str:
             f.write("991001,oops,en,web,not-a-number\n")
             f.write('991002,"quoted,comma",de,web,twelve\n')
 
-    base = staged_path(
-        spark, ("csv_drop", sf_dir), _build, prefix="csvdrop_"
-    )
+    base = staged_path(spark, ("csv_drop", sf_dir), _build)
     return os.path.join(base, "docs")
 
 
@@ -2627,14 +2584,13 @@ def _staged_orc_drop(spark, sf_dir) -> str:
     import os
 
     from ..catalog import load_table
-    from ..operators.util import staged_path
 
     def _build(base: str) -> None:
         load_table(spark, sf_dir, "documents").write.orc(
             os.path.join(base, "docs")
         )
 
-    base = staged_path(spark, ("orc_drop", sf_dir), _build, prefix="orc_")
+    base = staged_path(spark, ("orc_drop", sf_dir), _build)
     return os.path.join(base, "docs")
 
 
@@ -2688,7 +2644,6 @@ def _staged_evolution_drop(spark, sf_dir) -> str:
     import os
 
     from ..catalog import load_table
-    from ..operators.util import staged_path
 
     def _build(base: str) -> None:
         from pyspark.sql import functions as F
@@ -2708,9 +2663,7 @@ def _staged_evolution_drop(spark, sf_dir) -> str:
             .write.parquet(os.path.join(base, "docs", "epoch=2"))
         )
 
-    base = staged_path(
-        spark, ("schema_evo_drop", sf_dir), _build, prefix="evo_"
-    )
+    base = staged_path(spark, ("schema_evo_drop", sf_dir), _build)
     return os.path.join(base, "docs")
 
 
@@ -2808,8 +2761,6 @@ def _staged_quality_scores(spark, sf_dir):
     r11 item 4): the score scan feeding llm_corpus_release's stage
     section and text_curriculum_stages. O(corpus) but three columns;
     built once per (session, sf_dir)."""
-    from ..operators.util import staged_frame
-
     return staged_frame(
         spark,
         ("quality_scores", sf_dir),
@@ -2830,8 +2781,6 @@ def _staged_mixture_plan(spark, sf_dir):
     text_temperature_mixture (whose registered RESULT is the plan
     itself) deliberately keeps computing its own — staging a query's
     own result would be result caching."""
-    from ..operators.util import staged_frame
-
     return staged_frame(
         spark,
         ("mixture_plan", sf_dir),
@@ -2851,8 +2800,6 @@ def _staged_emitted_spine(spark, sf_dir):
     rel_deletion_audit's mixture_sample artifact) — the sampler runs
     once per (session, sf_dir). O(corpus) checkpoint, the same size
     class corpus_release already materialized per call."""
-    from ..operators.util import staged_frame
-
     return staged_frame(
         spark,
         ("mixture_emitted_spine", sf_dir),
@@ -3227,8 +3174,6 @@ def _staged_split_leakage(spark, sf_dir):
     llm_eval_guard's split section) compute the IDENTICAL frame over
     the same documents table — the gram fan-out + double-distinct +
     join runs once per (session, sf_dir), not once per query."""
-    from ..operators.util import staged_frame
-
     return staged_frame(
         spark,
         ("split_leakage_result", sf_dir),
@@ -3463,7 +3408,6 @@ def _rel_quarantine_rollup(spark, sf_dir):
     the production shape the round-11 inline form documented as its
     own limitation."""
     from ..operators import receipts as rcpt
-    from ..operators.util import staged_path
 
     def _build(base: str) -> None:
         import os
@@ -3476,9 +3420,7 @@ def _rel_quarantine_rollup(spark, sf_dir):
 
     import os
 
-    base = staged_path(
-        spark, ("receipts_table", sf_dir), _build, prefix="receipts_"
-    )
+    base = staged_path(spark, ("receipts_table", sf_dir), _build)
     return rcpt.latest_rollup(spark, os.path.join(base, "receipts"))
 
 
@@ -3782,7 +3724,7 @@ register(
     # 9-row verdict receipt — computed once per (session, sf_dir),
     # read thereafter (the receipts pattern, round 12); the three
     # constituent audits keep their own per-call registrations
-    lambda spark, sf_dir: _staged_receipt(
+    lambda spark, sf_dir: staged_frame(
         spark,
         ("eval_guard_receipt", sf_dir),
         lambda: _llm_eval_guard(spark, sf_dir),
@@ -4268,7 +4210,6 @@ def _ingest_health(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from ..operators import receipts as rcpt
-    from ..operators.util import staged_path
 
     def _build(base: str) -> None:
         # The four producers are INDEPENDENT (each computes and appends
@@ -4308,12 +4249,7 @@ def _ingest_health(spark, sf_dir):
                 )
             )
 
-    base = staged_path(
-        spark,
-        ("ingest_receipts_table", sf_dir),
-        _build,
-        prefix="ingest_receipts_",
-    )
+    base = staged_path(spark, ("ingest_receipts_table", sf_dir), _build)
     body = rcpt.latest_ingest_rollup(
         spark, os.path.join(base, "ingest_receipts")
     )

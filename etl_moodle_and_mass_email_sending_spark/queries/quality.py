@@ -1147,16 +1147,18 @@ register(
 # per distinct-column, partially aggregated map-side before the single
 # shuffle) — the same plan DuckDB picks. At 100 TB the exact distincts
 # are the knob to relax: swap count_distinct for approx_count_distinct
-# and the scan count halves; the report contract is unchanged.
+# and the scan count halves; the report contract is unchanged. A
+# two-level (col, value) distinct plan was 2.1x faster on a 20M-row
+# near-unique shape and slower at testbed cardinalities; no workload runs
+# the wide shape, so only the Expand plan is kept (A/B in
+# OPTIMIZATION_r15.md).
 # --------------------------------------------------------------------------
 
 _PROFILE_NUM = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
 _PROFILE_STR = ["l_returnflag", "l_linestatus", "l_shipdate"]
 
 
-def _profile_table(
-    spark: SparkSession, sf_dir: str, impl: str | None = None
-) -> DataFrame:
+def _profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.util import spread_for_compute
 
     # spread the 3-partition testbed scan before the ×8 Expand the
@@ -1169,27 +1171,10 @@ def _profile_table(
             *_PROFILE_NUM, *_PROFILE_STR
         )
     )
-    # DISTINCT IMPL (round 15, VERDICT r14 item 8 — A/B recorded in
-    # OPTIMIZATION_r15.md): "expand" (default) = Spark's multi-distinct
-    # lowering, ONE scan, Expand ×(|cols|+1) before the partial agg —
-    # wins at testbed cardinalities (1.25 vs 1.88 s at sf0.1).
-    # "twolevel" = explicit (col, value) pairs with map-side local
-    # dedup, one narrow shuffle, per-col count, non-distinct metrics in
-    # a second branch — 2.1× FASTER on the wide-cardinality scale shape
-    # (20M rows, near-unique cols: 20.6 vs 43.1 s median, expand
-    # spilling 36–64 s) because the single Expand aggregate's hash
-    # state holds every (gid, value) copy at once. Both forms are
-    # exact and produce identical frames (parity-tested); flip via
-    # spark.graft.profile.distinct.impl on wide-cardinality tables.
-    if impl is None:
-        impl = spark.conf.get(
-            "spark.graft.profile.distinct.impl", "expand"
-        )
     aggs = [F.count(F.lit(1)).alias("_rows")]
     for c in _PROFILE_NUM + _PROFILE_STR:
         aggs.append(F.count(c).alias(f"_nn_{c}"))
-        if impl != "twolevel":
-            aggs.append(F.count_distinct(F.col(c)).alias(f"_nd_{c}"))
+        aggs.append(F.count_distinct(F.col(c)).alias(f"_nd_{c}"))
     for c in _PROFILE_NUM:
         aggs += [
             F.min(F.col(c).cast("double")).alias(f"_mn_{c}"),
@@ -1203,49 +1188,6 @@ def _profile_table(
             ).alias(f"_sv_{c}"),
         ]
     wide = li.agg(*aggs)
-    if impl == "twolevel":
-        cols = _PROFILE_NUM + _PROFILE_STR
-        # (col, value) pairs: the string cast is injective per column
-        # (fixed-scale decimals / strings), so per-col distinct counts
-        # are unchanged; NULLs drop like count_distinct drops them.
-        # The groupBy(c, v) partial aggregate dedups map-side, so the
-        # one exchange carries per-partition-distinct pairs only.
-        kv = li.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(c).alias("c"),
-                            F.col(c).cast("string").alias("v"),
-                        )
-                        for c in cols
-                    ]
-                )
-            ).alias("u")
-        ).select("u.*")
-        nd = (
-            kv.filter(F.col("v").isNotNull())
-            .groupBy("c", "v")
-            .agg(F.lit(1).alias("_one"))
-            .groupBy("c")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("_nd"))
-        )
-        wide = wide.crossJoin(
-            F.broadcast(
-                nd.groupBy()
-                .pivot("c", cols)
-                .agg(F.first("_nd"))
-                .select(
-                    # an all-NULL column has no nd row: distinct 0
-                    *[
-                        F.coalesce(F.col(c), F.lit(0)).alias(
-                            f"_nd_{c}"
-                        )
-                        for c in cols
-                    ]
-                )
-            )
-        )
     rows = []
     for c in _PROFILE_NUM:
         rows.append(
@@ -1464,7 +1406,7 @@ def _compaction_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(os.path.join(path, "compacted"))
         )
 
-    out = staged_path(spark, ("compaction_exec", sf_dir), build, "compact_")
+    out = staged_path(spark, ("compaction_exec", sf_dir), build)
     compacted = spark.read.parquet(os.path.join(out, "compacted"))
     return compacted.groupBy("bin").agg(
         F.count(F.lit(1)).cast("bigint").alias("rows_written"),

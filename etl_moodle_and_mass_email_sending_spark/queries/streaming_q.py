@@ -2174,9 +2174,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderkey", F.col("v").cast("decimal(19,2)").alias("val")
         ).write.parquet(os.path.join(d, "state"))
 
-    seed_dir = staged_path(
-        spark, ("cdc_seed_state", sf_dir), _seed, prefix="cdcseed_"
-    )
+    seed_dir = staged_path(spark, ("cdc_seed_state", sf_dir), _seed)
     state = {"path": os.path.join(seed_dir, "state")}
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:

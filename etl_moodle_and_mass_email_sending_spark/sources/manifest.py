@@ -68,9 +68,7 @@ def _build_drop(spark: SparkSession, sf_dir: str) -> str:
             .write.parquet(os.path.join(path, "manifest"))
         )
 
-    return staged_path(
-        spark, ("manifest_scan", sf_dir), build, prefix="manifest_"
-    )
+    return staged_path(spark, ("manifest_scan", sf_dir), build)
 
 
 def manifest_scan(spark: SparkSession, sf_dir: str) -> DataFrame:

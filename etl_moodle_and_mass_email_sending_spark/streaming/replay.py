@@ -69,7 +69,7 @@ def staged_chunks(
     # the projection and chunk count are part of the key: several
     # queries stage the same table under different column subsets
     full_key = (*cache_key, frame.schema.simpleString(), n_chunks)
-    base = staged_path(frame.sparkSession, full_key, _build, prefix="stage_")
+    base = staged_path(frame.sparkSession, full_key, _build)
     return [
         os.path.join(base, "stage", f"chunk{i:02d}.parquet")
         for i in range(1, n_chunks + 1)

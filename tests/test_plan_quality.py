@@ -932,24 +932,3 @@ def test_bucketed_join_tables_are_per_sf_dir(spark, registry_queries):
     ra = sorted(map(tuple, registry_queries["rel_bucketed_join"](spark, SF_SMALL).collect()))
     rb = sorted(map(tuple, registry_queries["rel_bucketed_join"](spark, alias).collect()))
     assert ra == rb  # same underlying data -> same report, via distinct tables
-
-
-def test_profile_table_distinct_impls_are_result_identical(spark):
-    """Round 15 (VERDICT r14 item 8): the two-level distinct behind
-    spark.graft.profile.distinct.impl must produce the exact frame the
-    default Expand lowering produces — both are exact counts, only the
-    plan shape differs (A/B recorded in OPTIMIZATION_r15.md)."""
-    from etl_moodle_and_mass_email_sending_spark.queries.quality import (
-        _profile_table,
-    )
-
-    a = sorted(
-        map(tuple, _profile_table(spark, SF_SMALL, impl="expand").collect())
-    )
-    b = sorted(
-        map(
-            tuple,
-            _profile_table(spark, SF_SMALL, impl="twolevel").collect(),
-        )
-    )
-    assert a == b

@@ -126,29 +126,63 @@ def _stopped_session(barrier: threading.Barrier):
 
 @pytest.mark.parametrize("store", ["frames", "paths"])
 def test_concurrent_prunes_of_a_stopped_session(tmp_path, store):
-    """Two threads pruning the same stopped session's entry must not
-    both drop it (the unguarded lookup-then-del raised KeyError), and
-    the entry's build lock goes with it."""
+    """Two threads pruning the same stopped session's entry from the one
+    staging store must not both drop it (the unguarded lookup-then-del
+    raised KeyError), the entry's build lock goes with it, and a pruned
+    path's dir is deleted."""
     from etl_moodle_and_mass_email_sending_spark.operators import util
 
     key = ("app-stopped-prune-test", store)
     sess = _stopped_session(threading.Barrier(2))
-    if store == "frames":
-        entries, prune = util._SESSION_STAGE, util._prune_session_stage
-        entries[key] = types.SimpleNamespace(sparkSession=sess)
-    else:
-        entries, prune = util._SESSION_PATHS, util._prune_session_paths
-        entries[key] = (str(tmp_path / "staged"), sess)
+    staged = tmp_path / "staged"
+    staged.mkdir()
+    value = object() if store == "frames" else str(staged)
+    util._STAGE[key] = (value, sess)
     util._stage_lock(key)
     try:
         with ThreadPoolExecutor(max_workers=2) as pool:
-            for f in [pool.submit(prune) for _ in range(2)]:
+            for f in [pool.submit(util._prune_stopped) for _ in range(2)]:
                 f.result()
-        assert key not in entries
+        assert key not in util._STAGE
         assert key not in util._STAGE_LOCKS
+        assert staged.exists() == (store == "frames")
     finally:
-        entries.pop(key, None)
+        util._STAGE.pop(key, None)
         util._STAGE_LOCKS.pop(key, None)
+
+
+def test_lsh_pairs_build_once_and_ledgered(spark, tmp_path, monkeypatch):
+    """The MinHash-LSH pairs eleven queries share are staged in the one
+    store: four concurrent ``dedup_minhash_lsh`` calls build them once,
+    and the build is on the staging ledger."""
+    from conftest import SF_SMALL
+
+    from etl_moodle_and_mass_email_sending_spark import registry
+    from etl_moodle_and_mass_email_sending_spark.operators import dedup, util
+
+    # a fresh sf_dir (same files) so pairs staged by earlier tests in
+    # this session do not count as a hit
+    sf_dir = tmp_path / "sf"
+    sf_dir.mkdir()
+    for name in os.listdir(SF_SMALL):
+        os.symlink(os.path.join(SF_SMALL, name), sf_dir / name)
+    calls = []
+    real = dedup.minhash_lsh_pairs
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(dedup, "minhash_lsh_pairs", counting)
+    query = registry.queries()["dedup_minhash_lsh"]
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        frames = [
+            f.result()
+            for f in [pool.submit(query, spark, str(sf_dir)) for _ in range(4)]
+        ]
+    assert len(calls) == 1
+    assert len({id(f._jdf) for f in frames}) == 1
+    assert f"pairs/{sf_dir}" in util.staging_ledger()
 
 
 def test_staged_frame_builds_once_under_concurrency(spark):

@@ -695,11 +695,14 @@ def test_staged_path_builds_once_per_session(spark):
         with open(os.path.join(path, "marker"), "w") as f:
             f.write("x")
 
-    p1 = util.staged_path(spark, ("t_staged", "k1"), build, prefix="t_")
-    p2 = util.staged_path(spark, ("t_staged", "k1"), build, prefix="t_")
-    p3 = util.staged_path(spark, ("t_staged", "k2"), build, prefix="t_")
+    p1 = util.staged_path(spark, ("t_staged", "k1"), build)
+    p2 = util.staged_path(spark, ("t_staged", "k1"), build)
+    p3 = util.staged_path(spark, ("t_staged", "k2"), build)
     assert p1 == p2 and len(calls) == 2  # k1 built once, k2 built once
     assert p3 != p1
+    # the scratch dir is named after the key's first element
+    assert os.path.basename(p1).startswith("t_staged_")
+    assert os.path.basename(p3).startswith("t_staged_")
     assert os.path.exists(os.path.join(p1, "marker"))
     # everything sits under the one atexit-removed scratch root
     assert util._SCRATCH_ROOT is not None
