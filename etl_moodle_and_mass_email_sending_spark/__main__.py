@@ -2,9 +2,9 @@
 app surface (app.py entry points, SURVEY.md §3): three subcommands mapping
 1:1 to the reference's buttons, minus the Tk GUI.
 
-  normalize  — participants sheet (CSV export; header-displaced) →
-               Moodle-import CSV        (reference "Generar CSV Moodle",
-               app.py:936–972)
+  normalize  — participants sheet (.xlsx workbook or its CSV export;
+               header-displaced) → Moodle-import CSV (reference
+               "Generar CSV Moodle", app.py:936–972)
   send       — recipients CSV (any schema variant) → rendered credential
                mails through the SMTP sink; DRY-RUN by default, receipts
                written as CSV           (reference "Enviar correos",
@@ -40,6 +40,15 @@ def _status_counts():
     ]
 
 
+def _is_xlsx(path: str) -> bool:
+    """True when ``path`` starts with the ZIP magic every .xlsx carries."""
+    try:
+        with open(path, "rb") as f:
+            return f.read(4) == b"PK\x03\x04"
+    except OSError:  # missing or a directory: the CSV reader reports it
+        return False
+
+
 def cmd_normalize(args: argparse.Namespace) -> int:
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
@@ -48,13 +57,16 @@ def cmd_normalize(args: argparse.Namespace) -> int:
     from .sinks.csv_single import write_csv_single
     from .sources.excel import (
         read_participants_csv,
+        read_participants_excel,
         rename_participant_columns,
     )
 
     spark = _spark()
-    raw = read_participants_csv(
-        spark, args.input, args.header_row, args.header_row + 1
+    read = (
+        read_participants_excel if _is_xlsx(args.input)
+        else read_participants_csv
     )
+    raw = read(spark, args.input, args.header_row, args.header_row + 1)
     params = MoodleParams(
         course_field=args.course,
         type1_value=args.type1,
@@ -169,7 +181,9 @@ def build_parser() -> argparse.ArgumentParser:
     )
     sub = p.add_subparsers(dest="cmd", required=True)
 
-    n = sub.add_parser("normalize", help="participants sheet -> Moodle CSV")
+    n = sub.add_parser(
+        "normalize", help="participants sheet (.xlsx or CSV) -> Moodle CSV"
+    )
     n.add_argument("input")
     n.add_argument("output")
     n.add_argument("--course", default="SPARK-101")

@@ -23,8 +23,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
@@ -62,14 +60,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
     return tuple(load_table(spark, sf_dir, n) for n in names)
 
-
-def register_views(
-    spark: SparkSession, sf_dir: str, *names: str
-) -> None:
-    """Register the catalog tables as temp views so ad-hoc
-    ``spark.sql(...)`` works against the same normalized frames every
-    operator consumes (events keeps the ns→µs read-path treatment —
-    a raw ``spark.read.parquet`` view would diverge on ts). Views are
-    lazy: registering all ten costs only the parquet footer reads."""
-    for name in names or TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

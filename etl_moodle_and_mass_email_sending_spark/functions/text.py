@@ -6,10 +6,9 @@ so the oracle can never drift from the Spark implementation.
 Design notes (scale):
 - Everything here is a pure Column-in/Column-out expression → stays inside
   whole-stage codegen; no Python in the hot path.
-- ``fold_accents`` has two tiers: a ``translate``-based fold (JVM-side,
-  SQL-expressible, pinned semantics for goldens) and an exact NFKD
-  ``pandas_udf`` twin (Arrow-vectorized) for full Unicode fidelity where
-  oracle-parity is not required. Reference: app.py:169–173.
+- ``fold_accents`` is a ``translate``-based fold (JVM-side,
+  SQL-expressible, pinned semantics for goldens) over the Spanish
+  alphabet the reference's NFKD fold targets. Reference: app.py:169–173.
 """
 
 from __future__ import annotations
@@ -51,39 +50,9 @@ USERNAME_STRIP = " .,'\""
 def fold_accents(col: Column) -> Column:
     """Accent fold via ``translate`` (JVM, codegen'd).
 
-    Pinned subset of the reference's NFKD fold (app.py:169–173); see
-    :func:`fold_accents_nfkd` for the exact twin.
+    Pinned subset of the reference's NFKD fold (app.py:169–173).
     """
     return F.translate(col, ACCENT_SRC, ACCENT_DST)
-
-
-def _nfkd_fold_series(s):  # type: ignore[no-untyped-def]
-    import unicodedata
-
-    def fold(x):
-        if x is None:
-            return None
-        nfkd = unicodedata.normalize("NFKD", str(x))
-        return "".join(c for c in nfkd if not unicodedata.combining(c))
-
-    return s.map(fold)
-
-
-_nfkd_udf = None
-
-
-def fold_accents_nfkd(col: Column) -> Column:
-    """Exact NFKD combining-mark strip (reference app.py:169–173) as an
-    Arrow-vectorized pandas_udf. Use where full Unicode fidelity matters;
-    NOT SQL-expressible (oracle gets the translate twin). Built lazily —
-    pandas_udf registration needs an active SparkSession."""
-    global _nfkd_udf
-    if _nfkd_udf is None:
-        from pyspark.sql.functions import pandas_udf
-        from pyspark.sql.types import StringType
-
-        _nfkd_udf = pandas_udf(_nfkd_fold_series, StringType())
-    return _nfkd_udf(col.cast("string"))
 
 
 def normalize_username(col: Column) -> Column:
@@ -138,33 +107,6 @@ def title_case(col: Column) -> Column:
     Whitespace runs are normalized to single spaces first so the DuckDB
     emulation (split/rejoin) matches for every input."""
     return F.initcap(F.regexp_replace(F.trim(col.cast("string")), r"\s+", " "))
-
-
-def _title_series(s):  # type: ignore[no-untyped-def]
-    return s.map(lambda x: None if x is None else str(x).title())
-
-
-_title_udf = None
-
-
-def title_case_exact(col: Column) -> Column:
-    """Byte-exact Python ``str.title()`` (reference app.py:251, 253) as an
-    Arrow-vectorized pandas_udf: capitalizes after ANY non-alpha, so
-    ``o'brien`` → ``O'Brien`` where :func:`title_case`/initcap yields
-    ``O'brien``. The pandas-parity twin for users who need it — NOT
-    SQL-expressible, so oracle-gated paths keep the pinned initcap form
-    (the default). Built lazily like :func:`fold_accents_nfkd`."""
-    global _title_udf
-    if _title_udf is None:
-        from pyspark.sql.functions import pandas_udf
-        from pyspark.sql.types import StringType
-
-        _title_udf = pandas_udf(_title_series, StringType())
-    # same trim + whitespace-collapse normalization as title_case, so the
-    # flag changes ONLY the casing rule, not whitespace hygiene
-    return _title_udf(
-        F.regexp_replace(F.trim(col.cast("string")), r"\s+", " ")
-    )
 
 
 def local_part(col: Column) -> Column:

@@ -111,13 +111,6 @@ def exact_dedup_groups(corpus: DataFrame) -> DataFrame:
     )
 
 
-SQL_EXACT_DEDUP = """
-    SELECT md5(text) AS digest, min(doc_id) AS canonical_id,
-           count(*) AS n_copies
-    FROM ({corpus}) GROUP BY md5(text)
-"""
-
-
 # --------------------------------------------------------------------------
 # Shingles + MinHash signatures (portable hash32 inside nested lambdas).
 # --------------------------------------------------------------------------

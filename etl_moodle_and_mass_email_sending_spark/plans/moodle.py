@@ -34,23 +34,6 @@ class MoodleParams:
     profile_field_name: str = "profile_field_rut"
     password_pattern: str = "{username}{year}"
     password_year: int = 2025
-    # True → byte-exact Python str.title() semantics for firstname/lastname
-    # (pandas_udf twin, reference app.py:251-253: capitalizes after any
-    # non-alpha). Default keeps the pinned, SQL-expressible initcap form
-    # (SURVEY.md §2.4 F-str5) so oracle-gated paths are unchanged.
-    exact_title_case: bool = False
-
-
-MOODLE_COLUMNS = (
-    "username",
-    "password",
-    "firstname",
-    "lastname",
-    "email",
-    # profile field name is inserted here (configurable),
-    "type1",
-    "course1",
-)
 
 
 def normalize_to_moodle(
@@ -83,13 +66,12 @@ def normalize_to_moodle(
             style="format",
         )
     )
-    title = text.title_case_exact if p.exact_title_case else text.title_case
     return df.select(
         *[F.col(k) for k in keep],
         username.alias("username"),
         password.alias("password"),
-        text.first_token(title(F.col("nombres"))).alias("firstname"),
-        title(F.col("apellidos")).alias("lastname"),
+        text.first_token(text.title_case(F.col("nombres"))).alias("firstname"),
+        text.title_case(F.col("apellidos")).alias("lastname"),
         email.alias("email"),
         rut.alias(p.profile_field_name),
         F.lit(p.type1_value).cast("int").alias("type1"),

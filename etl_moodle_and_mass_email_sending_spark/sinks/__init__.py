@@ -1,1 +1,1 @@
-from . import bucketed, csv_single, partitioned, smtp  # noqa: F401
+from . import csv_single, smtp  # noqa: F401

@@ -3,8 +3,7 @@ index=False, encoding='utf-8')``).
 
 The reference's output contract is ONE headered UTF-8 CSV file. Spark
 writes a directory of part files; we coalesce(1) (fine for roster-sized
-outputs — this is an edge sink, not a 100 TB path; large outputs should use
-``write_csv_dir`` which keeps full parallelism).
+outputs — this is an edge sink, not a 100 TB path).
 """
 
 from __future__ import annotations
@@ -32,8 +31,3 @@ def write_csv_single(df: DataFrame, path: str) -> str:
     shutil.rmtree(tmp)
     return path
 
-
-def write_csv_dir(df: DataFrame, path: str) -> str:
-    """Scale path: parallel multi-file CSV directory write."""
-    df.write.mode("overwrite").option("header", True).csv(path)
-    return path

@@ -21,9 +21,6 @@ from pyspark.sql import functions as F
 
 from ..functions import text
 
-CANONICAL_COLUMNS = ("email", "nombre", "usuario", "contrasena")
-
-
 def _lower_map(df: DataFrame) -> dict[str, str]:
     """lowercased name → actual name (first wins, like csv.DictReader)."""
     m: dict[str, str] = {}

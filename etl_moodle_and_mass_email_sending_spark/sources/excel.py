@@ -13,10 +13,9 @@ row, one bounded ``limit(...).collect()`` returns the leading rows in
 zipWithIndex order with their tags, and the data is every row whose tag
 is not among the dropped ones. No row crosses the Python boundary, and
 the data plan is a codegen'd filter over the checkpoint.
-Excel bytes are parsed by ``pd.read_excel`` when an engine wheel
-(openpyxl/xlrd) is importable, else by the repo's stdlib-only
-SpreadsheetML reader (:mod:`.xlsx_lite` — the format is public ECMA-376
-ZIP+XML), so ``.xlsx`` ingestion is first-class in every environment.
+Excel bytes are parsed by the repo's stdlib-only SpreadsheetML reader
+(:mod:`.xlsx_lite` — the format is public ECMA-376 ZIP+XML), so a
+workbook's rows do not depend on which optional wheels are installed.
 """
 
 from __future__ import annotations
@@ -24,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .readers import check_exists, read_csv_headerless
+from .xlsx_lite import read_sheet
 
 
 def _dedupe_header_names(header_vals) -> list[str]:
@@ -84,108 +84,21 @@ def read_participants_excel(
 ) -> DataFrame:
     """S1: Excel participants sheet (sheet 0) → promoted frame.
 
-    Driver-side pandas read (Arrow-accelerated createDataFrame) via
-    ``pd.read_excel`` when an Excel engine wheel is importable, else the
-    stdlib :mod:`.xlsx_lite` parser — same all-string frame either way.
+    The stdlib :mod:`.xlsx_lite` parser reads the rows driver-side; the
+    frame gets the headerless CSV reader's all-string ``_c0.._cN`` schema,
+    so a blank column stays ``string`` and an empty sheet reaches
+    :func:`promote_header`'s ``ValueError``.
     """
     check_exists(path)
-    df = spark.createDataFrame(_excel_sheet_reader(path))
-    return promote_header(df, header_row, data_start)
+    from pyspark.sql.types import StringType, StructField, StructType
 
-
-def _excel_sheet_reader(path: str):
-    """Per-file reader for the single- and many-workbook scans: sheet 0 of
-    an Excel workbook as an all-string pandas frame. Prefers a real Excel
-    engine (openpyxl/xlrd) when one is importable — broader format support
-    (xls, xlsb via extras) — and falls back to the repo's stdlib
-    SpreadsheetML reader, which covers the .xlsx subset rosters use."""
-    import pandas as pd
-
-    try:
-        pdf = pd.read_excel(path, sheet_name=0, header=None, dtype=str)
-        return pdf.where(pdf.notna(), None)
-    except ImportError:  # openpyxl/xlrd missing → stdlib parser
-        from .xlsx_lite import read_sheet_pandas
-
-        return read_sheet_pandas(path, sheet=0)
-
-
-def csv_sheet_reader(path: str):
-    """Headerless-CSV twin of :func:`_excel_sheet_reader` — the same
-    header-displaced sheet layout exported to CSV (works everywhere; used
-    by the in-container e2e test of the distributed scan)."""
-    import pandas as pd
-
-    pdf = pd.read_csv(
-        path, header=None, dtype=str, keep_default_na=False, skip_blank_lines=False
+    rows = read_sheet(path, sheet=0)
+    width = len(rows[0]) if rows else 0
+    schema = StructType(
+        [StructField(f"_c{i}", StringType()) for i in range(width)]
     )
-    return pdf.where(pdf != "", None)
-
-
-def read_participants_many(
-    spark: SparkSession,
-    paths: list[str],
-    header_row: int = 3,
-    data_start: int = 4,
-    reader=_excel_sheet_reader,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Distributed many-workbook ingestion (the scale path S1 lacks):
-    ship the PATH LIST across executors and let each task open its own
-    workbooks — the driver never materializes sheet data, so a thousand
-    rosters ingest in parallel instead of serially through
-    ``pd.read_excel`` on the driver.
-
-    Per file (executor-side, pandas in-memory — a single sheet is small
-    by construction of the format): positional header promotion at
-    ``header_row``, data from ``data_start`` (reference app.py:236–238),
-    the messy-header rename (app.py:240–245), then projection onto the
-    canonical (rut, nombres, apellidos, email) contract — absent columns
-    are null, extra columns drop. ``source_file`` carries provenance so
-    downstream dedup can attribute collisions to a workbook.
-    """
-    import pandas as pd
-
-    for p in paths:
-        check_exists(p)
-    if num_partitions is None:
-        num_partitions = max(1, min(len(paths), 64))
-    paths_df = spark.createDataFrame(
-        [(p,) for p in paths], "path string"
-    ).repartition(num_partitions)
-    out_cols = ("rut", "nombres", "apellidos", "email")
-
-    def scan(batches):
-        for batch in batches:
-            for path in batch["path"]:
-                pdf = reader(path)
-                names = _dedupe_header_names(pdf.iloc[header_row].tolist())
-                data = pdf.iloc[data_start:].copy()
-                data.columns = names
-                data = data.rename(
-                    columns={
-                        k: v for k, v in RENAME_MAP.items() if k in data.columns
-                    }
-                )
-                # explicit index: when a workbook yields NONE of the
-                # canonical columns the dict would be all scalars and
-                # pd.DataFrame raises an opaque "must pass an index"
-                # executor error — with the index, absent columns become
-                # null Series of the right length instead
-                out = pd.DataFrame(
-                    {
-                        c: (data[c] if c in data.columns else None)
-                        for c in out_cols
-                    },
-                    index=data.index,
-                )
-                out["source_file"] = path
-                yield out
-
-    return paths_df.mapInPandas(
-        scan,
-        "rut string, nombres string, apellidos string, email string, "
-        "source_file string",
+    return promote_header(
+        spark.createDataFrame(rows, schema), header_row, data_start
     )
 
 

@@ -1,9 +1,10 @@
 """Minimal stdlib-only ``.xlsx`` reader (SpreadsheetML, ECMA-376 — a
 public format: a ZIP of XML parts).
 
-This container ships no Excel wheel (openpyxl/xlrd), so S1 (reference
-app.py:234 ``pd.read_excel``) would otherwise degrade to a clear error.
-The subset implemented here is exactly what a roster workbook needs —
+S1 (reference app.py:234 ``pd.read_excel``) reads every workbook through
+this parser, so the rows never depend on an optional Excel wheel
+(openpyxl/xlrd). The subset implemented here is what a roster workbook
+needs —
 ``zipfile`` + ``xml.etree`` over:
 
 - ``xl/workbook.xml`` + ``xl/_rels/workbook.xml.rels``: sheet order →
@@ -140,16 +141,3 @@ def read_sheet(path: str, sheet: int = 0) -> list[list[str | None]]:
         for r in range(max_row + 1)
     ]
 
-
-def read_sheet_pandas(path: str, sheet: int = 0):
-    """:func:`read_sheet` as an all-string pandas frame — the drop-in twin
-    of ``pd.read_excel(path, sheet_name=sheet, header=None, dtype=str)``
-    this repo's Excel entry points fall back to when no engine wheel is
-    installed."""
-    import pandas as pd
-
-    data = read_sheet(path, sheet)
-    if not data:
-        return pd.DataFrame()
-    pdf = pd.DataFrame(data, dtype=object)
-    return pdf.where(pdf.notna(), None)

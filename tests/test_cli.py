@@ -49,6 +49,38 @@ def test_cli_normalize(spark, participants_csv, tmp_path, capsys):
     usernames = {r[0] for r in rows}
     assert "anasotodi" in usernames  # ana + soto + first2(diaz)
 
+
+def test_cli_normalize_reads_xlsx(spark, tmp_path, capsys):
+    """The reference's own input, an .xlsx workbook, goes through the
+    stdlib xlsx parser (ZIP magic), not the CSV reader, and the CLI
+    writes the rows the library pipeline derives from it."""
+    import csv
+
+    from etl_moodle_and_mass_email_sending_spark.__main__ import main
+    from etl_moodle_and_mass_email_sending_spark.plans.moodle import (
+        normalize_to_moodle,
+    )
+    from etl_moodle_and_mass_email_sending_spark.sources.excel import (
+        read_participants_excel,
+        rename_participant_columns,
+    )
+
+    xlsx = os.path.join(
+        os.path.dirname(__file__), "fixtures", "participants.xlsx"
+    )
+    out = str(tmp_path / "moodle.csv")
+    assert main(["normalize", xlsx, out]) == 0
+    assert f"wrote 6 rows -> {out}" in capsys.readouterr().out
+    with open(out, encoding="utf-8", newline="") as f:
+        header, *rows = list(csv.reader(f))
+    want = normalize_to_moodle(
+        rename_participant_columns(read_participants_excel(spark, xlsx))
+    )
+    assert header == want.columns
+    assert sorted(map(tuple, rows)) == sorted(
+        tuple("" if v is None else str(v) for v in r) for r in want.collect()
+    )
+
 def test_cli_send_dry_run_with_receipts(spark, recipients_csv, tmp_path, capsys):
     from etl_moodle_and_mass_email_sending_spark.__main__ import main
 

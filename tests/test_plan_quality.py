@@ -932,3 +932,22 @@ def test_bucketed_join_tables_are_per_sf_dir(spark, registry_queries):
     ra = sorted(map(tuple, registry_queries["rel_bucketed_join"](spark, SF_SMALL).collect()))
     rb = sorted(map(tuple, registry_queries["rel_bucketed_join"](spark, alias).collect()))
     assert ra == rb  # same underlying data -> same report, via distinct tables
+
+
+def test_manifest_scan_prunes_file_mo_as_partition_filter(
+    spark, registry_queries
+):
+    """src_manifest_scan reads only the manifest-selected month
+    directories: the file_mo predicate must reach the parquet scan as a
+    PartitionFilter (directory pruning, no footers opened), not as a
+    row-level filter over every file."""
+    plan = _plan(registry_queries["src_manifest_scan"](spark, SF_SMALL))
+    pf = [
+        ln.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
+        for ln in plan.splitlines()
+        if "PartitionFilters: [" in ln
+    ]
+    # isin() plans as IN below the InSet conversion threshold, else INSET
+    assert any(
+        "file_mo" in f and (" IN (" in f or " INSET " in f) for f in pf
+    ), plan

@@ -148,32 +148,3 @@ def test_csv_single_file_sink(spark, tmp_path):
     lines = open(out, encoding="utf-8").read().strip().splitlines()
     assert lines[0] == "username,type1"
     assert sorted(lines[1:]) == ["a,1", "b,2"]
-
-
-def test_partitioned_write_bounds_files(spark, tmp_path):
-    """partitionBy write with repartition-on-keys: each partition dir has
-    at most files_per_partition data files (the small-files guard), and
-    the data round-trips."""
-    import glob
-    import os
-
-    from etl_moodle_and_mass_email_sending_spark.sinks.partitioned import (
-        write_partitioned,
-    )
-
-    df = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet").select(
-        "l_orderkey", "l_quantity", "l_returnflag"
-    )
-    out1 = str(tmp_path / "p1")
-    write_partitioned(df, out1, ["l_returnflag"], files_per_partition=1)
-    for d in glob.glob(os.path.join(out1, "l_returnflag=*")):
-        files = [f for f in os.listdir(d) if f.endswith(".parquet")]
-        assert len(files) == 1, d
-    assert spark.read.parquet(out1).count() == df.count()
-
-    out2 = str(tmp_path / "p2")
-    write_partitioned(df, out2, ["l_returnflag"], files_per_partition=3)
-    for d in glob.glob(os.path.join(out2, "l_returnflag=*")):
-        files = [f for f in os.listdir(d) if f.endswith(".parquet")]
-        assert 1 <= len(files) <= 3, d
-    assert spark.read.parquet(out2).count() == df.count()

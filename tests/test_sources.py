@@ -166,48 +166,6 @@ def test_missing_file_guard(spark):
         read_csv_all_string(spark, "/nonexistent/x.csv")
 
 
-def test_bucketed_join_eliminates_shuffle(spark):
-    """Both facts bucketed by orderkey into the same bucket count → their
-    join plans with ZERO Exchange (the write-once-shuffle-never-again
-    contract of SCALE.md's rel_q3 note)."""
-    from etl_moodle_and_mass_email_sending_spark.sinks.bucketed import (
-        joins_without_exchange,
-        write_bucketed,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    o = spark.read.parquet(f"{sf}/orders.parquet").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    l = spark.read.parquet(f"{sf}/lineitem.parquet").select(
-        "l_orderkey", "l_quantity"
-    )
-    try:
-        write_bucketed(o, "t_orders_b", "o_orderkey", 4)
-        write_bucketed(l, "t_lineitem_b", "l_orderkey", 4)
-        assert joins_without_exchange(
-            spark, "t_orders_b", "t_lineitem_b", "o_orderkey", "l_orderkey"
-        )
-        # sanity: the same merge join on raw (unbucketed) frames shuffles
-        raw = o.hint("merge").join(l, o.o_orderkey == l.l_orderkey)
-        raw_plan = raw._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" in raw_plan
-        # and the bucketed join returns the same row count
-        bucketed_n = (
-            spark.table("t_orders_b")
-            .join(
-                spark.table("t_lineitem_b"),
-                spark.table("t_orders_b").o_orderkey
-                == spark.table("t_lineitem_b").l_orderkey,
-            )
-            .count()
-        )
-        assert bucketed_n == raw.count()
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_orders_b")
-        spark.sql("DROP TABLE IF EXISTS t_lineitem_b")
-
-
 def test_xlsx_fixture_is_regenerable(tmp_path):
     """The committed participants.xlsx must equal what the stdlib-only
     generator produces (byte-stable zip, fixed timestamps) — guards
@@ -227,9 +185,8 @@ def test_xlsx_fixture_is_regenerable(tmp_path):
 
 def test_excel_end_to_end(spark):
     """S1 against a REAL .xlsx binary (4 junk rows, trailing-space header):
-    read → rename → normalize, full pipeline. Runs everywhere: with no
-    Excel engine wheel installed (this container ships none) the reader
-    falls back to the repo's stdlib SpreadsheetML parser (xlsx_lite)."""
+    read → rename → normalize, full pipeline, through the stdlib
+    SpreadsheetML parser (xlsx_lite)."""
     import os
 
     from etl_moodle_and_mass_email_sending_spark.plans.moodle import (
@@ -263,48 +220,6 @@ def test_excel_end_to_end(spark):
     # whitespace-padded email trimmed by pick_email
     assert "jn@u.cl" in rows
     assert all(r.course1 == "C-XL" for r in rows.values())
-
-
-def test_jsonl_roundtrip_and_corrupt_line(spark, tmp_path):
-    from etl_moodle_and_mass_email_sending_spark.sources.readers import read_jsonl
-
-    p = tmp_path / "rows.jsonl"
-    p.write_text(
-        '{"id": 1, "name": "a"}\n'
-        '{"id": 2, "name": "b"}\n'
-        "{not json at all\n"
-    )
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("id", LongType()),
-            StructField("name", StringType()),
-            StructField("_corrupt_record", StringType()),
-        ]
-    )
-    df = read_jsonl(spark, str(p), schema=schema)
-    rows = df.collect()
-    good = [r for r in rows if r["_corrupt_record"] is None]
-    bad = [r for r in rows if r["_corrupt_record"] is not None]
-    assert {(r["id"], r["name"]) for r in good} == {(1, "a"), (2, "b")}
-    assert len(bad) == 1  # the corrupt line survives as a record
-
-
-def test_orc_roundtrip(spark, tmp_path):
-    from etl_moodle_and_mass_email_sending_spark.sources.readers import read_orc
-
-    src = spark.range(100).withColumnRenamed("id", "k")
-    out = str(tmp_path / "orc_out")
-    src.write.orc(out)
-    back = read_orc(spark, out)
-    assert back.count() == 100
-    assert [f.name for f in back.schema.fields] == ["k"]
 
 
 def test_merge_upsert_latest_wins(spark, tmp_path):
@@ -362,127 +277,8 @@ def test_merge_upsert_recovers_from_interrupted_swap(spark, tmp_path):
     assert not os.path.isdir(snap + ".old")
 
 
-def test_jsonl_explicit_schema_still_captures_corrupt(spark, tmp_path):
-    from etl_moodle_and_mass_email_sending_spark.sources.readers import read_jsonl
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    p = tmp_path / "rows2.jsonl"
-    p.write_text('{"id": 1, "name": "a"}\n{broken\n')
-    schema = StructType(
-        [StructField("id", LongType()), StructField("name", StringType())]
-    )  # no _corrupt_record — reader must append it
-    rows = read_jsonl(spark, str(p), schema=schema).collect()
-    bad = [r for r in rows if r["_corrupt_record"] is not None]
-    assert len(bad) == 1
-
-
-def test_distributed_many_workbook_scan(spark, tmp_path):
-    """S1 scale path: N header-displaced sheets ingest executor-side via
-    mapInPandas over the PATH list (driver never touches sheet data) —
-    union of all files, canonical contract, provenance column."""
-    from etl_moodle_and_mass_email_sending_spark.sources.excel import (
-        csv_sheet_reader,
-        read_participants_many,
-    )
-
-    paths = []
-    for i in range(5):
-        lines = [
-            "Listado de participantes,,,",
-            ",,,",
-            "Generado: 2026-01-01,,,",
-            "Rut (con punto y con guión),Nombres ,Apellidos,Correo electrónico",
-            f"11.111.111-{i},ana{i},rojas,ana{i}@x.cl",
-            f"22.222.222-{i},luis{i},mora,luis{i}@y.cl",
-        ]
-        p = tmp_path / f"roster_{i}.csv"
-        p.write_text("\n".join(lines), encoding="utf-8")
-        paths.append(str(p))
-
-    out = read_participants_many(spark, paths, reader=csv_sheet_reader)
-    assert out.columns == ["rut", "nombres", "apellidos", "email", "source_file"]
-    rows = out.collect()
-    assert len(rows) == 10
-    by_name = {r["nombres"]: r for r in rows}
-    assert by_name["ana3"]["rut"] == "11.111.111-3"
-    assert by_name["ana3"]["source_file"].endswith("roster_3.csv")
-    assert by_name["luis4"]["email"] == "luis4@y.cl"
-    # the scan itself is distributed: the plan is mapInPandas over the
-    # path frame, no driver-side createDataFrame of sheet rows
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
-
-
-def test_distributed_scan_tolerates_schema_drift(spark, tmp_path):
-    """A workbook missing a canonical column yields nulls there (and extra
-    columns drop) instead of failing the whole ingest."""
-    from etl_moodle_and_mass_email_sending_spark.sources.excel import (
-        csv_sheet_reader,
-        read_participants_many,
-    )
-
-    full = tmp_path / "full.csv"
-    full.write_text(
-        "j,,,\nj,,,\nj,,,\n"
-        "Rut (con punto y con guión),Nombres ,Apellidos,Correo electrónico\n"
-        "1-9,eva,paz,e@x.cl\n",
-        encoding="utf-8",
-    )
-    drifted = tmp_path / "drifted.csv"
-    drifted.write_text(
-        "j,,,\nj,,,\nj,,,\n"
-        "Nombres ,Apellidos,Telefono,Comentario\n"
-        "omar,vidal,123,hola\n",
-        encoding="utf-8",
-    )
-    out = read_participants_many(
-        spark, [str(full), str(drifted)], reader=csv_sheet_reader
-    ).collect()
-    by_name = {r["nombres"]: r for r in out}
-    assert by_name["eva"]["rut"] == "1-9"
-    assert by_name["omar"]["rut"] is None
-    assert by_name["omar"]["email"] is None
-    assert "Telefono" not in {c for r in out for c in r.asDict()}
-
-
-def test_partitioned_write_prunes_at_read(spark, tmp_path):
-    """Hive-layout write + partition-pruned read: the filtered scan's
-    plan must carry the predicate as a PartitionFilter (directory
-    pruning, not row filtering), results must match a plain filter, and
-    the layout must not explode into tasks x partitions files."""
-    import glob
-    import os
-
-    from etl_moodle_and_mass_email_sending_spark.catalog import load_table
-    from etl_moodle_and_mass_email_sending_spark.sinks.partitioned import (
-        read_partition_pruned,
-        write_partitioned,
-    )
-    from tests.conftest import SF_SMALL
-
-    docs = load_table(spark, SF_SMALL, "documents")
-    path = str(tmp_path / "docs_by_lang")
-    write_partitioned(docs, path, ["lang"])
-    langs = [r["lang"] for r in docs.select("lang").distinct().collect()]
-    assert sorted(os.path.basename(d) for d in glob.glob(f"{path}/lang=*")) == sorted(
-        f"lang={lg}" for lg in langs
-    )
-    # repartition-by-key keeps each partition dir to a handful of files
-    for d in glob.glob(f"{path}/lang=*"):
-        assert len(glob.glob(f"{d}/*.parquet")) <= 4
-    pruned = read_partition_pruned(spark, path, lang=langs[0])
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert f"PartitionFilters: [isnotnull(lang" in plan or "PartitionFilters: [" in plan
-    # the partition predicate must be IN the partition filters, and the
-    # scan must not fall back to a row-level data filter on lang
-    pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert pf and any("lang" in ln.split("PartitionFilters")[1].split("]")[0] for ln in pf), pf
-    expect = docs.filter(docs["lang"] == langs[0]).count()
-    assert pruned.count() == expect
-
-
 # --------------------------------------------------------------------------
-# stdlib SpreadsheetML reader (xlsx_lite) — the no-wheel fallback engine.
+# stdlib SpreadsheetML reader (xlsx_lite) — the one Excel parser.
 # The committed fixture uses inlineStr cells; real Excel writes a
 # sharedStrings table, so these tests build that layout too.
 # --------------------------------------------------------------------------
@@ -612,46 +408,44 @@ def test_xlsx_lite_sheet_selection_and_errors(tmp_path):
         read_sheet(str(p), sheet=2)
 
 
-def test_participants_many_xlsx_default_reader(spark, tmp_path):
-    """The distributed many-workbook scan now ingests REAL .xlsx with its
-    DEFAULT reader (stdlib fallback on wheel-free executors), including a
-    workbook yielding none of the canonical columns — which must surface
-    as null columns, not the pandas all-scalar-dict error."""
-    import os
-    import shutil
+def test_excel_blank_column_stays_string(spark, tmp_path):
+    """A column blank in every row is a string column named like the
+    headerless CSV reader names it, not an inferred void column."""
+    from etl_moodle_and_mass_email_sending_spark.sources.excel import (
+        read_participants_excel,
+    )
+
+    junk = "".join(
+        f'<row r="{i}"><c r="A{i}" t="s"><v>0</v></c></row>'
+        for i in (1, 2, 3)
+    )
+    body = junk + (
+        '<row r="4"><c r="A4" t="str"><v>rut</v></c>'
+        '<c r="C4" t="str"><v>email</v></c></row>'
+        '<row r="5"><c r="A5" t="str"><v>1-9</v></c>'
+        '<c r="C5" t="str"><v>a@x.cl</v></c></row>'
+    )
+    p = tmp_path / "blank_col.xlsx"
+    _write_shared_strings_xlsx(str(p), [("S1", body)])
+    df = read_participants_excel(spark, str(p))
+    assert df.dtypes == [
+        ("rut", "string"), ("_c1", "string"), ("email", "string")
+    ]
+    assert [tuple(r) for r in df.collect()] == [("1-9", None, "a@x.cl")]
+
+
+def test_excel_empty_sheet_raises_value_error(spark, tmp_path):
+    """An empty sheet has no header row: promote_header's ValueError."""
+    import pytest
 
     from etl_moodle_and_mass_email_sending_spark.sources.excel import (
-        read_participants_many,
+        read_participants_excel,
     )
 
-    fixture = os.path.join(
-        os.path.dirname(__file__), "fixtures", "participants.xlsx"
-    )
-    a = tmp_path / "a.xlsx"
-    shutil.copy(fixture, a)
-    # workbook with an alien header — none of the canonical columns
-    alien = (
-        '<row r="1"><c r="A1" t="s"><v>0</v></c></row>'
-        '<row r="2"><c r="A2" t="s"><v>1</v></c></row>'
-        '<row r="3"><c r="A3" t="s"><v>2</v></c></row>'
-        '<row r="4"><c r="A4" t="str"><v>Curso</v></c>'
-        '<c r="B4" t="str"><v>Nota</v></c></row>'
-        '<row r="5"><c r="A5" t="str"><v>mat-101</v></c>'
-        '<c r="B5"><v>6.5</v></c></row>'
-    )
-    b = tmp_path / "b.xlsx"
-    _write_shared_strings_xlsx(str(b), [("Alien", alien)])
-    out = read_participants_many(spark, [str(a), str(b)]).collect()
-    by_file = {}
-    for r in out:
-        by_file.setdefault(os.path.basename(r.source_file), []).append(r)
-    assert len(by_file["a.xlsx"]) == 8  # fixture's 8 data rows
-    emails = {r.email for r in by_file["a.xlsx"]}
-    assert "mjperez@u.cl" in emails
-    # alien workbook: 1 data row, all canonical columns null
-    (alien_row,) = by_file["b.xlsx"]
-    assert (alien_row.rut, alien_row.nombres, alien_row.apellidos,
-            alien_row.email) == (None, None, None, None)
+    p = tmp_path / "empty.xlsx"
+    _write_shared_strings_xlsx(str(p), [("S1", "")])
+    with pytest.raises(ValueError, match="header row 3 does not exist"):
+        read_participants_excel(spark, str(p))
 
 
 def test_jsonl_permissive_quarantines_corrupt_lines(spark, tmp_path):
@@ -708,32 +502,6 @@ def test_staged_path_builds_once_per_session(spark):
     assert util._SCRATCH_ROOT is not None
     assert p1.startswith(util._SCRATCH_ROOT)
     assert p3.startswith(util._SCRATCH_ROOT)
-
-
-def test_register_views_enables_spark_sql(spark):
-    """catalog.register_views exposes the normalized tables to
-    spark.sql — including the events ns->us ts treatment (a raw
-    parquet view would carry bigint nanos instead of a timestamp)."""
-    from conftest import SF_SMALL
-    from etl_moodle_and_mass_email_sending_spark import catalog
-
-    catalog.register_views(spark, SF_SMALL)
-    n = spark.sql("SELECT count(*) AS n FROM documents").collect()[0]["n"]
-    assert n > 0
-    row = spark.sql(
-        "SELECT min(ts) AS lo FROM events"
-    ).collect()[0]
-    import datetime
-
-    assert isinstance(row["lo"], datetime.datetime)
-    joined = spark.sql(
-        """SELECT r.r_name, count(*) AS n
-        FROM nation n JOIN region r ON n.n_regionkey = r.r_regionkey
-        GROUP BY 1"""
-    ).collect()
-    assert sum(r["n"] for r in joined) == spark.sql(
-        "SELECT count(*) AS c FROM nation"
-    ).collect()[0]["c"]
 
 
 def test_csv_corrupt_detection_is_pruning_scoped(spark, tmp_path):

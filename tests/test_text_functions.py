@@ -95,18 +95,6 @@ def test_pick_email_matches_reference(spark, raw):
     assert got == ref_pick_email(raw)
 
 
-def test_nfkd_udf_matches_reference(spark):
-    from etl_moodle_and_mass_email_sending_spark.functions import text
-
-    vals = ["ÁÉÍÓÚ äëïöü ñÑ çÇ", "œßﬁ", "noël – café", ""]
-    df = spark.createDataFrame([(v,) for v in vals], "v string")
-    got = [
-        r["r"]
-        for r in df.select(text.fold_accents_nfkd(F.col("v")).alias("r")).collect()
-    ]
-    assert got == [ref_normalize_simple(v) for v in vals]
-
-
 def test_translate_fold_matches_nfkd_on_spanish_alphabet(spark):
     """The pinned translate fold equals NFKD on the Spanish charset it
     covers (divergence only outside that set, e.g. ligatures)."""
@@ -143,30 +131,11 @@ def spark_global(spark):
     return spark
 
 
-def test_title_case_exact_matches_python_title(spark):
-    """The pandas_udf twin must equal Python str.title() byte-for-byte,
-    including the after-any-non-alpha capitalization initcap lacks."""
-    from etl_moodle_and_mass_email_sending_spark.functions import text
-
-    vals = [
-        "o'brien", "maría-josé", "van der sar", "d'angelo núñez",
-        "MC donald", "a.b.c", "", "ñandú",
-    ]
-    df = spark.createDataFrame([(v,) for v in vals], "v string")
-    got = [
-        r["r"]
-        for r in df.select(
-            text.title_case_exact(F.col("v")).alias("r")
-        ).collect()
-    ]
-    assert got == [v.title() for v in vals]
-
-
-def test_exact_title_flag_in_normalize(spark):
-    """MoodleParams(exact_title_case=True) routes firstname/lastname through
-    str.title() semantics; the default keeps pinned initcap (o'brien)."""
+def test_title_case_pins_initcap_in_normalize(spark):
+    """normalize_to_moodle title-cases firstname/lastname with the pinned
+    initcap rule (SURVEY.md §2.4 F-str5): no capital after an apostrophe,
+    where Python str.title() would give O'Brien."""
     from etl_moodle_and_mass_email_sending_spark.plans.moodle import (
-        MoodleParams,
         normalize_to_moodle,
     )
 
@@ -174,9 +143,6 @@ def test_exact_title_flag_in_normalize(spark):
         [("1-9", "ana maría", "o'brien díaz", "a@x.cl")],
         "rut string, nombres string, apellidos string, email string",
     )
-    exact = normalize_to_moodle(
-        df, MoodleParams(exact_title_case=True)
-    ).first()
-    assert exact.lastname == "o'brien díaz".title()  # O'Brien Díaz
-    pinned = normalize_to_moodle(df).first()
-    assert pinned.lastname == "O'brien Díaz"
+    row = normalize_to_moodle(df).first()
+    assert row.lastname == "O'brien Díaz"
+    assert row.firstname == "Ana"
