@@ -193,20 +193,26 @@ def build_parser() -> argparse.ArgumentParser:
     n.add_argument("--header-row", type=int, default=3)
     n.set_defaults(fn=cmd_normalize)
 
-    s = sub.add_parser("send", help="recipients CSV -> SMTP (dry-run default)")
-    s.add_argument("input")
-    s.add_argument("--dry-run", action="store_true", default=True)
-    s.add_argument(
+    # the delivery flags `send` and `send-stream` share
+    delivery = argparse.ArgumentParser(add_help=False)
+    delivery.add_argument("--dry-run", action="store_true", default=True)
+    delivery.add_argument(
         "--no-dry-run", dest="dry_run", action="store_false",
         help="actually deliver (requires --yes and SMTP_PASSWORD)",
     )
-    s.add_argument("--yes", action="store_true")
-    s.add_argument("--smtp-host", default="smtp.example.com")
-    s.add_argument("--smtp-port", type=int, default=465)
-    s.add_argument("--sender", default="sender@example.com")
+    delivery.add_argument("--yes", action="store_true")
+    delivery.add_argument("--smtp-host", default="smtp.example.com")
+    delivery.add_argument("--smtp-port", type=int, default=465)
+    delivery.add_argument("--sender", default="sender@example.com")
+    delivery.add_argument("--course-name", default="Curso")
+    delivery.add_argument("--aula-url", default="https://aula.example.com")
+
+    s = sub.add_parser(
+        "send", parents=[delivery],
+        help="recipients CSV -> SMTP (dry-run default)",
+    )
+    s.add_argument("input")
     s.add_argument("--throttle", type=float, default=0.0)
-    s.add_argument("--course-name", default="Curso")
-    s.add_argument("--aula-url", default="https://aula.example.com")
     s.add_argument("--receipts", help="write receipt CSV here")
     s.add_argument(
         "--receipts-ledger",
@@ -222,18 +228,11 @@ def build_parser() -> argparse.ArgumentParser:
     v.set_defaults(fn=cmd_preview)
 
     ss = sub.add_parser(
-        "send-stream", help="drain a roster drop-dir via Structured Streaming"
+        "send-stream", parents=[delivery],
+        help="drain a roster drop-dir via Structured Streaming",
     )
     ss.add_argument("roster_dir")
     ss.add_argument("work_dir", help="checkpoint + receipt-ledger root")
-    ss.add_argument("--dry-run", action="store_true", default=True)
-    ss.add_argument("--no-dry-run", dest="dry_run", action="store_false")
-    ss.add_argument("--yes", action="store_true")
-    ss.add_argument("--smtp-host", default="smtp.example.com")
-    ss.add_argument("--smtp-port", type=int, default=465)
-    ss.add_argument("--sender", default="sender@example.com")
-    ss.add_argument("--course-name", default="Curso")
-    ss.add_argument("--aula-url", default="https://aula.example.com")
     ss.set_defaults(fn=cmd_send_stream)
     return p
 

@@ -269,11 +269,11 @@ register(
 
 
 def _send_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # scale-safe stamp: the naive form is one global Window.orderBy (a
-    # single-task sort) — instead use the production sink's two-pass
-    # range-partition + broadcast-offsets rank (sinks/smtp.py), and carry
-    # the total as a broadcast one-row aggregate rather than a second
-    # unpartitioned window. Identical output, no single-partition Exchange.
+    # the same counter as the sink's stamp (sinks/smtp.py, one global
+    # Window.orderBy, then the send runs as one task), computed here with
+    # the two-pass range-partition + broadcast-offsets rank and the total
+    # as a broadcast one-row aggregate: same output, and this read-only
+    # query needs no single-partition Exchange.
     from ..operators.util import two_pass_rank
 
     users = csv_variants.normalize_recipients(
@@ -317,9 +317,9 @@ def _header_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.excel import promote_header
 
     c = load_table(spark, sf_dir, "customer")
-    # row positions via the two-pass global rank (round 14): the
-    # sheet-synthesis stamp was the last global Window.orderBy in the
-    # engine — now no plan anywhere carries an unpartitioned WindowExec
+    # row positions via the two-pass global rank (round 14): no
+    # registered query's plan carries an unpartitioned WindowExec (the
+    # send sink's stamp in sinks/smtp.py is one, on purpose)
     data = two_pass_rank(
         c.select("c_custkey", "c_name", "c_mktsegment"),
         [F.col("c_custkey")],

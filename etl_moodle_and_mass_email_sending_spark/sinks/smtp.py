@@ -6,10 +6,11 @@ Differences from the reference, by design:
 - **Receipts are data, not log lines** (K5): the sink returns a DataFrame
   ``(idx, email, status, attempts, error, remaining)`` (FIXTURES.md §4)
   instead of UI callbacks.
-- **Partition-parallel** (K2): one SMTP connection per partition (the
-  reference holds one global connection, app.py:335–337). The global rate
-  budget is divided across partitions: ``throttle_seconds`` is per-row
-  within a partition, so global rate ≈ partitions / throttle.
+- **One send task** (K2): the global send-order stamp (a ``row_number``
+  over an unpartitioned window) gathers the rows into one partition, so
+  the send runs as one task on one SMTP connection, like the reference's
+  one global connection (app.py:335–337); ``throttle_seconds`` is the
+  pause after each row, so the global rate is 1 / throttle.
 - **Idempotence ledger** (§4.1): pass ``already_sent`` (a 1-column frame of
   emails) to make re-runs effectively-once — Spark task retry alone would
   resend a partially-sent partition.
@@ -37,6 +38,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+MAX_RETRIES = 3  # reference MAX_RETRIES, app.py:45
+BACKOFF_BASE_SECONDS = 2.0  # sleep(2*attempt), app.py:364–372
+
 RECEIPT_SCHEMA = StructType(
     [
         StructField("idx", LongType()),
@@ -56,8 +60,6 @@ class SmtpConfig:
     port: int = 465
     sender: str = "sender@example.com"
     password: str = ""
-    max_retries: int = 3  # reference MAX_RETRIES, app.py:45
-    backoff_base_seconds: float = 2.0  # sleep(2*attempt), app.py:364–372
     throttle_seconds: float = 0.0  # reference THROTTLE_SECONDS=1.0, app.py:44
     dry_run: bool = True
 
@@ -88,7 +90,7 @@ def _send_partition_factory(
                 out = []
                 for row in pdf.itertuples(index=False):
                     status, attempts, error = "SENT", 0, None
-                    for attempt in range(1, cfg.max_retries + 1):
+                    for attempt in range(1, MAX_RETRIES + 1):
                         attempts = attempt
                         try:
                             if fail_hook(row.email, attempt):
@@ -99,12 +101,12 @@ def _send_partition_factory(
                             break
                         except Exception as exc:  # noqa: BLE001
                             error = str(exc)
-                            if attempt == cfg.max_retries:
+                            if attempt == MAX_RETRIES:
                                 status = "FAILED"
                             else:
                                 # linear backoff 2s,4s (reference app.py:370)
                                 time.sleep(
-                                    cfg.backoff_base_seconds * attempt
+                                    BACKOFF_BASE_SECONDS * attempt
                                     if not cfg.dry_run
                                     else 0.0
                                 )
@@ -143,17 +145,16 @@ def _build_message(sender: str, row):  # type: ignore[no-untyped-def]
 def send_all(
     messages: DataFrame,
     cfg: SmtpConfig = SmtpConfig(),
-    order_by: str = "email",
     already_sent: DataFrame | None = None,
-    num_partitions: int | None = None,
     fail_spec: dict[str, int] | None = None,
 ) -> DataFrame:
     """Deliver rendered messages; return the receipt DataFrame.
 
-    ``messages`` needs columns email/subject/plain/html. ``order_by`` makes
-    the reference's input-order counter (A2, app.py:338–339) explicit — a
-    partitioned source has no inherent order. Receipts carry
-    ``remaining = total - idx`` (countdown, app.py:339).
+    ``messages`` needs columns email/subject/plain/html. Rows are sent in
+    email order, which makes the reference's input-order counter (A2,
+    app.py:338–339) explicit — a partitioned source has no inherent
+    order. Receipts carry ``remaining = total - idx`` (countdown,
+    app.py:339).
     """
     if already_sent is not None:
         messages = messages.join(
@@ -161,38 +162,12 @@ def send_all(
             on="email",
             how="left_anti",
         )
-    if num_partitions and num_partitions > 1:
-        # distributed send order: range partitions + broadcast offsets,
-        # no single-task sort (imported here: the CLI never takes this
-        # branch and skips loading the operators package)
-        from ..operators.util import two_pass_rank
-
-        stamped = two_pass_rank(
-            messages, [F.col(order_by)], out_col="idx",
-            num_partitions=num_partitions,
-        )
-    else:
-        # single-task global sort: fine for roster-scale parity runs; pass
-        # num_partitions>1 for the distributed two-pass stamp
-        w = Window.orderBy(F.col(order_by))
-        stamped = messages.withColumn("idx", F.row_number().over(w))
+    stamped = messages.withColumn(
+        "idx", F.row_number().over(Window.orderBy(F.col("email")))
+    )
     receipts = stamped.mapInPandas(
         _send_partition_factory(cfg, fail_spec), RECEIPT_SCHEMA
     )
-    if num_partitions and num_partitions > 1:
-        # countdown total via a broadcast 1-row aggregate over the STAMPED
-        # frame (side-effect-free: the send lives in `receipts`, and the
-        # stamp recomputes cheaply over the checkpointed range shuffle) —
-        # an unpartitioned window max here would funnel every receipt row
-        # through one task, the same bottleneck the two-pass stamp removed
-        total_df = stamped.agg(F.max("idx").alias("_total"))
-        return (
-            receipts.crossJoin(F.broadcast(total_df))
-            .withColumn(
-                "remaining", (F.col("_total") - F.col("idx")).cast("long")
-            )
-            .drop("_total")
-        )
     total = F.max("idx").over(Window.partitionBy())
     return receipts.withColumn(
         "remaining", (total - F.col("idx")).cast("long")

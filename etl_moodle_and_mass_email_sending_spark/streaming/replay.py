@@ -134,7 +134,8 @@ def land_batch(
     )
 
 
-def _has_parquet(d: str) -> bool:
+def has_parquet(d: str) -> bool:
+    """True when the directory ``d`` holds a parquet file at any depth."""
     return os.path.isdir(d) and any(
         f.endswith(".parquet") for _, _, fs in os.walk(d) for f in fs
     )
@@ -159,10 +160,10 @@ def swap_store(
     before the first rename is overwritten."""
     live = live.rstrip("/")
     old, staging = live + ".old", live + ".staging"
-    if not os.path.isdir(live) and _has_parquet(old):
+    if not os.path.isdir(live) and has_parquet(old):
         os.rename(old, live)
     shutil.rmtree(old, ignore_errors=True)
-    writer = build(live if _has_parquet(live) else None).write.mode(
+    writer = build(live if has_parquet(live) else None).write.mode(
         "overwrite"
     )
     if partition_by:

@@ -274,37 +274,28 @@ def run_to_memory_sink(
     query_name: str,
     checkpoint_dir: str,
     output_mode: str = "append",
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Drain a bounded stream (availableNow) into a memory sink and return
     the collected table — the test/verification harness for streaming
     plans.
 
-    ``state_partitions``: every caller here is a STATEFUL stream
-    (watermarked agg / dropDuplicates / stream-stream join), so the
-    start-time shuffle conf is sized via state_shuffle rather than
+    Every caller here is a STATEFUL stream (watermarked agg /
+    dropDuplicates / stream-stream join), so the start-time shuffle conf
+    is sized to 8 state partitions via state_shuffle rather than
     inherited from the batch engine's width (VERDICT r11 item 5 —
-    rationale on state_shuffle). Pass None to inherit the session conf.
-    The foreachBatch sinks deliberately do NOT route through this: their
-    per-batch plans are stateless and want full batch parallelism."""
-
-    def _start():
-        return (
+    rationale on state_shuffle). The foreachBatch sinks deliberately do
+    NOT route through this: their per-batch plans are stateless and want
+    full batch parallelism."""
+    with state_shuffle(stream_df.sparkSession, 8):
+        (
             stream_df.writeStream.format("memory")
             .queryName(query_name)
             .outputMode(output_mode)
             .option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True)
             .start()
+            .awaitTermination()
         )
-
-    if state_partitions is None:
-        q = _start()
-        q.awaitTermination()
-    else:
-        with state_shuffle(stream_df.sparkSession, state_partitions):
-            q = _start()
-            q.awaitTermination()
     return stream_df.sparkSession.table(query_name)
 
 

@@ -200,6 +200,8 @@ def test_cli_send_stream_state_partitions_sized_to_host(
 def test_cli_send_stream_resume_keeps_recorded_state_partitions(
     spark, tmp_path, monkeypatch, capsys
 ):
+    import contextlib
+
     from etl_moodle_and_mass_email_sending_spark.__main__ import main
     from etl_moodle_and_mass_email_sending_spark.streaming import send_stream
 
@@ -214,15 +216,12 @@ def test_cli_send_stream_resume_keeps_recorded_state_partitions(
     # first drain on a checkpoint created with 32 state partitions: the
     # session default that drains inherited before the count was sized
     # to the host
-    sized = send_stream._stream_session
-
-    def session_wide(spark):
-        clone = sized(spark)
-        clone.conf.set("spark.sql.shuffle.partitions", "32")
-        return clone
-
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE", "32")
     with monkeypatch.context() as m:
-        m.setattr(send_stream, "_stream_session", session_wide)
+        m.setattr(
+            send_stream, "state_shuffle",
+            lambda spark, n: contextlib.nullcontext(),
+        )
         assert main(["send-stream", str(roster), str(work)]) == 0
     last_first = (
         spark.read.parquet(receipts).selectExpr("max(batch_id)").first()[0]
@@ -245,6 +244,27 @@ def test_cli_send_stream_resume_keeps_recorded_state_partitions(
     assert [(r.email, r.status) for r in resumed.collect()] == [
         ("cid@z.cl", "SENT")
     ]
+
+
+def test_cli_send_stream_refuses_corrupt_ledger(spark, tmp_path):
+    """A receipt ledger that exists but cannot be read stops the drain
+    before any send: read as empty it would resend to everyone."""
+    from pyspark.errors import StreamingQueryException
+
+    from etl_moodle_and_mass_email_sending_spark.__main__ import main
+
+    roster, work = tmp_path / "roster", tmp_path / "work"
+    roster.mkdir()
+    (roster / "a.csv").write_text(
+        "email,nombre,usuario,contrasena\nana@x.cl,Ana,ana,pw\n",
+        encoding="utf-8",
+    )
+    receipts = work / "receipts"
+    receipts.mkdir(parents=True)
+    (receipts / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(StreamingQueryException):
+        main(["send-stream", str(roster), str(work)])
+    assert os.listdir(receipts) == ["part-00000.parquet"]
 
 
 def test_bench_line_guard_protects_comparison_set():

@@ -1,8 +1,8 @@
 """Lint: stream drains and store swaps go through the one harness.
 
 ``streaming/replay.py`` owns the foreachBatch drain (``drain``) and the
-rename-swap store commit (``swap_store``); ``send_stream.py`` and
-``windows.py`` keep their own drop-dir and memory-sink drains. A
+rename-swap store commit (``swap_store``); ``windows.py`` keeps its
+memory-sink drain. A
 ``foreachBatch(...)``, ``trigger(availableNow=...)`` or ``os.rename(...)``
 call anywhere else in the package is a hand-wired copy growing back.
 Calls are matched in the AST, so prose in docstrings does not count.
@@ -18,7 +18,6 @@ PKG = pathlib.Path(__file__).resolve().parents[1] / (
 )
 ALLOWED = {
     "streaming/replay.py",
-    "streaming/send_stream.py",
     "streaming/windows.py",
 }
 

@@ -33,30 +33,6 @@ def test_dry_run_receipts(spark):
     assert all(r["status"] == "SENT" and r["attempts"] == 1 for r in receipts)
 
 
-def test_two_pass_stamp_matches_global_sort(spark):
-    """num_partitions>1 uses range-partition + offsets stamping; the
-    resulting idx assignment must be IDENTICAL to the single-task global
-    Window.orderBy path."""
-    from etl_moodle_and_mass_email_sending_spark.sinks.smtp import (
-        SmtpConfig,
-        send_all,
-    )
-
-    msgs = _messages(spark, n=23)
-    single = {
-        r["email"]: (r["idx"], r["remaining"])
-        for r in send_all(msgs, SmtpConfig(dry_run=True)).collect()
-    }
-    multi = {
-        r["email"]: (r["idx"], r["remaining"])
-        for r in send_all(
-            msgs, SmtpConfig(dry_run=True), num_partitions=4
-        ).collect()
-    }
-    assert multi == single
-    assert sorted(i for i, _ in multi.values()) == list(range(1, 24))
-
-
 def test_two_pass_stamp_plan_has_no_global_sort(spark):
     """The distributed stamp's plan must not contain a partition-less
     Window sort (the single-task funnel the two-pass path removes)."""
@@ -85,7 +61,7 @@ def test_retry_accounting(spark):
         r["email"]: r
         for r in send_all(
             _messages(spark),
-            SmtpConfig(dry_run=True, max_retries=3),
+            SmtpConfig(dry_run=True),
             fail_spec={"user2@x.cl": 2},
         ).collect()
     }
@@ -105,7 +81,7 @@ def test_permanent_failure_marks_failed(spark):
         r["email"]: r
         for r in send_all(
             _messages(spark),
-            SmtpConfig(dry_run=True, max_retries=3),
+            SmtpConfig(dry_run=True),
             fail_spec={"user3@x.cl": -1},
         ).collect()
     }
