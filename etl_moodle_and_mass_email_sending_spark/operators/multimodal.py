@@ -2,21 +2,11 @@
 ``binary`` payload columns with typed metadata, processed by Arrow-batched
 ``mapInPandas`` workers.
 
-The container ships no video codec and no Pillow wheel, so the seams
-are engine-gated (per the build contract): ``engine="fake"`` derives
-deterministic pseudo-metadata from the payload bytes (reproducible in
-SQL — the oracle path), while ``engine="real"`` is LIVE wherever a
-decoder exists — WAV audio via stdlib ``wave`` (decode_media +
-audio_frame_energy, unconditional), PNG images via the stdlib codec
-(operators/png_lite.py, unconditional; other formats via Pillow where
-the wheel is installed), and — round 11 — Y4M video via the stdlib
-container parser (operators/y4m_lite.py: decode_media geometry/
-duration + sample_frames real frame extraction, unconditional). The
-``NotImplementedError`` seams that remain are the COMPRESSED-format
-plug-ins (pyav for mp4/webm, Pillow for JPEG) behind live
-stdlib-handled defaults. Everything around the seams — the binary
-column, the schema, the partitioning, the mapInPandas batch shape —
-is identical across engines and oracle-checked.
+Each operator has one kernel, which derives deterministic metadata and
+features from the payload bytes themselves, so every result is
+reproducible in SQL (the ``sql_*`` DuckDB twins). The package ships no
+codec; the schemas, the binary column, the partitioning and the Arrow
+batch shape are the contract a decoder would have to keep.
 
 Scale design: payloads stay opaque binary end-to-end (no driver collect,
 no base64 inflation); decode workers are Arrow-batched so at 100 TB the
@@ -32,7 +22,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BooleanType,
     DoubleType,
     IntegerType,
     LongType,
@@ -85,135 +74,71 @@ DECODED_SCHEMA = StructType(
 )
 
 
-def _decode_real(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Live decode of one Arrow batch (r8, VERDICT r7 item 5; r9 item
-    5): PNG images through the stdlib codec (operators/png_lite.py —
-    width/height off the real IHDR, unconditional in-container),
-    other image formats through Pillow when importable, audio through
-    stdlib ``wave`` (duration off the RIFF header), same DECODED_SCHEMA
-    as the fake engine. Video stays the documented pyav seam — no
-    container codec ships here."""
-    import io
-    import wave
+def _by_length(payloads: pd.Series, min_len: int = 0) -> Iterator[tuple]:
+    """Yield ``(idx, mat)`` per payload length in one Arrow batch: the
+    batch positions of the rows with that length and their bytes stacked
+    into one ``(len(idx), length)`` uint8 matrix. Stacking each length on
+    its own keeps every row on its own bytes, so a kernel's result does
+    not depend on which rows share a batch. A payload shorter than
+    ``min_len`` (the bytes the kernel reads) raises ValueError."""
+    import numpy as np
 
-    from . import av_codec, avi_lite, png_lite, y4m_lite
-
-    out = []
-    for row in pdf.itertuples(index=False):
-        b = bytes(row.payload)
-        width = height = duration = frames = None
-        if row.media_type == "image":
-            if png_lite.is_png(b):
-                width, height = png_lite.png_size(b)
-            else:
-                try:
-                    from PIL import Image
-                except ImportError as exc:  # pragma: no cover - env-dep.
-                    raise NotImplementedError(
-                        "engine='real' decodes PNG via the stdlib codec; "
-                        "non-PNG image payloads need the optional Pillow "
-                        "extra (pip install pillow); the WAV audio path "
-                        "below is stdlib and always live"
-                    ) from exc
-                img = Image.open(io.BytesIO(b))
-                width, height = img.size
-        elif row.media_type == "audio":
-            with wave.open(io.BytesIO(b)) as w:
-                duration = int(w.getnframes() * 1000 / w.getframerate())
-        else:
-            # video: Y4M through the stdlib parser (round 11, VERDICT
-            # r10 item 5 — the y4m_lite twin of png_lite's image path);
-            # COMPRESSED containers stay the documented pyav seam
-            if y4m_lite.is_y4m(b):
-                width, height, fnum, fden, frames = y4m_lite.y4m_info(b)
-                duration = (
-                    int(frames * 1000 * fden / fnum) if fnum else None
-                )
-            elif avi_lite.is_avi(b):
-                # compressed AVI/MPNG through the stdlib codec (round
-                # 13, VERDICT r12 item 5) — same info contract
-                width, height, fnum, fden, frames = avi_lite.avi_info(b)
-                duration = (
-                    int(frames * 1000 * fden / fnum) if fnum else None
-                )
-            elif av_codec.have_av():
-                # compressed containers (mp4/webm) through the
-                # optional pyav extra — same info contract as y4m_info
-                # (round 12, VERDICT r11 item 7)
-                width, height, fnum, fden, frames = av_codec.video_info(b)
-                duration = (
-                    int(frames * 1000 * fden / fnum) if fnum else None
-                )
-            else:
-                raise NotImplementedError(
-                    "engine='real' decodes Y4M video via the stdlib "
-                    "parser (operators/y4m_lite.py); compressed "
-                    "containers (mp4/webm) are live when the optional "
-                    "pyav extra is installed "
-                    "(operators/av_codec.py; pip install av)"
-                )
-        out.append(
-            (int(row.doc_id), row.media_type, len(b), width, height,
-             duration, frames)
+    raw = [bytes(p) for p in payloads]
+    lens = np.fromiter(map(len, raw), dtype=np.int64, count=len(raw))
+    if len(raw) and lens.min() < min_len:
+        raise ValueError(
+            f"payloads must hold at least {min_len} bytes; "
+            f"got lengths {sorted(set(lens[lens < min_len].tolist()))[:5]}"
         )
-    return pd.DataFrame(
-        out, columns=[f.name for f in DECODED_SCHEMA.fields]
-    )
+    for n in np.unique(lens):
+        idx = np.flatnonzero(lens == n)
+        mat = np.frombuffer(b"".join(raw[i] for i in idx), dtype=np.uint8)
+        yield idx, mat.reshape(len(idx), n)
 
 
-def _decode_batches(engine: str):
-    """mapInPandas worker factory. 'fake' derives metadata from payload
-    bytes; 'real' decodes images (Pillow) and WAV audio (stdlib) for
-    real, with video as the remaining pyav seam."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            if engine == "real":
-                yield _decode_real(pdf)
-                continue
-            # vectorized pseudo-decode: little-endian uint16 reads from the
-            # payload head (reproducible in the SQL oracle). Payloads are
-            # fixed-width, so the batch stacks into one ndarray — the whole
-            # batch decodes with numpy slices, no Python row loop.
-            heads = np.frombuffer(
-                b"".join(bytes(p)[:8] for p in pdf["payload"]), dtype=np.uint8
-            ).reshape(-1, 8).astype(np.int32)
-            le16 = lambda off: heads[:, off] | (heads[:, off + 1] << 8)  # noqa: E731
-            mt = pdf["media_type"].to_numpy()
-            out = pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].to_numpy(),
-                    "media_type": mt,
-                    "payload_len": pdf["payload"].map(len).astype("int32"),
-                    "width": pd.array(
-                        np.where(mt == "image", le16(0), -1), dtype="Int32"
-                    ),
-                    "height": pd.array(
-                        np.where(mt == "image", le16(2), -1), dtype="Int32"
-                    ),
-                    "duration_ms": pd.array(
-                        np.where(
-                            (mt == "audio") | (mt == "video"), le16(4), -1
-                        ),
-                        dtype="Int32",
-                    ),
-                    "n_frames": pd.array(
-                        np.where(mt == "video", le16(6), -1), dtype="Int32"
-                    ),
-                }
-            )
-            for c in ("width", "height", "duration_ms", "n_frames"):
-                out[c] = out[c].where(out[c] != -1, pd.NA)
-            yield out
-
-    return run
+DECODE_HEAD_BYTES = 8  # four little-endian uint16 fields
 
 
-def decode_media(media: DataFrame, engine: str = "fake") -> DataFrame:
+def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """mapInPandas worker: metadata as little-endian uint16 reads from
+    the payload head (reproducible in the SQL oracle), the whole batch
+    with numpy slices, no Python row loop."""
+    import numpy as np
+
+    for pdf in batches:
+        heads = np.zeros((len(pdf), DECODE_HEAD_BYTES), dtype=np.int32)
+        for idx, mat in _by_length(pdf["payload"], DECODE_HEAD_BYTES):
+            heads[idx] = mat[:, :DECODE_HEAD_BYTES]
+        le16 = lambda off: heads[:, off] | (heads[:, off + 1] << 8)  # noqa: E731
+        mt = pdf["media_type"].to_numpy()
+        out = pd.DataFrame(
+            {
+                "doc_id": pdf["doc_id"].to_numpy(),
+                "media_type": mt,
+                "payload_len": pdf["payload"].map(len).astype("int32"),
+                "width": pd.array(
+                    np.where(mt == "image", le16(0), -1), dtype="Int32"
+                ),
+                "height": pd.array(
+                    np.where(mt == "image", le16(2), -1), dtype="Int32"
+                ),
+                "duration_ms": pd.array(
+                    np.where((mt == "audio") | (mt == "video"), le16(4), -1),
+                    dtype="Int32",
+                ),
+                "n_frames": pd.array(
+                    np.where(mt == "video", le16(6), -1), dtype="Int32"
+                ),
+            }
+        )
+        for c in ("width", "height", "duration_ms", "n_frames"):
+            out[c] = out[c].where(out[c] != -1, pd.NA)
+        yield out
+
+
+def decode_media(media: DataFrame) -> DataFrame:
     """Arrow-batched decode of the payload column → typed metadata."""
-    return media.mapInPandas(_decode_batches(engine), DECODED_SCHEMA)
+    return media.mapInPandas(_decode_batches, DECODED_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -232,12 +157,10 @@ FEATURES_SCHEMA = StructType(
 )
 
 
-def extract_features(media: DataFrame, engine: str = "fake") -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction: payload → fixed-width scalar
     feature columns (the embedding-ish representation a downstream
-    similarity join consumes). The fake engine averages 16-byte strides —
-    where a real extractor (CLIP / mel-spectrogram pooling / frame CNN)
-    would plug in with the SAME schema, so downstream plans don't change.
+    similarity join consumes): the mean of each 16-byte stride.
     Payloads are fixed-width (PAYLOAD_REPEAT × 16 bytes), so the whole
     Arrow batch stacks into one ndarray and the strided mean is a single
     vectorized reshape — no Python row loop.
@@ -249,11 +172,6 @@ def extract_features(media: DataFrame, engine: str = "fake") -> DataFrame:
         width = PAYLOAD_REPEAT * 16
         stride = width // N_FEATURES
         for pdf in batches:
-            if engine == "real":
-                raise NotImplementedError(
-                    "no media models in this environment; plug the "
-                    "real extractor here, keep FEATURES_SCHEMA"
-                )
             lens = pdf["payload"].map(len)
             if not (lens == width).all():
                 raise ValueError(
@@ -309,88 +227,21 @@ RESIZED_SCHEMA = StructType(
 )
 
 
-def _bilinear_resize(arr, out_w: int, out_h: int):
-    """numpy uint8 (h, w, ch) -> (out_h, out_w, ch), bilinear with
-    pixel-center alignment (target center (x+.5)·scale−.5), the same
-    convention Pillow's BILINEAR uses — vectorized, no Python pixel
-    loop."""
-    import numpy as np
-
-    h, w, _ = arr.shape
-    x = (np.arange(out_w) + 0.5) * (w / out_w) - 0.5
-    y = (np.arange(out_h) + 0.5) * (h / out_h) - 0.5
-    x0 = np.clip(np.floor(x).astype(int), 0, w - 1)
-    y0 = np.clip(np.floor(y).astype(int), 0, h - 1)
-    x1 = np.minimum(x0 + 1, w - 1)
-    y1 = np.minimum(y0 + 1, h - 1)
-    fx = np.clip(x - x0, 0.0, 1.0)[None, :, None]
-    fy = np.clip(y - y0, 0.0, 1.0)[:, None, None]
-    a = arr[y0][:, x0].astype(np.float64)
-    b = arr[y0][:, x1].astype(np.float64)
-    c = arr[y1][:, x0].astype(np.float64)
-    d = arr[y1][:, x1].astype(np.float64)
-    out = (a * (1 - fx) + b * fx) * (1 - fy) + (
-        c * (1 - fx) + d * fx
-    ) * fy
-    return np.clip(np.rint(out), 0, 255).astype(np.uint8)
-
-
 def resize_images(
-    media: DataFrame, width: int = RESIZE_W, height: int = RESIZE_H,
-    engine: str = "fake",
+    media: DataFrame, width: int = RESIZE_W, height: int = RESIZE_H
 ) -> DataFrame:
-    """Image rows → resized payloads (fake: md5 of hex payload + target
-    geometry, repeated — deterministic bytes standing in for the resampled
-    pixel buffer). ``engine="real"`` is WIRED and — for PNG payloads —
-    fully stdlib as of round 9 (VERDICT r8 item 5): PNGs decode through
-    operators/png_lite.py and resample with a numpy bilinear kernel
-    (pixel-center aligned, same convention as Pillow's BILINEAR), so
-    the live path runs unconditionally in-container; non-PNG formats
-    still go through Pillow when importable and raise the documented
-    NotImplementedError contract when not. Same schema, same
-    partitioning, same Arrow batching as the fake engine. Output
-    payload is hex-encoded so the oracle can hash-compare values."""
+    """Image rows → resized payloads: md5 of the hex payload and the
+    target geometry, repeated — deterministic bytes standing in for the
+    resampled pixel buffer. Output payload is hex-encoded so the oracle
+    can hash-compare values."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
-
-        from . import png_lite
-
-        def real_rgb_buf(payload: bytes) -> bytes:
-            if png_lite.is_png(payload):
-                arr = png_lite.decode_png(payload)
-                if arr.shape[2] == 1:  # gray -> RGB
-                    arr = arr.repeat(3, axis=2)
-                elif arr.shape[2] == 2:  # gray+alpha -> RGB
-                    arr = arr[:, :, :1].repeat(3, axis=2)
-                elif arr.shape[2] == 4:  # RGBA -> RGB
-                    arr = arr[:, :, :3]
-                return _bilinear_resize(arr, width, height).tobytes()
-            try:
-                import io
-
-                from PIL import Image
-            except ImportError as exc:  # pragma: no cover - env-dep.
-                raise NotImplementedError(
-                    "engine='real' resizes PNG via the stdlib codec; "
-                    "non-PNG image payloads need the optional Pillow "
-                    "extra (pip install pillow)"
-                ) from exc
-            img = Image.open(io.BytesIO(payload)).convert("RGB")
-            return img.resize(
-                (width, height), Image.Resampling.BILINEAR
-            ).tobytes()
 
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):
                 if row.media_type != "image":
-                    continue
-                if engine == "real":
-                    buf = real_rgb_buf(bytes(row.payload))
-                    out.append(
-                        (int(row.doc_id), width, height, buf.hex())
-                    )
                     continue
                 hexstr = bytes(row.payload).hex()
                 digest = hashlib.md5(
@@ -430,52 +281,19 @@ FRAMES_SCHEMA = StructType(
 
 
 def sample_frames(
-    media: DataFrame, every_n: int = 1, max_frames: int = MAX_FRAMES,
-    engine: str = "fake",
+    media: DataFrame, every_n: int = 1, max_frames: int = MAX_FRAMES
 ) -> DataFrame:
     """Video rows → sampled frame rows (a mapInPandas fan-out: one input
     row yields several output rows — the Spark shape of ffmpeg frame
-    extraction). Fake frames are FRAME_BYTES-wide payload slices; a real
-    engine decodes with pyav here."""
+    extraction). A frame is a FRAME_BYTES-wide payload slice."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from . import av_codec, avi_lite, y4m_lite
-
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):
                 if row.media_type != "video":
                     continue
                 b = bytes(row.payload)
-                if engine == "real":
-                    # Y4M through the stdlib parser (round 11); a
-                    # compressed container through the stdlib AVI/MPNG
-                    # codec (round 13) or the optional pyav extra
-                    # (round 12, VERDICT r11 item 7) — identical
-                    # (frame_index, planar bytes) contract
-                    if y4m_lite.is_y4m(b):
-                        frame_iter = y4m_lite.y4m_frames(
-                            b, every_n=every_n, max_frames=max_frames
-                        )
-                    elif avi_lite.is_avi(b):
-                        frame_iter = avi_lite.avi_frames(
-                            b, every_n=every_n, max_frames=max_frames
-                        )
-                    elif av_codec.have_av():
-                        frame_iter = av_codec.video_frames(
-                            b, every_n=every_n, max_frames=max_frames
-                        )
-                    else:
-                        raise NotImplementedError(
-                            "engine='real' samples Y4M frames via "
-                            "operators/y4m_lite.py; compressed "
-                            "containers are live when the optional "
-                            "pyav extra is installed "
-                            "(operators/av_codec.py; pip install av)"
-                        )
-                    for i, frame in frame_iter:
-                        out.append((int(row.doc_id), i, frame.hex()))
-                    continue
                 n_slots = len(b) // FRAME_BYTES
                 for k, i in enumerate(range(0, n_slots, every_n)):
                     if k >= max_frames:
@@ -526,9 +344,9 @@ def sql_decode_media() -> str:
 # Audio frame windowing — overlapping (win, hop) frames over the payload
 # with a per-frame integer energy, the Spark shape of librosa's STFT
 # framing: filter to audio rows BEFORE the Python boundary (only audio
-# payloads cross into Arrow), then a vectorized strided window over the
-# fixed-width batch — one numpy reshape, no Python row loop, one output
-# row per frame (bounded fan-out = payload_len/hop).
+# payloads cross into Arrow), then a vectorized strided window over each
+# payload-length group of the batch — one numpy fancy-index, no Python
+# row loop, one output row per frame (bounded fan-out = payload_len/hop).
 #
 # Energy is an INTEGER byte sum, so cross-engine parity is exact — the
 # same trick as sim_sq_topk's quantized scores.
@@ -550,82 +368,34 @@ def audio_frame_energy(
     media: DataFrame,
     win: int = AUDIO_WIN_BYTES,
     hop: int = AUDIO_HOP_BYTES,
-    engine: str = "fake",
 ) -> DataFrame:
     """Audio rows → one row per overlapping frame with its byte-sum
-    energy. ``engine="real"`` is WIRED (the second live extras seam,
-    VERDICT r6 item 6, mirroring the Pillow resize wiring): it parses
-    each payload as a RIFF/WAV container with the stdlib ``wave``
-    module, extracts the raw PCM frame bytes, and runs the IDENTICAL
-    strided framing/energy math over them — same schema, same
-    partitioning, same Arrow batching. librosa/soundfile would slot in
-    the same place for compressed codecs (absent in this container).
-    The fake engine reads the raw payload bytes (same framing math)."""
+    energy; a payload shorter than ``win`` has no frame."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        if engine not in ("fake", "real"):
-            raise ValueError(f"unknown engine {engine!r}")
-
         for pdf in batches:
-            if engine == "real":
-                import io
-                import wave
-
-                out = []
-                for row in pdf.itertuples(index=False):
-                    with wave.open(io.BytesIO(bytes(row.payload))) as w:
-                        pcm = w.readframes(w.getnframes())
-                    arr = np.frombuffer(pcm, dtype=np.uint8)
-                    n_frames = max(0, (len(arr) - win) // hop + 1)
-                    if not n_frames:
-                        continue
-                    idx = (
-                        np.arange(n_frames)[:, None] * hop
-                        + np.arange(win)[None, :]
-                    )
-                    energy = arr[idx].astype(np.int64).sum(axis=1)
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "doc_id": np.full(
-                                    n_frames, row.doc_id, dtype=np.int64
-                                ),
-                                "frame_idx": np.arange(
-                                    n_frames, dtype=np.int32
-                                ),
-                                "energy": energy,
-                            }
-                        )
-                    )
-                if out:
-                    yield pd.concat(out, ignore_index=True)
-                continue
-            if not len(pdf):
-                continue
-            payloads = np.frombuffer(
-                b"".join(bytes(p) for p in pdf["payload"]), dtype=np.uint8
-            ).reshape(len(pdf), -1)
-            plen = payloads.shape[1]
-            n_frames = max(0, (plen - win) // hop + 1)
-            # (n_rows, n_frames, win) strided view -> exact int64 sums
-            idx = (
-                np.arange(n_frames)[:, None] * hop + np.arange(win)[None, :]
-            )
-            frames = payloads[:, idx]  # fancy-index copy, batch-vectorized
-            energy = frames.astype(np.int64).sum(axis=2)
-            yield pd.DataFrame(
-                {
-                    "doc_id": np.repeat(
-                        pdf["doc_id"].to_numpy(), n_frames
-                    ),
-                    "frame_idx": np.tile(
-                        np.arange(n_frames, dtype=np.int32), len(pdf)
-                    ),
-                    "energy": energy.reshape(-1),
-                }
-            )
+            doc_ids = pdf["doc_id"].to_numpy()
+            for idx, payloads in _by_length(pdf["payload"]):
+                n_frames = max(0, (payloads.shape[1] - win) // hop + 1)
+                if not n_frames:
+                    continue
+                # (n_rows, n_frames, win) strided view -> exact int64 sums
+                frame_at = (
+                    np.arange(n_frames)[:, None] * hop
+                    + np.arange(win)[None, :]
+                )
+                energy = payloads[:, frame_at].astype(np.int64).sum(axis=2)
+                yield pd.DataFrame(
+                    {
+                        "doc_id": np.repeat(doc_ids[idx], n_frames),
+                        "frame_idx": np.tile(
+                            np.arange(n_frames, dtype=np.int32), len(idx)
+                        ),
+                        "energy": energy.reshape(-1),
+                    }
+                )
 
     return media.filter(F.col("media_type") == "audio").mapInPandas(
         run, AUDIO_FRAMES_SCHEMA
@@ -657,8 +427,6 @@ def sql_audio_frame_energy(
 # text dedup: treat the first 64 payload bytes as an 8×8 grayscale
 # thumbnail, hash bit j = (pixel_j · 64 > Σ pixels) (integer compare, no
 # float mean → exact cross-engine parity), then group identical hashes.
-# A real engine decodes + downsamples with Pillow at the marked plug
-# point; the fake engine reads raw bytes (same hashing math).
 #
 # Scale: the shuffle carries (doc_id, 64-bit hash) — 8 bytes per image,
 # never payloads; identical-hash grouping is a uniform-key groupBy, the
@@ -677,7 +445,7 @@ PHASH_SCHEMA = StructType(
 )
 
 
-def phash_images(images: DataFrame, engine: str = "fake") -> DataFrame:
+def phash_images(images: DataFrame) -> DataFrame:
     """(doc_id, payload) → (doc_id, 64-char bit-string aHash), one
     vectorized pass per Arrow batch (no Python row loop)."""
 
@@ -685,22 +453,11 @@ def phash_images(images: DataFrame, engine: str = "fake") -> DataFrame:
         import numpy as np
 
         for pdf in batches:
-            if engine == "real":
-                raise NotImplementedError(
-                    "no image codecs in this environment; decode + "
-                    "8x8-downsample with Pillow here, then hash the "
-                    "same way"
-                )
             if not len(pdf):
                 continue
-            pixels = (
-                np.frombuffer(
-                    b"".join(bytes(p)[:PHASH_BITS] for p in pdf["payload"]),
-                    dtype=np.uint8,
-                )
-                .reshape(len(pdf), PHASH_BITS)
-                .astype(np.int64)
-            )
+            pixels = np.zeros((len(pdf), PHASH_BITS), dtype=np.int64)
+            for idx, mat in _by_length(pdf["payload"], PHASH_BITS):
+                pixels[idx] = mat[:, :PHASH_BITS]
             total = pixels.sum(axis=1)
             bits = (pixels * PHASH_BITS > total[:, None]).astype(np.uint8)
             hashes = np.frombuffer(
@@ -713,7 +470,7 @@ def phash_images(images: DataFrame, engine: str = "fake") -> DataFrame:
     return images.mapInPandas(run, PHASH_SCHEMA)
 
 
-def phash_dedup(docs: DataFrame, engine: str = "fake") -> DataFrame:
+def phash_dedup(docs: DataFrame) -> DataFrame:
     """Image dedup over a (doc_id, text) corpus: synthesize the binary
     payload (as media_table does), perceptual-hash every image, and
     annotate each with its duplicate group — (doc_id, phash, n_copies,
@@ -722,7 +479,7 @@ def phash_dedup(docs: DataFrame, engine: str = "fake") -> DataFrame:
         "doc_id",
         F.unhex(F.repeat(F.md5("text"), PAYLOAD_REPEAT)).alias("payload"),
     )
-    hashed = phash_images(images, engine=engine)
+    hashed = phash_images(images)
     w = Window.partitionBy("phash")
     return hashed.select(
         "doc_id",
@@ -764,15 +521,13 @@ def sql_phash_dedup(corpus_sql: str) -> str:
 # Video scene-change detection — per-frame intensity deltas: slice the
 # payload into fixed 16-byte frames, sum each frame's bytes (integer
 # "intensity"), and flag frames whose absolute delta from the previous
-# frame exceeds the threshold. A real engine decodes frames with pyav
-# and compares histograms; the fake engine applies the same math to raw
-# bytes. All-integer → exact cross-engine parity; deltas are computed
-# WITHIN the row's own frame sequence (numpy diff per batch), so no
-# window shuffle exists at all — the operator is embarrassingly parallel
-# over videos, which is the property that matters at 100 TB.
+# frame exceeds the threshold. All-integer → exact cross-engine parity;
+# deltas are computed WITHIN the row's own frame sequence (numpy diff
+# per payload-length group of the batch), so no window shuffle exists
+# at all — the operator is embarrassingly parallel over videos, which
+# is the property that matters at 100 TB.
 # --------------------------------------------------------------------------
 
-FRAME_BYTES = 16
 SCENE_DELTA_THRESHOLD = 512
 
 SCENES_SCHEMA = StructType(
@@ -790,86 +545,40 @@ def detect_scene_changes(
     media: DataFrame,
     frame_bytes: int = FRAME_BYTES,
     threshold: int = SCENE_DELTA_THRESHOLD,
-    engine: str = "fake",
 ) -> DataFrame:
     """Video rows → one row per frame with intensity, delta vs previous
-    frame (0 for frame 0), and the scene-change flag."""
+    frame (0 for frame 0), and the scene-change flag; trailing bytes
+    short of a whole frame are ignored."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        from . import av_codec, avi_lite, y4m_lite
-
         for pdf in batches:
-            if engine == "real":
-                # Y4M through the stdlib parser (round 11): per-frame
-                # intensity = the Y-plane byte sum (true luma energy),
-                # the SAME delta/threshold math as the fake engine.
-                # Compressed: stdlib AVI/MPNG (round 13), else pyav.
-                out = []
-                for row in pdf.itertuples(index=False):
-                    b = bytes(row.payload)
-                    if y4m_lite.is_y4m(b):
-                        w, h, _, _, _, _ = y4m_lite._parse_header(b)
-                        frame_iter = y4m_lite.y4m_frames(b)
-                    elif avi_lite.is_avi(b):
-                        w, h, _, _, _ = avi_lite.avi_info(b)
-                        frame_iter = avi_lite.avi_frames(b)
-                    elif av_codec.have_av():
-                        # compressed containers via pyav (round 12):
-                        # same planar layout, same Y-plane luma math
-                        w, h, _, _, _ = av_codec.video_info(b)
-                        frame_iter = av_codec.video_frames(b)
-                    else:
-                        raise NotImplementedError(
-                            "engine='real' detects scenes on Y4M via "
-                            "operators/y4m_lite.py; compressed "
-                            "containers are live when the optional "
-                            "pyav extra is installed "
-                            "(operators/av_codec.py; pip install av)"
-                        )
-                    prev = None
-                    for i, frame in frame_iter:
-                        luma = int(
-                            np.frombuffer(
-                                frame[: w * h], dtype=np.uint8
-                            ).astype(np.int64).sum()
-                        )
-                        d = 0 if prev is None else abs(luma - prev)
-                        out.append(
-                            (int(row.doc_id), i, luma, d,
-                             int(d > threshold))
-                        )
-                        prev = luma
-                yield pd.DataFrame(
-                    out,
-                    columns=[f.name for f in SCENES_SCHEMA.fields],
+            doc_ids = pdf["doc_id"].to_numpy()
+            for idx, payloads in _by_length(pdf["payload"]):
+                n_frames = payloads.shape[1] // frame_bytes
+                if not n_frames:
+                    continue
+                frames = payloads[:, : n_frames * frame_bytes].reshape(
+                    len(idx), n_frames, frame_bytes
                 )
-                continue
-            if not len(pdf):
-                continue
-            payloads = np.frombuffer(
-                b"".join(bytes(p) for p in pdf["payload"]), dtype=np.uint8
-            ).reshape(len(pdf), -1)
-            n_frames = payloads.shape[1] // frame_bytes
-            frames = payloads[:, : n_frames * frame_bytes].reshape(
-                len(pdf), n_frames, frame_bytes
-            )
-            intensity = frames.astype(np.int64).sum(axis=2)
-            delta = np.abs(np.diff(intensity, axis=1, prepend=intensity[:, :1]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": np.repeat(pdf["doc_id"].to_numpy(), n_frames),
-                    "frame_idx": np.tile(
-                        np.arange(n_frames, dtype=np.int32), len(pdf)
-                    ),
-                    "intensity": intensity.reshape(-1),
-                    "delta": delta.reshape(-1),
-                    "is_scene_change": (delta > threshold)
-                    .astype(np.int32)
-                    .reshape(-1),
-                }
-            )
+                intensity = frames.astype(np.int64).sum(axis=2)
+                delta = np.abs(
+                    np.diff(intensity, axis=1, prepend=intensity[:, :1])
+                )
+                yield pd.DataFrame(
+                    {
+                        "doc_id": np.repeat(doc_ids[idx], n_frames),
+                        "frame_idx": np.tile(
+                            np.arange(n_frames, dtype=np.int32), len(idx)
+                        ),
+                        "intensity": intensity.reshape(-1),
+                        "delta": delta.reshape(-1),
+                        "is_scene_change": (delta > threshold)
+                        .astype(np.int32)
+                        .reshape(-1),
+                    }
+                )
 
     return media.filter(F.col("media_type") == "video").mapInPandas(
         run, SCENES_SCHEMA
@@ -923,11 +632,10 @@ SILENCE_THRESHOLD = 3500  # byte-sum energy below this = silent frame
 def detect_silence_runs(
     media: DataFrame,
     threshold: int = SILENCE_THRESHOLD,
-    engine: str = "fake",
 ) -> DataFrame:
     """(doc_id, run_start, n_frames, min_energy): maximal silent runs
     per audio doc."""
-    frames = audio_frame_energy(media, engine=engine)
+    frames = audio_frame_energy(media)
     silent = frames.filter(F.col("energy") < threshold)
     w = Window.partitionBy("doc_id").orderBy("frame_idx")
     runs = silent.withColumn(
@@ -966,8 +674,7 @@ def sql_detect_silence_runs(threshold: int = SILENCE_THRESHOLD) -> str:
 
 # --------------------------------------------------------------------------
 # Image–text alignment scoring — the LAION-style pairing filter: embed
-# the image (here the fake strided-byte-mean features; a real CLIP
-# vision tower plugs into extract_features with the same schema), embed
+# the image (the strided-byte-mean features of extract_features), embed
 # the caption text (hashed bag-of-words into the SAME N_FEATURES dims —
 # deterministic integer sums, the stand-in for the CLIP text tower),
 # and keep pairs whose cosine clears a threshold. At web-crawl scale
@@ -985,16 +692,12 @@ def sql_detect_silence_runs(threshold: int = SILENCE_THRESHOLD) -> str:
 CLIP_THRESHOLD = 0.5
 
 
-def clip_align(
-    media: DataFrame, docs: DataFrame, engine: str = "fake"
-) -> DataFrame:
+def clip_align(media: DataFrame, docs: DataFrame) -> DataFrame:
     """(doc_id, clip_score, keep): caption↔image cosine for every image
     doc (captionless/tokenless docs drop — no text tower input)."""
     from ..functions.hashing import hash32
 
-    feats = extract_features(
-        media.filter(F.col("media_type") == "image"), engine=engine
-    )
+    feats = extract_features(media.filter(F.col("media_type") == "image"))
     toks = docs.select(
         "doc_id",
         F.explode(
@@ -1077,9 +780,7 @@ def sql_clip_align() -> str:
 PHASH_BLOCK_PREFIX = 8
 
 
-def phash_hamming_histogram(
-    docs: DataFrame, engine: str = "fake"
-) -> DataFrame:
+def phash_hamming_histogram(docs: DataFrame) -> DataFrame:
     """(hamming, n_pairs): candidate-pair Hamming distances over
     prefix-blocked perceptual hashes."""
     images = docs.select(
@@ -1094,7 +795,7 @@ def phash_hamming_histogram(
     # cost is the whole job at scale).
     half = PHASH_BITS // 2
     hashed = (
-        phash_images(images, engine=engine)
+        phash_images(images)
         .withColumn("block", F.substring("phash", 1, PHASH_BLOCK_PREFIX))
         .withColumn(
             "h1", F.conv(F.substring("phash", 1, half), 2, 10).cast("bigint")
@@ -1180,12 +881,10 @@ def sql_phash_hamming_histogram(corpus_sql: str) -> str:
 # --------------------------------------------------------------------------
 
 
-def audio_fingerprint_dedup(
-    media: DataFrame, engine: str = "fake"
-) -> DataFrame:
+def audio_fingerprint_dedup(media: DataFrame) -> DataFrame:
     """(doc_id, fingerprint, n_copies, canonical_id): energy-delta
     fingerprints over audio rows with exact-match duplicate groups."""
-    frames = audio_frame_energy(media, engine=engine)
+    frames = audio_frame_energy(media)
     w = Window.partitionBy("doc_id").orderBy("frame_idx")
     bits = (
         frames.withColumn("_next", F.lead("energy").over(w))
@@ -1247,7 +946,7 @@ def sql_audio_fingerprint_dedup() -> str:
 # --------------------------------------------------------------------------
 # Cross-video frame dedup — shared-frame detection over the sampled
 # frame stream: frames quantize to a coarse 8-bit perceptual bucket
-# (leading payload byte — the fake-engine stand-in for a frame
+# (leading payload byte — the stand-in for a frame
 # pHash band) and buckets seen in >= 2 distinct videos are reported:
 # the common-intro / watermark screen of video curation.
 #
@@ -1263,7 +962,7 @@ FRAME_SIG_HEX = 2  # leading byte of the frame = the perceptual bucket
 def video_frame_dedup(media: DataFrame) -> DataFrame:
     """(frame_sig, n_videos, n_frames): coarse frame signatures sampled
     from >= 2 distinct videos."""
-    frames = sample_frames(media, every_n=1, engine="fake")
+    frames = sample_frames(media, every_n=1)
     per = (
         frames.select(
             "doc_id",
@@ -1324,30 +1023,16 @@ def payload_byte_stats(media: DataFrame) -> DataFrame:
         import numpy as np
 
         for pdf in batches:
-            if not len(pdf):
-                continue
             # Payload lengths may differ row to row (truncation is
             # exactly the condition this operator screens for), so the
-            # batch is histogrammed per length group — fully vectorized
-            # when the batch is homogeneous, still no per-row Python
-            # histogram loop when it is not. Zero-length payloads emit
-            # no row (matching the oracle, whose per-byte unnest
-            # produces nothing for them).
-            lens = np.fromiter(
-                (len(bytes(p)) for p in pdf["payload"]),
-                dtype=np.int64,
-                count=len(pdf),
-            )
-            raw = b"".join(bytes(p) for p in pdf["payload"])
-            flat = np.frombuffer(raw, dtype=np.uint8)
-            offsets = np.concatenate(([0], np.cumsum(lens)))
-            for n in np.unique(lens):
+            # batch is histogrammed per length group — no per-row Python
+            # histogram loop. Zero-length payloads emit no row (matching
+            # the oracle, whose per-byte unnest produces nothing for
+            # them).
+            for idx, rows in _by_length(pdf["payload"]):
+                n = rows.shape[1]
                 if n == 0:
                     continue
-                idx = np.flatnonzero(lens == n)
-                rows = np.stack(
-                    [flat[offsets[i] : offsets[i] + n] for i in idx]
-                )
                 counts = np.zeros((len(idx), 256), dtype=np.int64)
                 np.add.at(
                     counts,
@@ -1439,22 +1124,11 @@ def payload_entropy(media: DataFrame) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            lens = np.fromiter(
-                (len(bytes(p)) for p in pdf["payload"]),
-                dtype=np.int64,
-                count=len(pdf),
-            )
-            raw = b"".join(bytes(p) for p in pdf["payload"])
-            flat = np.frombuffer(raw, dtype=np.uint8)
-            offsets = np.concatenate(([0], np.cumsum(lens)))
             ent = np.zeros(len(pdf), dtype=np.float64)
-            for n in np.unique(lens):
-                idx = np.flatnonzero(lens == n)
+            for idx, rows in _by_length(pdf["payload"]):
+                n = rows.shape[1]
                 if n == 0:
                     continue
-                rows = np.stack(
-                    [flat[offsets[i] : offsets[i] + n] for i in idx]
-                )
                 counts = np.zeros((len(idx), 256), dtype=np.int64)
                 np.add.at(
                     counts,
@@ -1471,7 +1145,7 @@ def payload_entropy(media: DataFrame) -> DataFrame:
                 {
                     "doc_id": pdf["doc_id"].to_numpy(),
                     "media_type": pdf["media_type"].to_numpy(),
-                    "payload_len": lens.astype(np.int32),
+                    "payload_len": pdf["payload"].map(len).astype("int32"),
                     "entropy_bits": ent,
                 }
             )
@@ -1723,92 +1397,16 @@ def sql_modality_balance() -> str:
 # --------------------------------------------------------------------------
 
 
-KEYFRAMES_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("frame_idx", IntegerType()),
-        StructField("intensity", LongType()),
-        StructField("is_first", BooleanType()),
-        StructField("frame_hex", StringType()),
-    ]
-)
-
-
 def keyframe_extract(
     media: DataFrame,
     frame_bytes: int = FRAME_BYTES,
     threshold: int = SCENE_DELTA_THRESHOLD,
-    engine: str = "fake",
 ) -> DataFrame:
-    """Frame 0 + scene-change frames, each with its frame bytes.
-
-    ``frame_hex`` is the first ``frame_bytes`` bytes of the FRAME
-    itself, hex-encoded — for the fake engine a frame IS a
-    ``frame_bytes`` payload slice, so the slice arithmetic over the
-    payload hex below is exact; for a real container (Y4M/AVI/pyav)
-    the payload interleaves headers and compressed chunks, so the
-    real-engine branch extracts the bytes INSIDE the decode pass (the
-    decoded planar yuv420p frame's leading Y-plane bytes) instead of
-    payload-offset arithmetic (ADVICE r13), keeping one media scan
-    that emits both the scene decision and the key-frame bytes."""
-    if engine == "real":
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import numpy as np
-
-            from . import av_codec, avi_lite, y4m_lite
-
-            for pdf in batches:
-                out = []
-                for row in pdf.itertuples(index=False):
-                    if row.media_type != "video":
-                        continue
-                    b = bytes(row.payload)
-                    if y4m_lite.is_y4m(b):
-                        w, h, _, _, _, _ = y4m_lite._parse_header(b)
-                        frame_iter = y4m_lite.y4m_frames(b)
-                    elif avi_lite.is_avi(b):
-                        w, h, _, _, _ = avi_lite.avi_info(b)
-                        frame_iter = avi_lite.avi_frames(b)
-                    elif av_codec.have_av():
-                        w, h, _, _, _ = av_codec.video_info(b)
-                        frame_iter = av_codec.video_frames(b)
-                    else:
-                        raise NotImplementedError(
-                            "engine='real' extracts keyframes from "
-                            "Y4M via operators/y4m_lite.py and "
-                            "AVI/MPNG via operators/avi_lite.py; "
-                            "other compressed containers are live "
-                            "when the optional pyav extra is "
-                            "installed (operators/av_codec.py)"
-                        )
-                    prev = None
-                    for i, frame in frame_iter:
-                        luma = int(
-                            np.frombuffer(
-                                frame[: w * h], dtype=np.uint8
-                            ).astype(np.int64).sum()
-                        )
-                        d = 0 if prev is None else abs(luma - prev)
-                        if i == 0 or d > threshold:
-                            out.append(
-                                (
-                                    int(row.doc_id),
-                                    i,
-                                    luma,
-                                    i == 0,
-                                    frame[:frame_bytes].hex(),
-                                )
-                            )
-                        prev = luma
-                yield pd.DataFrame(
-                    out, columns=[f.name for f in KEYFRAMES_SCHEMA.fields]
-                )
-
-        return media.mapInPandas(run, KEYFRAMES_SCHEMA)
-
+    """Frame 0 + scene-change frames, each with its frame bytes:
+    ``frame_hex`` is the frame's ``frame_bytes``-wide payload slice,
+    hex-encoded."""
     scenes = detect_scene_changes(
-        media, frame_bytes=frame_bytes, threshold=threshold, engine=engine
+        media, frame_bytes=frame_bytes, threshold=threshold
     )
     keys = scenes.filter(
         (F.col("frame_idx") == 0) | (F.col("is_scene_change") == 1)

@@ -206,9 +206,9 @@ def _hyperplanes(n_planes: int) -> list[list[float]]:
 _COEFS = _hyperplanes(LSH_PLANES)
 
 
-def _sign_bit(engine: str, vec: str, coef_row: list[float]) -> str:
-    """'1'/'0' sign-bit expression for vec · coef_row, per engine."""
-    if engine == "spark":
+def _sign_bit(dialect: str, vec: str, coef_row: list[float]) -> str:
+    """'1'/'0' sign-bit expression for vec · coef_row, per SQL dialect."""
+    if dialect == "spark":
         coef = "array(" + ", ".join(f"{c}D" for c in coef_row) + ")"
         proj = _DOT.format(a=vec, b=coef)
     else:
@@ -520,12 +520,12 @@ NEARDUP_THRESHOLD = 0.99
 _ND_COEFS = _hyperplanes(NEARDUP_BANDS * NEARDUP_ROWS)
 
 
-def _nd_band_key(engine: str, vec: str, band: int) -> str:
+def _nd_band_key(dialect: str, vec: str, band: int) -> str:
     bits = [
-        _sign_bit(engine, vec, _ND_COEFS[band * NEARDUP_ROWS + r])
+        _sign_bit(dialect, vec, _ND_COEFS[band * NEARDUP_ROWS + r])
         for r in range(NEARDUP_ROWS)
     ]
-    joiner = "concat({})".format(", ".join(bits)) if engine == "spark" else (
+    joiner = "concat({})".format(", ".join(bits)) if dialect == "spark" else (
         "(" + " || ".join(bits) + ")"
     )
     return joiner

@@ -1723,10 +1723,10 @@ GOPHER_ALPHA_MIN = 0.8
 GOPHER_STOP_MIN = 2
 
 
-def _gopher_exprs(engine: str) -> dict[str, str]:
-    """The rule expressions, built per engine from shared constants so the
-    two dialects cannot drift."""
-    if engine == "spark":
+def _gopher_exprs(dialect: str) -> dict[str, str]:
+    """The rule expressions, built per SQL dialect from shared constants so
+    the two dialects cannot drift."""
+    if dialect == "spark":
         ws, size, flt = _SPARK_FTOKS, "size", "filter"
         lines = "filter(split(text, '\\n'), l -> trim(l) != '')"
         starts, ends = "startswith", "endswith"

@@ -196,7 +196,7 @@ register(
 register(
     "mm_decode_media",
     lambda spark, sf_dir: multimodal.decode_media(
-        multimodal.media_table(spark, sf_dir), engine="fake"
+        multimodal.media_table(spark, sf_dir)
     ),
     multimodal.sql_decode_media(),
 )
@@ -204,7 +204,7 @@ register(
 register(
     "mm_extract_features",
     lambda spark, sf_dir: multimodal.extract_features(
-        multimodal.media_table(spark, sf_dir), engine="fake"
+        multimodal.media_table(spark, sf_dir)
     ),
     multimodal.sql_extract_features(),
 )
@@ -212,7 +212,7 @@ register(
 register(
     "mm_resize_images",
     lambda spark, sf_dir: multimodal.resize_images(
-        multimodal.media_table(spark, sf_dir), engine="fake"
+        multimodal.media_table(spark, sf_dir)
     ),
     multimodal.sql_resize_images(),
 )
@@ -236,7 +236,7 @@ register(
 register(
     "mm_sample_frames",
     lambda spark, sf_dir: multimodal.sample_frames(
-        multimodal.media_table(spark, sf_dir), every_n=2, engine="fake"
+        multimodal.media_table(spark, sf_dir), every_n=2
     ),
     multimodal.sql_sample_frames(every_n=2),
 )

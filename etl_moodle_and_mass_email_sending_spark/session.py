@@ -21,13 +21,14 @@ def get_spark(
     On a real cluster ``master``/``shuffle_partitions`` come from the
     deployment; locally we default to ``local[$SPARK_GRAFT_CPUS|*]`` and a
     small partition count so tiny test inputs don't fragment into empty
-    tasks (AQE coalescing handles the rest).
+    tasks (AQE coalescing handles the rest). A live session keeps its
+    shuffle width unless ``shuffle_partitions`` is passed: ``getOrCreate``
+    re-applies every builder setting to it, and an in-process CLI command
+    must not re-size its caller's session.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -38,7 +39,6 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # An events.parquet written with TIMESTAMP(NANOS) would be rejected
         # by Spark's vectorized reader; read such columns as long and
         # convert in catalog. The current testbed stores microseconds
@@ -54,4 +54,10 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
+    if shuffle_partitions is None and SparkSession.getActiveSession() is None:
+        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+    if shuffle_partitions is not None:
+        builder = builder.config(
+            "spark.sql.shuffle.partitions", str(shuffle_partitions)
+        )
     return builder.getOrCreate()

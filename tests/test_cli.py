@@ -136,6 +136,34 @@ def test_cli_send_stream_dry_run(spark, tmp_path, capsys):
     assert "sent=2 failed=0" in capsys.readouterr().out  # ledger total
 
 
+@pytest.fixture()
+def session_at_32(spark):
+    """The session at 32 shuffle partitions, the session factory's
+    default and wider than the host's task slots; restored afterwards."""
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    yield spark
+    spark.conf.set("spark.sql.shuffle.partitions", width)
+
+
+def test_cli_session_keeps_callers_shuffle_width(session_at_32, monkeypatch):
+    """An in-process CLI command reuses its caller's live session and
+    leaves its shuffle width alone; the factory's other settings still
+    apply, and a width the caller names still takes effect."""
+    from etl_moodle_and_mass_email_sending_spark.__main__ import _spark
+    from etl_moodle_and_mass_email_sending_spark.session import get_spark
+
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE", "7")
+    session_at_32.conf.set("spark.sql.session.timeZone", "America/Santiago")
+    session = _spark()
+    assert session.conf.get("spark.sql.shuffle.partitions") == "32"
+    assert session.conf.get("spark.sql.session.timeZone") == "UTC"
+    width = get_spark(shuffle_partitions=5).conf.get(
+        "spark.sql.shuffle.partitions"
+    )
+    assert width == "5"
+
+
 def _recorded_shuffle_partitions(checkpoint, batch: int) -> str:
     """spark.sql.shuffle.partitions as the offset log recorded it."""
     import json
@@ -146,7 +174,7 @@ def _recorded_shuffle_partitions(checkpoint, batch: int) -> str:
 
 
 def test_cli_send_stream_state_partitions_sized_to_host(
-    spark, tmp_path, monkeypatch, capsys
+    spark, session_at_32, tmp_path, capsys
 ):
     import time
 
@@ -171,7 +199,6 @@ def test_cli_send_stream_state_partitions_sized_to_host(
 
     # the session the CLI resolves carries a wider value than the host's
     # task slots, as the session factory's default of 32 does
-    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE", "32")
     session = _spark()
     before = session.conf.get("spark.sql.shuffle.partitions")
     assert before == "32"
@@ -198,7 +225,7 @@ def test_cli_send_stream_state_partitions_sized_to_host(
 
 
 def test_cli_send_stream_resume_keeps_recorded_state_partitions(
-    spark, tmp_path, monkeypatch, capsys
+    spark, session_at_32, tmp_path, monkeypatch, capsys
 ):
     import contextlib
 
@@ -216,7 +243,6 @@ def test_cli_send_stream_resume_keeps_recorded_state_partitions(
     # first drain on a checkpoint created with 32 state partitions: the
     # session default that drains inherited before the count was sized
     # to the host
-    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE", "32")
     with monkeypatch.context() as m:
         m.setattr(
             send_stream, "state_shuffle",

@@ -25,10 +25,6 @@ ENTRY_FILES = [
     *sorted((REPO / "perfbench").glob("*.py")),
 ]
 ALLOWED = {
-    "encode_png": "fixture encoder: tests build PNG inputs for decode_media",
-    "encode_y4m": "fixture encoder: tests build Y4M video inputs",
-    "encode_avi_mpng": "fixture encoder: tests build AVI/MPNG video inputs",
-    "encode_mp4": "fixture encoder: tests build mp4 inputs where pyav exists",
     "ivf_recluster_frame": "seam: tests recluster a hand-built vector frame",
     "_ingest_receipt_frames": "seam: tests read llm_ingest_health's inputs",
 }
