@@ -7,6 +7,7 @@ events documents embeddings.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -27,33 +28,44 @@ TABLES = (
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
+    path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
-        # The testbed stores events.ts as µs INT64
-        # Timestamp(isAdjustedToUTC=false); an event log written with
-        # TIMESTAMP(NANOS) would be rejected by default
-        # (PARQUET_TYPE_ILLEGAL).  Set the legacy conf HERE — not only in
-        # session.py — so load_table reads either layout in ANY
-        # SparkSession (the driver builds its own vanilla session).
-        # Runtime-settable; verified to take effect before the read.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events":
-        # Two layouts, one TIMESTAMP out:
-        # - TIMESTAMP(NANOS) arrives as bigint nanos under
-        #   spark.sql.legacy.parquet.nanosAsLong (LongType branch); integer
-        #   division truncates ns→µs, so oracle SQL that outputs a raw ts
-        #   wraps it in CAST(ts AS TIMESTAMP) for DuckDB to truncate alike.
-        # - µs Timestamp(isAdjustedToUTC=false) — the testbed's layout, also
-        #   what perfbench writes and what DuckDB COPY emits — arrives as
-        #   TIMESTAMP_NTZ (NTZ branch) and is cast to the session-zone
-        #   TIMESTAMP every downstream operator expects.
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import LongType, TimestampNTZType
+        return read_events(spark, lambda: spark.read.parquet(path))
+    return spark.read.parquet(path)
 
-        if isinstance(df.schema["ts"].dataType, LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        elif isinstance(df.schema["ts"].dataType, TimestampNTZType):
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+
+def read_events(
+    spark: SparkSession, read: Callable[[], DataFrame]
+) -> DataFrame:
+    """``read()`` an events parquet (batch or stream) with ``ts`` as the
+    session-zone TIMESTAMP every downstream operator (and withWatermark)
+    expects.
+
+    The testbed stores events.ts as µs INT64
+    Timestamp(isAdjustedToUTC=false); an event log written with
+    TIMESTAMP(NANOS) would be rejected by default (PARQUET_TYPE_ILLEGAL).
+    The legacy conf is set HERE — not only in session.py — so either
+    layout reads in ANY SparkSession (the driver builds its own vanilla
+    session); it is runtime-settable and takes effect before ``read()``.
+    Two layouts, one TIMESTAMP out:
+    - TIMESTAMP(NANOS) arrives as bigint nanos under
+      spark.sql.legacy.parquet.nanosAsLong (LongType branch); integer
+      division truncates ns→µs, so oracle SQL that outputs a raw ts
+      wraps it in CAST(ts AS TIMESTAMP) for DuckDB to truncate alike.
+    - µs Timestamp(isAdjustedToUTC=false) — the testbed's layout, also
+      what perfbench writes and what DuckDB COPY emits — arrives as
+      TIMESTAMP_NTZ (NTZ branch) and is cast to the session-zone
+      TIMESTAMP.
+    """
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType, TimestampNTZType
+
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = read()
+    if isinstance(df.schema["ts"].dataType, LongType):
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+    elif isinstance(df.schema["ts"].dataType, TimestampNTZType):
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 

@@ -32,15 +32,13 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     key: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    suffix: str = "_asof",
     direction: str = "backward",
     tolerance_seconds: float | None = None,
 ) -> DataFrame:
-    """Left as-of join: every left column, plus each non-key right column
-    renamed ``<col><suffix>`` (nullable — null when no right row precedes
-    the left row). ``right_ts`` itself is carried as ``<right_ts><suffix>``.
+    """Left as-of join on both sides' ``ts``: every left column, plus
+    each non-key right column renamed ``<col>_asof`` (nullable — null when
+    no right row precedes the left row). The right ``ts`` itself is
+    carried as ``ts_asof``.
 
     ``direction='backward'`` (default) matches the most recent right row
     with ``right.ts <= left.ts``; ``'forward'`` the nearest with
@@ -60,7 +58,7 @@ def asof_join(
     # yielding a composite row that matches no actual right row.
     r_tmp = right.select(
         F.col(key).alias("_k"),
-        F.col(right_ts).alias("_ts"),
+        F.col("ts").alias("_ts"),
         F.lit(0).alias("_side"),
         F.struct(*[F.col(c) for c in payload]).alias("_p"),
     )
@@ -68,7 +66,7 @@ def asof_join(
     lrow = F.struct(*[F.col(c) for c in left.columns]).alias("_lrow")
     l2 = left.select(
         F.col(key).alias("_k"),
-        F.col(left_ts).alias("_ts"),
+        F.col("ts").alias("_ts"),
         F.lit(1).alias("_side"),
         lrow,
         F.lit(None).cast(p_type).alias("_p"),
@@ -111,5 +109,5 @@ def asof_join(
         )
     return matched.select(
         F.col("_lrow.*"),
-        *[F.col(f"_p.{c}").alias(f"{c}{suffix}") for c in payload],
+        *[F.col(f"_p.{c}").alias(f"{c}_asof") for c in payload],
     )

@@ -24,9 +24,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 20
-) -> DataFrame:
+CC_MAX_ITER = 20
+
+
+def connected_components(edges: DataFrame) -> DataFrame:
     """edges(src, dst) → (id, component) where component = min id reachable.
 
     Vertices appearing in no edge are absent — union the full vertex set
@@ -44,7 +45,7 @@ def connected_components(
         .withColumn("component", F.col("id"))
         .localCheckpoint()
     )
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ITER):
         neighbor_min = (
             both.join(labels, both.b == labels.id)
             .groupBy("a")
@@ -366,10 +367,10 @@ KCORE_K = 2
 KCORE_ROUNDS = 3
 
 
-def kcore(edges: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -> DataFrame:
+def kcore(edges: DataFrame) -> DataFrame:
     """edges(src, dst) undirected (either orientation, self-loops
-    ignored) → (id, degree): nodes surviving ``rounds`` of < k peeling,
-    with their degree in the surviving subgraph."""
+    ignored) → (id, degree): nodes surviving KCORE_ROUNDS rounds of
+    < KCORE_K peeling, with their degree in the surviving subgraph."""
     src, dst = edges.columns[:2]
     e = (
         edges.filter(F.col(src) != F.col(dst))
@@ -383,9 +384,9 @@ def kcore(edges: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -> Dat
     sym = e.select(F.col("a").alias("id"), F.col("b").alias("nb")).unionByName(
         e.select(F.col("b").alias("id"), F.col("a").alias("nb"))
     )
-    for _ in range(rounds):
+    for _ in range(KCORE_ROUNDS):
         deg = sym.groupBy("id").agg(F.count("*").alias("degree"))
-        keep = deg.filter(F.col("degree") >= k).select("id")
+        keep = deg.filter(F.col("degree") >= KCORE_K).select("id")
         sym = (
             sym.join(keep, "id", "leftsemi")
             .join(keep.select(F.col("id").alias("nb")), "nb", "leftsemi")
@@ -394,9 +395,7 @@ def kcore(edges: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -> Dat
     return sym.groupBy("id").agg(F.count("*").alias("degree"))
 
 
-def sql_kcore(
-    edges_sql: str, k: int = KCORE_K, rounds: int = KCORE_ROUNDS
-) -> str:
+def sql_kcore(edges_sql: str) -> str:
     """DuckDB twin: the same fixed-round peeling as chained CTEs."""
     ctes = [
         f"""raw AS ({edges_sql}),
@@ -410,10 +409,10 @@ def sql_kcore(
       SELECT b AS id, a AS nb FROM e
     )"""
     ]
-    for r in range(rounds):
+    for r in range(KCORE_ROUNDS):
         ctes.append(
             f"""keep{r} AS (
-      SELECT id FROM sym{r} GROUP BY id HAVING count(*) >= {k}
+      SELECT id FROM sym{r} GROUP BY id HAVING count(*) >= {KCORE_K}
     ),
     sym{r + 1} AS (
       SELECT s.id, s.nb FROM sym{r} s
@@ -425,7 +424,7 @@ def sql_kcore(
         "WITH "
         + ",\n    ".join(ctes)
         + f"""
-    SELECT id, count(*) AS degree FROM sym{rounds} GROUP BY id
+    SELECT id, count(*) AS degree FROM sym{KCORE_ROUNDS} GROUP BY id
     """
     )
 
@@ -449,11 +448,9 @@ def sql_kcore(
 BFS_ROUNDS = 2
 
 
-def bfs_depth(
-    edges: DataFrame, seeds: DataFrame, rounds: int = BFS_ROUNDS
-) -> DataFrame:
+def bfs_depth(edges: DataFrame, seeds: DataFrame) -> DataFrame:
     """edges(src, dst) undirected, seeds(id) → (id, depth): min hops
-    from any seed, for every node within ``rounds`` hops."""
+    from any seed, for every node within BFS_ROUNDS hops."""
     src, dst = edges.columns[:2]
     e = (
         edges.filter(F.col(src) != F.col(dst))
@@ -467,7 +464,7 @@ def bfs_depth(
         e.select(F.col("b").alias("id"), F.col("a").alias("nb"))
     ).localCheckpoint(eager=False)
     dist = seeds.select("id", F.lit(0).alias("depth"))
-    for _ in range(rounds):
+    for _ in range(BFS_ROUNDS):
         relaxed = (
             sym.join(
                 dist.select(F.col("id").alias("nb"), "depth"), "nb"
@@ -483,9 +480,7 @@ def bfs_depth(
     return dist
 
 
-def sql_bfs_depth(
-    edges_sql: str, seeds_sql: str, rounds: int = BFS_ROUNDS
-) -> str:
+def sql_bfs_depth(edges_sql: str, seeds_sql: str) -> str:
     """DuckDB twin: identical unrolled relaxation as chained CTEs."""
     ctes = [
         f"""raw AS ({edges_sql}),
@@ -500,7 +495,7 @@ def sql_bfs_depth(
     ),
     dist0 AS (SELECT id, 0 AS depth FROM ({seeds_sql}))"""
     ]
-    for r in range(rounds):
+    for r in range(BFS_ROUNDS):
         ctes.append(
             f"""dist{r + 1} AS (
       SELECT id, min(depth) AS depth FROM (
@@ -515,7 +510,7 @@ def sql_bfs_depth(
         "WITH "
         + ",\n    ".join(ctes)
         + f"""
-    SELECT id, CAST(depth AS INTEGER) AS depth FROM dist{rounds}
+    SELECT id, CAST(depth AS INTEGER) AS depth FROM dist{BFS_ROUNDS}
     """
     )
 

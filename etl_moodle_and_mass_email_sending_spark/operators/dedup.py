@@ -578,9 +578,7 @@ def sql_ngram_jaccard_lsh_verified(
 CONTAINMENT_THRESHOLD = 0.9
 
 
-def containment_pairs(
-    corpus: DataFrame, threshold: float = CONTAINMENT_THRESHOLD
-) -> DataFrame:
+def containment_pairs(corpus: DataFrame) -> DataFrame:
     """(doc_small, doc_big, containment): ordered so the CONTAINED doc is
     first; restricted to LSH candidates."""
     docs = _spread(corpus).select(
@@ -625,13 +623,11 @@ def containment_pairs(
             F.when(small_first, F.col("doc_b")).otherwise(F.col("doc_a")).alias("doc_big"),
             cont,
         )
-        .filter(F.col("containment") >= threshold)
+        .filter(F.col("containment") >= CONTAINMENT_THRESHOLD)
     )
 
 
-def sql_containment_pairs(
-    corpus_sql: str, threshold: float = CONTAINMENT_THRESHOLD
-) -> str:
+def sql_containment_pairs(corpus_sql: str) -> str:
     sig = sql_minhash_signatures(corpus_sql)
     return f"""
     WITH sh AS (
@@ -661,7 +657,7 @@ def sql_containment_pairs(
       FROM cand c
       JOIN sh sa ON sa.doc_id = c.doc_a
       JOIN sh sb ON sb.doc_id = c.doc_b
-    ) WHERE containment >= {threshold}
+    ) WHERE containment >= {CONTAINMENT_THRESHOLD}
     """
 
 
@@ -674,31 +670,21 @@ def sql_containment_pairs(
 # case (e.g. cot/cat) is what the third key covers. Candidates are the
 # union of three narrow equi-joins on short block keys, exact
 # levenshtein verifies per candidate. The invariant is specific to
-# distance 1 (two edits can destroy all three keys), so max_dist > 1
-# is rejected rather than silently incomplete.
+# distance 1 (two edits can destroy all three keys), so FUZZY_MAX_DIST
+# must stay 1.
 # --------------------------------------------------------------------------
 
 FUZZY_MAX_DIST = 1
 
 
-def fuzzy_match_pairs(
-    dirty: DataFrame,
-    clean: DataFrame,
-    col: str = "token",
-    max_dist: int = FUZZY_MAX_DIST,
-) -> DataFrame:
-    """(dirty_token, clean_token, dist ≤ max_dist), dirty ≠ clean.
-    Inputs are one-string-per-row frames with column ``col``; tokens
+def fuzzy_match_pairs(dirty: DataFrame, clean: DataFrame) -> DataFrame:
+    """(dirty_token, clean_token, dist ≤ FUZZY_MAX_DIST), dirty ≠ clean.
+    Inputs are one-string-per-row frames with column ``token``; tokens
     shorter than 3 chars should be matched exactly instead (blocking
     completeness holds for length ≥ 3)."""
-    if max_dist != 1:
-        raise ValueError(
-            "blocking is complete only for edit distance 1; "
-            f"got max_dist={max_dist}"
-        )
 
     def keyed(df: DataFrame, side: str) -> DataFrame:
-        c = F.col(col)
+        c = F.col("token")
         return df.select(
             c.alias(f"{side}_token"),
             F.substring(c, 1, 2).alias("_head"),
@@ -717,25 +703,22 @@ def fuzzy_match_pairs(
     return (
         cands.filter(F.col("dirty_token") != F.col("clean_token"))
         .withColumn("dist", dist)
-        .filter(F.col("dist") <= max_dist)
+        .filter(F.col("dist") <= FUZZY_MAX_DIST)
     )
 
 
-def sql_fuzzy_match_pairs(
-    dirty_sql: str, clean_sql: str, col: str = "token",
-    max_dist: int = FUZZY_MAX_DIST,
-) -> str:
+def sql_fuzzy_match_pairs(dirty_sql: str, clean_sql: str) -> str:
     return f"""
     WITH a AS (
-      SELECT {col} AS dirty_token, substr({col}, 1, 2) AS head,
-             substr({col}, -2, 2) AS tail,
-             substr({col}, 1, 1) || substr({col}, -1, 1) AS ends
+      SELECT token AS dirty_token, substr(token, 1, 2) AS head,
+             substr(token, -2, 2) AS tail,
+             substr(token, 1, 1) || substr(token, -1, 1) AS ends
       FROM ({dirty_sql})
     ),
     b AS (
-      SELECT {col} AS clean_token, substr({col}, 1, 2) AS head,
-             substr({col}, -2, 2) AS tail,
-             substr({col}, 1, 1) || substr({col}, -1, 1) AS ends
+      SELECT token AS clean_token, substr(token, 1, 2) AS head,
+             substr(token, -2, 2) AS tail,
+             substr(token, 1, 1) || substr(token, -1, 1) AS ends
       FROM ({clean_sql})
     ),
     cands AS (
@@ -749,7 +732,7 @@ def sql_fuzzy_match_pairs(
            CAST(levenshtein(dirty_token, clean_token) AS INTEGER) AS dist
     FROM cands
     WHERE dirty_token <> clean_token
-      AND levenshtein(dirty_token, clean_token) <= {max_dist}
+      AND levenshtein(dirty_token, clean_token) <= {FUZZY_MAX_DIST}
     """
 
 
@@ -1068,14 +1051,12 @@ def sql_new_crawl() -> str:
 
 
 def incremental_dedup(
-    frozen_sigs: DataFrame,
-    incoming: DataFrame,
-    threshold: float = NEAR_THRESHOLD,
+    frozen_sigs: DataFrame, incoming: DataFrame
 ) -> DataFrame:
     """(doc_id, n_frozen_matches, match_id, match_est, admitted):
     verdict per incoming doc against the frozen signature index.
     ``match_id`` is the best frozen match (est DESC, id ASC);
-    ``admitted`` iff no frozen near-dup reached ``threshold``."""
+    ``admitted`` iff no frozen near-dup reached NEAR_THRESHOLD."""
     f_bands = _band_frame(frozen_sigs).select(
         F.col("doc_id").alias("frozen_id"),
         F.col("sig").alias("sig_f"),
@@ -1093,7 +1074,7 @@ def incremental_dedup(
     cand = (
         i_bands.join(f_bands, on=["band", "key"])
         .select("doc_id", "frozen_id", est)
-        .filter(F.col("est") >= threshold)
+        .filter(F.col("est") >= NEAR_THRESHOLD)
         .distinct()
     )
     best = cand.groupBy("doc_id").agg(
@@ -1117,9 +1098,7 @@ def incremental_dedup(
     )
 
 
-def sql_incremental_dedup(
-    frozen_sql: str, incoming_sql: str, threshold: float = NEAR_THRESHOLD
-) -> str:
+def sql_incremental_dedup(frozen_sql: str, incoming_sql: str) -> str:
     def bands(src: str) -> str:
         return f"""
       SELECT doc_id, sig, b.band, b.key FROM ({src}),
@@ -1147,7 +1126,7 @@ def sql_incremental_dedup(
              row_number() OVER (PARTITION BY doc_id
                   ORDER BY est DESC, frozen_id) AS rn,
              count(*) OVER (PARTITION BY doc_id) AS n_matches
-      FROM cand WHERE est >= {threshold}
+      FROM cand WHERE est >= {NEAR_THRESHOLD}
     )
     SELECT inc.doc_id,
            CAST(coalesce(h.n_matches, 0) AS BIGINT) AS n_frozen_matches,
@@ -1338,17 +1317,12 @@ RECALL_EVAL_TARGET = 500  # fixed-size eval sample: truth cost is
 _RE_SCALE = 16**15
 
 
-def lsh_recall(
-    corpus: DataFrame,
-    eval_lang: str = RECALL_EVAL_LANG,
-    threshold: float = NEAR_THRESHOLD,
-    target: int = RECALL_EVAL_TARGET,
-) -> DataFrame:
+def lsh_recall(corpus: DataFrame) -> DataFrame:
     """(bucket, n_truth, n_found, recall): per-Jaccard-bucket recall of
     the MinHash-LSH candidate stage against the exact all-pairs truth
-    on a fixed-size sample of the ``eval_lang`` stratum. ``corpus``
+    on a fixed-size sample of the RECALL_EVAL_LANG stratum. ``corpus``
     must carry (doc_id, text, lang)."""
-    block = corpus.filter(F.col("lang") == eval_lang).select(
+    block = corpus.filter(F.col("lang") == RECALL_EVAL_LANG).select(
         "doc_id", "text", "lang"
     )
     n = block.agg(F.count(F.lit(1)).cast("double").alias("_n"))
@@ -1371,12 +1345,16 @@ def lsh_recall(
     )
     stratum = (
         block.crossJoin(F.broadcast(n))
-        .filter(u < F.least(F.lit(1.0), F.lit(float(target)) / F.col("_n")))
+        .filter(
+            u < F.least(
+                F.lit(1.0), F.lit(float(RECALL_EVAL_TARGET)) / F.col("_n")
+            )
+        )
         .select("doc_id", "text", "lang")
     )
-    truth = ngram_jaccard_pairs(stratum, threshold, impl="block")
+    truth = ngram_jaccard_pairs(stratum, NEAR_THRESHOLD, impl="block")
     found = ngram_jaccard_lsh_verified(
-        stratum.select("doc_id", "text"), threshold
+        stratum.select("doc_id", "text"), NEAR_THRESHOLD
     ).select("doc_a", "doc_b", F.lit(1).alias("_hit"))
     bucket = (
         F.least(F.floor(F.col("jaccard") * 10), F.lit(9)) / 10.0
@@ -1402,12 +1380,7 @@ def lsh_recall(
     )
 
 
-def sql_lsh_recall(
-    corpus_sql: str,
-    eval_lang: str = RECALL_EVAL_LANG,
-    threshold: float = NEAR_THRESHOLD,
-    target: int = RECALL_EVAL_TARGET,
-) -> str:
+def sql_lsh_recall(corpus_sql: str) -> str:
     u = (
         f"CAST('0x' || substr(md5('LR{SEED_SEP}' || "
         f"CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) "
@@ -1416,13 +1389,13 @@ def sql_lsh_recall(
     stratum = (
         f"SELECT doc_id, text, lang FROM ({corpus_sql}) "
         f"CROSS JOIN (SELECT CAST(count(*) AS DOUBLE) AS n "
-        f"FROM ({corpus_sql}) WHERE lang = '{eval_lang}') _c "
-        f"WHERE lang = '{eval_lang}' "
-        f"AND {u} < least(1.0, {float(target)!r} / n)"
+        f"FROM ({corpus_sql}) WHERE lang = '{RECALL_EVAL_LANG}') _c "
+        f"WHERE lang = '{RECALL_EVAL_LANG}' "
+        f"AND {u} < least(1.0, {float(RECALL_EVAL_TARGET)!r} / n)"
     )
-    truth = sql_ngram_jaccard_pairs(stratum, threshold)
+    truth = sql_ngram_jaccard_pairs(stratum, NEAR_THRESHOLD)
     found = sql_ngram_jaccard_lsh_verified(
-        f"SELECT doc_id, text FROM ({stratum})", threshold
+        f"SELECT doc_id, text FROM ({stratum})", NEAR_THRESHOLD
     )
     return f"""
     WITH truth AS ({truth}),

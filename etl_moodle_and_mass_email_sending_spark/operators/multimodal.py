@@ -227,9 +227,7 @@ RESIZED_SCHEMA = StructType(
 )
 
 
-def resize_images(
-    media: DataFrame, width: int = RESIZE_W, height: int = RESIZE_H
-) -> DataFrame:
+def resize_images(media: DataFrame) -> DataFrame:
     """Image rows → resized payloads: md5 of the hex payload and the
     target geometry, repeated — deterministic bytes standing in for the
     resampled pixel buffer. Output payload is hex-encoded so the oracle
@@ -245,20 +243,25 @@ def resize_images(
                     continue
                 hexstr = bytes(row.payload).hex()
                 digest = hashlib.md5(
-                    f"{hexstr}_{width}x{height}".encode()
+                    f"{hexstr}_{RESIZE_W}x{RESIZE_H}".encode()
                 ).hexdigest()
                 out.append(
-                    (int(row.doc_id), width, height, digest * RESIZE_REPEAT)
+                    (
+                        int(row.doc_id),
+                        RESIZE_W,
+                        RESIZE_H,
+                        digest * RESIZE_REPEAT,
+                    )
                 )
             yield pd.DataFrame(out, columns=[f.name for f in RESIZED_SCHEMA])
 
     return media.mapInPandas(run, RESIZED_SCHEMA)
 
 
-def sql_resize_images(width: int = RESIZE_W, height: int = RESIZE_H) -> str:
+def sql_resize_images() -> str:
     return f"""
-    SELECT doc_id, {width} AS width, {height} AS height,
-           repeat(md5(payload_hex || '_{width}x{height}'), {RESIZE_REPEAT})
+    SELECT doc_id, {RESIZE_W} AS width, {RESIZE_H} AS height,
+           repeat(md5(payload_hex || '_{RESIZE_W}x{RESIZE_H}'), {RESIZE_REPEAT})
              AS payload_hex
     FROM ({SQL_MEDIA_TABLE}) WHERE media_type = 'image'
     """
@@ -280,9 +283,7 @@ FRAMES_SCHEMA = StructType(
 )
 
 
-def sample_frames(
-    media: DataFrame, every_n: int = 1, max_frames: int = MAX_FRAMES
-) -> DataFrame:
+def sample_frames(media: DataFrame, every_n: int = 1) -> DataFrame:
     """Video rows → sampled frame rows (a mapInPandas fan-out: one input
     row yields several output rows — the Spark shape of ffmpeg frame
     extraction). A frame is a FRAME_BYTES-wide payload slice."""
@@ -296,7 +297,7 @@ def sample_frames(
                 b = bytes(row.payload)
                 n_slots = len(b) // FRAME_BYTES
                 for k, i in enumerate(range(0, n_slots, every_n)):
-                    if k >= max_frames:
+                    if k >= MAX_FRAMES:
                         break
                     frame = b[i * FRAME_BYTES : (i + 1) * FRAME_BYTES]
                     out.append((int(row.doc_id), i, frame.hex()))
@@ -305,7 +306,7 @@ def sample_frames(
     return media.mapInPandas(run, FRAMES_SCHEMA)
 
 
-def sql_sample_frames(every_n: int = 1, max_frames: int = MAX_FRAMES) -> str:
+def sql_sample_frames(every_n: int = 1) -> str:
     n_slots = PAYLOAD_REPEAT * 16 // FRAME_BYTES
     return f"""
     SELECT m.doc_id,
@@ -315,7 +316,7 @@ def sql_sample_frames(every_n: int = 1, max_frames: int = MAX_FRAMES) -> str:
     FROM ({SQL_MEDIA_TABLE}) m,
          LATERAL (SELECT unnest(generate_series(0, {n_slots - 1}, {every_n})) AS i) g
     WHERE m.media_type = 'video'
-      AND (i / {every_n}) < {max_frames}
+      AND (i / {every_n}) < {MAX_FRAMES}
     """
 
 
@@ -364,13 +365,9 @@ AUDIO_FRAMES_SCHEMA = StructType(
 )
 
 
-def audio_frame_energy(
-    media: DataFrame,
-    win: int = AUDIO_WIN_BYTES,
-    hop: int = AUDIO_HOP_BYTES,
-) -> DataFrame:
+def audio_frame_energy(media: DataFrame) -> DataFrame:
     """Audio rows → one row per overlapping frame with its byte-sum
-    energy; a payload shorter than ``win`` has no frame."""
+    energy; a payload shorter than AUDIO_WIN_BYTES has no frame."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -378,13 +375,18 @@ def audio_frame_energy(
         for pdf in batches:
             doc_ids = pdf["doc_id"].to_numpy()
             for idx, payloads in _by_length(pdf["payload"]):
-                n_frames = max(0, (payloads.shape[1] - win) // hop + 1)
+                n_frames = max(
+                    0,
+                    (payloads.shape[1] - AUDIO_WIN_BYTES) // AUDIO_HOP_BYTES
+                    + 1,
+                )
                 if not n_frames:
                     continue
-                # (n_rows, n_frames, win) strided view -> exact int64 sums
+                # (n_rows, n_frames, AUDIO_WIN_BYTES) strided view ->
+                # exact int64 sums
                 frame_at = (
-                    np.arange(n_frames)[:, None] * hop
-                    + np.arange(win)[None, :]
+                    np.arange(n_frames)[:, None] * AUDIO_HOP_BYTES
+                    + np.arange(AUDIO_WIN_BYTES)[None, :]
                 )
                 energy = payloads[:, frame_at].astype(np.int64).sum(axis=2)
                 yield pd.DataFrame(
@@ -402,19 +404,19 @@ def audio_frame_energy(
     )
 
 
-def sql_audio_frame_energy(
-    win: int = AUDIO_WIN_BYTES, hop: int = AUDIO_HOP_BYTES
-) -> str:
+def sql_audio_frame_energy() -> str:
     payload_bytes = 16 * PAYLOAD_REPEAT
-    n_frames = max(0, (payload_bytes - win) // hop + 1)
+    n_frames = max(
+        0, (payload_bytes - AUDIO_WIN_BYTES) // AUDIO_HOP_BYTES + 1
+    )
     byte_at = (
         "CAST(CAST('0x' || substr(payload_hex, 2 * (f.frame_idx * "
-        f"{hop} + j) + 1, 2) AS INTEGER) AS BIGINT)"
+        f"{AUDIO_HOP_BYTES} + j) + 1, 2) AS INTEGER) AS BIGINT)"
     )
     return f"""
     SELECT doc_id,
            CAST(f.frame_idx AS INTEGER) AS frame_idx,
-           CAST(list_sum(list_transform(range(0, {win}),
+           CAST(list_sum(list_transform(range(0, {AUDIO_WIN_BYTES}),
                 j -> {byte_at})) AS BIGINT) AS energy
     FROM ({SQL_MEDIA_TABLE}) m,
          LATERAL (SELECT unnest(range(0, {n_frames})) AS frame_idx) f
@@ -541,11 +543,7 @@ SCENES_SCHEMA = StructType(
 )
 
 
-def detect_scene_changes(
-    media: DataFrame,
-    frame_bytes: int = FRAME_BYTES,
-    threshold: int = SCENE_DELTA_THRESHOLD,
-) -> DataFrame:
+def detect_scene_changes(media: DataFrame) -> DataFrame:
     """Video rows → one row per frame with intensity, delta vs previous
     frame (0 for frame 0), and the scene-change flag; trailing bytes
     short of a whole frame are ignored."""
@@ -556,11 +554,11 @@ def detect_scene_changes(
         for pdf in batches:
             doc_ids = pdf["doc_id"].to_numpy()
             for idx, payloads in _by_length(pdf["payload"]):
-                n_frames = payloads.shape[1] // frame_bytes
+                n_frames = payloads.shape[1] // FRAME_BYTES
                 if not n_frames:
                     continue
-                frames = payloads[:, : n_frames * frame_bytes].reshape(
-                    len(idx), n_frames, frame_bytes
+                frames = payloads[:, : n_frames * FRAME_BYTES].reshape(
+                    len(idx), n_frames, FRAME_BYTES
                 )
                 intensity = frames.astype(np.int64).sum(axis=2)
                 delta = np.abs(
@@ -574,7 +572,7 @@ def detect_scene_changes(
                         ),
                         "intensity": intensity.reshape(-1),
                         "delta": delta.reshape(-1),
-                        "is_scene_change": (delta > threshold)
+                        "is_scene_change": (delta > SCENE_DELTA_THRESHOLD)
                         .astype(np.int32)
                         .reshape(-1),
                     }
@@ -585,17 +583,15 @@ def detect_scene_changes(
     )
 
 
-def sql_detect_scene_changes(
-    frame_bytes: int = FRAME_BYTES, threshold: int = SCENE_DELTA_THRESHOLD
-) -> str:
+def sql_detect_scene_changes() -> str:
     payload_bytes = 16 * PAYLOAD_REPEAT
-    n_frames = payload_bytes // frame_bytes
+    n_frames = payload_bytes // FRAME_BYTES
     byte_at = (
         "CAST(CAST('0x' || substr(payload_hex, 2 * (f.frame_idx * "
-        f"{frame_bytes} + j) + 1, 2) AS INTEGER) AS BIGINT)"
+        f"{FRAME_BYTES} + j) + 1, 2) AS INTEGER) AS BIGINT)"
     )
     intensity = (
-        f"CAST(list_sum(list_transform(range(0, {frame_bytes}), "
+        f"CAST(list_sum(list_transform(range(0, {FRAME_BYTES}), "
         f"j -> {byte_at})) AS BIGINT)"
     )
     return f"""
@@ -610,7 +606,7 @@ def sql_detect_scene_changes(
            CAST(coalesce(abs(intensity - lag(intensity) OVER w), 0)
                 AS BIGINT) AS delta,
            CAST(coalesce(abs(intensity - lag(intensity) OVER w), 0)
-                > {threshold} AS INTEGER) AS is_scene_change
+                > {SCENE_DELTA_THRESHOLD} AS INTEGER) AS is_scene_change
     FROM frames
     WINDOW w AS (PARTITION BY doc_id ORDER BY frame_idx)
     """
@@ -629,14 +625,11 @@ def sql_detect_scene_changes(
 SILENCE_THRESHOLD = 3500  # byte-sum energy below this = silent frame
 
 
-def detect_silence_runs(
-    media: DataFrame,
-    threshold: int = SILENCE_THRESHOLD,
-) -> DataFrame:
+def detect_silence_runs(media: DataFrame) -> DataFrame:
     """(doc_id, run_start, n_frames, min_energy): maximal silent runs
     per audio doc."""
     frames = audio_frame_energy(media)
-    silent = frames.filter(F.col("energy") < threshold)
+    silent = frames.filter(F.col("energy") < SILENCE_THRESHOLD)
     w = Window.partitionBy("doc_id").orderBy("frame_idx")
     runs = silent.withColumn(
         "_grp", F.col("frame_idx") - F.row_number().over(w)
@@ -652,12 +645,12 @@ def detect_silence_runs(
     )
 
 
-def sql_detect_silence_runs(threshold: int = SILENCE_THRESHOLD) -> str:
+def sql_detect_silence_runs() -> str:
     return f"""
     WITH frames AS ({sql_audio_frame_energy()}),
     silent AS (
       SELECT doc_id, frame_idx, energy FROM frames
-      WHERE energy < {threshold}
+      WHERE energy < {SILENCE_THRESHOLD}
     ),
     runs AS (
       SELECT doc_id, frame_idx, energy,
@@ -1397,17 +1390,11 @@ def sql_modality_balance() -> str:
 # --------------------------------------------------------------------------
 
 
-def keyframe_extract(
-    media: DataFrame,
-    frame_bytes: int = FRAME_BYTES,
-    threshold: int = SCENE_DELTA_THRESHOLD,
-) -> DataFrame:
+def keyframe_extract(media: DataFrame) -> DataFrame:
     """Frame 0 + scene-change frames, each with its frame bytes:
-    ``frame_hex`` is the frame's ``frame_bytes``-wide payload slice,
+    ``frame_hex`` is the frame's FRAME_BYTES-wide payload slice,
     hex-encoded."""
-    scenes = detect_scene_changes(
-        media, frame_bytes=frame_bytes, threshold=threshold
-    )
+    scenes = detect_scene_changes(media)
     keys = scenes.filter(
         (F.col("frame_idx") == 0) | (F.col("is_scene_change") == 1)
     )
@@ -1421,18 +1408,14 @@ def keyframe_extract(
         (F.col("frame_idx") == 0).alias("is_first"),
         F.substring(
             F.col("_hex"),
-            F.col("frame_idx") * (frame_bytes * 2) + 1,
-            frame_bytes * 2,
+            F.col("frame_idx") * (FRAME_BYTES * 2) + 1,
+            FRAME_BYTES * 2,
         ).alias("frame_hex"),
     )
 
 
-def sql_keyframe_extract(
-    frame_bytes: int = FRAME_BYTES, threshold: int = SCENE_DELTA_THRESHOLD
-) -> str:
-    scenes = sql_detect_scene_changes(
-        frame_bytes=frame_bytes, threshold=threshold
-    )
+def sql_keyframe_extract() -> str:
+    scenes = sql_detect_scene_changes()
     return f"""
     WITH scenes AS ({scenes}),
     payloads AS (
@@ -1442,8 +1425,8 @@ def sql_keyframe_extract(
     SELECT s.doc_id, s.frame_idx, s.intensity,
            s.frame_idx = 0 AS is_first,
            substr(p.payload_hex,
-                  s.frame_idx * {frame_bytes * 2} + 1,
-                  {frame_bytes * 2}) AS frame_hex
+                  s.frame_idx * {FRAME_BYTES * 2} + 1,
+                  {FRAME_BYTES * 2}) AS frame_hex
     FROM scenes s JOIN payloads p USING (doc_id)
     WHERE s.frame_idx = 0 OR s.is_scene_change = 1
     """

@@ -121,18 +121,17 @@ def sql_topk_bruteforce() -> str:
 FILTER_LABEL_MAX = 5  # the receipt's predicate: label < 5 (~half the corpus)
 
 
-def filtered_topk(
-    spark: SparkSession, sf_dir: str, label_max: int = FILTER_LABEL_MAX
-) -> DataFrame:
+def filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(query_id, vec_id, label, cosine, rank): exact top-K among
-    corpus vectors passing the metadata predicate (label < label_max),
+    corpus vectors passing the metadata predicate
+    (label < FILTER_LABEL_MAX),
     per query vector. Queries are NOT themselves filtered — a caller
     searches on behalf of any query against the restricted corpus."""
     v = _vectors(spark, sf_dir)
     q = v.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
     )
-    corpus = v.filter(F.col("label") < label_max)
+    corpus = v.filter(F.col("label") < FILTER_LABEL_MAX)
     sim = F.expr(_spark_cosine("qvec", "vec")).alias("cosine")
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("vec_id")
@@ -146,14 +145,14 @@ def filtered_topk(
     )
 
 
-def sql_filtered_topk(label_max: int = FILTER_LABEL_MAX) -> str:
+def sql_filtered_topk() -> str:
     cos = _duck_cosine("q.vec", "v.vec")
     return f"""
     WITH base AS ({_DUCK_VECTORS}),
     q AS (SELECT vec_id AS query_id, vec FROM base
           WHERE vec_id < {N_QUERIES}),
     corpus AS (SELECT vec_id, vec, label FROM base
-               WHERE label < {label_max}),
+               WHERE label < {FILTER_LABEL_MAX}),
     sims AS (
       SELECT q.query_id, v.vec_id, v.label, {cos} AS cosine
       FROM corpus v CROSS JOIN q WHERE v.vec_id <> q.query_id
@@ -333,24 +332,20 @@ def ivf_assign(v: DataFrame, cent: DataFrame, n_best: int = 1) -> DataFrame:
     )
 
 
-def ivf_topk(
-    spark: SparkSession, sf_dir: str, nprobe: int = NPROBE
-) -> DataFrame:
-    """IVF ANN: exact top-K restricted to the query's ``nprobe``
-    inverted lists (query_id, vec_id, cosine, rank)."""
+def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF ANN: exact top-K restricted to the query's NPROBE inverted
+    lists (query_id, vec_id, cosine, rank)."""
     v = _vectors(spark, sf_dir).select("vec_id", "vec")
-    return ivf_topk_with_centroids(v, _centroids(v), nprobe)
+    return ivf_topk_with_centroids(v, _centroids(v))
 
 
-def ivf_topk_with_centroids(
-    v: DataFrame, cent: DataFrame, nprobe: int = NPROBE
-) -> DataFrame:
+def ivf_topk_with_centroids(v: DataFrame, cent: DataFrame) -> DataFrame:
     """ivf_topk against an ARBITRARY centroid table — the piece that
     lets recall_after_recluster re-run the arm on the post-split index
     (round 11); ivf_topk is this with the standard seed centroids."""
     corpus = ivf_assign(v, cent, n_best=1)
     probes = ivf_assign(
-        v.filter(F.col("vec_id") < N_QUERIES), cent, n_best=nprobe
+        v.filter(F.col("vec_id") < N_QUERIES), cent, n_best=NPROBE
     ).select(
         F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec"), "cid"
     )
@@ -2768,9 +2763,7 @@ def sql_pq_distortion() -> str:
 KCENTER_K = 8
 
 
-def kcenter_sample(
-    spark: SparkSession, sf_dir: str, k: int = KCENTER_K
-) -> DataFrame:
+def kcenter_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(rank, vec_id, min_dist): the k greedily-selected centers in
     selection order; min_dist is the coverage radius when selected
     (NULL for the rank-0 seed)."""
@@ -2793,7 +2786,7 @@ def kcenter_sample(
     picks = [seed.select(F.lit(0).alias("rank"),
                          F.col("cid").alias("vec_id"),
                          F.lit(None).cast("double").alias("min_dist"))]
-    for r in range(1, k):
+    for r in range(1, KCENTER_K):
         # argmax by (min-dist DESC, vec_id ASC) carrying the vector
         winner = (
             cand.groupBy()
@@ -2820,7 +2813,7 @@ def kcenter_sample(
                 F.col("wd").alias("min_dist"),
             )
         )
-        if r < k - 1:
+        if r < KCENTER_K - 1:
             cand = (
                 cand.crossJoin(F.broadcast(winner))
                 .filter(F.col("vec_id") != F.col("cid"))
@@ -2837,7 +2830,7 @@ def kcenter_sample(
     return out
 
 
-def sql_kcenter_sample(k: int = KCENTER_K) -> str:
+def sql_kcenter_sample() -> str:
     """Unrolled k-step farthest-point recurrence as a CTE chain."""
     d = _duck_cosine("v.vec", "c{i}.cvec")
     ctes = [
@@ -2852,7 +2845,7 @@ def sql_kcenter_sample(k: int = KCENTER_K) -> str:
         "SELECT 0 AS rank, cid AS vec_id, CAST(NULL AS DOUBLE) "
         "AS min_dist FROM c0"
     ]
-    for r in range(1, k):
+    for r in range(1, KCENTER_K):
         prev = f"d{r - 1}"
         ctes.append(
             f"c{r} AS (SELECT vec_id AS cid, vec AS cvec, md "
@@ -2861,7 +2854,7 @@ def sql_kcenter_sample(k: int = KCENTER_K) -> str:
         sel.append(
             f"SELECT {r} AS rank, cid AS vec_id, md AS min_dist FROM c{r}"
         )
-        if r < k - 1:
+        if r < KCENTER_K - 1:
             ctes.append(
                 f"d{r} AS (SELECT v.vec_id, v.vec, "
                 f"least(v.md, round(1 - ({d.format(i=r)}), 6)) AS md "
@@ -3065,11 +3058,12 @@ def sql_dim_health() -> str:
 BQ_RERANK = 4 * TOP_K
 
 
-def _bq_pack_expr(offset: int, means_col: str = "means") -> str:
-    """32 sign bits of vec[offset+1 .. offset+32] packed into a bigint."""
+def _bq_pack_expr(offset: int) -> str:
+    """32 sign bits of vec[offset+1 .. offset+32] (against ``means``)
+    packed into a bigint."""
     return (
         f"aggregate(transform(slice(vec, {offset + 1}, 32), (x, i) ->"
-        f" IF(x > element_at({means_col}, i + {offset + 1}),"
+        f" IF(x > element_at(means, i + {offset + 1}),"
         " shiftleft(cast(1 as bigint), i), cast(0 as bigint))),"
         " cast(0 as bigint), (a, b) -> a + b)"
     )

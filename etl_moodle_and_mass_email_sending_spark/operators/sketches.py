@@ -39,9 +39,7 @@ def _hash_frac(key: Column) -> Column:
     return v.cast("bigint") / F.lit(float(_SCALE))
 
 
-def kmv_distinct(
-    df: DataFrame, group_col: str, key_col: str, k: int = KMV_K
-) -> DataFrame:
+def kmv_distinct(df: DataFrame, group_col: str, key_col: str) -> DataFrame:
     """Per-group exact distinct count alongside the KMV estimate —
     (group, n_exact, kmv_estimate).
 
@@ -57,12 +55,12 @@ def kmv_distinct(
     # the salt shard, never a whole group's distinct set
     w1 = Window.partitionBy(group_col, "_salt").orderBy("_frac")
     stage1 = hashed.withColumn("_rn", F.row_number().over(w1)).filter(
-        F.col("_rn") <= k
+        F.col("_rn") <= KMV_K
     )
     # stage 2: global top-k per group over the ≤ KMV_SALTS·k survivors
     w2 = Window.partitionBy(group_col).orderBy("_frac")
     topk = stage1.withColumn("_gr", F.row_number().over(w2)).filter(
-        F.col("_gr") <= k
+        F.col("_gr") <= KMV_K
     )
     exact = pairs.groupBy(group_col).agg(F.count("*").alias("n_exact"))
     kth = topk.groupBy(group_col).agg(F.max("_frac").alias("_hk"))
@@ -72,17 +70,15 @@ def kmv_distinct(
             group_col,
             "n_exact",
             F.when(
-                F.col("n_exact") < k, F.col("n_exact").cast("double")
+                F.col("n_exact") < KMV_K, F.col("n_exact").cast("double")
             )
-            .otherwise(F.round((F.lit(k) - F.lit(1)) / F.col("_hk"), 6))
+            .otherwise(F.round((F.lit(KMV_K) - F.lit(1)) / F.col("_hk"), 6))
             .alias("kmv_estimate"),
         )
     )
 
 
-def sql_kmv_distinct(
-    table_sql: str, group_col: str, key_col: str, k: int = KMV_K
-) -> str:
+def sql_kmv_distinct(table_sql: str, group_col: str, key_col: str) -> str:
     """DuckDB oracle: same hash, same estimator, single-stage top-k (the
     two-stage Spark form computes the identical exact top-k)."""
     return f"""
@@ -106,11 +102,11 @@ def sql_kmv_distinct(
     ),
     kth AS (
       SELECT {group_col}, max(frac) AS hk FROM ranked
-      WHERE rn <= {k} GROUP BY 1
+      WHERE rn <= {KMV_K} GROUP BY 1
     )
     SELECT e.{group_col}, e.n_exact,
-           CASE WHEN e.n_exact < {k} THEN CAST(e.n_exact AS DOUBLE)
-                ELSE round(({k} - 1) / kth.hk, 6) END AS kmv_estimate
+           CASE WHEN e.n_exact < {KMV_K} THEN CAST(e.n_exact AS DOUBLE)
+                ELSE round(({KMV_K} - 1) / kth.hk, 6) END AS kmv_estimate
     FROM exact e JOIN kth USING ({group_col})
     """
 
@@ -138,19 +134,25 @@ def _interleave_terms(a: str, b: str, bits: int, shift_op: str) -> str:
     return " + ".join(terms)
 
 
-def zorder_value(col_a: str, col_b: str, bits: int = ZORDER_BITS):
+def zorder_value(col_a: str, col_b: str):
     """Spark Column: Morton interleave of the two columns' low bits."""
     from pyspark.sql import functions as F
 
     expr = _interleave_terms(
-        f"CAST({col_a} AS BIGINT)", f"CAST({col_b} AS BIGINT)", bits, ">>"
+        f"CAST({col_a} AS BIGINT)",
+        f"CAST({col_b} AS BIGINT)",
+        ZORDER_BITS,
+        ">>",
     )
     return F.expr(expr)
 
 
-def sql_zorder_value(col_a: str, col_b: str, bits: int = ZORDER_BITS) -> str:
+def sql_zorder_value(col_a: str, col_b: str) -> str:
     return _interleave_terms(
-        f"CAST({col_a} AS BIGINT)", f"CAST({col_b} AS BIGINT)", bits, ">>"
+        f"CAST({col_a} AS BIGINT)",
+        f"CAST({col_b} AS BIGINT)",
+        ZORDER_BITS,
+        ">>",
     )
 
 
@@ -172,6 +174,7 @@ def sql_zorder_value(col_a: str, col_b: str, bits: int = ZORDER_BITS) -> str:
 
 CMS_ROWS = 4
 CMS_WIDTH = 256
+CMS_TOP_K = 20
 
 
 def _cms_bucket_structs() -> Column:
@@ -191,7 +194,9 @@ def _cms_bucket_structs() -> Column:
     )
 
 
-def cms_heavy_hitters(df: DataFrame, key_col: str, k: int = 20) -> DataFrame:
+def cms_heavy_hitters(
+    df: DataFrame, key_col: str, k: int = CMS_TOP_K
+) -> DataFrame:
     """(key, n_exact, cms_estimate) for the top-``k`` keys by CMS
     estimate (ties broken by key). ``n_exact`` rides along to expose the
     sketch's one-sided error (estimate ≥ exact, always)."""
@@ -215,7 +220,7 @@ def cms_heavy_hitters(df: DataFrame, key_col: str, k: int = 20) -> DataFrame:
     )
 
 
-def sql_cms_heavy_hitters(table_sql: str, key_col: str, k: int = 20) -> str:
+def sql_cms_heavy_hitters(table_sql: str, key_col: str) -> str:
     from ..functions.hashing import SEED_SEP
 
     bucket = (
@@ -242,7 +247,7 @@ def sql_cms_heavy_hitters(table_sql: str, key_col: str, k: int = 20) -> str:
       GROUP BY 1, 2
     )
     SELECT key AS {key_col}, n_exact, cms_estimate
-    FROM est ORDER BY cms_estimate DESC, key LIMIT {k}
+    FROM est ORDER BY cms_estimate DESC, key LIMIT {CMS_TOP_K}
     """
 
 
@@ -442,12 +447,7 @@ def sql_bloom_prejoin_stats(
 
 
 def kmv_setops(
-    df: DataFrame,
-    part_col: str,
-    key_col: str,
-    a: str,
-    b: str,
-    k: int = KMV_K,
+    df: DataFrame, part_col: str, key_col: str, a: str, b: str
 ) -> DataFrame:
     """One row: exact and KMV-estimated |A|, |B|, |A∪B|, |A∩B| where
     A/B are the distinct ``key_col`` populations with ``part_col`` = a/b."""
@@ -465,12 +465,12 @@ def kmv_setops(
     )
     w1 = Window.partitionBy(part_col, "_salt").orderBy("_frac")
     stage1 = hashed.withColumn("_rn", F.row_number().over(w1)).filter(
-        F.col("_rn") <= k
+        F.col("_rn") <= KMV_K
     )
     w2 = Window.partitionBy(part_col).orderBy("_frac")
     topk = (
         stage1.withColumn("_gr", F.row_number().over(w2))
-        .filter(F.col("_gr") <= k)
+        .filter(F.col("_gr") <= KMV_K)
         .select(part_col, "_frac")
     )
     # per-hash membership flags, then the merged top-k (≤ 2k rows — the
@@ -484,7 +484,7 @@ def kmv_setops(
     # partitionBy(lit(1)) window folds to an empty partition spec
     # after constant pruning and was the engine's last WindowExec
     # warning source
-    merged = flags.orderBy("_frac").limit(k)
+    merged = flags.orderBy("_frac").limit(KMV_K)
     sketch = merged.agg(
         F.max("_frac").alias("_hk"),
         F.count("*").alias("_n_merged"),
@@ -501,8 +501,8 @@ def kmv_setops(
         F.sum(F.col("_ha") * F.col("_hb")).alias("n_exact_intersection"),
     )
     union_est = F.when(
-        F.col("n_exact_union") < k, F.col("n_exact_union").cast("double")
-    ).otherwise(F.round((F.lit(k) - F.lit(1)) / F.col("_hk"), 6))
+        F.col("n_exact_union") < KMV_K, F.col("n_exact_union").cast("double")
+    ).otherwise(F.round((F.lit(KMV_K) - F.lit(1)) / F.col("_hk"), 6))
     return (
         exact.crossJoin(F.broadcast(sketch))
         .withColumn("kmv_union", union_est)
@@ -521,12 +521,7 @@ def kmv_setops(
 
 
 def sql_kmv_setops(
-    table_sql: str,
-    part_col: str,
-    key_col: str,
-    a: str,
-    b: str,
-    k: int = KMV_K,
+    table_sql: str, part_col: str, key_col: str, a: str, b: str
 ) -> str:
     """DuckDB twin: identical hash, merge, ρ algebra."""
     frac = (
@@ -544,7 +539,7 @@ def sql_kmv_setops(
         SELECT part, frac,
                row_number() OVER (PARTITION BY part ORDER BY frac) AS rn
         FROM hashed
-      ) WHERE rn <= {k}
+      ) WHERE rn <= {KMV_K}
     ),
     flags AS (
       SELECT frac,
@@ -557,7 +552,7 @@ def sql_kmv_setops(
         SELECT frac, in_a, in_b,
                row_number() OVER (ORDER BY frac) AS rn
         FROM flags
-      ) WHERE rn <= {k}
+      ) WHERE rn <= {KMV_K}
     ),
     sketch AS (
       SELECT max(frac) AS hk, count(*) AS n_merged,
@@ -578,13 +573,13 @@ def sql_kmv_setops(
       FROM per_key
     )
     SELECT n_exact_a, n_exact_b, n_exact_union, n_exact_intersection,
-           CASE WHEN n_exact_union < {k}
+           CASE WHEN n_exact_union < {KMV_K}
                 THEN CAST(n_exact_union AS DOUBLE)
-                ELSE round(({k} - 1) / hk, 6) END AS kmv_union,
+                ELSE round(({KMV_K} - 1) / hk, 6) END AS kmv_union,
            round(CAST(n_both AS DOUBLE) / n_merged *
-                 (CASE WHEN n_exact_union < {k}
+                 (CASE WHEN n_exact_union < {KMV_K}
                        THEN CAST(n_exact_union AS DOUBLE)
-                       ELSE round(({k} - 1) / hk, 6) END), 6)
+                       ELSE round(({KMV_K} - 1) / hk, 6) END), 6)
              AS kmv_intersection
     FROM exact CROSS JOIN sketch
     """
@@ -763,11 +758,7 @@ QSK_QS = (0.5, 0.9)
 
 
 def sample_quantiles(
-    df: DataFrame,
-    group_col: str,
-    key_col: str,
-    value_col: str,
-    k: int = QSK_K,
+    df: DataFrame, group_col: str, key_col: str, value_col: str
 ) -> DataFrame:
     """(group, n_rows, exact_p50, exact_p90, est_p50, est_p90):
     nearest-rank quantiles, exact and from the bottom-k hash sample."""
@@ -785,12 +776,12 @@ def sample_quantiles(
     )
     w1 = Window.partitionBy(group_col, "_salt").orderBy("_frac", "_k")
     s1 = hashed.withColumn("_rn", F.row_number().over(w1)).filter(
-        F.col("_rn") <= k
+        F.col("_rn") <= QSK_K
     )
     w2 = Window.partitionBy(group_col).orderBy("_frac", "_k")
     sample = (
         s1.withColumn("_gr", F.row_number().over(w2))
-        .filter(F.col("_gr") <= k)
+        .filter(F.col("_gr") <= QSK_K)
         .select(group_col, "_k", "_v")
     )
 
@@ -828,11 +819,7 @@ def sample_quantiles(
 
 
 def sql_sample_quantiles(
-    table_sql: str,
-    group_col: str,
-    key_col: str,
-    value_col: str,
-    k: int = QSK_K,
+    table_sql: str, group_col: str, key_col: str, value_col: str
 ) -> str:
     """DuckDB oracle: identical hash sample (single-stage bottom-k —
     the two-stage Spark form computes the identical set) and identical
@@ -849,7 +836,7 @@ def sql_sample_quantiles(
         SELECT g, k, v,
                row_number() OVER (PARTITION BY g ORDER BY frac, k) AS rn
         FROM src
-      ) WHERE rn <= {k}
+      ) WHERE rn <= {QSK_K}
     ),
     exact_r AS (
       SELECT g, v,

@@ -24,23 +24,20 @@ DEFAULT_SALT_BUCKETS = 16
 
 
 def salted_agg_sum_count(
-    df: DataFrame,
-    key: str,
-    value: Column,
-    salt_source: str,
-    buckets: int = DEFAULT_SALT_BUCKETS,
+    df: DataFrame, key: str, value: Column, salt_source: str
 ) -> DataFrame:
     """Two-stage skew-safe (key → sum(value), count) aggregation.
 
     Stage 1 groups by (key, salt) where ``salt = pmod(hash(salt_source),
-    buckets)`` — the hot key's rows spread over ``buckets`` reducers;
-    stage 2 re-aggregates the ≤ buckets partial rows per key. Both stages
+    DEFAULT_SALT_BUCKETS)`` — the hot key's rows spread over that many
+    reducers; stage 2 re-aggregates the ≤ DEFAULT_SALT_BUCKETS partial
+    rows per key. Both stages
     are map-side-combinable; total shuffle volume is *smaller* than the
     naive plan on skewed data because stage 1 combiners compact the hot
     key within every map task."""
-    salt = F.pmod(F.xxhash64(F.col(salt_source)), F.lit(buckets)).alias(
-        "_salt"
-    )
+    salt = F.pmod(
+        F.xxhash64(F.col(salt_source)), F.lit(DEFAULT_SALT_BUCKETS)
+    ).alias("_salt")
     partial = (
         df.select(F.col(key), value.alias("_v"), salt)
         .groupBy(key, "_salt")
@@ -53,30 +50,26 @@ def salted_agg_sum_count(
 
 
 def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    salt_source: str,
-    buckets: int = DEFAULT_SALT_BUCKETS,
+    big: DataFrame, small: DataFrame, key: str, salt_source: str
 ) -> DataFrame:
     """Skew-safe inner equi-join: replicate the small side across
-    ``buckets`` salt values and join on (key, salt), so a hot key's rows
-    — which one hash partition would otherwise own entirely — spread
-    over ``buckets`` reducers.
+    DEFAULT_SALT_BUCKETS salt values and join on (key, salt), so a hot
+    key's rows — which one hash partition would otherwise own entirely —
+    spread over that many reducers.
 
     This is the technique AQE's skew-join split automates for sort-merge
     joins; the explicit form works in any plan (including when the small
     side is too big to broadcast but small enough to replicate
-    ``buckets``×), keeps the partitioning deterministic (salt hashes a
+    DEFAULT_SALT_BUCKETS×), keeps the partitioning deterministic (salt hashes a
     row-identity column, never rand()), and composes with a downstream
     same-key aggregation. Result is salt-invariant: every big row meets
     exactly one replica of its key's small row.
     """
-    salt = F.pmod(F.xxhash64(F.col(salt_source)), F.lit(buckets))
+    salt = F.pmod(F.xxhash64(F.col(salt_source)), F.lit(DEFAULT_SALT_BUCKETS))
     big_s = big.withColumn("_salt", salt)
     small_r = small.crossJoin(
         F.broadcast(
-            big.sparkSession.range(buckets).select(
+            big.sparkSession.range(DEFAULT_SALT_BUCKETS).select(
                 F.col("id").cast("bigint").alias("_salt")
             )
         )

@@ -290,23 +290,19 @@ def chunk_documents(
     )
 
 
-def sql_chunk_documents(
-    corpus_sql: str,
-    chunk_tokens: int = CHUNK_TOKENS,
-    stride: int = CHUNK_STRIDE,
-) -> str:
+def sql_chunk_documents(corpus_sql: str) -> str:
     toks = r"string_split_regex(trim(text), '\s+')"
     n = f"len({toks})"
     n_chunks = (
-        f"(1 + CAST(ceil(greatest(0, {n} - {chunk_tokens}) / "
-        f"CAST({stride} AS DOUBLE)) AS INT))"
+        f"(1 + CAST(ceil(greatest(0, {n} - {CHUNK_TOKENS}) / "
+        f"CAST({CHUNK_STRIDE} AS DOUBLE)) AS INT))"
     )
     return f"""
     SELECT doc_id,
            CAST(i AS INTEGER) AS chunk_index,
-           array_to_string(({toks})[i * {stride} + 1 : i * {stride} + {chunk_tokens}], ' ')
+           array_to_string(({toks})[i * {CHUNK_STRIDE} + 1 : i * {CHUNK_STRIDE} + {CHUNK_TOKENS}], ' ')
              AS chunk_text,
-           CAST(len(({toks})[i * {stride} + 1 : i * {stride} + {chunk_tokens}]) AS BIGINT)
+           CAST(len(({toks})[i * {CHUNK_STRIDE} + 1 : i * {CHUNK_STRIDE} + {CHUNK_TOKENS}]) AS BIGINT)
              AS n_tokens
     FROM ({corpus_sql}),
          LATERAL (SELECT unnest(generate_series(0, {n_chunks} - 1)) AS i) g
@@ -712,26 +708,22 @@ def decontaminate(
     )
 
 
-def sql_decontaminate(
-    corpus_sql: str,
-    n: int = DECON_NGRAM,
-    bench_mod: int = DECON_BENCH_MOD,
-) -> str:
-    gram_i = " || ' ' || ".join(f"w[i + {j}]" for j in range(n))
+def sql_decontaminate(corpus_sql: str) -> str:
+    gram_i = " || ' ' || ".join(f"w[i + {j}]" for j in range(DECON_NGRAM))
     grams = (
-        f"CASE WHEN len(w) >= {n} THEN "
-        f"list_transform(generate_series(1, len(w) - {n} + 1), "
+        f"CASE WHEN len(w) >= {DECON_NGRAM} THEN "
+        f"list_transform(generate_series(1, len(w) - {DECON_NGRAM} + 1), "
         f"i -> {gram_i}) ELSE [] END"
     )
     return f"""
     WITH tok AS (SELECT doc_id, {_DUCK_TOKS} AS w FROM ({corpus_sql})),
     e AS (
-      SELECT doc_id, CAST(len(w) - {n - 1} AS BIGINT) AS n_grams,
+      SELECT doc_id, CAST(len(w) - {DECON_NGRAM - 1} AS BIGINT) AS n_grams,
              unnest({grams}) AS gram
       FROM tok
     ),
-    bench AS (SELECT DISTINCT gram FROM e WHERE doc_id % {bench_mod} = 0),
-    train AS (SELECT * FROM e WHERE doc_id % {bench_mod} <> 0)
+    bench AS (SELECT DISTINCT gram FROM e WHERE doc_id % {DECON_BENCH_MOD} = 0),
+    train AS (SELECT * FROM e WHERE doc_id % {DECON_BENCH_MOD} <> 0)
     SELECT t.doc_id,
            CAST(count(*) AS BIGINT) AS n_hit_ngrams,
            any_value(t.n_grams) AS n_grams,
@@ -804,23 +796,18 @@ def decontaminate_execute(
     )
 
 
-def sql_decontaminate_execute(
-    corpus_sql: str,
-    n: int = DECON_NGRAM,
-    bench_mod: int = DECON_BENCH_MOD,
-    threshold: float = DECON_SCRUB_THRESHOLD,
-) -> str:
+def sql_decontaminate_execute(corpus_sql: str) -> str:
     decon = sql_decontaminate(
-        f"SELECT doc_id, text FROM ({corpus_sql})", n, bench_mod
+        f"SELECT doc_id, text FROM ({corpus_sql})"
     )
     return f"""
     WITH flagged AS (
       SELECT doc_id, 1 AS drp FROM ({decon})
-      WHERE contamination >= {threshold!r}
+      WHERE contamination >= {DECON_SCRUB_THRESHOLD!r}
     ),
     train AS (
       SELECT doc_id, source, CAST({_N_TOKS_DUCK} AS BIGINT) AS t
-      FROM ({corpus_sql}) WHERE doc_id % {bench_mod} <> 0
+      FROM ({corpus_sql}) WHERE doc_id % {DECON_BENCH_MOD} <> 0
     )
     SELECT source,
            CAST(count(*) AS BIGINT) AS n_train_docs,
@@ -949,15 +936,11 @@ def contamination_direction(
     )
 
 
-def sql_contamination_direction(
-    corpus_sql: str,
-    n: int = DECON_NGRAM,
-    bench_mod: int = DECON_BENCH_MOD,
-) -> str:
-    gram_i = " || ' ' || ".join(f"w[i + {j}]" for j in range(n))
+def sql_contamination_direction(corpus_sql: str) -> str:
+    gram_i = " || ' ' || ".join(f"w[i + {j}]" for j in range(DECON_NGRAM))
     grams = (
-        f"CASE WHEN len(w) >= {n} THEN "
-        f"list_transform(generate_series(1, len(w) - {n} + 1), "
+        f"CASE WHEN len(w) >= {DECON_NGRAM} THEN "
+        f"list_transform(generate_series(1, len(w) - {DECON_NGRAM} + 1), "
         f"i -> {gram_i}) ELSE [] END"
     )
     return f"""
@@ -966,13 +949,13 @@ def sql_contamination_direction(
     ),
     e AS (SELECT doc_id, source, unnest({grams}) AS gram FROM tok),
     bench_grams AS (
-      SELECT DISTINCT doc_id, gram FROM e WHERE doc_id % {bench_mod} = 0
+      SELECT DISTINCT doc_id, gram FROM e WHERE doc_id % {DECON_BENCH_MOD} = 0
     ),
     bench_set AS (SELECT DISTINCT gram FROM bench_grams),
     n_eval AS (
       SELECT count(DISTINCT doc_id) AS ne FROM bench_grams
     ),
-    train AS (SELECT * FROM e WHERE doc_id % {bench_mod} <> 0),
+    train AS (SELECT * FROM e WHERE doc_id % {DECON_BENCH_MOD} <> 0),
     ct AS (
       SELECT source, CAST(count(*) AS BIGINT) AS n_contam_train_docs
       FROM (
@@ -982,7 +965,7 @@ def sql_contamination_direction(
     ),
     n_train AS (
       SELECT source, CAST(count(*) AS BIGINT) AS n_train_docs
-      FROM ({corpus_sql}) WHERE doc_id % {bench_mod} <> 0
+      FROM ({corpus_sql}) WHERE doc_id % {DECON_BENCH_MOD} <> 0
       GROUP BY 1
     ),
     src_grams AS (SELECT DISTINCT source, gram FROM train),
@@ -1126,15 +1109,12 @@ def source_mixture(
     )
 
 
-def sql_source_mixture(
-    corpus_sql: str, weights: dict[str, int] | None = None
-) -> str:
-    w = weights or MIXTURE_WEIGHTS
-    total_w = sum(w.values())
-    in_list = ", ".join(f"'{s}'" for s in sorted(w))
+def sql_source_mixture(corpus_sql: str) -> str:
+    total_w = sum(MIXTURE_WEIGHTS.values())
+    in_list = ", ".join(f"'{s}'" for s in sorted(MIXTURE_WEIGHTS))
     wanted = ", ".join(
         f"('{s}', CAST({rel} AS DOUBLE) / {total_w})"
-        for s, rel in sorted(w.items())
+        for s, rel in sorted(MIXTURE_WEIGHTS.items())
     )
     return f"""
     WITH wanted(source, w_s) AS (VALUES {wanted}),
@@ -1212,8 +1192,6 @@ def bm25_topk(
     corpus: DataFrame,
     queries: tuple[tuple[str, tuple[str, ...]], ...] = BM25_QUERIES,
     k: int = BM25_TOP_K,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
 ) -> DataFrame:
     """(query_id, doc_id, score, rank): top-k docs per keyword query by
     Okapi BM25 (idf = ln((N − df + 0.5)/(df + 0.5) + 1), standard k1/b).
@@ -1264,10 +1242,11 @@ def bm25_topk(
                 / (F.col("df") + 0.5)
                 + 1.0
             )
-            * (F.col("tf") * (k1 + 1))
+            * (F.col("tf") * (BM25_K1 + 1))
             / (
                 F.col("tf")
-                + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))
+                + BM25_K1
+                * (1 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
             ),
         )
         .groupBy("query_id", "doc_id")
@@ -1282,18 +1261,11 @@ def bm25_topk(
     )
 
 
-def sql_bm25_topk(
-    corpus_sql: str,
-    queries: tuple[tuple[str, tuple[str, ...]], ...] = BM25_QUERIES,
-    k: int = BM25_TOP_K,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-) -> str:
-    _bm25_check_queries(queries)
-    all_terms = sorted({t for _, ts in queries for t in ts})
+def sql_bm25_topk(corpus_sql: str) -> str:
+    all_terms = sorted({t for _, ts in BM25_QUERIES for t in ts})
     in_list = ", ".join(f"'{t}'" for t in all_terms)
     qvals = ", ".join(
-        f"('{qid}', '{t}')" for qid, ts in queries for t in ts
+        f"('{qid}', '{t}')" for qid, ts in BM25_QUERIES for t in ts
     )
     return f"""
     WITH corpus AS ({corpus_sql}),
@@ -1315,8 +1287,8 @@ def sql_bm25_topk(
       SELECT q.query_id, tf.doc_id,
              round(sum(
                ln((s.n_docs - df.df + 0.5) / (df.df + 0.5) + 1.0)
-               * (tf.tf * ({k1} + 1))
-               / (tf.tf + {k1} * (1 - {b} + {b} * tf.dl / s.avgdl))
+               * (tf.tf * ({BM25_K1} + 1))
+               / (tf.tf + {BM25_K1} * (1 - {BM25_B} + {BM25_B} * tf.dl / s.avgdl))
              ), 6) AS score
       FROM tf JOIN df USING (term) JOIN qterms q USING (term)
       CROSS JOIN stats s
@@ -1327,7 +1299,7 @@ def sql_bm25_topk(
              CAST(row_number() OVER (PARTITION BY query_id
                   ORDER BY score DESC, doc_id) AS INTEGER) AS rank
       FROM scored
-    ) WHERE rank <= {k}
+    ) WHERE rank <= {BM25_TOP_K}
     """
 
 
@@ -1389,7 +1361,7 @@ def top_terms(corpus: DataFrame, k: int = TOP_TERMS_K) -> DataFrame:
     )
 
 
-def sql_top_terms(corpus_sql: str, k: int = TOP_TERMS_K) -> str:
+def sql_top_terms(corpus_sql: str) -> str:
     return f"""
     WITH toks AS (
       SELECT lang, doc_id, t.token
@@ -1407,7 +1379,7 @@ def sql_top_terms(corpus_sql: str, k: int = TOP_TERMS_K) -> str:
              CAST(row_number() OVER (PARTITION BY lang
                   ORDER BY term_count DESC, token) AS INTEGER) AS rank
       FROM counts
-    ) WHERE rank <= {k}
+    ) WHERE rank <= {TOP_TERMS_K}
     """
 
 
@@ -1578,17 +1550,13 @@ BOILERPLATE_N = 5  # tokens per span
 BOILERPLATE_MIN_DOCS = 2
 
 
-def boilerplate_ngrams(
-    corpus: DataFrame,
-    n: int = BOILERPLATE_N,
-    min_docs: int = BOILERPLATE_MIN_DOCS,
-) -> DataFrame:
+def boilerplate_ngrams(corpus: DataFrame) -> DataFrame:
     """(ngram, n_docs, n_total): every n-token span appearing in at
-    least min_docs distinct documents."""
+    least BOILERPLATE_MIN_DOCS distinct documents."""
     spans = F.expr(
-        f"CASE WHEN size({_SPARK_FTOKS}) >= {n} THEN "
-        f"transform(sequence(1, size({_SPARK_FTOKS}) - {n} + 1), "
-        f"i -> array_join(slice({_SPARK_FTOKS}, i, {n}), ' ')) "
+        f"CASE WHEN size({_SPARK_FTOKS}) >= {BOILERPLATE_N} THEN "
+        f"transform(sequence(1, size({_SPARK_FTOKS}) - {BOILERPLATE_N} + 1), "
+        f"i -> array_join(slice({_SPARK_FTOKS}, i, {BOILERPLATE_N}), ' ')) "
         "ELSE array() END"
     )
     return (
@@ -1599,27 +1567,23 @@ def boilerplate_ngrams(
             F.countDistinct("doc_id").alias("n_docs"),
             F.count("*").alias("n_total"),
         )
-        .filter(F.col("n_docs") >= min_docs)
+        .filter(F.col("n_docs") >= BOILERPLATE_MIN_DOCS)
     )
 
 
-def sql_boilerplate_ngrams(
-    corpus_sql: str,
-    n: int = BOILERPLATE_N,
-    min_docs: int = BOILERPLATE_MIN_DOCS,
-) -> str:
+def sql_boilerplate_ngrams(corpus_sql: str) -> str:
     return f"""
     WITH spans AS (
       SELECT doc_id, s.ngram
       FROM (SELECT doc_id, {_DUCK_FTOKS} AS toks FROM ({corpus_sql})),
            LATERAL (
-             SELECT unnest(list_transform(range(1, len(toks) - {n} + 2),
-                    i -> array_to_string(toks[i:i + {n} - 1], ' ')))
+             SELECT unnest(list_transform(range(1, len(toks) - {BOILERPLATE_N} + 2),
+                    i -> array_to_string(toks[i:i + {BOILERPLATE_N} - 1], ' ')))
                AS ngram
            ) s
     )
     SELECT ngram, count(DISTINCT doc_id) AS n_docs, count(*) AS n_total
-    FROM spans GROUP BY ngram HAVING count(DISTINCT doc_id) >= {min_docs}
+    FROM spans GROUP BY ngram HAVING count(DISTINCT doc_id) >= {BOILERPLATE_MIN_DOCS}
     """
 
 
@@ -1642,7 +1606,7 @@ def sql_boilerplate_ngrams(
 TFIDF_TOP_K = 3
 
 
-def tfidf_keywords(corpus: DataFrame, k: int = TFIDF_TOP_K) -> DataFrame:
+def tfidf_keywords(corpus: DataFrame) -> DataFrame:
     """(doc_id, token, tf, df, tfidf, rank): top-k terms per document."""
     from pyspark.sql.window import Window
 
@@ -1669,12 +1633,12 @@ def tfidf_keywords(corpus: DataFrame, k: int = TFIDF_TOP_K) -> DataFrame:
     )
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TFIDF_TOP_K)
         .select("doc_id", "token", "tf", "df", "tfidf", "rank")
     )
 
 
-def sql_tfidf_keywords(corpus_sql: str, k: int = TFIDF_TOP_K) -> str:
+def sql_tfidf_keywords(corpus_sql: str) -> str:
     return f"""
     WITH toks AS (
       SELECT doc_id, t.token
@@ -1695,7 +1659,7 @@ def sql_tfidf_keywords(corpus_sql: str, k: int = TFIDF_TOP_K) -> str:
       SELECT *, CAST(row_number() OVER (PARTITION BY doc_id
                ORDER BY tfidf DESC, token) AS INTEGER) AS rank
       FROM scored
-    ) WHERE rank <= {k}
+    ) WHERE rank <= {TFIDF_TOP_K}
     """
 
 
@@ -2111,7 +2075,7 @@ def bpe_merge_candidates(corpus: DataFrame, top_n: int = BPE_TOP_N) -> DataFrame
     )
 
 
-def sql_bpe_merge_candidates(corpus_sql: str, top_n: int = BPE_TOP_N) -> str:
+def sql_bpe_merge_candidates(corpus_sql: str) -> str:
     return f"""
     WITH words AS (
       SELECT t.tok AS w
@@ -2130,7 +2094,7 @@ def sql_bpe_merge_candidates(corpus_sql: str, top_n: int = BPE_TOP_N) -> str:
     SELECT pair, CAST(count(*) AS BIGINT) AS n_occurrences
     FROM pairs GROUP BY pair
     ORDER BY n_occurrences DESC, pair
-    LIMIT {top_n}
+    LIMIT {BPE_TOP_N}
     """
 
 
@@ -2370,9 +2334,7 @@ WSAMPLE_SALTS = 16
 _WS_SCALE = 16**15
 
 
-def weighted_sample(
-    corpus: DataFrame, n: int = WSAMPLE_N
-) -> DataFrame:
+def weighted_sample(corpus: DataFrame) -> DataFrame:
     """(lang, doc_id, n_chars, rank): per-language weighted sample of n
     docs, weight = n_chars (longer docs proportionally likelier)."""
     from pyspark.sql.window import Window
@@ -2402,17 +2364,17 @@ def weighted_sample(
         F.col("_key").desc(), "doc_id"
     )
     stage1 = keyed.withColumn("_rn", F.row_number().over(w1)).filter(
-        F.col("_rn") <= n
+        F.col("_rn") <= WSAMPLE_N
     )
     w2 = Window.partitionBy("lang").orderBy(F.col("_key").desc(), "doc_id")
     return (
         stage1.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= n)
+        .filter(F.col("rank") <= WSAMPLE_N)
         .select("lang", "doc_id", "n_chars", "rank")
     )
 
 
-def sql_weighted_sample(corpus_sql: str, n: int = WSAMPLE_N) -> str:
+def sql_weighted_sample(corpus_sql: str) -> str:
     u = (
         f"CAST('0x' || substr(md5('WS{SEED_SEP}' || CAST(doc_id AS VARCHAR)), 1, 15) "
         f"AS BIGINT) / {float(_WS_SCALE)!r}"
@@ -2428,7 +2390,7 @@ def sql_weighted_sample(corpus_sql: str, n: int = WSAMPLE_N) -> str:
              row_number() OVER (PARTITION BY lang
                   ORDER BY key DESC, doc_id) AS rank
       FROM keyed
-    ) WHERE rank <= {n}
+    ) WHERE rank <= {WSAMPLE_N}
     """
 
 
@@ -3831,36 +3793,30 @@ def contamination_pairs(
     )
 
 
-def sql_contamination_pairs(
-    corpus_sql: str,
-    n: int = DECON_NGRAM,
-    bench_mod: int = DECON_BENCH_MOD,
-    min_shared: int = CONTAM_PAIR_MIN,
-    max_df: int = CONTAM_GRAM_MAX_DF,
-) -> str:
-    gram_i = " || ' ' || ".join(f"w[i + {j}]" for j in range(n))
+def sql_contamination_pairs(corpus_sql: str) -> str:
+    gram_i = " || ' ' || ".join(f"w[i + {j}]" for j in range(DECON_NGRAM))
     grams = (
-        f"CASE WHEN len(w) >= {n} THEN "
-        f"list_transform(generate_series(1, len(w) - {n} + 1), "
+        f"CASE WHEN len(w) >= {DECON_NGRAM} THEN "
+        f"list_transform(generate_series(1, len(w) - {DECON_NGRAM} + 1), "
         f"i -> {gram_i}) ELSE [] END"
     )
     return f"""
     WITH tok AS (SELECT doc_id, {_DUCK_TOKS} AS w FROM ({corpus_sql})),
     e AS (SELECT DISTINCT doc_id, unnest({grams}) AS gram FROM tok),
-    bench AS (SELECT * FROM e WHERE doc_id % {bench_mod} = 0),
+    bench AS (SELECT * FROM e WHERE doc_id % {DECON_BENCH_MOD} = 0),
     rare AS (
-      SELECT gram FROM bench GROUP BY 1 HAVING count(*) <= {max_df}
+      SELECT gram FROM bench GROUP BY 1 HAVING count(*) <= {CONTAM_GRAM_MAX_DF}
     ),
     evidence AS (
       SELECT b.doc_id AS eval_doc_id, b.gram
       FROM bench b JOIN rare r USING (gram)
     ),
-    train AS (SELECT * FROM e WHERE doc_id % {bench_mod} <> 0)
+    train AS (SELECT * FROM e WHERE doc_id % {DECON_BENCH_MOD} <> 0)
     SELECT t.doc_id AS train_doc_id, v.eval_doc_id,
            CAST(count(*) AS BIGINT) AS n_shared_grams
     FROM train t JOIN evidence v USING (gram)
     GROUP BY 1, 2
-    HAVING count(*) >= {min_shared}
+    HAVING count(*) >= {CONTAM_PAIR_MIN}
     """
 
 
@@ -3883,15 +3839,11 @@ MIX_TEMPERATURE = 2.0  # share ∝ tokens^(1/τ); τ=2 = sqrt scaling
 MIX_MAX_EPOCHS = 4.0  # repetition cap per source
 
 
-def temperature_mixture(
-    corpus: DataFrame,
-    temperature: float = MIX_TEMPERATURE,
-    max_epochs: float = MIX_MAX_EPOCHS,
-) -> DataFrame:
+def temperature_mixture(corpus: DataFrame) -> DataFrame:
     """(source, n_tokens, nat_share, temp_share, epochs_raw, epochs,
     achieved_tokens, achieved_share): temperature-flattened sampling
     plan over a one-total-epoch token budget. ``epochs_raw`` is the
-    uncapped requirement; ``epochs`` caps at ``max_epochs`` (where the
+    uncapped requirement; ``epochs`` caps at MIX_MAX_EPOCHS (where the
     two differ, the cap binds and achieved_share < temp_share)."""
     toks = (
         corpus.select(
@@ -3900,7 +3852,7 @@ def temperature_mixture(
         .groupBy("source")
         .agg(F.sum("_t").alias("n_tokens"))
     )
-    inv_t = 1.0 / temperature
+    inv_t = 1.0 / MIX_TEMPERATURE
     powed = toks.withColumn(
         "_p", F.pow(F.col("n_tokens").cast("double"), F.lit(inv_t))
     )
@@ -3911,7 +3863,7 @@ def temperature_mixture(
     epochs_raw = F.try_divide(
         temp_share * F.col("_tot"), F.col("n_tokens")
     )
-    epochs = F.least(epochs_raw, F.lit(float(max_epochs)))
+    epochs = F.least(epochs_raw, F.lit(float(MIX_MAX_EPOCHS)))
     achieved = epochs * F.col("n_tokens")
     plan = powed.crossJoin(F.broadcast(totals)).withColumn(
         "_ach", achieved
@@ -3936,12 +3888,8 @@ def temperature_mixture(
     )
 
 
-def sql_temperature_mixture(
-    corpus_sql: str,
-    temperature: float = MIX_TEMPERATURE,
-    max_epochs: float = MIX_MAX_EPOCHS,
-) -> str:
-    inv_t = repr(1.0 / temperature)
+def sql_temperature_mixture(corpus_sql: str) -> str:
+    inv_t = repr(1.0 / MIX_TEMPERATURE)
     return f"""
     WITH toks AS (
       SELECT source, CAST(sum({_N_TOKS_DUCK}) AS BIGINT) AS n_tokens
@@ -3959,7 +3907,7 @@ def sql_temperature_mixture(
              n_tokens / t AS nat_share,
              p / ptot AS temp_share,
              (p / ptot) * t / n_tokens AS epochs_raw,
-             least((p / ptot) * t / n_tokens, {repr(float(max_epochs))})
+             least((p / ptot) * t / n_tokens, {repr(float(MIX_MAX_EPOCHS))})
                AS epochs
       FROM powed CROSS JOIN tot
     ),
@@ -4103,8 +4051,6 @@ def mixture_execute(
 
 def mixture_report(
     corpus: DataFrame,
-    temperature: float = MIX_TEMPERATURE,
-    max_epochs: float = MIX_MAX_EPOCHS,
     emitted: DataFrame | None = None,
     plan: DataFrame | None = None,
 ) -> DataFrame:
@@ -4120,9 +4066,9 @@ def mixture_report(
     ``_mixture_plan`` frame over the same inputs (round 15 — skips
     this call's own full-corpus token pass)."""
     if plan is None:
-        plan = _mixture_plan(corpus, temperature, max_epochs)
+        plan = _mixture_plan(corpus, MIX_TEMPERATURE, MIX_MAX_EPOCHS)
     if emitted is None:
-        emitted = mixture_execute(corpus, temperature, max_epochs)
+        emitted = mixture_execute(corpus, MIX_TEMPERATURE, MIX_MAX_EPOCHS)
     rolled = emitted.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows_emitted"),
         F.sum("n_toks").cast("bigint").alias("emitted_tokens"),
@@ -4149,13 +4095,9 @@ def mixture_report(
     )
 
 
-def sql_mixture_report(
-    corpus_sql: str,
-    temperature: float = MIX_TEMPERATURE,
-    max_epochs: float = MIX_MAX_EPOCHS,
-) -> str:
-    inv_t = repr(1.0 / temperature)
-    cap = repr(float(max_epochs))
+def sql_mixture_report(corpus_sql: str) -> str:
+    inv_t = repr(1.0 / MIX_TEMPERATURE)
+    cap = repr(float(MIX_MAX_EPOCHS))
     h = (
         f"CAST('0x' || substr(md5('MX{SEED_SEP}' || "
         f"CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)"
@@ -4745,9 +4687,9 @@ def _sql_shard_assign_ctes(corpus_sql: str, n_shards: int) -> str:
     )"""
 
 
-def sql_shard_balance(corpus_sql: str, n_shards: int = N_SHARDS) -> str:
+def sql_shard_balance(corpus_sql: str) -> str:
     return f"""
-    WITH {_sql_shard_assign_ctes(corpus_sql, n_shards)}
+    WITH {_sql_shard_assign_ctes(corpus_sql, N_SHARDS)}
     SELECT CAST(floor(CAST(cex AS DOUBLE) / target) AS INTEGER)
              AS shard,
            CAST(count(*) AS BIGINT) AS n_docs,
@@ -4864,16 +4806,12 @@ def sql_quality_threshold_sweep(corpus_sql: str) -> str:
     """
 
 
-def sql_mixture_emitted(
-    corpus_sql: str,
-    temperature: float = MIX_TEMPERATURE,
-    max_epochs: float = MIX_MAX_EPOCHS,
-) -> str:
+def sql_mixture_emitted(corpus_sql: str) -> str:
     """Per-document emitted-copy counts of the mixture executor —
     (doc_id, source, t, n_copies) for admitted docs — the reusable
     oracle fragment downstream audits (deletion propagation) build on."""
-    inv_t = repr(1.0 / temperature)
-    cap = repr(float(max_epochs))
+    inv_t = repr(1.0 / MIX_TEMPERATURE)
+    cap = repr(float(MIX_MAX_EPOCHS))
     h = (
         f"CAST('0x' || substr(md5('MX{SEED_SEP}' || "
         f"CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)"
@@ -4938,9 +4876,7 @@ CURRICULUM_STAGES = 10
 
 
 def curriculum_stages(
-    corpus: DataFrame,
-    n_stages: int = CURRICULUM_STAGES,
-    quality: DataFrame | None = None,
+    corpus: DataFrame, quality: DataFrame | None = None
 ) -> DataFrame:
     """(stage, n_docs, n_tokens, mean_quality, src_entropy) over
     (doc_id, text, source); stage 1 = lowest quality.
@@ -4968,7 +4904,8 @@ def curriculum_stages(
     )
     total = ranked.agg(F.max("_rank").alias("_n"))
     staged = ranked.crossJoin(F.broadcast(total)).withColumn(
-        "stage", ntile_from_rank(F.col("_rank"), F.col("_n"), n_stages)
+        "stage",
+        ntile_from_rank(F.col("_rank"), F.col("_n"), CURRICULUM_STAGES),
     )
     per = staged.groupBy("stage").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -5006,9 +4943,7 @@ def curriculum_stages(
     )
 
 
-def sql_curriculum_stages(
-    corpus_sql: str, n_stages: int = CURRICULUM_STAGES
-) -> str:
+def sql_curriculum_stages(corpus_sql: str) -> str:
     qs = sql_quality_score(f"SELECT doc_id, text FROM ({corpus_sql})")
     return f"""
     WITH scored AS ({qs}),
@@ -5019,7 +4954,7 @@ def sql_curriculum_stages(
       FROM scored s JOIN ({corpus_sql}) c USING (doc_id)
     ),
     staged AS (
-      SELECT *, CAST(ntile({n_stages}) OVER (ORDER BY qm, doc_id)
+      SELECT *, CAST(ntile({CURRICULUM_STAGES}) OVER (ORDER BY qm, doc_id)
                      AS INTEGER) AS stage
       FROM labeled
     ),
@@ -5067,7 +5002,7 @@ def sql_curriculum_stages(
 # --------------------------------------------------------------------------
 
 
-def split_leakage(corpus: DataFrame, n: int = DECON_NGRAM) -> DataFrame:
+def split_leakage(corpus: DataFrame) -> DataFrame:
     """(n_train, n_val, n_leaked_val, leak_rate, max_shared_grams) over
     (doc_id, text) under the SPLIT-hash 95/5 assignment."""
     bucket = F.expr(
@@ -5079,11 +5014,11 @@ def split_leakage(corpus: DataFrame, n: int = DECON_NGRAM) -> DataFrame:
         "doc_id", is_val.alias("_v"), F.expr(_SPARK_TOKS).alias("w")
     )
     gram_i = "concat_ws(' ', " + ", ".join(
-        f"element_at(w, i + {j})" for j in range(n)
+        f"element_at(w, i + {j})" for j in range(DECON_NGRAM)
     ) + ")"
     gen = (
-        f"CASE WHEN size(w) >= {n} THEN "
-        f"transform(sequence(1, size(w) - {n} + 1), i -> {gram_i}) "
+        f"CASE WHEN size(w) >= {DECON_NGRAM} THEN "
+        f"transform(sequence(1, size(w) - {DECON_NGRAM} + 1), i -> {gram_i}) "
         f"ELSE array() END"
     )
     grams = words.select(
@@ -5127,11 +5062,11 @@ def split_leakage(corpus: DataFrame, n: int = DECON_NGRAM) -> DataFrame:
     )
 
 
-def sql_split_leakage(corpus_sql: str, n: int = DECON_NGRAM) -> str:
-    gram_i = " || ' ' || ".join(f"w[i + {j}]" for j in range(n))
+def sql_split_leakage(corpus_sql: str) -> str:
+    gram_i = " || ' ' || ".join(f"w[i + {j}]" for j in range(DECON_NGRAM))
     grams = (
-        f"CASE WHEN len(w) >= {n} THEN "
-        f"list_transform(generate_series(1, len(w) - {n} + 1), "
+        f"CASE WHEN len(w) >= {DECON_NGRAM} THEN "
+        f"list_transform(generate_series(1, len(w) - {DECON_NGRAM} + 1), "
         f"i -> {gram_i}) ELSE [] END"
     )
     is_val = (
@@ -5316,8 +5251,6 @@ RELEASE_STAGES = 4
 
 def corpus_release(
     corpus: DataFrame,
-    n_shards: int = RELEASE_SHARDS,
-    n_stages: int = RELEASE_STAGES,
     leakage: DataFrame | None = None,
     emitted: DataFrame | None = None,
     quality: DataFrame | None = None,
@@ -5413,7 +5346,7 @@ def corpus_release(
         cum.crossJoin(F.broadcast(total))
         .withColumn(
             "_target",
-            F.ceil(F.col("_tot") / F.lit(n_shards)).cast("bigint"),
+            F.ceil(F.col("_tot") / F.lit(RELEASE_SHARDS)).cast("bigint"),
         )
         .withColumn(
             "_shard",
@@ -5463,7 +5396,7 @@ def corpus_release(
         ranked.crossJoin(F.broadcast(totn))
         .withColumn(
             "stage",
-            ntile_from_rank(F.col("_rank"), F.col("_n"), n_stages),
+            ntile_from_rank(F.col("_rank"), F.col("_n"), RELEASE_STAGES),
         )
         .groupBy("stage")
         .agg(
@@ -5499,11 +5432,7 @@ def corpus_release(
     )
 
 
-def sql_corpus_release(
-    corpus_sql: str,
-    n_shards: int = RELEASE_SHARDS,
-    n_stages: int = RELEASE_STAGES,
-) -> str:
+def sql_corpus_release(corpus_sql: str) -> str:
     rep = sql_mixture_report(corpus_sql)
     em = sql_mixture_emitted(corpus_sql)
     q = sql_quality_score(f"SELECT doc_id, text FROM ({corpus_sql})")
@@ -5525,7 +5454,7 @@ def sql_corpus_release(
       FROM em WHERE n_copies > 0
     ),
     shard_tot AS (
-      SELECT CAST(ceil(CAST(sum(t) AS DOUBLE) / {n_shards}) AS BIGINT)
+      SELECT CAST(ceil(CAST(sum(t) AS DOUBLE) / {RELEASE_SHARDS}) AS BIGINT)
                AS target
       FROM copies
     ),
@@ -5553,7 +5482,7 @@ def sql_corpus_release(
       WHERE e.n_copies > 0
     ),
     staged AS (
-      SELECT *, CAST(ntile({n_stages}) OVER (ORDER BY qm, doc_id)
+      SELECT *, CAST(ntile({RELEASE_STAGES}) OVER (ORDER BY qm, doc_id)
                      AS INTEGER) AS stage
       FROM aq
     ),
@@ -5607,9 +5536,7 @@ def sql_corpus_release(
 DSIR_SAMPLE_N = 100
 
 
-def dsir_execute(
-    corpus: DataFrame, n: int = DSIR_SAMPLE_N
-) -> DataFrame:
+def dsir_execute(corpus: DataFrame) -> DataFrame:
     """(lang, n_docs, n_sampled, sample_rate, mean_weight_all,
     mean_weight_sampled) after drawing the global Gumbel-top-n
     importance sample; ``corpus`` must carry (doc_id, text, lang).
@@ -5645,7 +5572,9 @@ def dsir_execute(
     # Gumbel-top-n via orderBy+limit: TakeOrderedAndProject keeps
     # per-partition top-n partials — no corpus-wide sort, no WindowExec
     # (round 14: replaces the salted two-stage rank, same rows)
-    sampled = scored.orderBy(F.col("_score").desc(), "doc_id").limit(n)
+    sampled = scored.orderBy(F.col("_score").desc(), "doc_id").limit(
+        DSIR_SAMPLE_N
+    )
     alla = scored.groupBy("lang").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("_wm").alias("_wa"),
@@ -5670,7 +5599,7 @@ def dsir_execute(
     )
 
 
-def sql_dsir_execute(corpus_sql: str, n: int = DSIR_SAMPLE_N) -> str:
+def sql_dsir_execute(corpus_sql: str) -> str:
     weights = sql_dsir_weights(corpus_sql)
     u = (
         f"CAST('0x' || substr(md5('DX{SEED_SEP}' || "
@@ -5692,7 +5621,7 @@ def sql_dsir_execute(corpus_sql: str, n: int = DSIR_SAMPLE_N) -> str:
         SELECT *, row_number() OVER (ORDER BY score DESC, doc_id)
                  AS rk
         FROM scored
-      ) WHERE rk <= {n}
+      ) WHERE rk <= {DSIR_SAMPLE_N}
     ),
     a AS (
       SELECT lang, CAST(count(*) AS BIGINT) AS n_docs, sum(wm) AS wa
@@ -5777,18 +5706,13 @@ def _budget_pass(plan: DataFrame, budget_col: str) -> DataFrame:
     )
 
 
-def token_budget(
-    corpus: DataFrame,
-    budget_epochs: float = BUDGET_EPOCHS,
-    temperature: float = MIX_TEMPERATURE,
-    max_epochs: float = BUDGET_MAX_EPOCHS,
-) -> DataFrame:
+def token_budget(corpus: DataFrame) -> DataFrame:
     """(source, n_tokens, temp_share, alloc_tokens, epochs, cap_bound,
     budget_share, unallocated_tokens): per-source allocation of the
-    fixed budget B = budget_epochs · Σtokens, weights ∝ tokens^(1/τ),
-    each source capped at max_epochs · tokens, capped sources' excess
-    re-offered to the rest (3-pass waterfall). ``corpus`` must carry
-    (text, source)."""
+    fixed budget B = BUDGET_EPOCHS · Σtokens, weights ∝ tokens^(1/τ),
+    each source capped at BUDGET_MAX_EPOCHS · tokens, capped sources'
+    excess re-offered to the rest (3-pass waterfall). ``corpus`` must
+    carry (text, source)."""
     toks = (
         corpus.select(
             "source", F.expr(_N_TOKS_SPARK).cast("bigint").alias("_t")
@@ -5798,7 +5722,7 @@ def token_budget(
     )
     powed = toks.withColumn(
         "_p",
-        F.pow(F.col("n_tokens").cast("double"), F.lit(1.0 / temperature)),
+        F.pow(F.col("n_tokens").cast("double"), F.lit(1.0 / MIX_TEMPERATURE)),
     )
     totals = powed.agg(
         F.sum("n_tokens").cast("double").alias("_tot"),
@@ -5807,10 +5731,10 @@ def token_budget(
     plan = (
         powed.crossJoin(F.broadcast(totals))
         .withColumn("_w", F.col("_p") / F.col("_ptot"))
-        .withColumn("_b", F.col("_tot") * F.lit(float(budget_epochs)))
+        .withColumn("_b", F.col("_tot") * F.lit(float(BUDGET_EPOCHS)))
         .withColumn(
             "_cap",
-            F.col("n_tokens").cast("double") * F.lit(float(max_epochs)),
+            F.col("n_tokens").cast("double") * F.lit(float(BUDGET_MAX_EPOCHS)),
         )
         .withColumn("_alloc", F.lit(0.0))
         .withColumn("_capped", F.lit(False))
@@ -5851,15 +5775,10 @@ def token_budget(
     )
 
 
-def sql_token_budget(
-    corpus_sql: str,
-    budget_epochs: float = BUDGET_EPOCHS,
-    temperature: float = MIX_TEMPERATURE,
-    max_epochs: float = BUDGET_MAX_EPOCHS,
-) -> str:
-    inv_t = repr(1.0 / temperature)
-    be = repr(float(budget_epochs))
-    me = repr(float(max_epochs))
+def sql_token_budget(corpus_sql: str) -> str:
+    inv_t = repr(1.0 / MIX_TEMPERATURE)
+    be = repr(float(BUDGET_EPOCHS))
+    me = repr(float(BUDGET_MAX_EPOCHS))
     # unrolled 3-pass waterfall, one CTE pair per pass (rem_k, p_k)
     passes = []
     prev = "p0"
@@ -5940,7 +5859,7 @@ def sql_token_budget(
 FOLD_K = 5
 
 
-def fold_balance(corpus: DataFrame, k: int = FOLD_K) -> DataFrame:
+def fold_balance(corpus: DataFrame) -> DataFrame:
     """(fold, n_docs, n_tokens, doc_share, chi2, max_src_dev): per-fold
     balance receipt over the md5(doc_id) fold assignment. ``corpus``
     must carry (doc_id, text, source)."""
@@ -5959,7 +5878,7 @@ def fold_balance(corpus: DataFrame, k: int = FOLD_K) -> DataFrame:
             16,
             10,
         ).cast("bigint"),
-        F.lit(k),
+        F.lit(FOLD_K),
     )
     assigned = corpus.select(
         fold.alias("fold"),
@@ -5976,7 +5895,7 @@ def fold_balance(corpus: DataFrame, k: int = FOLD_K) -> DataFrame:
     src = cells.groupBy("source").agg(F.sum("_obs").alias("_ns"))
     tot = src.agg(F.sum("_ns").cast("double").alias("_n"))
     spine = (
-        assigned.sparkSession.range(k)
+        assigned.sparkSession.range(FOLD_K)
         .select(F.col("id").cast("bigint").alias("fold"))
         .crossJoin(F.broadcast(src))
     )
@@ -6033,10 +5952,10 @@ def fold_balance(corpus: DataFrame, k: int = FOLD_K) -> DataFrame:
     )
 
 
-def sql_fold_balance(corpus_sql: str, k: int = FOLD_K) -> str:
+def sql_fold_balance(corpus_sql: str) -> str:
     fold = (
         f"CAST('0x' || substr(md5('FB{SEED_SEP}' || "
-        f"CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % {k}"
+        f"CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % {FOLD_K}"
     )
     return f"""
     WITH assigned AS (
@@ -6053,7 +5972,7 @@ def sql_fold_balance(corpus_sql: str, k: int = FOLD_K) -> str:
     tot AS (SELECT CAST(sum(ns) AS DOUBLE) AS n FROM src),
     spine AS (
       SELECT f.fold, s.source, s.ns
-      FROM (SELECT CAST(unnest(generate_series(0, {k - 1})) AS BIGINT)
+      FROM (SELECT CAST(unnest(generate_series(0, {FOLD_K - 1})) AS BIGINT)
                    AS fold) f
       CROSS JOIN src s
     ),
@@ -6107,15 +6026,14 @@ def sql_fold_balance(corpus_sql: str, k: int = FOLD_K) -> str:
 SHUFFLE_BLOCK_TARGET = 512  # docs per loader block
 
 
-def shuffle_quality(
-    corpus: DataFrame, block_target: int = SHUFFLE_BLOCK_TARGET
-) -> DataFrame:
+def shuffle_quality(corpus: DataFrame) -> DataFrame:
     """(source, n_docs, n_pairs, n_adj_same, adj_rate, expected_rate,
     lift): per-source adjacency audit of the planned block-shuffled
     read order. ``corpus`` must carry (doc_id, source)."""
     n = corpus.agg(
         F.ceil(
-            F.count(F.lit(1)).cast("double") / F.lit(float(block_target))
+            F.count(F.lit(1)).cast("double")
+            / F.lit(float(SHUFFLE_BLOCK_TARGET))
         ).alias("_nb"),
         F.count(F.lit(1)).cast("double").alias("_n"),
     )
@@ -6173,13 +6091,11 @@ def shuffle_quality(
     )
 
 
-def sql_shuffle_quality(
-    corpus_sql: str, block_target: int = SHUFFLE_BLOCK_TARGET
-) -> str:
+def sql_shuffle_quality(corpus_sql: str) -> str:
     h = f"md5('SH{SEED_SEP}' || CAST(doc_id AS VARCHAR))"
     return f"""
     WITH n AS (
-      SELECT ceil(CAST(count(*) AS DOUBLE) / {float(block_target)!r})
+      SELECT ceil(CAST(count(*) AS DOUBLE) / {float(SHUFFLE_BLOCK_TARGET)!r})
                AS nb,
              CAST(count(*) AS DOUBLE) AS n
       FROM ({corpus_sql})
@@ -6258,21 +6174,17 @@ def _bloom_pos_duck(i: int) -> str:
     return f"(({h1} + {i} * {h2}) % {BLOOM_M})"
 
 
-def bloom_decontaminate(
-    corpus: DataFrame,
-    n: int = DECON_NGRAM,
-    bench_mod: int = DECON_BENCH_MOD,
-) -> DataFrame:
+def bloom_decontaminate(corpus: DataFrame) -> DataFrame:
     """(source, n_train_docs, n_candidate_docs, n_exact_docs,
     n_fp_docs, fp_rate) — bloom-candidate vs exact benchmark-overlap
     docs per source. ``corpus`` carries (doc_id, text, source)."""
     nwords = BLOOM_M // _BLOOM_WORD
     src = corpus.select("doc_id", "source")
     grams = gram_stream(
-        spread_for_compute(corpus.select("doc_id", "text")), n
+        spread_for_compute(corpus.select("doc_id", "text")), DECON_NGRAM
     )
     bench = (
-        grams.filter(F.col("doc_id") % bench_mod == 0)
+        grams.filter(F.col("doc_id") % DECON_BENCH_MOD == 0)
         .select("gram")
         .distinct()
         # bounded (the 1% slice's distinct grams) and consumed twice —
@@ -6315,7 +6227,7 @@ def bloom_decontaminate(
         f" & 1) = 1"
         for i in range(BLOOM_K)
     )
-    train = grams.filter(F.col("doc_id") % bench_mod != 0)
+    train = grams.filter(F.col("doc_id") % DECON_BENCH_MOD != 0)
     flagged = (
         train.crossJoin(F.broadcast(mask))
         .withColumn("cand", F.expr(probe))
@@ -6360,16 +6272,12 @@ def bloom_decontaminate(
     )
 
 
-def sql_bloom_decontaminate(
-    corpus_sql: str,
-    n: int = DECON_NGRAM,
-    bench_mod: int = DECON_BENCH_MOD,
-) -> str:
+def sql_bloom_decontaminate(corpus_sql: str) -> str:
     nwords = BLOOM_M // _BLOOM_WORD
-    gram_i = " || ' ' || ".join(f"w[i + {j}]" for j in range(n))
+    gram_i = " || ' ' || ".join(f"w[i + {j}]" for j in range(DECON_NGRAM))
     grams = (
-        f"CASE WHEN len(w) >= {n} THEN "
-        f"list_transform(generate_series(1, len(w) - {n} + 1), "
+        f"CASE WHEN len(w) >= {DECON_NGRAM} THEN "
+        f"list_transform(generate_series(1, len(w) - {DECON_NGRAM} + 1), "
         f"i -> {gram_i}) ELSE [] END"
     )
     pos = [_bloom_pos_duck(i) for i in range(BLOOM_K)]
@@ -6382,7 +6290,7 @@ def sql_bloom_decontaminate(
     WITH tok AS (SELECT doc_id, {_DUCK_TOKS} AS w FROM ({corpus_sql})),
     e AS (SELECT doc_id, unnest({grams}) AS gram FROM tok),
     bench AS (SELECT DISTINCT gram FROM e
-              WHERE doc_id % {bench_mod} = 0),
+              WHERE doc_id % {DECON_BENCH_MOD} = 0),
     bpos AS (
       SELECT DISTINCT unnest([{", ".join(pos)}]) AS p FROM bench
     ),
@@ -6397,7 +6305,7 @@ def sql_bloom_decontaminate(
       FROM spine s LEFT JOIN words w ON w.idx = s.idx
     ),
     train AS (SELECT doc_id, gram FROM e
-              WHERE doc_id % {bench_mod} <> 0),
+              WHERE doc_id % {DECON_BENCH_MOD} <> 0),
     perdoc AS (
       SELECT t.doc_id,
              bool_or({probe}) AS cand,

@@ -295,7 +295,6 @@ def two_pass_running_sum(
     order_by: list[Column],
     value_col: str,
     out_col: str = "running_sum",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Global running sum of ``value_col`` in ``order_by`` order WITHOUT an
     unpartitioned window: per-partition cumulative sum + the broadcast sum
@@ -303,7 +302,7 @@ def two_pass_running_sum(
     decimal (partial sums reassociate); ``order_by`` must be a total
     order for determinism."""
     return _two_pass(
-        df, None, order_by, num_partitions,
+        df, None, order_by, None,
         F.sum(value_col), _running(F.sum(value_col)), Column.__add__, out_col,
     )
 
@@ -313,7 +312,6 @@ def two_pass_rank_in_groups(
     group_col: str,
     order_by: list[Column],
     out_col: str = "rank",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Per-group 1-based rank by ``order_by`` WITHOUT per-group global
     sorts: range-partition on (group, order), count rows per
@@ -326,7 +324,7 @@ def two_pass_rank_in_groups(
     through one task). ``order_by`` must totally order rows within a
     group."""
     return _two_pass(
-        df, group_col, order_by, num_partitions,
+        df, group_col, order_by, None,
         F.count(F.lit(1)), _row_number, _add_long, out_col,
     )
 
@@ -357,7 +355,6 @@ def two_pass_running_sum_in_groups(
     order_by: list[Column],
     value_col: str,
     out_col: str = "running_sum",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Per-group running sum of ``value_col`` in ``order_by`` order
     WITHOUT per-group global sorts — the grouped twin of
@@ -367,7 +364,7 @@ def two_pass_running_sum_in_groups(
     funnel each group through one task. ``order_by`` must totally order
     rows within a group; exact for integral / decimal ``value_col``."""
     return _two_pass(
-        df, group_col, order_by, num_partitions,
+        df, group_col, order_by, None,
         F.sum(value_col), _running(F.sum(value_col)), Column.__add__, out_col,
     )
 

@@ -290,34 +290,43 @@ register(
 # --------------------------------------------------------------------------
 
 
-def _asof(spark, sf_dir):
-    from pyspark.sql import functions as F
+def _asof_variant(direction: str, tolerance: float | None):
+    def q(spark, sf_dir):
+        from pyspark.sql import functions as F
 
-    from ..catalog import load_table
-    from ..operators.asof import asof_join
+        from ..catalog import load_table
+        from ..operators.asof import asof_join
 
-    ev = load_table(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts"
-    )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id", "ts")  # unique per (key, ts) for determinism
-        .agg(F.max(F.col("value").cast("decimal(18,2)")).alias("pvalue"))
-    )
-    out = asof_join(clicks, purchases, key="user_id")
-    return out.select(
-        "event_id",
-        "user_id",
-        F.col("ts").alias("click_ts"),
-        F.col("ts_asof").alias("purchase_ts"),
-        F.col("pvalue_asof").cast("double").alias("purchase_value"),
-    )
+        ev = load_table(spark, sf_dir, "events")
+        clicks = ev.filter(F.col("event_type") == "click").select(
+            "event_id", "user_id", "ts"
+        )
+        purchases = (
+            ev.filter(F.col("event_type") == "purchase")
+            .groupBy("user_id", "ts")  # unique per (key, ts): determinism
+            .agg(F.max(F.col("value").cast("decimal(18,2)")).alias("pvalue"))
+        )
+        out = asof_join(
+            clicks,
+            purchases,
+            key="user_id",
+            direction=direction,
+            tolerance_seconds=tolerance,
+        )
+        return out.select(
+            "event_id",
+            "user_id",
+            F.col("ts").alias("click_ts"),
+            F.col("ts_asof").alias("purchase_ts"),
+            F.col("pvalue_asof").cast("double").alias("purchase_value"),
+        )
+
+    return q
 
 
 register(
     "rel_asof_join",
-    _asof,
+    _asof_variant("backward", None),
     """
     WITH clicks AS (
       -- CAST(ts AS TIMESTAMP) truncates DuckDB's ns to µs BEFORE the join,
@@ -886,40 +895,6 @@ register(
 # --------------------------------------------------------------------------
 
 _ASOF_TOLERANCE_S = 3600
-
-
-def _asof_variant(direction: str, tolerance: float | None):
-    def q(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from ..catalog import load_table
-        from ..operators.asof import asof_join
-
-        ev = load_table(spark, sf_dir, "events")
-        clicks = ev.filter(F.col("event_type") == "click").select(
-            "event_id", "user_id", "ts"
-        )
-        purchases = (
-            ev.filter(F.col("event_type") == "purchase")
-            .groupBy("user_id", "ts")
-            .agg(F.max(F.col("value").cast("decimal(18,2)")).alias("pvalue"))
-        )
-        out = asof_join(
-            clicks,
-            purchases,
-            key="user_id",
-            direction=direction,
-            tolerance_seconds=tolerance,
-        )
-        return out.select(
-            "event_id",
-            "user_id",
-            F.col("ts").alias("click_ts"),
-            F.col("ts_asof").alias("purchase_ts"),
-            F.col("pvalue_asof").cast("double").alias("purchase_value"),
-        )
-
-    return q
 
 
 _ASOF_CTES = """

@@ -103,13 +103,9 @@ def _send_partition_factory(
                             error = str(exc)
                             if attempt == MAX_RETRIES:
                                 status = "FAILED"
-                            else:
+                            elif not cfg.dry_run:
                                 # linear backoff 2s,4s (reference app.py:370)
-                                time.sleep(
-                                    BACKOFF_BASE_SECONDS * attempt
-                                    if not cfg.dry_run
-                                    else 0.0
-                                )
+                                time.sleep(BACKOFF_BASE_SECONDS * attempt)
                     if status == "SENT":
                         error = None
                     out.append(

@@ -34,7 +34,6 @@ def merge_upsert(
     snapshot_dir: str,
     updates: DataFrame,
     key: str,
-    partition_by: list[str] | None = None,
     version_col: str | None = None,
 ) -> str:
     """Merge ``updates`` (latest wins on ``key``) into the parquet
@@ -75,5 +74,5 @@ def merge_upsert(
         )
         return kept.unionByName(updates)
 
-    swap_store(snapshot_dir, merged, partition_by)
+    swap_store(snapshot_dir, merged)
     return snapshot_dir

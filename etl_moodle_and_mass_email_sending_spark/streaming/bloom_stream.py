@@ -26,16 +26,14 @@ from ..operators.sketches import _bloom_buckets
 from .replay import swap_store
 
 
-def on_batch(
-    store_dir: str, batch: DataFrame, batch_id: int, key_col: str = "user_id"
-) -> None:
+def on_batch(store_dir: str, batch: DataFrame, batch_id: int) -> None:
     """Union one micro-batch's bloom bucket ids into ``<store_dir>/bits``
     (read it back and probe)."""
     if not batch.take(1):
         return
     bits = (
-        batch.filter(F.col(key_col).isNotNull())
-        .select(F.explode(_bloom_buckets(F.col(key_col))).alias("bit"))
+        batch.filter(F.col("user_id").isNotNull())
+        .select(F.explode(_bloom_buckets(F.col("user_id"))).alias("bit"))
         .distinct()
     )
 

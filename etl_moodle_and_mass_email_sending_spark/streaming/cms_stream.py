@@ -29,14 +29,12 @@ from ..operators.sketches import cms_counters
 from .replay import swap_store
 
 
-def on_batch(
-    store_dir: str, batch: DataFrame, batch_id: int, key_col: str = "user_id"
-) -> None:
+def on_batch(store_dir: str, batch: DataFrame, batch_id: int) -> None:
     """Sum-merge one micro-batch's CMS counters into
     ``<store_dir>/counters`` (read it back and call ``cms_probe``)."""
     if not batch.take(1):
         return
-    ctrs = cms_counters(batch, key_col)
+    ctrs = cms_counters(batch, "user_id")
 
     def merged(prior: str | None) -> DataFrame:
         if prior is None:

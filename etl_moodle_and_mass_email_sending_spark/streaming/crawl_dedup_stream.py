@@ -30,15 +30,11 @@ from .replay import land_batch
 
 
 def on_batch(
-    frozen_sigs: DataFrame,
-    out_path: str,
-    batch: DataFrame,
-    batch_id: int,
-    threshold: float = dedup.NEAR_THRESHOLD,
+    frozen_sigs: DataFrame, out_path: str, batch: DataFrame, batch_id: int
 ) -> None:
     """Score one (doc_id, text) micro-batch against the static
     (doc_id, sig) index ``frozen_sigs``; verdicts (doc_id,
     n_frozen_matches, match_id, match_est, admitted) land in the batch's
     own partition of ``out_path``."""
-    verdicts = dedup.incremental_dedup(frozen_sigs, batch, threshold=threshold)
+    verdicts = dedup.incremental_dedup(frozen_sigs, batch)
     land_batch(verdicts, batch_id, out_path)

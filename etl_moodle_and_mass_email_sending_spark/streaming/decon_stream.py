@@ -33,11 +33,7 @@ from .replay import land_batch
 
 
 def on_batch(
-    bench_grams: DataFrame,
-    out_path: str,
-    batch: DataFrame,
-    batch_id: int,
-    n: int = DECON_NGRAM,
+    bench_grams: DataFrame, out_path: str, batch: DataFrame, batch_id: int
 ) -> None:
     """Stamp one (doc_id, text) micro-batch against the static (gram)
     frame ``bench_grams``: rows (doc_id, n_hit_ngrams, n_grams,
@@ -45,7 +41,7 @@ def on_batch(
     plain append would duplicate the verdicts of a batch retried after a
     partial write)."""
     hits = (
-        gram_stream(batch, n)
+        gram_stream(batch, DECON_NGRAM)
         .join(F.broadcast(bench_grams), "gram")
         .groupBy("doc_id")
         .agg(F.count("*").alias("n_hit_ngrams"))
@@ -55,7 +51,7 @@ def on_batch(
     # oracle); short docs clamp to 0
     docs = batch.select(
         "doc_id",
-        F.greatest(F.size(F.expr(_SPARK_TOKS)) - (n - 1), F.lit(0))
+        F.greatest(F.size(F.expr(_SPARK_TOKS)) - (DECON_NGRAM - 1), F.lit(0))
         .cast("bigint")
         .alias("n_grams"),
     )

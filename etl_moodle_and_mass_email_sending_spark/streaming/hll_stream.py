@@ -27,18 +27,14 @@ from ..operators.sketches import hll_registers
 from .replay import swap_store
 
 
-def on_batch(
-    store_dir: str,
-    batch: DataFrame,
-    batch_id: int,
-    group_col: str = "event_type",
-    key_col: str = "event_id",
-) -> None:
+def on_batch(store_dir: str, batch: DataFrame, batch_id: int) -> None:
     """Max-merge one micro-batch's per-group HLL registers into
     ``<store_dir>/regs`` (read it back and call ``hll_estimate``)."""
     if not batch.take(1):
         return
-    regs = hll_registers(batch.select(group_col, key_col), group_col, key_col)
+    regs = hll_registers(
+        batch.select("event_type", "event_id"), "event_type", "event_id"
+    )
 
     def merged(prior: str | None) -> DataFrame:
         if prior is None:
@@ -46,7 +42,7 @@ def on_batch(
         return (
             batch.sparkSession.read.parquet(prior)
             .unionByName(regs)
-            .groupBy(group_col, "_idx")
+            .groupBy("event_type", "_idx")
             .agg(F.max("_mj").alias("_mj"))
         )
 

@@ -24,15 +24,24 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 INTERVAL_S = 300
+# both sides' watermark delay; the stream_outer_join oracle's final
+# watermark is max event time minus this
+JOIN_WATERMARK_S = 600
+ENRICH_WINDOW_HOURS = 1
+ENRICH_WATERMARK_HOURS = 2
 
 
-def clicks_errors_interval_join(
-    events: DataFrame,
-    interval_seconds: int = INTERVAL_S,
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
+def clicks_errors_join(events: DataFrame, how: str) -> DataFrame:
     """(click_id, user_id, click_ts, error_id, error_ts): each click
-    paired with the same user's errors in [click_ts, click_ts+interval]."""
+    paired with the same user's errors in [click_ts, click_ts+interval].
+
+    ``how="inner"`` emits the matches only. ``how="left_outer"`` also
+    emits every unmatched click, null-padded once the error-side
+    watermark passes ``click_ts + interval`` and eviction proves no match
+    can still arrive. The null-emission-on-eviction is the outer join's
+    whole mechanism: it cannot emit earlier (a match might still come)
+    and must emit on state timeout (else unmatched rows are lost)."""
+    delay = f"{JOIN_WATERMARK_S} seconds"
     clicks = (
         events.filter(F.col("event_type") == "click")
         .select(
@@ -40,7 +49,7 @@ def clicks_errors_interval_join(
             F.col("user_id").alias("c_user"),
             F.col("ts").alias("click_ts"),
         )
-        .withWatermark("click_ts", watermark_delay)
+        .withWatermark("click_ts", delay)
     )
     errors = (
         events.filter(F.col("event_type") == "error")
@@ -49,7 +58,7 @@ def clicks_errors_interval_join(
             F.col("user_id").alias("e_user"),
             F.col("ts").alias("error_ts"),
         )
-        .withWatermark("error_ts", watermark_delay)
+        .withWatermark("error_ts", delay)
     )
     return clicks.join(
         errors,
@@ -57,8 +66,9 @@ def clicks_errors_interval_join(
         & (F.col("error_ts") >= F.col("click_ts"))
         & (
             F.col("error_ts")
-            <= F.col("click_ts") + F.expr(f"INTERVAL {interval_seconds} SECOND")
+            <= F.col("click_ts") + F.expr(f"INTERVAL {INTERVAL_S} SECOND")
         ),
+        how,
     ).select(
         "click_id",
         F.col("c_user").alias("user_id"),
@@ -68,12 +78,7 @@ def clicks_errors_interval_join(
     )
 
 
-def enrich_with_segment(
-    events: DataFrame,
-    customers: DataFrame,
-    window_duration: str = "1 hour",
-    watermark_delay: str = "2 hours",
-) -> DataFrame:
+def enrich_with_segment(events: DataFrame, customers: DataFrame) -> DataFrame:
     """Stream-STATIC enrichment: join the live event stream to a static
     dimension (user → market segment), then a watermarked tumbling
     rollup per (window, segment).
@@ -89,12 +94,13 @@ def enrich_with_segment(
     dim = customers.select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
-    joined = events.withWatermark("ts", watermark_delay).join(
-        F.broadcast(dim), "user_id"
-    )
+    joined = events.withWatermark(
+        "ts", f"{ENRICH_WATERMARK_HOURS} hours"
+    ).join(F.broadcast(dim), "user_id")
     return (
         joined.groupBy(
-            F.window("ts", window_duration).alias("win"), "c_mktsegment"
+            F.window("ts", f"{ENRICH_WINDOW_HOURS} hour").alias("win"),
+            "c_mktsegment",
         )
         .agg(
             F.count("*").alias("n_events"),
@@ -110,51 +116,4 @@ def enrich_with_segment(
             "n_events",
             "sum_value",
         )
-    )
-
-
-def clicks_errors_outer_join(
-    events: DataFrame,
-    interval_seconds: int = INTERVAL_S,
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
-    """LEFT-OUTER stream-stream interval join: every click emits — with
-    its matching errors, or null-padded once the error-side watermark
-    passes ``click_ts + interval`` and eviction proves no match can
-    still arrive. The null-emission-on-eviction is the outer join's
-    whole mechanism: it cannot emit earlier (a match might still come)
-    and must emit on state timeout (else unmatched rows are lost)."""
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", watermark_delay)
-    )
-    errors = (
-        events.filter(F.col("event_type") == "error")
-        .select(
-            F.col("event_id").alias("error_id"),
-            F.col("user_id").alias("e_user"),
-            F.col("ts").alias("error_ts"),
-        )
-        .withWatermark("error_ts", watermark_delay)
-    )
-    return clicks.join(
-        errors,
-        (F.col("c_user") == F.col("e_user"))
-        & (F.col("error_ts") >= F.col("click_ts"))
-        & (
-            F.col("error_ts")
-            <= F.col("click_ts") + F.expr(f"INTERVAL {interval_seconds} SECOND")
-        ),
-        "left_outer",
-    ).select(
-        "click_id",
-        F.col("c_user").alias("user_id"),
-        "click_ts",
-        "error_id",
-        "error_ts",
     )

@@ -36,20 +36,15 @@ from pyspark.sql import functions as F
 from .replay import land_batch
 
 
-def on_batch(
-    partials_path: str,
-    batch: DataFrame,
-    batch_id: int,
-    date_col: str = "o_orderdate",
-) -> None:
+def on_batch(partials_path: str, batch: DataFrame, batch_id: int) -> None:
     """Land one orders micro-batch's per-month (lo, hi, n_rows) partials
     in its own partition of ``partials_path``."""
     if not batch.take(1):
         return
-    month = F.year(date_col) * 100 + F.month(date_col)
+    month = F.year("o_orderdate") * 100 + F.month("o_orderdate")
     part = batch.groupBy(month.cast("int").alias("file_mo")).agg(
-        F.min(date_col).alias("lo"),
-        F.max(date_col).alias("hi"),
+        F.min("o_orderdate").alias("lo"),
+        F.max("o_orderdate").alias("hi"),
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
     )
     land_batch(part, batch_id, partials_path)

@@ -141,11 +141,7 @@ def has_parquet(d: str) -> bool:
     )
 
 
-def swap_store(
-    live: str,
-    build: Callable[[str | None], DataFrame],
-    partition_by: list[str] | None = None,
-) -> None:
+def swap_store(live: str, build: Callable[[str | None], DataFrame]) -> None:
     """Replace the parquet store at ``live`` with ``build(prior)``, where
     ``prior`` is ``live`` when it holds data and None otherwise.
 
@@ -163,12 +159,9 @@ def swap_store(
     if not os.path.isdir(live) and has_parquet(old):
         os.rename(old, live)
     shutil.rmtree(old, ignore_errors=True)
-    writer = build(live if has_parquet(live) else None).write.mode(
+    build(live if has_parquet(live) else None).write.mode(
         "overwrite"
-    )
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
+    ).parquet(staging)
     if os.path.isdir(live):
         os.rename(live, old)
     os.rename(staging, live)

@@ -29,24 +29,16 @@ from ..operators.sketches import QSK_K, _hash_frac
 from .replay import swap_store
 
 
-def on_batch(
-    store_dir: str,
-    batch: DataFrame,
-    batch_id: int,
-    group_col: str = "event_type",
-    key_col: str = "event_id",
-    value_col: str = "value",
-    k: int = QSK_K,
-) -> None:
+def on_batch(store_dir: str, batch: DataFrame, batch_id: int) -> None:
     """Merge one micro-batch into the per-group bottom-k hash samples
     (``<store_dir>/sample``) and exact row counts (``<store_dir>/counts``)."""
     if not batch.take(1):
         return
     spark = batch.sparkSession
-    rows = batch.filter(F.col(value_col).isNotNull()).select(
-        F.col(group_col).alias("g"),
-        F.col(key_col).alias("_k"),
-        F.col(value_col).alias("_v"),
+    rows = batch.filter(F.col("value").isNotNull()).select(
+        F.col("event_type").alias("g"),
+        F.col("event_id").alias("_k"),
+        F.col("value").alias("_v"),
     )
     hashed = rows.withColumn("_frac", _hash_frac(F.col("_k")))
     counts = rows.groupBy("g").agg(F.count("*").alias("n_rows"))
@@ -59,7 +51,7 @@ def on_batch(
         return (
             both.dropDuplicates(["g", "_k"])
             .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k)
+            .filter(F.col("_rn") <= QSK_K)
             .drop("_rn")
         )
 

@@ -21,23 +21,17 @@ from pyspark.sql.window import Window
 from ..sinks.upsert import merge_upsert
 
 
-def on_batch(
-    snapshot_dir: str,
-    batch: DataFrame,
-    batch_id: int,
-    key: str = "user_id",
-    ts_col: str = "ts",
-) -> None:
-    """Merge one micro-batch's latest event per ``key`` into the
+def on_batch(snapshot_dir: str, batch: DataFrame, batch_id: int) -> None:
+    """Merge one micro-batch's latest event per ``user_id`` into the
     snapshot."""
     if not batch.take(1):
         return
-    w = Window.partitionBy(key).orderBy(
-        F.col(ts_col).desc(), F.col("event_id").desc()
+    w = Window.partitionBy("user_id").orderBy(
+        F.col("ts").desc(), F.col("event_id").desc()
     )
     latest = (
         batch.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-    merge_upsert(batch.sparkSession, snapshot_dir, latest, key=key)
+    merge_upsert(batch.sparkSession, snapshot_dir, latest, key="user_id")

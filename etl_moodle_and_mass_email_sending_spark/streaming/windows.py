@@ -27,7 +27,6 @@ from pyspark.sql.types import (
     LongType,
     StructField,
     StructType,
-    TimestampNTZType,
     TimestampType,
 )
 
@@ -45,8 +44,8 @@ def stream_events(
     staging_dir: str | None = None,
 ) -> DataFrame:
     """The events parquet replayed as a stream (schema from a batch peek —
-    streaming readers need one up front). Applies the same
-    nanos→timestamp conversion as :func:`..catalog.load_table`.
+    streaming readers need one up front), with ``ts`` normalized by
+    :func:`..catalog.read_events` exactly as ``load_table`` does.
 
     The streaming file source requires a *directory*; the testbed ships a
     single ``events.parquet`` file, so it is staged behind a symlink dir
@@ -54,14 +53,10 @@ def stream_events(
     """
     import os
 
+    from ..catalog import read_events
     from ..operators.util import scratch_dir
 
-    path = f"{sf_dir}/events.parquet"
-    # like catalog.load_table: events.ts is TIMESTAMP(NANOS), which Spark
-    # rejects unless the legacy conf is set — set it HERE so the stream
-    # source works in ANY SparkSession, not only the engine's
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(path).schema
+    src = path = f"{sf_dir}/events.parquet"
     if os.path.isfile(path):
         stage = staging_dir or scratch_dir("events_stream_")
         os.makedirs(stage, exist_ok=True)
@@ -79,19 +74,12 @@ def stream_events(
         1 for f in os.listdir(path)
         if f.endswith(".parquet") and not f.startswith(("_", "."))
     )
-    df = (
-        spark.readStream.schema(raw_schema)
+    return read_events(
+        spark,
+        lambda: spark.readStream.schema(spark.read.parquet(src).schema)
         .option("maxFilesPerTrigger", max(max_files_per_trigger, n_files))
-        .parquet(path)
+        .parquet(path),
     )
-    if isinstance(df.schema["ts"].dataType, LongType):
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    elif isinstance(df.schema["ts"].dataType, TimestampNTZType):
-        # an event log rewritten by another engine (e.g. DuckDB COPY) lands
-        # as µs TIMESTAMP_NTZ; withWatermark requires the session-zone
-        # TIMESTAMP type, so normalize exactly like catalog.load_table
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
 
 
 def windowed_event_counts(
@@ -156,11 +144,12 @@ _STATE_SCHEMA = StructType(
 )
 
 
-def sessionize(
-    events: DataFrame,
-    gap_seconds: int = 1800,
-    watermark_delay: str = "2 hours",
-) -> DataFrame:
+# sessionize's watermark delay; the stream_sessionize oracle's final
+# watermark is max event time minus this
+SESSIONIZE_WATERMARK_SECONDS = 7200
+
+
+def sessionize(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
     """Per-user gap-based sessionization via ``applyInPandasWithState``
     (the custom-stateful-operator path of the build brief): events closer
     than ``gap_seconds`` chain into one session; a closed session emits
@@ -226,7 +215,7 @@ def sessionize(
             )
 
     return (
-        events.withWatermark("ts", watermark_delay)
+        events.withWatermark("ts", f"{SESSIONIZE_WATERMARK_SECONDS} seconds")
         .groupBy("user_id")
         .applyInPandasWithState(
             update,
@@ -299,11 +288,11 @@ def run_to_memory_sink(
     return stream_df.sparkSession.table(query_name)
 
 
-def deduplicate_stream(
-    events: DataFrame,
-    watermark_delay: str = "2 hours",
-    bucket: str = "1 minute",
-) -> DataFrame:
+DEDUP_WATERMARK = "2 hours"
+DEDUP_BUCKET = "1 minute"
+
+
+def deduplicate_stream(events: DataFrame) -> DataFrame:
     """Streaming deduplication: emit each (user_id, event_type,
     minute-bucket) key once — the standard at-most-once-per-key rate
     limit / idempotent-ingest guard.
@@ -316,11 +305,11 @@ def deduplicate_stream(
     the key itself makes the emitted set deterministic (the distinct
     keys) regardless of which physical row arrives first.
     """
-    w = events.withWatermark("ts", watermark_delay)
+    w = events.withWatermark("ts", DEDUP_WATERMARK)
     keyed = w.select(
         "user_id",
         "event_type",
-        F.window("ts", bucket).getField("start").alias("minute"),
+        F.window("ts", DEDUP_BUCKET).getField("start").alias("minute"),
         F.col("ts"),
     )
     # `minute` carries the event-time semantics; keep `ts` out of the key

@@ -300,8 +300,10 @@ def test_bench_line_guard_protects_comparison_set():
     import importlib.util
     import json
 
+    from conftest import REPO
+
     spec = importlib.util.spec_from_file_location(
-        "bench_mod", "/root/repo/bench.py"
+        "bench_mod", REPO / "bench.py"
     )
     bench = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bench)

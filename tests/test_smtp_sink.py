@@ -124,3 +124,82 @@ def test_csv_single_file_sink(spark, tmp_path):
     lines = open(out, encoding="utf-8").read().strip().splitlines()
     assert lines[0] == "username,type1"
     assert sorted(lines[1:]) == ["a,1", "b,2"]
+
+
+def _drive_worker(monkeypatch, cfg, fail_spec=None, n=3):
+    """Run the send worker in-process on one pandas batch (no Spark) with
+    a fake SMTP_SSL connection; return (receipts, sleeps, sent emails,
+    connections opened)."""
+    import smtplib
+
+    import pandas as pd
+
+    from etl_moodle_and_mass_email_sending_spark.sinks import smtp
+
+    sleeps, sent, opened = [], [], []
+
+    class FakeSMTP:
+        def __init__(self, host, port):
+            opened.append((host, port))
+
+        def login(self, user, password):
+            pass
+
+        def send_message(self, msg):
+            sent.append(msg["To"])
+
+        def quit(self):
+            pass
+
+    monkeypatch.setattr(smtplib, "SMTP_SSL", FakeSMTP)
+    monkeypatch.setattr(smtp.time, "sleep", sleeps.append)
+    batch = pd.DataFrame(
+        {
+            "idx": range(1, n + 1),
+            "email": [f"user{i}@x.cl" for i in range(n)],
+            "subject": ["Curso X"] * n,
+            "plain": ["hola"] * n,
+            "html": ["<p>hola</p>"] * n,
+        }
+    )
+    run = smtp._send_partition_factory(cfg, fail_spec)
+    receipts = pd.concat(list(run(iter([batch]))))
+    return receipts.set_index("email"), sleeps, sent, opened
+
+
+def test_throttle_pauses_once_per_sent_row(monkeypatch):
+    from etl_moodle_and_mass_email_sending_spark.sinks.smtp import SmtpConfig
+
+    receipts, sleeps, sent, opened = _drive_worker(
+        monkeypatch, SmtpConfig(dry_run=False, throttle_seconds=0.5)
+    )
+    assert sleeps == [0.5, 0.5, 0.5]
+    assert len(opened) == 1
+    assert sent == [f"user{i}@x.cl" for i in range(3)]
+    assert (receipts["status"] == "SENT").all()
+
+
+def test_retry_backoff_is_linear_then_sends(monkeypatch):
+    from etl_moodle_and_mass_email_sending_spark.sinks.smtp import SmtpConfig
+
+    receipts, sleeps, sent, _ = _drive_worker(
+        monkeypatch, SmtpConfig(dry_run=False), fail_spec={"user1@x.cl": 2}
+    )
+    assert sleeps == [2.0, 4.0]
+    row = receipts.loc["user1@x.cl"]
+    assert row["status"] == "SENT" and row["attempts"] == 3
+    assert row["error"] is None
+    assert sent == [f"user{i}@x.cl" for i in range(3)]
+
+
+def test_dry_run_never_sleeps_or_connects(monkeypatch):
+    from etl_moodle_and_mass_email_sending_spark.sinks.smtp import SmtpConfig
+
+    receipts, sleeps, sent, opened = _drive_worker(
+        monkeypatch,
+        SmtpConfig(dry_run=True, throttle_seconds=0.5),
+        fail_spec={"user1@x.cl": 2},
+    )
+    assert sleeps == [] and sent == [] and opened == []
+    assert receipts.loc["user1@x.cl", "attempts"] == 3
+    assert (receipts["status"] == "SENT").all()

@@ -97,7 +97,7 @@ class TestStreamStreamJoin:
         )
 
         ev = windows.stream_events(spark, SF_SMALL)
-        joined = joins.clicks_errors_interval_join(ev)
+        joined = joins.clicks_errors_join(ev, "inner")
         got = windows.run_to_memory_sink(
             joined, "ssj", str(tmp_path / "ck_ssj")
         )
@@ -338,7 +338,7 @@ class TestStreamOuterJoinEviction:
             .csv(str(src), header=True)
             .withColumn("ts", F.col("ts").cast("timestamp"))
         )
-        out = joins.clicks_errors_outer_join(raw)
+        out = joins.clicks_errors_join(raw, "left_outer")
         batches: list[tuple[int, list]] = []
 
         def sink(df, batch_id):
