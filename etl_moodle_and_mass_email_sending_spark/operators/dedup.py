@@ -10,12 +10,14 @@ Scale design:
 - Exact dedup = hash-groupBy: one shuffle on the 32-hex digest, map-side
   partial agg; at 100 TB group keys are uniformly distributed (md5) so no
   skew.
-- MinHash+LSH: signatures are one narrow projection (k ints/doc); the
-  candidate join shuffles on (band, band_key) — band keys are hashes, so
-  uniform; est-Jaccard verification happens on the joined pairs only
-  (candidates ≪ n²). This is the textbook shuffle-safe near-dedup at
-  scale; the O(n²) exact-Jaccard variant exists as the oracle-checkable
-  baseline restricted to language blocks.
+- MinHash+LSH: one index per corpus (``minhash_index``: shingle set +
+  k-int signature per doc), pinned once by the caller and read by every
+  LSH operator; the candidate join shuffles on (band, band_key) — band
+  keys are hashes, so uniform; est-Jaccard or exact-Jaccard verification
+  happens on the distinct candidate pairs only (candidates ≪ n²). This
+  is the textbook shuffle-safe near-dedup at scale; the O(n²)
+  exact-Jaccard variant exists as the oracle-checkable baseline
+  restricted to language blocks.
 - SimHash: per-doc 32-bit fingerprint, candidates blocked on the high
   bits, hamming≤d verification via bit_count(xor).
 
@@ -27,7 +29,7 @@ construction on both engines — to make every operator's output non-trivial.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
@@ -112,21 +114,16 @@ def exact_dedup_groups(corpus: DataFrame) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Shingles + MinHash signatures (portable hash32 inside nested lambdas).
+# The MinHash-LSH index — shingles + signatures (portable hash32 inside
+# nested lambdas), its band keys, its candidate pairs and the
+# signature-agreement estimate, one definition each. Every LSH operator
+# below and streaming/neardup_stream.py read them.
 # --------------------------------------------------------------------------
 
 # Spark-SQL expression fragments (used via F.expr; identical shapes in the
 # DuckDB twins below, with dialect substitutions documented inline).
 
 _SPARK_TOKS = r"split(trim(lower(text)), '\\s+')"
-_SPARK_SHINGLES = f"""
-    CASE WHEN size({_SPARK_TOKS}) >= {SHINGLE_N}
-    THEN array_distinct(transform(
-        sequence(1, size({_SPARK_TOKS}) - {SHINGLE_N - 1}),
-        i -> concat_ws(' ', {_SPARK_TOKS}[i-1], {_SPARK_TOKS}[i], {_SPARK_TOKS}[i+1])))
-    ELSE array(array_join({_SPARK_TOKS}, ' '))
-    END
-"""
 # Universal-hash MinHash: ONE portable md5 per shingle, then K affine
 # transforms h_j(x) = (a_j·x + b_j) mod p. The naive alternative — K
 # md5 calls per shingle — measured 151 s at sf0.1 vs ~10 s for this form;
@@ -148,28 +145,29 @@ def _mh_params() -> list[tuple[int, int]]:
 
 # Each pipeline stage is bound through a 1-element transform() lambda —
 # `transform(array(X), v -> body)[0]` — so the stage is evaluated exactly
-# once even after Catalyst CollapseProject merges the projections (without
-# the binding, sh_h's md5 pass inlines into all K array_min calls).
-_SPARK_SHINGLES_OF_TK = f"""
-    CASE WHEN size(tk) >= {SHINGLE_N}
-    THEN array_distinct(transform(
-        sequence(1, size(tk) - {SHINGLE_N - 1}),
-        i -> concat_ws(' ', tk[i-1], tk[i], tk[i+1])))
-    ELSE array(array_join(tk, ' '))
-    END
+# once even after Catalyst CollapseProject merges the projections. The
+# token binding splits each text ONCE: the shingle body reads the tokens
+# three times per shingle, and an unbound split there re-splits the whole
+# text per read (cost quadratic in document length). Likewise sh_h's md5
+# pass would otherwise inline into all K array_min calls.
+_SPARK_SH = f"""
+    transform(array({_SPARK_TOKS}), tk ->
+      CASE WHEN size(tk) >= {SHINGLE_N}
+      THEN array_distinct(transform(
+          sequence(1, size(tk) - {SHINGLE_N - 1}),
+          i -> concat_ws(' ', tk[i-1], tk[i], tk[i+1])))
+      ELSE array(array_join(tk, ' '))
+      END
+    )[0]
 """
 _SPARK_MINS = ", ".join(
     f"array_min(transform(sh_h, h -> ({a} * h + {b}) % {MINHASH_PRIME}))"
     for a, b in _mh_params()
 )
-_SPARK_MINHASH_SIG = f"""
-    transform(array(split(trim(lower(text)), '\\\\s+')), tk ->
-      transform(array({_SPARK_SHINGLES_OF_TK}), sh ->
-        transform(array(transform(sh, s ->
-            cast(conv(substring(md5(concat('M{SEED_SEP}', s)), 1, 8), 16, 10) as bigint))),
-          sh_h -> array({_SPARK_MINS})
-        )[0]
-      )[0]
+_SPARK_SIG_OF_SH = f"""
+    transform(array(transform(sh, s ->
+        cast(conv(substring(md5(concat('M{SEED_SEP}', s)), 1, 8), 16, 10) as bigint))),
+      sh_h -> array({_SPARK_MINS})
     )[0]
 """
 
@@ -197,11 +195,23 @@ _DUCK_MINHASH_SIG = (
 )
 
 
-def minhash_signatures(corpus: DataFrame) -> DataFrame:
-    """(doc_id, sig: array<bigint>[K]) via word-shingle MinHash."""
-    return _spread(corpus).select(
-        "doc_id", F.expr(_SPARK_MINHASH_SIG).alias("sig")
-    )
+def minhash_index(corpus: DataFrame) -> DataFrame:
+    """(doc_id, sh, sig): each doc's distinct word-shingle set and its
+    K-slot MinHash signature — the one LSH index every MinHash operator
+    reads. ``corpus`` must carry (doc_id, text).
+
+    Build the index once. The operators take an index that the caller
+    has PINNED exactly once: a registry wrapper stages it per (session,
+    corpus) through ``staged_frame``, an operator on a derived corpus
+    adds one ``.localCheckpoint()`` at its call. Unpinned, Catalyst's
+    CollapseProject inlines the full shingle+MinHash expression into
+    every band column and BOTH sides of each candidate join, recomputing
+    it ~10× per row (measured 280 s → 3 s at sf0.1). On a cluster this
+    is the classic "build the index once" barrier: checkpoint or cache
+    the index, then join.
+    """
+    sh = _spread(corpus).select("doc_id", F.expr(_SPARK_SH).alias("sh"))
+    return sh.select("doc_id", "sh", F.expr(_SPARK_SIG_OF_SH).alias("sig"))
 
 
 def sql_minhash_signatures(corpus_sql: str) -> str:
@@ -212,21 +222,13 @@ def sql_minhash_signatures(corpus_sql: str) -> str:
     """
 
 
-def minhash_lsh_pairs(corpus: DataFrame) -> DataFrame:
-    """LSH-banded candidate generation + signature-agreement estimation:
-    (doc_a, doc_b, est_jaccard) with est ≥ NEAR_THRESHOLD.
-
-    The signature frame is materialized once (localCheckpoint) before the
-    band-explode/self-join: Catalyst's CollapseProject would otherwise
-    inline the full shingle+minhash expression into every band column and
-    BOTH join sides, recomputing ~10× per row (measured 280 s → 3 s at
-    sf0.1). On a cluster this is the classic "build the index once"
-    barrier — checkpoint/cache the narrow (doc_id, sig) frame, then join.
-    """
-    sigs = minhash_signatures(corpus).localCheckpoint()
-    bands = sigs.select(
+def _band_frame(index: DataFrame) -> DataFrame:
+    """(doc_id, band, key): the LSH band keys of an index's signatures.
+    NARROW on purpose — carrying signatures or shingle arrays through
+    the LSH_BANDS-way explode would shuffle them once per band; the
+    scored columns join back once per candidate pair instead."""
+    return index.select(
         "doc_id",
-        "sig",
         F.posexplode(
             F.expr(
                 f"""transform(sequence(0, {LSH_BANDS - 1}), b ->
@@ -235,28 +237,63 @@ def minhash_lsh_pairs(corpus: DataFrame) -> DataFrame:
             )
         ).alias("band", "key"),
     )
-    a = bands.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("sig").alias("sig_a"),
-        "band",
-        "key",
-    )
-    b = bands.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("sig").alias("sig_b"),
-        "band",
-        "key",
-    )
-    est = (
-        F.size(F.expr("filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v)"))
-        / F.lit(float(MINHASH_K))
-    ).alias("est_jaccard")
+
+
+def _lsh_candidates(index: DataFrame) -> DataFrame:
+    """(doc_a, doc_b), doc_a < doc_b: the distinct index pairs that share
+    at least one LSH band."""
+    bands = _band_frame(index)
     return (
-        a.join(b, on=["band", "key"])
+        bands.withColumnRenamed("doc_id", "doc_a")
+        .join(bands.withColumnRenamed("doc_id", "doc_b"), on=["band", "key"])
         .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", est)
+        .select("doc_a", "doc_b")
+        .distinct()  # a pair can share several bands
+    )
+
+
+def _side(index: DataFrame, s: str, *cols: str) -> DataFrame:
+    """One side of a scored pair: (doc_<s>, <col>_<s>...) off ``index``."""
+    return index.select(
+        F.col("doc_id").alias(f"doc_{s}"),
+        *(F.col(c).alias(f"{c}_{s}") for c in cols),
+    )
+
+
+def _candidate_sides(index: DataFrame, *cols: str) -> DataFrame:
+    """The LSH candidate pairs of ``index`` with the named index columns
+    joined back once per side as ``<col>_a`` / ``<col>_b``."""
+    return (
+        _lsh_candidates(index)
+        .join(_side(index, "a", *cols), "doc_a")
+        .join(_side(index, "b", *cols), "doc_b")
+    )
+
+
+def _agreement() -> Column:
+    """The MinHash Jaccard estimate of a scored pair: the fraction of the
+    K signature slots where ``sig_a`` and ``sig_b`` agree."""
+    return F.size(
+        F.expr("filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v)")
+    ) / F.lit(float(MINHASH_K))
+
+
+def _jaccard() -> Column:
+    """Exact Jaccard of the shingle sets ``sh_a`` and ``sh_b``, rounded
+    to 6 places."""
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    union = F.size("sh_a") + F.size("sh_b") - inter
+    return F.round(inter.cast("double") / union, 6)
+
+
+def minhash_lsh_pairs(index: DataFrame) -> DataFrame:
+    """LSH-banded candidate generation + signature-agreement estimation
+    over a pinned ``minhash_index``: (doc_a, doc_b, est_jaccard) with
+    est ≥ NEAR_THRESHOLD."""
+    return (
+        _candidate_sides(index, "sig")
+        .select("doc_a", "doc_b", _agreement().alias("est_jaccard"))
         .filter(F.col("est_jaccard") >= NEAR_THRESHOLD)
-        .distinct()
     )
 
 
@@ -290,26 +327,12 @@ def sql_minhash_lsh_pairs(corpus_sql: str) -> str:
 # --------------------------------------------------------------------------
 
 
-def ngram_jaccard_pairs(
-    corpus: DataFrame,
-    threshold: float = NEAR_THRESHOLD,
-    impl: str = "exploded",
-) -> DataFrame:
+def ngram_jaccard_pairs(corpus: DataFrame, impl: str = "exploded") -> DataFrame:
     # materialize shingle sets once before the self-join (same barrier
-    # rationale as simhash_pairs / minhash_lsh_pairs)
+    # rationale as simhash_pairs / minhash_index)
     sh = _spread(corpus).select(
-        "doc_id", "lang", F.expr(_SPARK_SHINGLES).alias("sh")
+        "doc_id", "lang", F.expr(_SPARK_SH).alias("sh")
     ).localCheckpoint()
-    if threshold <= 0:
-        # ADVICE r14 guard: the exploded impl can only materialize
-        # pairs sharing >= 1 shingle, so zero-intersection same-lang
-        # pairs (jaccard 0.0 — emitted by the block impl and by
-        # sql_ngram_jaccard_pairs) would silently vanish under a
-        # non-positive threshold. No registered caller uses one
-        # (NEAR_THRESHOLD = 0.5 everywhere), but route to the exact
-        # cross-join form rather than leaving the precondition in a
-        # comment.
-        impl = "block"
     if impl == "block":
         # bounded-sample path (lsh_recall's ~500-doc truth stratum):
         # the O(block²) array_intersect cross join beats the exploded
@@ -328,25 +351,21 @@ def ngram_jaccard_pairs(
             "lang",
             F.col("sh").alias("sh_b"),
         )
-        inter_b = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-        union_b = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - inter_b
-        jac = F.round(inter_b.cast("double") / union_b, 6).alias("jaccard")
         return (
             a.join(b, on="lang")
             .filter(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b", jac)
-            .filter(F.col("jaccard") >= threshold)
+            .select("doc_a", "doc_b", _jaccard().alias("jaccard"))
+            .filter(F.col("jaccard") >= NEAR_THRESHOLD)
         )
     # Shingle arrays are array_distinct'd, so |A ∩ B| equals the number
     # of shared (lang, shingle) join keys — computed as an exploded
     # equi-join + pair count (round 14, guide §2.3/§3): only pairs that
     # SHARE at least one shingle are ever materialized, instead of the
     # lang-block cross join evaluating array_intersect over every
-    # O(block²) pair. A positive `threshold` already excludes
+    # O(block²) pair. The positive NEAR_THRESHOLD already excludes
     # zero-intersection pairs from the result, so the candidate sets
     # are identical; |A ∪ B| = |A| + |B| − |A ∩ B| from the carried
-    # sizes. (Requires threshold > 0 — every registered caller uses
-    # NEAR_THRESHOLD = 0.5.)
+    # sizes.
     ex = sh.select(
         "doc_id", "lang", F.size("sh").alias("n"), F.explode("sh").alias("g")
     )
@@ -381,11 +400,11 @@ def ngram_jaccard_pairs(
                 6,
             ).alias("jaccard"),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= NEAR_THRESHOLD)
     )
 
 
-def sql_ngram_jaccard_pairs(corpus_sql: str, threshold: float = NEAR_THRESHOLD) -> str:
+def sql_ngram_jaccard_pairs(corpus_sql: str) -> str:
     return f"""
     WITH sh AS (
       SELECT doc_id, lang, {_DUCK_SHINGLES} AS sh FROM ({corpus_sql})
@@ -396,7 +415,7 @@ def sql_ngram_jaccard_pairs(corpus_sql: str, threshold: float = NEAR_THRESHOLD) 
                    (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6)
                AS jaccard
       FROM sh a JOIN sh b ON a.lang = b.lang AND a.doc_id < b.doc_id
-    ) WHERE jaccard >= {threshold}
+    ) WHERE jaccard >= {NEAR_THRESHOLD}
     """
 
 
@@ -487,57 +506,19 @@ def sql_simhash_pairs(corpus_sql: str) -> str:
 # --------------------------------------------------------------------------
 
 
-def ngram_jaccard_lsh_verified(
-    corpus: DataFrame, threshold: float = NEAR_THRESHOLD
-) -> DataFrame:
-    """(doc_a, doc_b, jaccard): exact Jaccard ≥ threshold, restricted to
-    MinHash-LSH candidate pairs."""
-    docs = _spread(corpus).select(
-        "doc_id",
-        F.expr(_SPARK_SHINGLES).alias("sh"),
-        F.expr(_SPARK_MINHASH_SIG).alias("sig"),
-    ).localCheckpoint()
-    # bands stay NARROW (doc_id, band, key) — carrying the shingle arrays
-    # through the 4-way band explode would shuffle them 4×; instead the
-    # deduped candidate pairs join back to the checkpointed docs frame, so
-    # shingles shuffle once per side and Jaccard evaluates once per pair,
-    # not once per shared band.
-    bands = docs.select(
-        "doc_id",
-        F.posexplode(
-            F.expr(
-                f"""transform(sequence(0, {LSH_BANDS - 1}), b ->
-                  array_join(transform(slice(sig, b * {LSH_ROWS} + 1, {LSH_ROWS}),
-                             x -> cast(x as string)), '-'))"""
-            )
-        ).alias("band", "key"),
-    )
-    cand = (
-        bands.alias("a")
-        .join(bands.alias("b"), on=["band", "key"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .distinct()  # a pair can share several bands
-    )
-    sh_a = docs.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sh_b = docs.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - inter
-    jac = F.round(inter.cast("double") / union, 6).alias("jaccard")
+def ngram_jaccard_lsh_verified(index: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, jaccard): exact Jaccard ≥ NEAR_THRESHOLD over a
+    pinned ``minhash_index``, restricted to its LSH candidate pairs. The
+    shingle sets join back once per candidate pair, so Jaccard evaluates
+    once per pair, not once per shared band."""
     return (
-        cand.join(sh_a, on="doc_a")
-        .join(sh_b, on="doc_b")
-        .select("doc_a", "doc_b", jac)
-        .filter(F.col("jaccard") >= threshold)
+        _candidate_sides(index, "sh")
+        .select("doc_a", "doc_b", _jaccard().alias("jaccard"))
+        .filter(F.col("jaccard") >= NEAR_THRESHOLD)
     )
 
 
-def sql_ngram_jaccard_lsh_verified(
-    corpus_sql: str, threshold: float = NEAR_THRESHOLD
-) -> str:
+def sql_ngram_jaccard_lsh_verified(corpus_sql: str) -> str:
     sig = sql_minhash_signatures(corpus_sql)
     return f"""
     WITH sh AS (
@@ -562,7 +543,7 @@ def sql_ngram_jaccard_lsh_verified(
        AND a.doc_id < b.doc_id
     WHERE round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
                 (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6)
-          >= {threshold}
+          >= {NEAR_THRESHOLD}
     """
 
 
@@ -578,46 +559,16 @@ def sql_ngram_jaccard_lsh_verified(
 CONTAINMENT_THRESHOLD = 0.9
 
 
-def containment_pairs(corpus: DataFrame) -> DataFrame:
-    """(doc_small, doc_big, containment): ordered so the CONTAINED doc is
-    first; restricted to LSH candidates."""
-    docs = _spread(corpus).select(
-        "doc_id",
-        F.expr(_SPARK_SHINGLES).alias("sh"),
-        F.expr(_SPARK_MINHASH_SIG).alias("sig"),
-    ).localCheckpoint()
-    bands = docs.select(
-        "doc_id",
-        F.posexplode(
-            F.expr(
-                f"""transform(sequence(0, {LSH_BANDS - 1}), b ->
-                  array_join(transform(slice(sig, b * {LSH_ROWS} + 1, {LSH_ROWS}),
-                             x -> cast(x as string)), '-'))"""
-            )
-        ).alias("band", "key"),
-    )
-    cand = (
-        bands.alias("a")
-        .join(bands.alias("b"), on=["band", "key"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .distinct()
-    )
-    sh_a = docs.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sh_b = docs.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
+def containment_pairs(index: DataFrame) -> DataFrame:
+    """(doc_small, doc_big, containment) over a pinned ``minhash_index``:
+    ordered so the CONTAINED doc is first; restricted to LSH candidates."""
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
     small_first = F.size("sh_a") <= F.size("sh_b")
     cont = F.round(
-        inter.cast("double")
-        / F.least(F.size("sh_a"), F.size("sh_b")),
-        6,
+        inter.cast("double") / F.least(F.size("sh_a"), F.size("sh_b")), 6
     ).alias("containment")
     return (
-        cand.join(sh_a, on="doc_a")
-        .join(sh_b, on="doc_b")
+        _candidate_sides(index, "sh")
         .select(
             F.when(small_first, F.col("doc_a")).otherwise(F.col("doc_b")).alias("doc_small"),
             F.when(small_first, F.col("doc_b")).otherwise(F.col("doc_a")).alias("doc_big"),
@@ -748,58 +699,17 @@ def sql_fuzzy_match_pairs(dirty_sql: str, clean_sql: str) -> str:
 # --------------------------------------------------------------------------
 
 
-def minhash_calibration(corpus: DataFrame) -> DataFrame:
+def minhash_calibration(index: DataFrame) -> DataFrame:
     """(doc_a, doc_b, est_jaccard, jaccard, abs_err) for every LSH
-    candidate pair."""
-    docs = _spread(corpus).select(
-        "doc_id",
-        F.expr(_SPARK_SHINGLES).alias("sh"),
-        F.expr(_SPARK_MINHASH_SIG).alias("sig"),
-    ).localCheckpoint()
-    bands = docs.select(
-        "doc_id",
-        F.posexplode(
-            F.expr(
-                f"""transform(sequence(0, {LSH_BANDS - 1}), b ->
-                  array_join(transform(slice(sig, b * {LSH_ROWS} + 1, {LSH_ROWS}),
-                             x -> cast(x as string)), '-'))"""
-            )
-        ).alias("band", "key"),
-    )
-    cand = (
-        bands.alias("a")
-        .join(bands.alias("b"), on=["band", "key"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .distinct()
-    )
-    side_a = docs.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("sh").alias("sh_a"),
-        F.col("sig").alias("sig_a"),
-    )
-    side_b = docs.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("sh").alias("sh_b"),
-        F.col("sig").alias("sig_b"),
-    )
-    est = F.round(
-        F.size(
-            F.expr("filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v)")
-        )
-        / F.lit(float(MINHASH_K)),
-        6,
-    ).alias("est_jaccard")
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - inter
-    jac = F.round(inter.cast("double") / union, 6).alias("jaccard")
+    candidate pair of a pinned ``minhash_index``."""
     out = (
-        cand.join(side_a, on="doc_a")
-        .join(side_b, on="doc_b")
-        .select("doc_a", "doc_b", est, jac)
+        _candidate_sides(index, "sh", "sig")
+        .select(
+            "doc_a",
+            "doc_b",
+            F.round(_agreement(), 6).alias("est_jaccard"),
+            _jaccard().alias("jaccard"),
+        )
     )
     return out.withColumn(
         "abs_err", F.round(F.abs(F.col("est_jaccard") - F.col("jaccard")), 6)
@@ -862,42 +772,14 @@ def sql_minhash_calibration(corpus_sql: str) -> str:
 SWEEP_THRESHOLDS = (0.3, 0.5, 0.7)
 
 
-def threshold_sweep(corpus: DataFrame) -> DataFrame:
+def threshold_sweep(index: DataFrame) -> DataFrame:
     """(threshold, n_pairs, n_docs): candidate-pair and affected-doc
-    counts at each est-Jaccard cut."""
-    sigs = minhash_signatures(corpus).localCheckpoint()
-    bands = sigs.select(
-        "doc_id",
-        "sig",
-        F.posexplode(
-            F.expr(
-                f"""transform(sequence(0, {LSH_BANDS - 1}), b ->
-                  array_join(transform(slice(sig, b * {LSH_ROWS} + 1, {LSH_ROWS}),
-                             x -> cast(x as string)), '-'))"""
-            )
-        ).alias("band", "key"),
-    )
-    a = bands.select(
-        F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"),
-        "band", "key",
-    )
-    b = bands.select(
-        F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"),
-        "band", "key",
-    )
-    est = (
-        F.size(
-            F.expr("filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v)")
-        )
-        / F.lit(float(MINHASH_K))
-    ).alias("est")
+    counts at each est-Jaccard cut over a pinned ``minhash_index``."""
     pairs = (
-        a.join(b, on=["band", "key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", est)
-        .distinct()
+        _candidate_sides(index, "sig")
+        .select("doc_a", "doc_b", _agreement().alias("est"))
     )
-    spark = corpus.sparkSession
+    spark = index.sparkSession
     spine = spark.createDataFrame(
         [(t,) for t in SWEEP_THRESHOLDS], "threshold double"
     )
@@ -973,21 +855,6 @@ NEW_CRAWL_OFFSET = 300_000
 NEW_DOC_MOD = 11  # every 11th doc yields a genuinely-new (reversed) doc
 
 
-def _band_frame(sigs: DataFrame) -> DataFrame:
-    """(doc_id, sig, band, key): LSH band keys off a signature frame."""
-    return sigs.select(
-        "doc_id",
-        "sig",
-        F.posexplode(
-            F.expr(
-                f"""transform(sequence(0, {LSH_BANDS - 1}), b ->
-                  array_join(transform(slice(sig, b * {LSH_ROWS} + 1, {LSH_ROWS}),
-                             x -> cast(x as string)), '-'))"""
-            )
-        ).alias("band", "key"),
-    )
-
-
 def new_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The synthetic incoming batch: re-crawled exact copies (mod 7),
     re-crawled 80%-prefix near copies (mod 5) — both should be caught
@@ -1050,32 +917,28 @@ def sql_new_crawl() -> str:
     """
 
 
-def incremental_dedup(
-    frozen_sigs: DataFrame, incoming: DataFrame
-) -> DataFrame:
+def incremental_dedup(frozen: DataFrame, incoming: DataFrame) -> DataFrame:
     """(doc_id, n_frozen_matches, match_id, match_est, admitted):
-    verdict per incoming doc against the frozen signature index.
+    verdict per incoming doc against the frozen signature index. Both
+    sides are pinned (doc_id, sig, ...) indexes (``minhash_index``).
     ``match_id`` is the best frozen match (est DESC, id ASC);
     ``admitted`` iff no frozen near-dup reached NEAR_THRESHOLD."""
-    f_bands = _band_frame(frozen_sigs).select(
-        F.col("doc_id").alias("frozen_id"),
-        F.col("sig").alias("sig_f"),
-        "band",
-        "key",
-    )
-    i_sigs = minhash_signatures(incoming).localCheckpoint()
-    i_bands = _band_frame(i_sigs)
-    est = (
-        F.size(
-            F.expr("filter(zip_with(sig, sig_f, (x, y) -> x = y), v -> v)")
-        )
-        / F.lit(float(MINHASH_K))
-    ).alias("est")
     cand = (
-        i_bands.join(f_bands, on=["band", "key"])
-        .select("doc_id", "frozen_id", est)
-        .filter(F.col("est") >= NEAR_THRESHOLD)
+        _band_frame(incoming).withColumnRenamed("doc_id", "doc_a")
+        .join(
+            _band_frame(frozen).withColumnRenamed("doc_id", "doc_b"),
+            on=["band", "key"],
+        )
+        .select("doc_a", "doc_b")
         .distinct()
+        .join(_side(incoming, "a", "sig"), "doc_a")
+        .join(_side(frozen, "b", "sig"), "doc_b")
+        .select(
+            F.col("doc_a").alias("doc_id"),
+            F.col("doc_b").alias("frozen_id"),
+            _agreement().alias("est"),
+        )
+        .filter(F.col("est") >= NEAR_THRESHOLD)
     )
     best = cand.groupBy("doc_id").agg(
         F.count("*").cast("bigint").alias("n_frozen_matches"),
@@ -1196,7 +1059,7 @@ def cascade_execute(corpus: DataFrame) -> DataFrame:
     r2 = simhash_pairs(s1).select(F.col("doc_b").alias("doc_id")).distinct()
     s2 = s1.join(r2, "doc_id", "left_anti").localCheckpoint()
     r3 = (
-        ngram_jaccard_lsh_verified(s2)
+        ngram_jaccard_lsh_verified(minhash_index(s2).localCheckpoint())
         .select(F.col("doc_b").alias("doc_id"))
         .distinct()
     )
@@ -1352,9 +1215,9 @@ def lsh_recall(corpus: DataFrame) -> DataFrame:
         )
         .select("doc_id", "text", "lang")
     )
-    truth = ngram_jaccard_pairs(stratum, NEAR_THRESHOLD, impl="block")
+    truth = ngram_jaccard_pairs(stratum, impl="block")
     found = ngram_jaccard_lsh_verified(
-        stratum.select("doc_id", "text"), NEAR_THRESHOLD
+        minhash_index(stratum).localCheckpoint()
     ).select("doc_a", "doc_b", F.lit(1).alias("_hit"))
     bucket = (
         F.least(F.floor(F.col("jaccard") * 10), F.lit(9)) / 10.0
@@ -1393,9 +1256,9 @@ def sql_lsh_recall(corpus_sql: str) -> str:
         f"WHERE lang = '{RECALL_EVAL_LANG}' "
         f"AND {u} < least(1.0, {float(RECALL_EVAL_TARGET)!r} / n)"
     )
-    truth = sql_ngram_jaccard_pairs(stratum, NEAR_THRESHOLD)
+    truth = sql_ngram_jaccard_pairs(stratum)
     found = sql_ngram_jaccard_lsh_verified(
-        f"SELECT doc_id, text FROM ({stratum})", NEAR_THRESHOLD
+        f"SELECT doc_id, text FROM ({stratum})"
     )
     return f"""
     WITH truth AS ({truth}),

@@ -98,10 +98,18 @@ FROM grp GROUP BY user_id, g
 """
 
 
+# The window rollups' durations (streaming/windows.py), as Spark
+# duration strings and as DuckDB INTERVAL literals.
+_WIN_SPARK = f"{sw.WINDOW_HOURS} hour"
+_WM_SPARK = f"{sw.WATERMARK_HOURS} hours"
+_WIN = f"INTERVAL {sw.WINDOW_HOURS} HOUR"
+_WM = f"INTERVAL {sw.WATERMARK_HOURS} HOUR"
+
+
 def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked tumbling-window rollup executed as a real stream."""
     ev = sw.stream_events(spark, sf_dir)
-    agg = sw.windowed_event_counts(ev, "1 hour", "2 hours")
+    agg = sw.windowed_event_counts(ev, _WIN_SPARK, _WM_SPARK)
     name = f"swc_{uuid.uuid4().hex[:8]}"
     ck = scratch_dir("ck_swc_")
     return sw.run_to_memory_sink(agg, name, ck)
@@ -120,21 +128,21 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("sum_value", F.round("sum_value", 6))
 
 
-STREAM_WINDOWED_COUNTS_SQL = """
+STREAM_WINDOWED_COUNTS_SQL = f"""
 WITH base AS (
   SELECT CAST(ts AS TIMESTAMP) AS ts, event_type, value FROM events
 ), agg AS (
-  SELECT time_bucket(INTERVAL 1 HOUR, ts) AS window_start,
-         time_bucket(INTERVAL 1 HOUR, ts) + INTERVAL 1 HOUR AS window_end,
+  SELECT time_bucket({_WIN}, ts) AS window_start,
+         time_bucket({_WIN}, ts) + {_WIN} AS window_end,
          event_type, count(*) AS n_events,
          round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 6)
            AS sum_value
   FROM base GROUP BY 1, 2, 3
 )
 -- append-mode emission for a bounded replay: only windows the final
--- watermark (max event time - 2 h delay) has closed
+-- watermark (max event time - {sw.WATERMARK_HOURS} h delay) has closed
 SELECT * FROM agg
-WHERE window_end <= (SELECT max(ts) - INTERVAL 2 HOUR FROM base)
+WHERE window_end <= (SELECT max(ts) - {_WM} FROM base)
 """
 
 register("rel_sessionize", rel_sessionize, REL_SESSIONIZE_SQL)
@@ -299,14 +307,14 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule stream_windowed_counts certifies)."""
     ev = sw.stream_events(spark, sf_dir)
     agg = sw.windowed_event_counts(
-        ev, "2 hours", "2 hours", slide_duration="1 hour"
+        ev, _WM_SPARK, _WM_SPARK, slide_duration=_WIN_SPARK
     )
     name = f"ssl_{uuid.uuid4().hex[:8]}"
     ck = scratch_dir("ck_ssl_")
     return sw.run_to_memory_sink(agg, name, ck)
 
 
-STREAM_SLIDING_COUNTS_SQL = """
+STREAM_SLIDING_COUNTS_SQL = f"""
 WITH base AS (
   SELECT CAST(ts AS TIMESTAMP) AS ts, event_type, value FROM events
 ), expanded AS (
@@ -315,18 +323,18 @@ WITH base AS (
   SELECT w.window_start, event_type, value
   FROM base,
        LATERAL (SELECT unnest([
-         time_bucket(INTERVAL 1 HOUR, ts) - INTERVAL 1 HOUR,
-         time_bucket(INTERVAL 1 HOUR, ts)
+         time_bucket({_WIN}, ts) - {_WIN},
+         time_bucket({_WIN}, ts)
        ]) AS window_start) w
 ), agg AS (
-  SELECT window_start, window_start + INTERVAL 2 HOUR AS window_end,
+  SELECT window_start, window_start + {_WM} AS window_end,
          event_type, count(*) AS n_events,
          round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 6)
            AS sum_value
   FROM expanded GROUP BY 1, 2, 3
 )
 SELECT * FROM agg
-WHERE window_end <= (SELECT max(ts) - INTERVAL 2 HOUR FROM base)
+WHERE window_end <= (SELECT max(ts) - {_WM} FROM base)
 """
 
 register("stream_sliding_counts", stream_sliding_counts, STREAM_SLIDING_COUNTS_SQL)

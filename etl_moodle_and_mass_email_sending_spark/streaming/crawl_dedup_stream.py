@@ -36,5 +36,7 @@ def on_batch(
     (doc_id, sig) index ``frozen_sigs``; verdicts (doc_id,
     n_frozen_matches, match_id, match_est, admitted) land in the batch's
     own partition of ``out_path``."""
-    verdicts = dedup.incremental_dedup(frozen_sigs, batch)
+    verdicts = dedup.incremental_dedup(
+        frozen_sigs, dedup.minhash_index(batch).localCheckpoint()
+    )
     land_batch(verdicts, batch_id, out_path)

@@ -29,23 +29,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.dedup import (
-    LSH_BANDS,
-    LSH_ROWS,
-    MINHASH_K,
-    NEAR_THRESHOLD,
-    minhash_signatures,
-)
-
-_BAND_EXPR = f"""transform(sequence(0, {LSH_BANDS - 1}), b ->
-    array_join(transform(slice(sig, b * {LSH_ROWS} + 1, {LSH_ROWS}),
-               x -> cast(x as string)), '-'))"""
-
-
-def _bands_of(sigs: DataFrame) -> DataFrame:
-    return sigs.select(
-        "doc_id", F.posexplode(F.expr(_BAND_EXPR)).alias("band", "key")
-    )
+from ..operators import dedup
 
 
 def on_batch(
@@ -59,35 +43,30 @@ def on_batch(
     if not batch.take(1):
         return
     spark = batch.sparkSession
-    # sigs feed the band explode, the within-batch verify, and the
-    # index append — checkpoint so the shingle+minhash expression
-    # runs once (the batch minhash_lsh_pairs lesson)
-    sigs = minhash_signatures(batch).localCheckpoint()
-    bands = _bands_of(sigs)
-    new = bands.select(
-        F.col("doc_id").alias("doc"), "band", "key"
-    )
-    # earlier candidates: the stored index (all strictly earlier
-    # batches) plus smaller doc_ids within this batch
-    cand_within = (
-        bands.select(F.col("doc_id").alias("earlier"), "band", "key")
-        .join(new, on=["band", "key"])
-        .filter(F.col("earlier") < F.col("doc"))
-    )
+    # the batch's index feeds the band explode, the within-batch
+    # candidates, the verify and the index append — pinned once here
+    index = dedup.minhash_index(batch).localCheckpoint()
+    sigs = index.select("doc_id", "sig")
+    bands = dedup._band_frame(index)
+    # earlier candidates: smaller doc_ids within this batch plus the
+    # stored index (all strictly earlier batches)
+    cand = dedup._lsh_candidates(index)
     have_store = os.path.isdir(bands_dir) and any(
         f.endswith(".parquet") for f in os.listdir(bands_dir)
     )
     if have_store:
-        stored = spark.read.parquet(bands_dir).select(
-            F.col("doc_id").alias("earlier"), "band", "key"
+        stored = spark.read.parquet(bands_dir).withColumnRenamed(
+            "doc_id", "doc_a"
         )
-        cand_store = stored.join(new, on=["band", "key"]).filter(
-            F.col("earlier") < F.col("doc")
+        cand_store = (
+            stored.join(
+                bands.withColumnRenamed("doc_id", "doc_b"),
+                on=["band", "key"],
+            )
+            .filter(F.col("doc_a") < F.col("doc_b"))
+            .select("doc_a", "doc_b")
         )
-        cand = cand_within.unionByName(cand_store)
-    else:
-        cand = cand_within
-    pairs = cand.select("earlier", "doc").distinct()
+        cand = cand.unionByName(cand_store).distinct()
     # signature fetch: the batch's own sigs plus the stored ones
     # dropDuplicates: insurance against a recovery-replayed batch
     # having double-appended index rows (decisions would otherwise
@@ -97,39 +76,16 @@ def on_batch(
         if have_store
         else sigs
     ).dropDuplicates(["doc_id"])
-    est = (
-        F.size(
-            F.expr(
-                "filter(zip_with(sig_e, sig_d, (x, y) -> x = y), v -> v)"
-            )
-        )
-        / F.lit(float(MINHASH_K))
-    ).alias("est")
     dups = (
-        pairs.join(
-            all_sigs.select(
-                F.col("doc_id").alias("earlier"),
-                F.col("sig").alias("sig_e"),
-            ),
-            on="earlier",
-        )
-        .join(
-            sigs.select(
-                F.col("doc_id").alias("doc"), F.col("sig").alias("sig_d")
-            ),
-            on="doc",
-        )
-        .select("earlier", "doc", est)
-        .filter(F.col("est") >= NEAR_THRESHOLD)
-        .groupBy("doc")
+        cand.join(dedup._side(all_sigs, "a", "sig"), on="doc_a")
+        .join(dedup._side(sigs, "b", "sig"), on="doc_b")
+        .filter(dedup._agreement() >= dedup.NEAR_THRESHOLD)
+        .groupBy(F.col("doc_b").alias("doc_id"))
         .agg(F.count("*").alias("n_earlier_dups"))
     )
     decisions = (
         sigs.select("doc_id")
-        .join(
-            dups.withColumnRenamed("doc", "doc_id"), on="doc_id",
-            how="left",
-        )
+        .join(dups, on="doc_id", how="left")
         .select(
             "doc_id",
             F.coalesce("n_earlier_dups", F.lit(0))

@@ -82,10 +82,17 @@ def stream_events(
     )
 
 
+# Event-time durations of the window rollups, in hours; the DuckDB
+# oracles in queries/streaming_q.py render the same numbers as INTERVAL
+# literals.
+WINDOW_HOURS = 1  # tumbling window, and the sliding window's slide
+WATERMARK_HOURS = 2  # watermark delay, and the sliding window's length
+
+
 def windowed_event_counts(
     events: DataFrame,
-    window_duration: str = "1 hour",
-    watermark_delay: str = "2 hours",
+    window_duration: str = f"{WINDOW_HOURS} hour",
+    watermark_delay: str = f"{WATERMARK_HOURS} hours",
     slide_duration: str | None = None,
 ) -> DataFrame:
     """Tumbling (or, with ``slide_duration``, SLIDING) event-time window

@@ -33,7 +33,9 @@ def test_minhash_catches_exact_and_near_copies(spark):
     corpus = dedup.dup_corpus(spark, SF_SMALL)
     pairs = {
         (r["doc_a"], r["doc_b"]): r["est_jaccard"]
-        for r in dedup.minhash_lsh_pairs(corpus).collect()
+        for r in dedup.minhash_lsh_pairs(
+            dedup.minhash_index(corpus).localCheckpoint()
+        ).collect()
     }
     assert pairs, "no near-dup pairs found"
     exact = {
@@ -133,7 +135,9 @@ class TestDedupComponents:
         )
 
         corpus = dedup.dup_corpus(spark, SF_SMALL)
-        pairs = dedup.minhash_lsh_pairs(corpus)
+        pairs = dedup.minhash_lsh_pairs(
+            dedup.minhash_index(corpus).localCheckpoint()
+        )
         got = {
             r.doc_id: r.component
             for r in components.dedup_clusters(corpus, pairs).collect()
@@ -1331,10 +1335,12 @@ def test_incremental_dedup_verdicts(spark):
         ],
         "doc_id long, text string",
     )
-    sigs = dedup.minhash_signatures(frozen).localCheckpoint()
     out = {
         r["doc_id"]: r
-        for r in dedup.incremental_dedup(sigs, incoming).collect()
+        for r in dedup.incremental_dedup(
+            dedup.minhash_index(frozen).localCheckpoint(),
+            dedup.minhash_index(incoming).localCheckpoint(),
+        ).collect()
     }
     assert not out[101]["admitted"]
     assert out[101]["n_frozen_matches"] >= 1

@@ -1682,6 +1682,7 @@ def test_cascade_execute_telescopes_and_conserves_tokens(spark):
     stage's input."""
     from etl_moodle_and_mass_email_sending_spark.operators.dedup import (
         cascade_execute,
+        minhash_index,
         ngram_jaccard_lsh_verified,
         simhash_pairs,
     )
@@ -1724,7 +1725,12 @@ def test_cascade_execute_telescopes_and_conserves_tokens(spark):
         [(d, texts[d]) for d in s1_ids if d not in r2],
         "doc_id long, text string",
     )
-    r3 = {r["doc_b"] for r in ngram_jaccard_lsh_verified(s2).collect()}
+    r3 = {
+        r["doc_b"]
+        for r in ngram_jaccard_lsh_verified(
+            minhash_index(s2).localCheckpoint()
+        ).collect()
+    }
     assert got[3]["n_removed"] == len(r3)
     # token conservation
     def ntoks(t):

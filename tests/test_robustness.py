@@ -185,6 +185,44 @@ def test_lsh_pairs_build_once_and_ledgered(spark, tmp_path, monkeypatch):
     assert f"pairs/{sf_dir}" in util.staging_ledger()
 
 
+
+def test_minhash_index_built_once_per_corpus(spark, tmp_path, monkeypatch):
+    """The five LSH queries over the dup corpus read one staged MinHash
+    index: it is built once per (session, sf_dir), and it and the pairs
+    on top of it are that corpus's only staged builds."""
+    from conftest import SF_SMALL
+
+    from etl_moodle_and_mass_email_sending_spark import registry
+    from etl_moodle_and_mass_email_sending_spark.operators import dedup, util
+
+    sf_dir = tmp_path / "sf"
+    sf_dir.mkdir()
+    for name in os.listdir(SF_SMALL):
+        os.symlink(os.path.join(SF_SMALL, name), sf_dir / name)
+    calls = []
+    real = dedup.minhash_index
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(dedup, "minhash_index", counting)
+    queries = registry.queries()
+    for name in (
+        "dedup_minhash_lsh",
+        "dedup_threshold_sweep",
+        "dedup_minhash_calibration",
+        "dedup_jaccard_lsh_verified",
+        "dedup_containment",
+    ):
+        queries[name](spark, str(sf_dir))
+    assert len(calls) == 1
+    ledger = util.staging_ledger()
+    assert {k for k in ledger if k.endswith(f"/{sf_dir}")} == {
+        f"minhash_index/{sf_dir}",
+        f"pairs/{sf_dir}",
+    }
+
 def test_staged_frame_builds_once_under_concurrency(spark):
     """Staged builds are reached from driver thread pools (the
     ingest-receipt producers overlap), so the check-then-build sequence

@@ -530,7 +530,9 @@ def test_stream_crawl_dedup_matches_batch_scorer(spark):
         )
         for r in dedup.incremental_dedup(
             _staged_frozen_index(spark, SF_SMALL),
-            dedup.new_crawl(spark, SF_SMALL),
+            dedup.minhash_index(
+                dedup.new_crawl(spark, SF_SMALL)
+            ).localCheckpoint(),
         ).collect()
     }
     assert got == batch
