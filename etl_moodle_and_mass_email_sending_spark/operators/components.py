@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .util import top_k
+
 
 CC_MAX_ITER = 20
 
@@ -108,22 +110,15 @@ def keep_best_per_cluster(
     window over `component` — clusters are shallow (bounded by dup
     multiplicity), so no partition is large and the single extra shuffle
     is on the component key."""
-    from pyspark.sql.window import Window
-
     scored = clusters.join(quality.select("doc_id", "quality"), "doc_id")
-    w = Window.partitionBy("component").orderBy(
-        F.col("quality").desc(), F.col("doc_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "component",
-            F.col("doc_id").alias("kept_doc_id"),
-            F.col("quality").alias("kept_quality"),
-            "cluster_size",
-            (F.col("cluster_size") - 1).alias("n_dropped"),
-        )
+    return top_k(
+        scored, ["component"], [F.col("quality").desc(), F.col("doc_id")], 1
+    ).select(
+        "component",
+        F.col("doc_id").alias("kept_doc_id"),
+        F.col("quality").alias("kept_quality"),
+        "cluster_size",
+        (F.col("cluster_size") - 1).alias("n_dropped"),
     )
 
 

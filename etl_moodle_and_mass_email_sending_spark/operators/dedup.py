@@ -58,17 +58,27 @@ from .util import spread_for_compute as _spread
 # --------------------------------------------------------------------------
 
 
-def dup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
-    exact = (
-        d.filter(F.col("doc_id") % EXACT_COPY_MOD == 0)
-        .withColumn("doc_id", F.col("doc_id") + EXACT_COPY_OFFSET)
+def _copies(d: DataFrame) -> DataFrame:
+    """The exact copies of every EXACT_COPY_MOD-th doc of ``d`` and the
+    80%-prefix near copies of every NEAR_COPY_MOD-th, renumbered by
+    their offsets — what ``dup_corpus`` adds and ``new_crawl`` re-crawls."""
+    exact = d.filter(F.col("doc_id") % EXACT_COPY_MOD == 0).withColumn(
+        "doc_id", F.col("doc_id") + EXACT_COPY_OFFSET
     )
     toks = F.split(F.trim(F.col("text")), r"\s+")
     # integer division on both engines (Spark `div` / DuckDB `//`) — a
     # float-divide + cast would round in DuckDB but truncate in Spark
     prefix = F.array_join(
-        F.slice(toks, 1, F.greatest(F.lit(1), F.expr(f"(size(split(trim(text), '\\\\s+')) * 4) div 5").cast("int"))),
+        F.slice(
+            toks,
+            1,
+            F.greatest(
+                F.lit(1),
+                F.expr(
+                    "(size(split(trim(text), '\\\\s+')) * 4) div 5"
+                ).cast("int"),
+            ),
+        ),
         " ",
     )
     near = (
@@ -76,22 +86,30 @@ def dup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("doc_id", F.col("doc_id") + NEAR_COPY_OFFSET)
         .withColumn("text", prefix)
     )
-    return d.unionByName(exact).unionByName(near)
+    return exact.unionByName(near)
+
+
+# the DuckDB twins of ``_copies``' token split and near-copy text
+_DUCK_WORDS = r"string_split_regex(trim(text), '\s+')"
+_DUCK_NEAR_TEXT = (
+    f"array_to_string(({_DUCK_WORDS})[1:greatest(1, "
+    f"CAST((len({_DUCK_WORDS}) * 4) // 5 AS INTEGER))], ' ')"
+)
+
+
+def dup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
+    return d.unionByName(_copies(d))
 
 
 def sql_dup_corpus() -> str:
-    toks = r"string_split_regex(trim(text), '\s+')"
-    prefix = (
-        f"array_to_string(({toks})[1:greatest(1, "
-        f"CAST((len({toks}) * 4) // 5 AS INTEGER))], ' ')"
-    )
     return f"""
     SELECT doc_id, text, lang FROM documents
     UNION ALL
     SELECT doc_id + {EXACT_COPY_OFFSET}, text, lang FROM documents
     WHERE doc_id % {EXACT_COPY_MOD} = 0
     UNION ALL
-    SELECT doc_id + {NEAR_COPY_OFFSET}, {prefix}, lang FROM documents
+    SELECT doc_id + {NEAR_COPY_OFFSET}, {_DUCK_NEAR_TEXT}, lang FROM documents
     WHERE doc_id % {NEAR_COPY_MOD} = 0
     """
 
@@ -863,28 +881,6 @@ def new_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang"
     )
-    exact = d.filter(F.col("doc_id") % EXACT_COPY_MOD == 0).withColumn(
-        "doc_id", F.col("doc_id") + EXACT_COPY_OFFSET
-    )
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    prefix = F.array_join(
-        F.slice(
-            toks,
-            1,
-            F.greatest(
-                F.lit(1),
-                F.expr(
-                    "(size(split(trim(text), '\\\\s+')) * 4) div 5"
-                ).cast("int"),
-            ),
-        ),
-        " ",
-    )
-    near = (
-        d.filter(F.col("doc_id") % NEAR_COPY_MOD == 0)
-        .withColumn("doc_id", F.col("doc_id") + NEAR_COPY_OFFSET)
-        .withColumn("text", prefix)
-    )
     fresh = (
         d.filter(F.col("doc_id") % NEW_DOC_MOD == 0)
         .withColumn("doc_id", F.col("doc_id") + NEW_CRAWL_OFFSET)
@@ -895,24 +891,19 @@ def new_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    return exact.unionByName(near).unionByName(fresh)
+    return _copies(d).unionByName(fresh)
 
 
 def sql_new_crawl() -> str:
-    toks = r"string_split_regex(trim(text), '\s+')"
-    prefix = (
-        f"array_to_string(({toks})[1:greatest(1, "
-        f"CAST((len({toks}) * 4) // 5 AS INTEGER))], ' ')"
-    )
     return f"""
     SELECT doc_id + {EXACT_COPY_OFFSET} AS doc_id, text, lang
     FROM documents WHERE doc_id % {EXACT_COPY_MOD} = 0
     UNION ALL
-    SELECT doc_id + {NEAR_COPY_OFFSET}, {prefix}, lang
+    SELECT doc_id + {NEAR_COPY_OFFSET}, {_DUCK_NEAR_TEXT}, lang
     FROM documents WHERE doc_id % {NEAR_COPY_MOD} = 0
     UNION ALL
     SELECT doc_id + {NEW_CRAWL_OFFSET},
-           array_to_string(list_reverse({toks}), ' '), lang
+           array_to_string(list_reverse({_DUCK_WORDS}), ' '), lang
     FROM documents WHERE doc_id % {NEW_DOC_MOD} = 0
     """
 

@@ -20,11 +20,11 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from .util import spread_for_compute
+from .util import spread_for_compute, staged_frame, top_k
 from ..functions.hashing import SEED_SEP
 
 TOP_K = 5
@@ -63,23 +63,33 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DUCK_VECTORS = "SELECT vec_id, embedding::DOUBLE[] AS vec, label FROM embeddings"
 
 
+def _queries(frame: DataFrame, *extra: str) -> DataFrame:
+    """The query batch: rows with vec_id < N_QUERIES, as ``query_id``
+    plus the ``extra`` select expressions."""
+    return frame.filter(F.col("vec_id") < N_QUERIES).selectExpr(
+        "vec_id AS query_id", *extra
+    )
+
+
+def _nearest(pairs: DataFrame, k: int) -> DataFrame:
+    """The ``k`` highest-cosine (query_id, vec_id) pairs per query,
+    ties by vec_id, numbered in ``rank``."""
+    return top_k(
+        pairs, ["query_id"], [F.col("cosine").desc(), F.col("vec_id")], k
+    )
+
+
 def topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-K neighbors for each query vector (vec_id < N_QUERIES),
     self-match excluded."""
     v = _vectors(spark, sf_dir)
-    q = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
-    )
+    q = _queries(v, "vec AS qvec")
     sim = F.expr(_spark_cosine("qvec", "vec")).alias("cosine")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
-    )
-    return (
+    return _nearest(
         v.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
+        .select("query_id", "vec_id", sim),
+        TOP_K,
     )
 
 
@@ -128,20 +138,14 @@ def filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     per query vector. Queries are NOT themselves filtered — a caller
     searches on behalf of any query against the restricted corpus."""
     v = _vectors(spark, sf_dir)
-    q = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
-    )
+    q = _queries(v, "vec AS qvec")
     corpus = v.filter(F.col("label") < FILTER_LABEL_MAX)
     sim = F.expr(_spark_cosine("qvec", "vec")).alias("cosine")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
-    )
-    return (
+    return _nearest(
         corpus.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", "label", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
+        .select("query_id", "vec_id", "label", sim),
+        TOP_K,
     )
 
 
@@ -233,21 +237,13 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH bucket."""
     v = _vectors(spark, sf_dir)
     bucketed = v.withColumn("bucket", F.expr(_spark_bucket("vec")))
-    q = bucketed.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("vec").alias("qvec"),
-        "bucket",
-    )
+    q = _queries(bucketed, "vec AS qvec", "bucket")
     sim = F.expr(_spark_cosine("qvec", "vec")).alias("cosine")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
-    )
-    return (
+    return _nearest(
         bucketed.join(F.broadcast(q), on="bucket")
         .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
+        .select("query_id", "vec_id", sim),
+        TOP_K,
     )
 
 
@@ -322,14 +318,9 @@ def ivf_assign(v: DataFrame, cent: DataFrame, n_best: int = 1) -> DataFrame:
             )
             .select("vec_id", "vec", (-F.col("_m._ncid")).alias("cid"))
         )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("ccos").desc(), F.col("cid")
-    )
-    return (
-        expanded.withColumn("crank", F.row_number().over(w))
-        .filter(F.col("crank") <= n_best)
-        .drop("ccos", "crank")
-    )
+    return top_k(
+        expanded, ["vec_id"], [F.col("ccos").desc(), F.col("cid")], n_best
+    ).drop("ccos", "rank")
 
 
 def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -350,16 +341,12 @@ def ivf_topk_with_centroids(v: DataFrame, cent: DataFrame) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec"), "cid"
     )
     sim = F.expr(_spark_cosine("qvec", "vec")).alias("cosine")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
-    )
-    return (
+    return _nearest(
         corpus.join(probes, on="cid")
         .filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id", sim)
-        .distinct()  # a (q, v) pair can meet in two probed lists
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
+        .distinct(),  # a (q, v) pair can meet in two probed lists
+        TOP_K,
     )
 
 
@@ -635,22 +622,16 @@ def sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         " / (_mx - _mn) + 0.5d) as bigint) - 128)"
     ).alias("qvec")
     qv = v.crossJoin(F.broadcast(bounds)).select("vec_id", quant)
-    q = qv.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("qvec").alias("qq")
-    )
+    q = _queries(qv, "qvec AS qq")
     score = F.expr(
         "aggregate(zip_with(qq, qvec, (x, y) -> x * y),"
         " cast(0 as bigint), (acc, p) -> acc + p)"
     ).alias("qscore")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("qscore").desc(), F.col("vec_id")
-    )
-    return (
+    return top_k(
         qv.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", score)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
+        .select("query_id", "vec_id", score),
+        ["query_id"], [F.col("qscore").desc(), F.col("vec_id")], TOP_K,
     )
 
 
@@ -751,16 +732,11 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("cluster", "a_id", "b_id", cos)
         .filter(F.col("cosine") >= SEMDEDUP_THRESHOLD)
     )
-    w = Window.partitionBy("b_id").orderBy("a_id")
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.col("b_id").alias("vec_id"),
-            "cluster",
-            F.col("a_id").alias("dup_of"),
-            "cosine",
-        )
+    return top_k(pairs, ["b_id"], ["a_id"], 1).select(
+        F.col("b_id").alias("vec_id"),
+        "cluster",
+        F.col("a_id").alias("dup_of"),
+        "cosine",
     )
 
 
@@ -811,16 +787,9 @@ def hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(query_id, query_label, vec_id, neg_label, cosine, rank): top
     HARD_NEG_K different-label neighbors per query vector."""
     v = _vectors(spark, sf_dir)
-    q = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("vec").alias("qvec"),
-        F.col("label").alias("query_label"),
-    )
+    q = _queries(v, "vec AS qvec", "label AS query_label")
     sim = F.expr(_spark_cosine("qvec", "vec")).alias("cosine")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
-    )
-    return (
+    return _nearest(
         v.crossJoin(F.broadcast(q))
         .filter(F.col("label") != F.col("query_label"))
         .select(
@@ -829,9 +798,8 @@ def hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             F.col("label").alias("neg_label"),
             sim,
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= HARD_NEG_K)
+        ),
+        HARD_NEG_K,
     )
 
 
@@ -941,7 +909,6 @@ def _staged_pq(spark: SparkSession, sf_dir: str):
     session artifact — "train once, score many" — not a per-invocation
     subtree; at sf0.1 the Lloyd build alone is ~2.9 s of the 2.26 s
     bench median)."""
-    from .util import staged_frame
 
     subs = staged_frame(
         spark,
@@ -960,7 +927,6 @@ def pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the 128-row codebook is consumed twice (encode join + LUT join)
     # and across queries: staged checkpoint, Lloyd runs once a session
     subs, books = _staged_pq(spark, sf_dir)
-    from .util import staged_frame
 
     def _encode() -> DataFrame:
         d = F.expr(_l2sq_spark("sub", "cvec")).alias("_d")
@@ -990,16 +956,12 @@ def pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(_l2sq_spark("sub", "cvec")).alias("_d"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist"), F.col("vec_id")
-    )
-    return (
+    return top_k(
         codes.join(F.broadcast(lut), ["m", "code"])
         .filter(F.col("vec_id") != F.col("query_id"))
         .groupBy("query_id", "vec_id")
-        .agg(F.round(F.sum("_d"), 6).alias("adc_dist"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
+        .agg(F.round(F.sum("_d"), 6).alias("adc_dist")),
+        ["query_id"], [F.col("adc_dist"), F.col("vec_id")], TOP_K,
     )
 
 
@@ -1087,33 +1049,20 @@ def mrl_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     each query's MRL_CAND prefix-cosine candidates (self-match excluded)."""
     v = _vectors(spark, sf_dir).select("vec_id", "vec")
     pv = v.withColumn("pvec", F.slice("vec", 1, MRL_DIM))
-    q = pv.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("vec").alias("qvec"),
-        F.col("pvec").alias("pqvec"),
-    )
+    q = _queries(pv, "vec AS qvec", "pvec AS pqvec")
     pcos = F.expr(_spark_cosine("pqvec", "pvec")).alias("pcos")
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("pcos").desc(), F.col("vec_id")
-    )
-    cand = (
+    cand = top_k(
         pv.crossJoin(F.broadcast(q.select("query_id", "pqvec")))
         .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", pcos)
-        .withColumn("_rn", F.row_number().over(w1))
-        .filter(F.col("_rn") <= MRL_CAND)
-        .select("query_id", "vec_id")
-    )
+        .select("query_id", "vec_id", pcos),
+        ["query_id"], [F.col("pcos").desc(), F.col("vec_id")], MRL_CAND,
+    ).select("query_id", "vec_id")
     cos = F.expr(_spark_cosine("qvec", "vec")).alias("cosine")
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
-    )
-    return (
+    return _nearest(
         v.join(F.broadcast(cand), "vec_id")
         .join(F.broadcast(q.select("query_id", "qvec")), "query_id")
-        .select("query_id", "vec_id", cos)
-        .withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= TOP_K)
+        .select("query_id", "vec_id", cos),
+        TOP_K,
     )
 
 
@@ -1180,15 +1129,12 @@ def _knn_directed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("dst"), F.col("vec").alias("vb"), "bucket"
     )
     cos = F.expr(_spark_cosine("va", "vb")).alias("cosine")
-    w = Window.partitionBy("src").orderBy(F.col("cosine").desc(), F.col("dst"))
-    return (
+    return top_k(
         a.join(b, "bucket")
         .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst", cos)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= KNN_K)
-        .select("src", "dst", "cosine")
-    )
+        .select("src", "dst", cos),
+        ["src"], [F.col("cosine").desc(), F.col("dst")], KNN_K,
+    ).select("src", "dst", "cosine")
 
 
 def _sql_knn_directed() -> str:
@@ -1303,14 +1249,10 @@ def beam_search_topk(
         )
     )
     scored = score(entries).localCheckpoint(eager=False)
-    wb = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("cand_id")
-    )
+    best = [F.col("cosine").desc(), F.col("cand_id")]
     for _ in range(hops):
-        beam = (
-            scored.withColumn("_rn", F.row_number().over(wb))
-            .filter(F.col("_rn") <= beam_width)
-            .select("query_id", "cand_id")
+        beam = top_k(scored, ["query_id"], best, beam_width).select(
+            "query_id", "cand_id"
         )
         fresh = (
             beam.join(edges, beam["cand_id"] == edges["src"])
@@ -1326,10 +1268,8 @@ def beam_search_topk(
         scored = scored.unionByName(score(fresh)).localCheckpoint(
             eager=False
         )
-    return (
-        scored.withColumn("rank", F.row_number().over(wb))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("cand_id").alias("vec_id"), "cosine", "rank")
+    return top_k(scored, ["query_id"], best, k).select(
+        "query_id", F.col("cand_id").alias("vec_id"), "cosine", "rank"
     )
 
 
@@ -1337,9 +1277,7 @@ def graph_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Beam search over the directed kNN neighbor lists: top-K per
     query (vec_id < N_QUERIES) from the visited candidate set."""
     v = _vectors(spark, sf_dir).select("vec_id", "vec")
-    q = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
-    )
+    q = _queries(v, "vec AS qvec")
     edges = (
         _knn_directed(spark, sf_dir)
         .select("src", "dst")
@@ -1466,17 +1404,12 @@ def _residual_assign(
                 ).alias("rvec"),
             )
         )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("_ccos").desc(), F.col("cid")
-    )
-    return (
-        expanded.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= n_best)
-        .select(
-            "vec_id",
-            "cid",
-            F.expr("zip_with(vec, cvec, (x, c) -> x - c)").alias("rvec"),
-        )
+    return top_k(
+        expanded, ["vec_id"], [F.col("_ccos").desc(), F.col("cid")], n_best
+    ).select(
+        "vec_id",
+        "cid",
+        F.expr("zip_with(vec, cvec, (x, c) -> x - c)").alias("rvec"),
     )
 
 
@@ -1494,7 +1427,6 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(query_id, vec_id, adc_dist, rank): top-K corpus vectors per
     query by IVFPQ asymmetric distance over residual codes, searched
     only within the query's NPROBE inverted lists."""
-    from .util import staged_frame
 
     v = _vectors(spark, sf_dir).select("vec_id", "vec")
     cent = _centroids(v)
@@ -1542,16 +1474,12 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id", "cid", "m", "code",
         F.expr(_l2sq_spark("sub", "cvec")).alias("_d"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist"), F.col("vec_id")
-    )
-    return (
+    return top_k(
         codes.join(F.broadcast(lut), ["cid", "m", "code"])
         .filter(F.col("vec_id") != F.col("query_id"))
         .groupBy("query_id", "vec_id")
-        .agg(F.round(F.sum("_d"), 6).alias("adc_dist"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
+        .agg(F.round(F.sum("_d"), 6).alias("adc_dist")),
+        ["query_id"], [F.col("adc_dist"), F.col("vec_id")], TOP_K,
     )
 
 
@@ -1663,7 +1591,6 @@ def _staged_arm(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     queries (sim_ann_lsh_topk, sim_ivf_topk, …) keep computing their
     own result fresh — staging a query's own result would be result
     caching."""
-    from .util import staged_frame
 
     fns = {
         "ivf": ivf_topk,
@@ -1776,17 +1703,12 @@ def label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds = v.filter(F.col("vec_id") % LP_SEED_MOD == 0).select(
         F.col("vec_id").alias("dst"), F.col("label").alias("nlabel")
     )
-    w = Window.partitionBy("src").orderBy(
-        F.col("n_votes").desc(), F.col("nlabel")
-    )
-    pred = (
+    pred = top_k(
         und.join(seeds, "dst")
         .groupBy("src", "nlabel")
-        .agg(F.count("*").alias("n_votes"))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("src", "nlabel", "n_votes")
-    )
+        .agg(F.count("*").alias("n_votes")),
+        ["src"], [F.col("n_votes").desc(), F.col("nlabel")], 1,
+    ).select("src", "nlabel", "n_votes")
     return (
         v.filter(F.col("vec_id") % LP_SEED_MOD != 0)
         .join(pred, v.vec_id == pred.src, "left")
@@ -1893,26 +1815,16 @@ def ann_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     query's bucket + all 8 one-bit-flip neighbor buckets."""
     v = _vectors(spark, sf_dir)
     bucketed = v.withColumn("bucket", F.expr(_spark_bucket("vec")))
-    q = (
-        bucketed.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("vec").alias("qvec"),
-            F.explode(F.expr(_probe_keys_spark("bucket"))).alias(
-                "bucket"
-            ),
-        )
+    q = _queries(
+        bucketed, "vec AS qvec",
+        f"explode({_probe_keys_spark('bucket')}) AS bucket",
     )
     sim = F.expr(_spark_cosine("qvec", "vec")).alias("cosine")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
-    )
-    return (
+    return _nearest(
         bucketed.join(F.broadcast(q), on="bucket")
         .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
+        .select("query_id", "vec_id", sim),
+        TOP_K,
     )
 
 
@@ -2082,21 +1994,17 @@ def ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = _centroids(v)
     corpus = ivf_assign(v, cent, n_best=1)
     ccos = F.expr(_spark_cosine("vec", "cvec")).alias("_ccos")
-    wprobe = Window.partitionBy("vec_id").orderBy(
-        F.col("_ccos").desc(), F.col("cid")
-    )
-    probes = (
+    probes = top_k(
         v.filter(F.col("vec_id") < N_QUERIES)
         .crossJoin(F.broadcast(cent))
-        .select("vec_id", "vec", "cid", ccos)
-        .withColumn("_pr", F.row_number().over(wprobe))
-        .filter(F.col("_pr") <= max(IVF_SWEEP))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("vec").alias("qvec"),
-            "cid",
-            "_pr",
-        )
+        .select("vec_id", "vec", "cid", ccos),
+        ["vec_id"], [F.col("_ccos").desc(), F.col("cid")], max(IVF_SWEEP),
+        "_pr",
+    ).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("vec").alias("qvec"),
+        "cid",
+        "_pr",
     )
     sim = F.expr(_spark_cosine("qvec", "vec")).alias("cosine")
     cand = (
@@ -2107,14 +2015,8 @@ def ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = None
     for np_ in IVF_SWEEP:
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col("vec_id")
-        )
-        approx = (
-            cand.filter(F.col("_pr") <= np_)
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= TOP_K)
-            .select("query_id", "vec_id", F.lit(1).alias("_hit"))
+        approx = _nearest(cand.filter(F.col("_pr") <= np_), TOP_K).select(
+            "query_id", "vec_id", F.lit(1).alias("_hit")
         )
         scored = (
             truth.join(approx, ["query_id", "vec_id"], "left")
@@ -3090,32 +2992,21 @@ def bq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_bq_pack_expr(0)).alias("lo"),
         F.expr(_bq_pack_expr(32)).alias("hi"),
     )
-    q = packed.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("vec").alias("qvec"),
-        F.col("lo").alias("qlo"),
-        F.col("hi").alias("qhi"),
-    )
+    q = _queries(packed, "vec AS qvec", "lo AS qlo", "hi AS qhi")
     ham = (
         F.bit_count(F.col("lo").bitwiseXOR(F.col("qlo")))
         + F.bit_count(F.col("hi").bitwiseXOR(F.col("qhi")))
     ).cast("int")
-    wc = Window.partitionBy("query_id").orderBy("hamming", "vec_id")
-    cand = (
+    cand = top_k(
         packed.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", ham.alias("hamming"), "vec", "qvec")
-        .withColumn("_crank", F.row_number().over(wc))
-        .filter(F.col("_crank") <= BQ_RERANK)
+        .select("query_id", "vec_id", ham.alias("hamming"), "vec", "qvec"),
+        ["query_id"], ["hamming", "vec_id"], BQ_RERANK,
     )
     cos = F.expr(_spark_cosine("vec", "qvec"))
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
-    )
-    return (
-        cand.select("query_id", "vec_id", "hamming", cos.alias("cosine"))
-        .withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= TOP_K)
+    return _nearest(
+        cand.select("query_id", "vec_id", "hamming", cos.alias("cosine")),
+        TOP_K,
     )
 
 
@@ -3204,21 +3095,14 @@ def mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     v = _vectors(spark, sf_dir)
-    q = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
-    )
+    q = _queries(v, "vec AS qvec")
     rel = F.expr(_spark_cosine("qvec", "vec")).alias("rel")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("rel").desc(), F.col("vec_id")
-    )
-    cands = (
+    cands = top_k(
         v.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", rel)
-        .withColumn("crank", F.row_number().over(w))
-        .filter(F.col("crank") <= MMR_CANDIDATES)
-        .drop("crank")
-    )
+        .select("query_id", "vec_id", rel),
+        ["query_id"], [F.col("rel").desc(), F.col("vec_id")], MMR_CANDIDATES,
+    ).drop("rank")
     # re-attach vectors: broadcast the Q·C candidate list into the
     # corpus scan (no corpus shuffle)
     cv = v.select("vec_id", "vec").join(F.broadcast(cands), "vec_id")
@@ -3386,9 +3270,7 @@ RANGE_TAU = 0.25  # exactly representable; cosines are round-6 first
 
 def range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = _vectors(spark, sf_dir)
-    q = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
-    )
+    q = _queries(v, "vec AS qvec")
     cos = F.expr(_spark_cosine("qvec", "vec")).alias("cos")
     hits = (
         v.crossJoin(F.broadcast(q))
@@ -3453,37 +3335,20 @@ def sql_range_search() -> str:
 
 def knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = _vectors(spark, sf_dir)
-    q = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("vec").alias("qvec"),
-        F.col("label").alias("true_label"),
-    )
+    q = _queries(v, "vec AS qvec", "label AS true_label")
     cos = F.expr(_spark_cosine("qvec", "vec")).alias("cosine")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
-    )
-    knn = (
+    knn = _nearest(
         v.crossJoin(F.broadcast(q.drop("true_label")))
         .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", "label", cos)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
+        .select("query_id", "vec_id", "label", cos),
+        TOP_K,
     )
     votes = knn.groupBy("query_id", "label").agg(
         F.count(F.lit(1)).alias("n_votes")
     )
-    wv = Window.partitionBy("query_id").orderBy(
-        F.col("n_votes").desc(), F.col("label")
-    )
-    pred = (
-        votes.withColumn("_rn", F.row_number().over(wv))
-        .filter(F.col("_rn") == 1)
-        .select(
-            "query_id",
-            F.col("label").alias("pred_label"),
-            "n_votes",
-        )
-    )
+    pred = top_k(
+        votes, ["query_id"], [F.col("n_votes").desc(), F.col("label")], 1
+    ).select("query_id", F.col("label").alias("pred_label"), "n_votes")
     return (
         q.select("query_id", "true_label")
         .join(pred, "query_id")
@@ -3662,7 +3527,6 @@ def _staged_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows), session-staged (round 11): both recall harnesses consume it
     and bench's warm+timed re-invocations were each re-running the
     corpus-wide brute-force pass for an unchanging 50-row frame."""
-    from .util import staged_frame
 
     return staged_frame(
         spark,
@@ -3802,7 +3666,6 @@ def staged_recluster_assign(
     pays the assignment scan once per session instead of once per
     stage (VERDICT r13 item 2). At 100 TB this is the materialized
     IVF assignment table an index build writes anyway."""
-    from .util import staged_frame
 
     def build() -> DataFrame:
         v = _vectors(spark, sf_dir).select("vec_id", "vec")
@@ -4089,7 +3952,6 @@ def recall_after_recluster(
     )
     cent2 = cold.unionByName(children)
     truth = _staged_truth(spark, sf_dir)
-    from .util import staged_frame
 
     out = None
     for arm, c in (("pre", cent), ("post", cent2)):
@@ -4230,7 +4092,6 @@ def pq_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(m, n_vectors, avg_dist_stale, avg_dist_fresh, improvement):
     full-corpus PQ distortion under pre-ingest vs post-ingest
     codebooks."""
-    from .util import staged_frame
 
     subs, fresh_books = _staged_pq(spark, sf_dir)
     stale_books = staged_frame(
@@ -4388,7 +4249,6 @@ PQ_RETRAIN_MIN_IMPROVEMENT = 0.02  # refresh pays off above 2%
 
 
 def staged_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .util import staged_frame
 
     return staged_frame(
         spark, ("im_append", sf_dir), lambda: ivf_append(spark, sf_dir)
@@ -4396,7 +4256,6 @@ def staged_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def staged_ivf_recluster(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .util import staged_frame
 
     return staged_frame(
         spark,
@@ -4408,7 +4267,6 @@ def staged_ivf_recluster(spark: SparkSession, sf_dir: str) -> DataFrame:
 def staged_recall_after_recluster(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .util import staged_frame
 
     return staged_frame(
         spark,
@@ -4418,7 +4276,6 @@ def staged_recall_after_recluster(
 
 
 def staged_pq_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .util import staged_frame
 
     return staged_frame(
         spark, ("im_pq", sf_dir), lambda: pq_refresh(spark, sf_dir)
@@ -4613,15 +4470,11 @@ def label_noise_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").alias("own_label"),
     )
     cos = F.expr(_spark_cosine("qvec", "vec")).alias("cosine")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
-    )
-    knn = (
+    knn = _nearest(
         v.crossJoin(F.broadcast(q.drop("own_label")))
         .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", "label", cos)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= NOISE_K)
+        .select("query_id", "vec_id", "label", cos),
+        NOISE_K,
     )
     # votes is sample×labels-bounded and feeds BOTH the majority pick
     # and the own-vote lookup — materialize so the broadcast-Q cosine
@@ -4629,14 +4482,9 @@ def label_noise_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     votes = knn.groupBy("query_id", "label").agg(
         F.count(F.lit(1)).alias("n_votes")
     ).localCheckpoint()
-    wv = Window.partitionBy("query_id").orderBy(
-        F.col("n_votes").desc(), F.col("label")
-    )
-    maj = (
-        votes.withColumn("_rn", F.row_number().over(wv))
-        .filter(F.col("_rn") == 1)
-        .select("query_id", F.col("label").alias("maj_label"))
-    )
+    maj = top_k(
+        votes, ["query_id"], [F.col("n_votes").desc(), F.col("label")], 1
+    ).select("query_id", F.col("label").alias("maj_label"))
     own = q.select("query_id", "own_label")
     per_ex = (
         own.join(
@@ -4658,14 +4506,9 @@ def label_noise_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("own_label", "maj_label")
         .agg(F.count(F.lit(1)).alias("_c"))
     )
-    wc = Window.partitionBy("own_label").orderBy(
-        F.col("_c").desc(), F.col("maj_label")
-    )
-    top_conf = (
-        confused.withColumn("_rn", F.row_number().over(wc))
-        .filter(F.col("_rn") == 1)
-        .select("own_label", F.col("maj_label").alias("top_confused_with"))
-    )
+    top_conf = top_k(
+        confused, ["own_label"], [F.col("_c").desc(), F.col("maj_label")], 1
+    ).select("own_label", F.col("maj_label").alias("top_confused_with"))
     per_cls = per_ex.groupBy("own_label").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_audited"),
         F.coalesce(F.sum(F.col("flagged").cast("int")), F.lit(0))

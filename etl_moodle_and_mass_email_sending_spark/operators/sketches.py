@@ -12,11 +12,10 @@ the exact count substituted when a group holds fewer than k keys. That
 determinism is what lets an *approximate* operator hash-gate against the
 DuckDB oracle exactly.
 
-Scale design: the k smallest hashes are found with a two-stage exact
-top-k — stage 1 ranks within (group, salt) partitions so no single task
-ever sorts a whole group's distinct set, stage 2 ranks the ≤ salt·k
-survivors per group. Both stages are window row_numbers over a shuffle
-whose payload is (group, 8-byte hash), not the raw keys. Spark's own
+Scale design: the k smallest hashes are found with the exact
+``util.salted_top_k``, so no single task ever sorts a whole group's
+distinct set, over a shuffle whose payload is (group, 8-byte hash), not
+the raw keys. Spark's own
 approx_count_distinct (HLL++) is the zero-extra-shuffle alternative but
 is not bit-reproducible across engines, so it cannot be oracle-gated;
 the KMV form trades one bounded shuffle for a verifiable answer.
@@ -27,8 +26,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .util import salt, salted_top_k
+
 KMV_K = 64
-KMV_SALTS = 16
 _SCALE = 16**15  # top 60 bits of the md5 → exact double in [0, 1)
 
 
@@ -48,20 +48,9 @@ def kmv_distinct(df: DataFrame, group_col: str, key_col: str) -> DataFrame:
     """
     pairs = df.select(group_col, key_col).distinct()
     hashed = pairs.select(
-        group_col, _hash_frac(F.col(key_col)).alias("_frac"),
-        F.pmod(F.xxhash64(F.col(key_col)), F.lit(KMV_SALTS)).alias("_salt"),
+        group_col, _hash_frac(F.col(key_col)).alias("_frac"), salt(key_col)
     )
-    # stage 1: top-k per (group, salt) — caps any single task's sort at
-    # the salt shard, never a whole group's distinct set
-    w1 = Window.partitionBy(group_col, "_salt").orderBy("_frac")
-    stage1 = hashed.withColumn("_rn", F.row_number().over(w1)).filter(
-        F.col("_rn") <= KMV_K
-    )
-    # stage 2: global top-k per group over the ≤ KMV_SALTS·k survivors
-    w2 = Window.partitionBy(group_col).orderBy("_frac")
-    topk = stage1.withColumn("_gr", F.row_number().over(w2)).filter(
-        F.col("_gr") <= KMV_K
-    )
+    topk = salted_top_k(hashed, [group_col], ["_frac"], KMV_K)
     exact = pairs.groupBy(group_col).agg(F.count("*").alias("n_exact"))
     kth = topk.groupBy(group_col).agg(F.max("_frac").alias("_hk"))
     return (
@@ -461,17 +450,10 @@ def kmv_setops(
     hashed = pairs.select(
         part_col,
         _hash_frac(F.col(key_col)).alias("_frac"),
-        F.pmod(F.xxhash64(F.col(key_col)), F.lit(KMV_SALTS)).alias("_salt"),
+        salt(key_col),
     )
-    w1 = Window.partitionBy(part_col, "_salt").orderBy("_frac")
-    stage1 = hashed.withColumn("_rn", F.row_number().over(w1)).filter(
-        F.col("_rn") <= KMV_K
-    )
-    w2 = Window.partitionBy(part_col).orderBy("_frac")
-    topk = (
-        stage1.withColumn("_gr", F.row_number().over(w2))
-        .filter(F.col("_gr") <= KMV_K)
-        .select(part_col, "_frac")
+    topk = salted_top_k(hashed, [part_col], ["_frac"], KMV_K).select(
+        part_col, "_frac"
     )
     # per-hash membership flags, then the merged top-k (≤ 2k rows — the
     # single-partition window is over the SKETCH, never the data)
@@ -770,20 +752,11 @@ def sample_quantiles(
         F.col(key_col).alias("_k"),
         F.col(value_col).alias("_v"),
         _hash_frac(F.col(key_col)).alias("_frac"),
-        F.pmod(F.xxhash64(F.col(key_col)), F.lit(KMV_SALTS)).alias(
-            "_salt"
-        ),
+        salt(key_col),
     )
-    w1 = Window.partitionBy(group_col, "_salt").orderBy("_frac", "_k")
-    s1 = hashed.withColumn("_rn", F.row_number().over(w1)).filter(
-        F.col("_rn") <= QSK_K
-    )
-    w2 = Window.partitionBy(group_col).orderBy("_frac", "_k")
-    sample = (
-        s1.withColumn("_gr", F.row_number().over(w2))
-        .filter(F.col("_gr") <= QSK_K)
-        .select(group_col, "_k", "_v")
-    )
+    sample = salted_top_k(
+        hashed, [group_col], ["_frac", "_k"], QSK_K
+    ).select(group_col, "_k", "_v")
 
     def ranked(frame: DataFrame, tag: str) -> DataFrame:
         w = Window.partitionBy(group_col).orderBy("_v", "_k")

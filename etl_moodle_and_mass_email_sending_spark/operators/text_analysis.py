@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.hashing import SEED_SEP
-from .util import spread_for_compute
+from .util import salt, salted_top_k, spread_for_compute, top_k
 
 # Tiny built-in stopword lists (shared constants for both engines).
 STOPWORDS = {
@@ -1197,8 +1197,6 @@ def bm25_topk(
     Okapi BM25 (idf = ln((N − df + 0.5)/(df + 0.5) + 1), standard k1/b).
     Ties break by doc_id for determinism; docs with zero matching terms
     never appear."""
-    from pyspark.sql.window import Window
-
     _bm25_check_queries(queries)
     all_terms = sorted({t for _, ts in queries for t in ts})
     docs = corpus.select(
@@ -1252,12 +1250,8 @@ def bm25_topk(
         .groupBy("query_id", "doc_id")
         .agg(F.round(F.sum("contrib"), 6).alias("score"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
+    return top_k(
+        scored, ["query_id"], [F.col("score").desc(), F.col("doc_id")], k
     )
 
 
@@ -1315,24 +1309,13 @@ def sql_bm25_topk(corpus_sql: str) -> str:
 # --------------------------------------------------------------------------
 
 TOP_TERMS_K = 20
-TOP_TERMS_SALTS = 16
 
 
 def top_terms(corpus: DataFrame, k: int = TOP_TERMS_K) -> DataFrame:
     """(lang, token, term_count, doc_count, rank): the k most frequent
     whitespace tokens per language, ties broken lexicographically.
-
-    r8: the rank runs as the salted two-stage top-K (the PMI /
-    weighted-sample pattern) instead of one ``partitionBy(lang)``
-    window over the whole vocabulary — per-language vocabularies are
-    10⁷-10⁸ terms at corpus scale, and languages are FEW, so the
-    single-stage window funnels each language's vocab through one
-    task. Stage 1 ranks within (lang, hash-salt) buckets — every
-    global top-k member is top-k in its bucket, so survivors ⊇ the
-    answer; stage 2's exact window sees ≤ k·TOP_TERMS_SALTS rows per
-    language."""
-    from pyspark.sql.window import Window
-
+    Languages are few and their vocabularies huge, so the rank is a
+    ``salted_top_k`` sharded by token."""
     toks = corpus.select(
         "lang",
         "doc_id",
@@ -1342,23 +1325,10 @@ def top_terms(corpus: DataFrame, k: int = TOP_TERMS_K) -> DataFrame:
         F.count("*").alias("term_count"),
         F.countDistinct("doc_id").alias("doc_count"),
     )
-    salted = counts.withColumn(
-        "_salt", F.pmod(F.xxhash64("token"), F.lit(TOP_TERMS_SALTS))
-    )
-    w1 = Window.partitionBy("lang", "_salt").orderBy(
-        F.col("term_count").desc(), F.col("token")
-    )
-    stage1 = salted.withColumn("_rn", F.row_number().over(w1)).filter(
-        F.col("_rn") <= k
-    )
-    w2 = Window.partitionBy("lang").orderBy(
-        F.col("term_count").desc(), F.col("token")
-    )
-    return (
-        stage1.withColumn("rank", F.row_number().over(w2).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("lang", "token", "term_count", "doc_count", "rank")
-    )
+    return salted_top_k(
+        counts.select("*", salt("token")),
+        ["lang"], [F.col("term_count").desc(), F.col("token")], k,
+    ).select("lang", "token", "term_count", "doc_count", "rank")
 
 
 def sql_top_terms(corpus_sql: str) -> str:
@@ -1608,8 +1578,6 @@ TFIDF_TOP_K = 3
 
 def tfidf_keywords(corpus: DataFrame) -> DataFrame:
     """(doc_id, token, tf, df, tfidf, rank): top-k terms per document."""
-    from pyspark.sql.window import Window
-
     toks = (
         spread_for_compute(corpus)
         .select("doc_id", F.explode(F.expr(_SPARK_FTOKS)).alias("token"))
@@ -1628,14 +1596,10 @@ def tfidf_keywords(corpus: DataFrame) -> DataFrame:
             ),
         )
     )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("tfidf").desc(), F.col("token")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= TFIDF_TOP_K)
-        .select("doc_id", "token", "tf", "df", "tfidf", "rank")
-    )
+    return top_k(
+        scored, ["doc_id"], [F.col("tfidf").desc(), F.col("token")],
+        TFIDF_TOP_K,
+    ).select("doc_id", "token", "tf", "df", "tfidf", "rank")
 
 
 def sql_tfidf_keywords(corpus_sql: str) -> str:
@@ -2322,23 +2286,18 @@ def sql_quality_classifier(corpus_sql: str) -> str:
 # md5 top-60-bit fraction of doc_id, so the sample is reproducible and
 # oracle-checkable — no RNG state.
 #
-# Scale shape: one scan + the same salted two-stage top-n as the KMV
-# sketch (stage 1 ranks within (stratum, salt) shards so no task ever
-# sorts a whole stratum; stage 2 ranks the ≤ salts·n survivors). The
-# ranking key rounds to 12 with doc_id tie-break so both engines pick
-# the identical sample.
+# Scale shape: one scan + ``salted_top_k`` per stratum, as in the KMV
+# sketch, so no task ever sorts a whole stratum. The ranking key rounds
+# to 12 with doc_id tie-break so both engines pick the identical sample.
 # --------------------------------------------------------------------------
 
 WSAMPLE_N = 25
-WSAMPLE_SALTS = 16
 _WS_SCALE = 16**15
 
 
 def weighted_sample(corpus: DataFrame) -> DataFrame:
     """(lang, doc_id, n_chars, rank): per-language weighted sample of n
     docs, weight = n_chars (longer docs proportionally likelier)."""
-    from pyspark.sql.window import Window
-
     u = (
         F.conv(
             F.substring(
@@ -2356,22 +2315,11 @@ def weighted_sample(corpus: DataFrame) -> DataFrame:
         "doc_id",
         "n_chars",
         F.round(F.log(u) / F.col("n_chars"), 12).alias("_key"),
-        F.pmod(F.xxhash64(F.col("doc_id")), F.lit(WSAMPLE_SALTS)).alias(
-            "_salt"
-        ),
+        salt("doc_id"),
     )
-    w1 = Window.partitionBy("lang", "_salt").orderBy(
-        F.col("_key").desc(), "doc_id"
-    )
-    stage1 = keyed.withColumn("_rn", F.row_number().over(w1)).filter(
-        F.col("_rn") <= WSAMPLE_N
-    )
-    w2 = Window.partitionBy("lang").orderBy(F.col("_key").desc(), "doc_id")
-    return (
-        stage1.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= WSAMPLE_N)
-        .select("lang", "doc_id", "n_chars", "rank")
-    )
+    return salted_top_k(
+        keyed, ["lang"], [F.col("_key").desc(), "doc_id"], WSAMPLE_N
+    ).select("lang", "doc_id", "n_chars", "rank")
 
 
 def sql_weighted_sample(corpus_sql: str) -> str:
@@ -2521,22 +2469,9 @@ def zipf_fit(corpus: DataFrame) -> DataFrame:
         .groupBy("lang", "token")
         .agg(F.count("*").alias("cnt"))
     )
-    # salted two-stage top-N (see top_terms): the exact per-lang window
-    # ranks ≤ ZIPF_TOP·TOP_TERMS_SALTS survivors, never the vocabulary
-    salted = counts.withColumn(
-        "_salt", F.pmod(F.xxhash64("token"), F.lit(TOP_TERMS_SALTS))
-    )
-    w1 = Window.partitionBy("lang", "_salt").orderBy(
-        F.col("cnt").desc(), F.col("token")
-    )
-    stage1 = salted.withColumn("_rn", F.row_number().over(w1)).filter(
-        F.col("_rn") <= ZIPF_TOP
-    )
-    w = Window.partitionBy("lang").orderBy(
-        F.col("cnt").desc(), F.col("token")
-    )
-    ranked = stage1.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= ZIPF_TOP
+    ranked = salted_top_k(
+        counts.select("*", salt("token")),
+        ["lang"], [F.col("cnt").desc(), F.col("token")], ZIPF_TOP,
     )
     x = F.round(F.log(F.col("rank").cast("double")), 9).cast(
         "decimal(18,9)"

@@ -5,7 +5,7 @@ LSH-bucketed ANN), text analysis, and multimodal decode."""
 from __future__ import annotations
 
 from ..operators import components, dedup, multimodal, similarity, text_analysis
-from ..operators.util import staged_frame, staged_path
+from ..operators.util import staged_frame, staged_path, top_k
 from ..registry import register
 
 _CORPUS_SQL = dedup.sql_dup_corpus()
@@ -2837,7 +2837,6 @@ MIRROR_REVIEW_RATE = 0.2
 
 def _dedup_mirror_score(spark, sf_dir):
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     from ..catalog import load_table
 
@@ -2875,14 +2874,10 @@ def _dedup_mirror_score(spark, sf_dir):
         .groupBy("source", "counterpart")
         .agg(F.sum("_oc").cast("bigint").alias("counterpart_docs"))
     )
-    w = Window.partitionBy("source").orderBy(
-        F.col("counterpart_docs").desc(), "counterpart"
-    )
-    top = (
-        pairwise.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    top = top_k(
+        pairwise, ["source"],
+        [F.col("counterpart_docs").desc(), "counterpart"], 1,
+    ).drop("rank")
     rate = F.round(F.col("n_cross_dup") / F.col("n_docs"), 6)
     verdict = (
         F.when(rate >= MIRROR_DROP_RATE, F.lit("drop"))

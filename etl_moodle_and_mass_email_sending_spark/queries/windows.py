@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, load_tables
+from ..operators.util import top_k
 from ..registry import register
 from .tpch import _dec
 
@@ -24,18 +25,17 @@ from .tpch import _dec
 
 def _top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey")
-    )
-    return (
+    return top_k(
         o.select(
             "o_custkey",
             "o_orderkey",
             _dec(F.col("o_totalprice")).cast("double").alias("totalprice"),
-            F.row_number().over(w).alias("rank"),
-        )
-        .filter(F.col("rank") <= 3)
-    )
+            "o_totalprice",
+        ),
+        ["o_custkey"],
+        [F.col("o_totalprice").desc(), F.col("o_orderkey")],
+        3,
+    ).drop("o_totalprice")
 
 
 register(

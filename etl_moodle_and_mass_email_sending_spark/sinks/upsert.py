@@ -24,8 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
+from ..operators.util import top_k
 from ..streaming.replay import swap_store
 
 
@@ -46,12 +46,9 @@ def merge_upsert(
     writing both would break the one-row-per-key contract.
     """
     if version_col is not None:
-        w = Window.partitionBy(key).orderBy(F.col(version_col).desc())
-        updates = (
-            updates.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        updates = top_k(
+            updates, [key], [F.col(version_col).desc()], 1, "_rn"
+        ).drop("_rn")
     else:
         dup = (
             updates.groupBy(key)

@@ -22,10 +22,11 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.sketches import QSK_K, _hash_frac
+from ..operators.util import top_k
 from .replay import swap_store
 
 
@@ -47,13 +48,9 @@ def on_batch(store_dir: str, batch: DataFrame, batch_id: int) -> None:
         both = hashed if prior is None else (
             spark.read.parquet(prior).unionByName(hashed)
         )
-        w = Window.partitionBy("g").orderBy("_frac", "_k")
-        return (
-            both.dropDuplicates(["g", "_k"])
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= QSK_K)
-            .drop("_rn")
-        )
+        return top_k(
+            both.dropDuplicates(["g", "_k"]), ["g"], ["_frac", "_k"], QSK_K
+        ).drop("rank")
 
     def merged_counts(prior: str | None) -> DataFrame:
         if prior is None:

@@ -16,8 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
+from ..operators.util import top_k
 from ..sinks.upsert import merge_upsert
 
 
@@ -26,12 +26,7 @@ def on_batch(snapshot_dir: str, batch: DataFrame, batch_id: int) -> None:
     snapshot."""
     if not batch.take(1):
         return
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    latest = (
-        batch.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    latest = top_k(
+        batch, ["user_id"], [F.col("ts").desc(), F.col("event_id").desc()], 1
+    ).drop("rank")
     merge_upsert(batch.sparkSession, snapshot_dir, latest, key="user_id")

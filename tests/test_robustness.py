@@ -223,6 +223,45 @@ def test_minhash_index_built_once_per_corpus(spark, tmp_path, monkeypatch):
         f"pairs/{sf_dir}",
     }
 
+def test_staging_ledger_records_each_build_own_seconds(monkeypatch):
+    """A staged build that stages another key inside it records only its
+    own seconds: the nested build's seconds go to the nested key alone,
+    so the ledger's values sum to the time spent staging."""
+    import time
+
+    from etl_moodle_and_mass_email_sending_spark.operators import util
+
+    clock = [100.0]
+    monkeypatch.setattr(time, "perf_counter", lambda: clock[0])
+    session = types.SimpleNamespace(
+        sparkContext=types.SimpleNamespace(
+            applicationId="app-ledger-test", _jsc=object()
+        )
+    )
+
+    def inner():
+        clock[0] += 2.0
+        return "inner"
+
+    def outer():
+        clock[0] += 1.0
+        util._staged(session, ("ledger_inner",), inner)
+        util._staged(session, ("ledger_inner",), inner)  # a hit
+        clock[0] += 0.5
+        return "outer"
+
+    try:
+        assert util._staged(session, ("ledger_outer",), outer) == "outer"
+        ledger = util.staging_ledger()
+        assert ledger["ledger_outer"] == 1.5
+        assert ledger["ledger_inner"] == 2.0
+    finally:
+        for key in ("ledger_outer", "ledger_inner"):
+            util._STAGE.pop(("app-ledger-test", key), None)
+            util._STAGE_LOCKS.pop(("app-ledger-test", key), None)
+            util._STAGING_LEDGER.pop(key, None)
+
+
 def test_staged_frame_builds_once_under_concurrency(spark):
     """Staged builds are reached from driver thread pools (the
     ingest-receipt producers overlap), so the check-then-build sequence
