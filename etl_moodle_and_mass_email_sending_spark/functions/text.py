@@ -9,6 +9,10 @@ Design notes (scale):
 - ``fold_accents`` is a ``translate``-based fold (JVM-side,
   SQL-expressible, pinned semantics for goldens) over the Spanish
   alphabet the reference's NFKD fold targets. Reference: app.py:169–173.
+- The documents' word tokenizer (``WORDS`` …) and word n-gram expression
+  (``word_grams``) are Spark SQL text with ``SQL_*``/``sql_*`` DuckDB
+  twins: every text operator, dedup shingle and contamination gram
+  fan-out reads them from here.
 """
 
 from __future__ import annotations
@@ -41,6 +45,18 @@ assert len(ACCENT_SRC) == len(ACCENT_DST)
 # Characters stripped by normalize_username (reference app.py:176–187):
 # space, period, comma, single quote, double quote.
 USERNAME_STRIP = " .,'\""
+
+# The word tokenizer of the documents table's ``text`` column, as Spark
+# SQL text and its DuckDB twin: the lowercased whitespace split, the
+# same with empty tokens dropped (a blank text splits to ['']), and the
+# case-kept split. Every text operator, dedup shingle and gram fan-out
+# reads these, so a document has one word sequence on both engines.
+WORDS = r"split(trim(lower(text)), '\\s+')"
+WORDS_NONEMPTY = f"filter({WORDS}, t -> t != '')"
+CASED_WORDS = r"split(trim(text), '\\s+')"
+SQL_WORDS = r"string_split_regex(trim(lower(text)), '\s+')"
+SQL_WORDS_NONEMPTY = f"list_filter({SQL_WORDS}, t -> t <> '')"
+SQL_CASED_WORDS = r"string_split_regex(trim(text), '\s+')"
 
 # --------------------------------------------------------------------------
 # Spark side — Column expressions.
@@ -114,6 +130,31 @@ def local_part(col: Column) -> Column:
     return F.split(col.cast("string"), "@").getItem(0)
 
 
+def _bound(w: str) -> str:
+    # the gram body reads ``w`` n times per gram: an expression there
+    # (a tokenizer) would re-split the whole text for every read
+    if not w.isidentifier():
+        raise ValueError(
+            f"word_grams takes the name of a bound token array, not {w!r}"
+        )
+    return w
+
+
+def word_grams(w: str, n: int) -> str:
+    """Spark SQL: the word n-grams of the bound token array ``w``, in
+    order with repeats (``size(w) - n + 1`` of them, none when ``w`` is
+    shorter than ``n``). Bind the tokens once, as a projected column or
+    through ``transform(array(<tokens>), w -> ...)[0]``. The
+    ``element_at`` probes are O(1) and ANSI-safe: i + n − 1 ≤ size(w)
+    by the sequence bound."""
+    gram = ", ".join(f"element_at({_bound(w)}, i + {j})" for j in range(n))
+    return (
+        f"CASE WHEN size({w}) >= {n} THEN "
+        f"transform(sequence(1, size({w}) - {n} + 1), "
+        f"i -> concat_ws(' ', {gram})) ELSE array() END"
+    )
+
+
 # --------------------------------------------------------------------------
 # DuckDB side — SQL snippet generators (same constants).
 # --------------------------------------------------------------------------
@@ -168,3 +209,11 @@ def sql_title_case(expr: str) -> str:
 def sql_local_part(expr: str) -> str:
     return f"string_split(CAST({expr} AS VARCHAR), '@')[1]"
 
+
+def sql_word_grams(w: str, n: int) -> str:
+    gram = " || ' ' || ".join(f"{_bound(w)}[i + {j}]" for j in range(n))
+    return (
+        f"CASE WHEN len({w}) >= {n} THEN "
+        f"list_transform(generate_series(1, len({w}) - {n} + 1), "
+        f"i -> {gram}) ELSE [] END"
+    )

@@ -34,6 +34,13 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.hashing import SEED_SEP
+from ..functions.text import (
+    CASED_WORDS,
+    SQL_CASED_WORDS,
+    SQL_WORDS,
+    WORDS,
+    word_grams,
+)
 
 # Shared constants (Spark AND oracle SQL derive from these).
 MINHASH_K = 16  # signature length
@@ -65,7 +72,7 @@ def _copies(d: DataFrame) -> DataFrame:
     exact = d.filter(F.col("doc_id") % EXACT_COPY_MOD == 0).withColumn(
         "doc_id", F.col("doc_id") + EXACT_COPY_OFFSET
     )
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = F.expr(CASED_WORDS)
     # integer division on both engines (Spark `div` / DuckDB `//`) — a
     # float-divide + cast would round in DuckDB but truncate in Spark
     prefix = F.array_join(
@@ -74,9 +81,7 @@ def _copies(d: DataFrame) -> DataFrame:
             1,
             F.greatest(
                 F.lit(1),
-                F.expr(
-                    "(size(split(trim(text), '\\\\s+')) * 4) div 5"
-                ).cast("int"),
+                F.expr(f"(size({CASED_WORDS}) * 4) div 5").cast("int"),
             ),
         ),
         " ",
@@ -89,11 +94,10 @@ def _copies(d: DataFrame) -> DataFrame:
     return exact.unionByName(near)
 
 
-# the DuckDB twins of ``_copies``' token split and near-copy text
-_DUCK_WORDS = r"string_split_regex(trim(text), '\s+')"
+# the DuckDB twin of ``_copies``' near-copy text
 _DUCK_NEAR_TEXT = (
-    f"array_to_string(({_DUCK_WORDS})[1:greatest(1, "
-    f"CAST((len({_DUCK_WORDS}) * 4) // 5 AS INTEGER))], ' ')"
+    f"array_to_string(({SQL_CASED_WORDS})[1:greatest(1, "
+    f"CAST((len({SQL_CASED_WORDS}) * 4) // 5 AS INTEGER))], ' ')"
 )
 
 
@@ -141,7 +145,6 @@ def exact_dedup_groups(corpus: DataFrame) -> DataFrame:
 # Spark-SQL expression fragments (used via F.expr; identical shapes in the
 # DuckDB twins below, with dialect substitutions documented inline).
 
-_SPARK_TOKS = r"split(trim(lower(text)), '\\s+')"
 # Universal-hash MinHash: ONE portable md5 per shingle, then K affine
 # transforms h_j(x) = (a_j·x + b_j) mod p. The naive alternative — K
 # md5 calls per shingle — measured 151 s at sf0.1 vs ~10 s for this form;
@@ -169,11 +172,9 @@ def _mh_params() -> list[tuple[int, int]]:
 # text per read (cost quadratic in document length). Likewise sh_h's md5
 # pass would otherwise inline into all K array_min calls.
 _SPARK_SH = f"""
-    transform(array({_SPARK_TOKS}), tk ->
+    transform(array({WORDS}), tk ->
       CASE WHEN size(tk) >= {SHINGLE_N}
-      THEN array_distinct(transform(
-          sequence(1, size(tk) - {SHINGLE_N - 1}),
-          i -> concat_ws(' ', tk[i-1], tk[i], tk[i+1])))
+      THEN array_distinct({word_grams("tk", SHINGLE_N)})
       ELSE array(array_join(tk, ' '))
       END
     )[0]
@@ -189,13 +190,12 @@ _SPARK_SIG_OF_SH = f"""
     )[0]
 """
 
-_DUCK_TOKS = r"string_split_regex(trim(lower(text)), '\s+')"
 _DUCK_SHINGLES = f"""
-    CASE WHEN len({_DUCK_TOKS}) >= {SHINGLE_N}
+    CASE WHEN len({SQL_WORDS}) >= {SHINGLE_N}
     THEN list_distinct(list_transform(
-        generate_series(1, len({_DUCK_TOKS}) - {SHINGLE_N - 1}),
-        i -> ({_DUCK_TOKS})[i] || ' ' || ({_DUCK_TOKS})[i+1] || ' ' || ({_DUCK_TOKS})[i+2]))
-    ELSE [array_to_string({_DUCK_TOKS}, ' ')]
+        generate_series(1, len({SQL_WORDS}) - {SHINGLE_N - 1}),
+        i -> ({SQL_WORDS})[i] || ' ' || ({SQL_WORDS})[i+1] || ' ' || ({SQL_WORDS})[i+2]))
+    ELSE [array_to_string({SQL_WORDS}, ' ')]
     END
 """
 _DUCK_SHINGLE_HASH = f"""
@@ -345,12 +345,9 @@ def sql_minhash_lsh_pairs(corpus_sql: str) -> str:
 # --------------------------------------------------------------------------
 
 
-def ngram_jaccard_pairs(corpus: DataFrame, impl: str = "exploded") -> DataFrame:
-    # materialize shingle sets once before the self-join (same barrier
-    # rationale as simhash_pairs / minhash_index)
-    sh = _spread(corpus).select(
-        "doc_id", "lang", F.expr(_SPARK_SH).alias("sh")
-    ).localCheckpoint()
+def ngram_jaccard_pairs(sh: DataFrame, impl: str = "exploded") -> DataFrame:
+    """(doc_a, doc_b, jaccard) within language blocks over (doc_id, lang,
+    sh): a pinned ``minhash_index`` with each doc's ``lang`` joined on."""
     if impl == "block":
         # bounded-sample path (lsh_recall's ~500-doc truth stratum):
         # the O(block²) array_intersect cross join beats the exploded
@@ -449,7 +446,7 @@ def simhash_fingerprints(corpus: DataFrame) -> DataFrame:
     zip_with form allocates a 32-int array per token hash, while each
     filter() pass is a flat allocation-free scan inside codegen."""
     toks_h = (
-        f"array_distinct(transform({_SPARK_TOKS}, t -> "
+        f"array_distinct(transform({WORDS}, t -> "
         f"cast(conv(substring(md5(concat('S{SEED_SEP}', t)), 1, 8), 16, 10) as bigint)))"
     )
     bits = " + ".join(
@@ -464,7 +461,7 @@ def simhash_fingerprints(corpus: DataFrame) -> DataFrame:
 
 def sql_simhash_fingerprints(corpus_sql: str) -> str:
     toks_h = (
-        f"list_distinct(list_transform({_DUCK_TOKS}, t -> "
+        f"list_distinct(list_transform({SQL_WORDS}, t -> "
         f"CAST('0x' || substr(md5('S{SEED_SEP}' || t), 1, 8) AS BIGINT)))"
     )
     bits = " + ".join(
@@ -884,12 +881,7 @@ def new_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     fresh = (
         d.filter(F.col("doc_id") % NEW_DOC_MOD == 0)
         .withColumn("doc_id", F.col("doc_id") + NEW_CRAWL_OFFSET)
-        .withColumn(
-            "text",
-            F.array_join(
-                F.reverse(F.split(F.trim(F.col("text")), r"\s+")), " "
-            ),
-        )
+        .withColumn("text", F.array_join(F.reverse(F.expr(CASED_WORDS)), " "))
     )
     return _copies(d).unionByName(fresh)
 
@@ -903,7 +895,7 @@ def sql_new_crawl() -> str:
     FROM documents WHERE doc_id % {NEAR_COPY_MOD} = 0
     UNION ALL
     SELECT doc_id + {NEW_CRAWL_OFFSET},
-           array_to_string(list_reverse({_DUCK_WORDS}), ' '), lang
+           array_to_string(list_reverse({SQL_CASED_WORDS}), ' '), lang
     FROM documents WHERE doc_id % {NEW_DOC_MOD} = 0
     """
 
@@ -1017,12 +1009,10 @@ def sql_incremental_dedup(frozen_sql: str, incoming_sql: str) -> str:
 # --------------------------------------------------------------------------
 
 _CASCADE_TOKS = (
-    "CASE WHEN trim(text) = '' THEN 0 "
-    "ELSE size(split(trim(text), '\\\\s+')) END"
+    f"CASE WHEN trim(text) = '' THEN 0 ELSE size({CASED_WORDS}) END"
 )
 _CASCADE_TOKS_DUCK = (
-    "CASE WHEN trim(text) = '' THEN 0 "
-    r"ELSE len(string_split_regex(trim(text), '\s+')) END"
+    f"CASE WHEN trim(text) = '' THEN 0 ELSE len({SQL_CASED_WORDS}) END"
 )
 
 
@@ -1206,10 +1196,13 @@ def lsh_recall(corpus: DataFrame) -> DataFrame:
         )
         .select("doc_id", "text", "lang")
     )
-    truth = ngram_jaccard_pairs(stratum, impl="block")
-    found = ngram_jaccard_lsh_verified(
-        minhash_index(stratum).localCheckpoint()
-    ).select("doc_a", "doc_b", F.lit(1).alias("_hit"))
+    index = minhash_index(stratum).localCheckpoint()
+    truth = ngram_jaccard_pairs(
+        index.withColumn("lang", F.lit(RECALL_EVAL_LANG)), impl="block"
+    )
+    found = ngram_jaccard_lsh_verified(index).select(
+        "doc_a", "doc_b", F.lit(1).alias("_hit")
+    )
     bucket = (
         F.least(F.floor(F.col("jaccard") * 10), F.lit(9)) / 10.0
     ).alias("bucket")

@@ -31,6 +31,7 @@ from pyspark.sql.types import (
 )
 
 from ..catalog import load_table
+from ..functions.text import SQL_WORDS_NONEMPTY, WORDS_NONEMPTY
 
 MEDIA_TYPES = ("image", "audio", "video")
 PAYLOAD_REPEAT = 8  # 8 × 16 md5 bytes = 128-byte payload
@@ -692,10 +693,7 @@ def clip_align(media: DataFrame, docs: DataFrame) -> DataFrame:
 
     feats = extract_features(media.filter(F.col("media_type") == "image"))
     toks = docs.select(
-        "doc_id",
-        F.explode(
-            F.expr("filter(split(trim(lower(text)), '\\\\s+'), t -> t != '')")
-        ).alias("token"),
+        "doc_id", F.explode(F.expr(WORDS_NONEMPTY)).alias("token")
     )
     h = hash32(F.col("token"))
     temb = toks.select(
@@ -744,8 +742,7 @@ def sql_clip_align() -> str:
       SELECT * FROM ({sql_extract_features()}) WHERE media_type = 'image'
     ),
     toks AS (
-      SELECT doc_id, unnest(list_filter(
-        string_split_regex(trim(lower(text)), '\\s+'), t -> t <> '')) AS token
+      SELECT doc_id, unnest({SQL_WORDS_NONEMPTY}) AS token
       FROM documents
     ),
     temb AS (

@@ -19,8 +19,12 @@ Receipt schema (shared by every producer):
     sample_key bigint  — MIN flagged key (triage start), NULL if none
 plus a ``run_id`` partition column stamped at append time.
 
+The ingest monitors' section sheets (llm_ingest_health: schema drift,
+FK guard, mixture monitor, freshness) keep the same contract in a
+second table, ``INGEST``, where each monitor owns one ``section``.
+
 Idempotence contract: ``append_receipts`` is a dynamic-partition
-overwrite of exactly the (run_id, producer) partitions present in the
+overwrite of exactly the (run_id, owner) partitions present in the
 frame — re-running a producer for the same run replaces its own rows
 and touches nothing else. This is the same per-batch idempotence
 contract every foreachBatch sink in ``streaming/`` uses (batch_id
@@ -29,96 +33,71 @@ dynamic overwrite), applied to batch governance.
 100 TB shape: the receipts table is O(producers x runs) rows — metadata
 scale — no matter how big the audited tables are; producers carry the
 heavy scans/anti-joins, the rollup is a tiny-table read. The rollup
-resolves the LATEST run per (producer, reason) so stale runs never
-shadow fresh ones.
+resolves the LATEST run per (producer, reason) — per section in the
+ingest table — so stale runs never shadow fresh ones.
 """
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-RECEIPT_COLUMNS = [
+
+class ReceiptTable(NamedTuple):
+    """A receipts table's row columns, the partition column each producer
+    owns, and the key whose latest run the rollup keeps."""
+
+    columns: tuple[str, ...]
+    owner: str
+    latest_by: tuple[str, ...]
+
+
+GOVERNANCE = ReceiptTable(
+    (
+        "producer",
+        "reason",
+        "n_audited",
+        "n_flagged",
+        "flag_rate",
+        "sample_key",
+    ),
     "producer",
-    "reason",
-    "n_audited",
-    "n_flagged",
-    "flag_rate",
-    "sample_key",
-]
+    ("producer", "reason"),
+)
+# one monitor's section rows
+INGEST = ReceiptTable(
+    ("section", "key", "n", "metric", "flag"), "section", ("section",)
+)
 
 
-def append_receipts(df: DataFrame, path: str, run_id: str) -> None:
+def append_receipts(
+    table: ReceiptTable, df: DataFrame, path: str, run_id: str
+) -> None:
     """Append ``df``'s receipt rows to the shared table at ``path``,
-    stamped with ``run_id``. Idempotent per (run_id, producer): the
+    stamped with ``run_id``. Idempotent per (run_id, owner): the
     dynamic overwrite replaces exactly the partitions present in
     ``df`` and leaves every other producer's / run's rows intact."""
     (
-        df.select(*RECEIPT_COLUMNS)
+        df.select(*table.columns)
         .withColumn("run_id", F.lit(run_id))
         # receipts are a handful of rows per producer — one file per
         # partition keeps the table tidy without a shuffle of note
         .coalesce(1)
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("run_id", "producer")
+        .partitionBy("run_id", table.owner)
         .parquet(path)
     )
 
 
-def latest_rollup(spark: SparkSession, path: str) -> DataFrame:
-    """The governance rollup: every (producer, reason)'s receipt from
-    its LATEST run. A plain read + max-run resolve over a
-    metadata-scale table — no producer work re-runs here."""
+def latest_rollup(
+    table: ReceiptTable, spark: SparkSession, path: str
+) -> DataFrame:
+    """Every ``latest_by`` key's rows from its LATEST run — a plain read
+    + max-run resolve over a metadata-scale table; no producer work
+    re-runs here."""
     t = spark.read.parquet(path)
-    latest = t.groupBy("producer", "reason").agg(
-        F.max("run_id").alias("run_id")
-    )
-    return t.join(latest, ["producer", "reason", "run_id"]).select(
-        *RECEIPT_COLUMNS
-    )
-
-
-# --------------------------------------------------------------------------
-# Ingest-monitor receipts (round 13, VERDICT r12 item 3) — the SAME
-# producers-append / rollup-reads contract as the governance receipts
-# above, instantiated for the ingest monitors' section sheets
-# (llm_ingest_health): schema drift, FK guard, mixture monitor,
-# freshness. Each monitor appends its whole SECTION per run; the
-# rollup resolves the latest run per section, so a re-run of one
-# monitor replaces exactly its own rows.
-#
-# 100 TB shape: identical to the governance table — O(sections × keys
-# × runs) rows (keys = micro-batch chunks / feeds, a few dozen), no
-# matter how big the monitored streams are. The monitors carry the
-# heavy scans; llm_ingest_health is a tiny-table read.
-# --------------------------------------------------------------------------
-
-INGEST_RECEIPT_COLUMNS = ["section", "key", "n", "metric", "flag"]
-
-
-def append_ingest_receipts(df: DataFrame, path: str, run_id: str) -> None:
-    """Append one monitor's section rows (section, key, n, metric,
-    flag) to the shared ingest-receipts table at ``path``, stamped
-    with ``run_id``. Idempotent per (run_id, section): the dynamic
-    overwrite replaces exactly the (run_id, section) partitions
-    present in ``df`` — same contract as :func:`append_receipts`."""
-    (
-        df.select(*INGEST_RECEIPT_COLUMNS)
-        .withColumn("run_id", F.lit(run_id))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("run_id", "section")
-        .parquet(path)
-    )
-
-
-def latest_ingest_rollup(spark: SparkSession, path: str) -> DataFrame:
-    """Every section's rows from its LATEST run — a plain read +
-    max-run resolve; no monitor work re-runs here."""
-    t = spark.read.parquet(path)
-    latest = t.groupBy("section").agg(F.max("run_id").alias("run_id"))
-    return t.join(latest, ["section", "run_id"]).select(
-        *INGEST_RECEIPT_COLUMNS
-    )
+    latest = t.groupBy(*table.latest_by).agg(F.max("run_id").alias("run_id"))
+    return t.join(latest, [*table.latest_by, "run_id"]).select(*table.columns)

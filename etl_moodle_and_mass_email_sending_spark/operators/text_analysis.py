@@ -19,6 +19,16 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.hashing import SEED_SEP
+from ..functions.text import (
+    CASED_WORDS,
+    SQL_CASED_WORDS,
+    SQL_WORDS,
+    SQL_WORDS_NONEMPTY,
+    WORDS,
+    WORDS_NONEMPTY,
+    sql_word_grams,
+    word_grams,
+)
 from .util import salt, salted_top_k, spread_for_compute, top_k
 
 # Tiny built-in stopword lists (shared constants for both engines).
@@ -30,22 +40,19 @@ STOPWORDS = {
 PUNCT_CLASS = r"[.,;:!?]"  # explicit class — Java and RE2 agree on it
 FINGERPRINT_K = 4
 
-_SPARK_TOKS = r"split(trim(lower(text)), '\\s+')"
-_DUCK_TOKS = r"string_split_regex(trim(lower(text)), '\s+')"
-
 
 def _spark_hits(lang: str) -> str:
     arr = "array(" + ", ".join(f"'{w}'" for w in STOPWORDS[lang]) + ")"
-    return f"size(filter({_SPARK_TOKS}, t -> array_contains({arr}, t)))"
+    return f"size(filter({WORDS}, t -> array_contains({arr}, t)))"
 
 
 def _duck_hits(lang: str) -> str:
     arr = "[" + ", ".join(f"'{w}'" for w in STOPWORDS[lang]) + "]"
-    return f"len(list_filter({_DUCK_TOKS}, t -> list_contains({arr}, t)))"
+    return f"len(list_filter({SQL_WORDS}, t -> list_contains({arr}, t)))"
 
 
-_N_TOKS_SPARK = f"CASE WHEN trim(text) = '' THEN 0 ELSE size({_SPARK_TOKS}) END"
-_N_TOKS_DUCK = f"CASE WHEN trim(text) = '' THEN 0 ELSE len({_DUCK_TOKS}) END"
+_N_TOKS_SPARK = f"CASE WHEN trim(text) = '' THEN 0 ELSE size({WORDS}) END"
+_N_TOKS_DUCK = f"CASE WHEN trim(text) = '' THEN 0 ELSE len({SQL_WORDS}) END"
 
 
 # BPE-ish pre-tokenizer (GPT-2-style segmentation, RE2/Java-portable: no
@@ -193,7 +200,7 @@ def fingerprints(corpus: DataFrame) -> DataFrame:
       sequence in document order (order-SENSITIVE → exact-content key).
     Identical docs agree on both; shuffled docs agree only on the first."""
     toks_h_ordered = (
-        f"transform({_SPARK_TOKS}, t -> "
+        f"transform({WORDS}, t -> "
         f"cast(conv(substring(md5(concat('F{SEED_SEP}', t)), 1, 8), 16, 10) as bigint))"
     )
     toks_h_sorted = "array_sort(array_distinct(_th))"
@@ -223,7 +230,7 @@ def fingerprints(corpus: DataFrame) -> DataFrame:
 
 def sql_fingerprints(corpus_sql: str) -> str:
     toks_h_ordered = (
-        f"list_transform({_DUCK_TOKS}, t -> "
+        f"list_transform({SQL_WORDS}, t -> "
         f"CAST('0x' || substr(md5('F{SEED_SEP}' || t), 1, 8) AS BIGINT))"
     )
     toks_h_sorted = f"list_sort(list_distinct({toks_h_ordered}))"
@@ -264,7 +271,7 @@ def chunk_documents(
     ride along the fan-out so callers don't re-join the corpus (a re-join
     would recompute the upstream subtree — Catalyst has no CSE across
     join branches)."""
-    toks = f"split(trim(text), '\\\\s+')"
+    toks = CASED_WORDS
     n = f"size({toks})"
     # number of chunks: 1 + ceil(max(0, n - chunk)/stride)
     n_chunks = (
@@ -291,7 +298,7 @@ def chunk_documents(
 
 
 def sql_chunk_documents(corpus_sql: str) -> str:
-    toks = r"string_split_regex(trim(text), '\s+')"
+    toks = SQL_CASED_WORDS
     n = f"len({toks})"
     n_chunks = (
         f"(1 + CAST(ceil(greatest(0, {n} - {CHUNK_TOKENS}) / "
@@ -375,7 +382,7 @@ def pii_density(corpus: DataFrame) -> DataFrame:
             + "', 0)"
         )
     ).cast("bigint")
-    n_tokens = F.size(F.expr(_SPARK_FTOKS)).cast("bigint")
+    n_tokens = F.size(F.expr(WORDS_NONEMPTY)).cast("bigint")
     rolled = (
         corpus.select(
             "source",
@@ -428,7 +435,7 @@ def sql_pii_density(corpus_sql: str) -> str:
              len(regexp_extract_all(
                  regexp_replace(text, '{email}', '[EMAIL]', 'g'),
                  '{phone}')) AS p,
-             len({_DUCK_FTOKS}) AS t
+             len({SQL_WORDS_NONEMPTY}) AS t
       FROM ({corpus_sql})
     ),
     rolled AS (
@@ -485,11 +492,7 @@ def repetition_stats(corpus: DataFrame) -> DataFrame:
     dup_frac = f"""CASE WHEN size({lines}) = 0 THEN 0.0
         ELSE round(1.0 - CAST(size(array_distinct({lines})) AS DOUBLE)
                    / size({lines}), 6) END"""
-    bigrams = f"""transform(array({_SPARK_TOKS}), tk ->
-        CASE WHEN size(tk) >= 2
-        THEN transform(sequence(1, size(tk) - 1),
-                       i -> concat_ws(' ', tk[i-1], tk[i]))
-        ELSE array() END)[0]"""
+    bigrams = f"transform(array({WORDS}), tk -> {word_grams('tk', 2)})[0]"
     top_frac = f"""transform(array({bigrams}), bg ->
         CASE WHEN size(bg) = 0 THEN 0.0
         ELSE round(CAST(array_max(transform(array_distinct(bg),
@@ -510,7 +513,7 @@ def sql_repetition_stats(corpus_sql: str) -> str:
                    / len({lines}), 6) END"""
     return f"""
     WITH toks AS (
-      SELECT doc_id, text, {_DUCK_TOKS} AS tk FROM ({corpus_sql})
+      SELECT doc_id, text, {SQL_WORDS} AS tk FROM ({corpus_sql})
     ),
     bg AS (
       SELECT doc_id, text,
@@ -641,40 +644,32 @@ DECON_NGRAM = 4
 DECON_BENCH_MOD = 97  # doc_id % 97 == 0 → the ~1% held-out benchmark slice
 
 
-def gram_stream(corpus: DataFrame, n: int = DECON_NGRAM) -> DataFrame:
-    """(doc_id, n_grams, gram): the exploded word-n-gram stream of the
-    corpus — the shared fan-out of decontaminate and the streaming
-    decontaminate filter. Grams build with O(1) ``element_at`` probes
-    inside the Generate (see decontaminate's plan notes); n_grams is
-    the scalar stream length (tokens − n + 1), so no per-doc gram array
-    is ever materialized."""
-    words = corpus.select("doc_id", F.expr(_SPARK_TOKS).alias("w"))
-    gram_i = "concat_ws(' ', " + ", ".join(
-        f"element_at(w, i + {j})" for j in range(n)
-    ) + ")"
-    gen = (
-        f"CASE WHEN size(w) >= {n} THEN "
-        f"transform(sequence(1, size(w) - {n} + 1), i -> {gram_i}) "
-        f"ELSE array() END"
-    )
+def gram_stream(corpus: DataFrame, *keep: str) -> DataFrame:
+    """(doc_id, *keep, n_grams, gram): the exploded DECON_NGRAM-word gram
+    stream of the corpus — the one fan-out of the contamination family
+    and the streaming decontaminate filter. The tokens (functions/text.py
+    ``WORDS``) bind once as a projected column and the grams build from
+    it with ``word_grams`` inside the Generate (see decontaminate's plan
+    notes); n_grams is the scalar stream length (tokens − n + 1), so no
+    per-doc gram array is ever materialized. ``keep`` columns ride along
+    the fan-out."""
+    words = corpus.select("doc_id", *keep, F.expr(WORDS).alias("w"))
     return words.select(
         "doc_id",
-        (F.size("w") - (n - 1)).cast("bigint").alias("n_grams"),
-        F.explode(F.expr(gen)).alias("gram"),
+        *keep,
+        (F.size("w") - (DECON_NGRAM - 1)).cast("bigint").alias("n_grams"),
+        F.explode(F.expr(word_grams("w", DECON_NGRAM))).alias("gram"),
     )
 
 
-def decontaminate(
-    corpus: DataFrame,
-    n: int = DECON_NGRAM,
-    bench_mod: int = DECON_BENCH_MOD,
-) -> DataFrame:
+def decontaminate(corpus: DataFrame) -> DataFrame:
     """(doc_id, n_hit_ngrams, n_grams, contamination) for every TRAINING
-    document (doc_id % bench_mod != 0) sharing ≥1 n-gram occurrence with
-    the benchmark slice (doc_id % bench_mod == 0). Counts are over the
-    doc's gram STREAM (n_grams = tokens − n + 1), so the denominator is a
-    scalar and no per-doc gram array is ever materialized. Clean docs are
-    absent — downstream drops contaminated ids with an anti-join.
+    document (doc_id % DECON_BENCH_MOD != 0) sharing ≥1 n-gram occurrence
+    with the benchmark slice (doc_id % DECON_BENCH_MOD == 0). Counts are
+    over the doc's gram STREAM (n_grams = tokens − n + 1), so the
+    denominator is a scalar and no per-doc gram array is ever
+    materialized. Clean docs are absent — downstream drops contaminated
+    ids with an anti-join.
 
     Plan notes (measured, sf0.1): the gram fan-out is the expensive step
     and higher-order lambdas run OUTSIDE whole-stage codegen, so
@@ -682,16 +677,15 @@ def decontaminate(
     ``slice`` copies, and (b) the transform is the Generate's OWN input —
     as a standalone Project, Catalyst pushes the computation below the
     repartition exchange into the (single-task at test scale) scan stage:
-    24× slower. The repartition spreads short-doc skew before the fan-out;
-    ``element_at(w, i + j)`` is ANSI-safe because i + n − 1 ≤ size(w) by
-    the sequence bound."""
-    grams = gram_stream(spread_for_compute(corpus), n)
+    24× slower. The repartition spreads short-doc skew before the
+    fan-out."""
+    grams = gram_stream(spread_for_compute(corpus))
     bench = (
-        grams.filter(F.col("doc_id") % bench_mod == 0)
+        grams.filter(F.col("doc_id") % DECON_BENCH_MOD == 0)
         .select("gram")
         .distinct()
     )
-    train = grams.filter(F.col("doc_id") % bench_mod != 0)
+    train = grams.filter(F.col("doc_id") % DECON_BENCH_MOD != 0)
     return (
         train.join(F.broadcast(bench), "gram")
         .groupBy("doc_id")
@@ -709,14 +703,9 @@ def decontaminate(
 
 
 def sql_decontaminate(corpus_sql: str) -> str:
-    gram_i = " || ' ' || ".join(f"w[i + {j}]" for j in range(DECON_NGRAM))
-    grams = (
-        f"CASE WHEN len(w) >= {DECON_NGRAM} THEN "
-        f"list_transform(generate_series(1, len(w) - {DECON_NGRAM} + 1), "
-        f"i -> {gram_i}) ELSE [] END"
-    )
+    grams = sql_word_grams("w", DECON_NGRAM)
     return f"""
-    WITH tok AS (SELECT doc_id, {_DUCK_TOKS} AS w FROM ({corpus_sql})),
+    WITH tok AS (SELECT doc_id, {SQL_WORDS} AS w FROM ({corpus_sql})),
     e AS (
       SELECT doc_id, CAST(len(w) - {DECON_NGRAM - 1} AS BIGINT) AS n_grams,
              unnest({grams}) AS gram
@@ -737,17 +726,12 @@ def sql_decontaminate(corpus_sql: str) -> str:
 DECON_SCRUB_THRESHOLD = 0.03  # drop a train doc at >=3% gram overlap
 
 
-def decontaminate_execute(
-    corpus: DataFrame,
-    n: int = DECON_NGRAM,
-    bench_mod: int = DECON_BENCH_MOD,
-    threshold: float = DECON_SCRUB_THRESHOLD,
-) -> DataFrame:
+def decontaminate_execute(corpus: DataFrame) -> DataFrame:
     """(source, n_train_docs, n_dropped, tokens_kept, tokens_dropped,
     drop_rate): the decontamination SCRUB EXECUTOR's per-source receipt
     (round 12) — ``decontaminate`` detects, this applies the release
     decision (drop every training doc whose benchmark-gram overlap is
-    at or above ``threshold``) and reports what shipping the scrub
+    at or above DECON_SCRUB_THRESHOLD) and reports what shipping the scrub
     costs each source in documents and tokens. Sources with zero drops
     appear with 0 (left join + coalesce — the dedup_source_shift
     lesson).
@@ -759,12 +743,12 @@ def decontaminate_execute(
     a per-source aggregation — no second gram pass, no new corpus
     shuffle beyond the groupBy(source)."""
     flagged = (
-        decontaminate(corpus.select("doc_id", "text"), n, bench_mod)
-        .filter(F.col("contamination") >= threshold)
+        decontaminate(corpus.select("doc_id", "text"))
+        .filter(F.col("contamination") >= DECON_SCRUB_THRESHOLD)
         .select("doc_id", F.lit(1).alias("_drop"))
     )
     train = corpus.filter(
-        F.col("doc_id") % bench_mod != 0
+        F.col("doc_id") % DECON_BENCH_MOD != 0
     ).select(
         "doc_id", "source", F.expr(_N_TOKS_SPARK).alias("_t")
     )
@@ -852,29 +836,12 @@ def sql_decontaminate_execute(corpus_sql: str) -> str:
 # --------------------------------------------------------------------------
 
 
-def contamination_direction(
-    corpus: DataFrame,
-    n: int = DECON_NGRAM,
-    bench_mod: int = DECON_BENCH_MOD,
-) -> DataFrame:
+def contamination_direction(corpus: DataFrame) -> DataFrame:
     """(source, n_train_docs, n_contam_train_docs, train_doc_rate,
     n_contam_eval_docs, eval_doc_rate, direction_ratio) per source with
     ≥1 contaminated training document; ``corpus`` must carry
     (doc_id, text, source)."""
-    words = spread_for_compute(corpus).select(
-        "doc_id", "source", F.expr(_SPARK_TOKS).alias("w")
-    )
-    gram_i = "concat_ws(' ', " + ", ".join(
-        f"element_at(w, i + {j})" for j in range(n)
-    ) + ")"
-    gen = (
-        f"CASE WHEN size(w) >= {n} THEN "
-        f"transform(sequence(1, size(w) - {n} + 1), i -> {gram_i}) "
-        f"ELSE array() END"
-    )
-    grams = words.select(
-        "doc_id", "source", F.explode(F.expr(gen)).alias("gram")
-    )
+    grams = gram_stream(spread_for_compute(corpus), "source")
     # The gram fan-out is RECOMPUTED per probe (codegen'd scan work)
     # rather than materialized: checkpointing the full exploded
     # (doc_id, source, gram) stream is an n-grams×corpus block-storage
@@ -883,7 +850,7 @@ def contamination_direction(
     # IS persisted is the bounded frame every probe shares: the eval
     # slice's distinct (doc_id, gram) pairs — eval-suite-sized at any
     # corpus scale, by construction of the benchmark split.
-    is_bench = F.col("doc_id") % bench_mod == 0
+    is_bench = F.col("doc_id") % DECON_BENCH_MOD == 0
     bench_grams = (
         grams.filter(is_bench)
         .select("doc_id", "gram")
@@ -904,7 +871,7 @@ def contamination_direction(
         .agg(F.count("*").cast("bigint").alias("n_contam_train_docs"))
     )
     n_train = corpus.filter(
-        F.col("doc_id") % bench_mod != 0
+        F.col("doc_id") % DECON_BENCH_MOD != 0
     ).groupBy("source").agg(
         F.count("*").cast("bigint").alias("n_train_docs")
     )
@@ -937,15 +904,10 @@ def contamination_direction(
 
 
 def sql_contamination_direction(corpus_sql: str) -> str:
-    gram_i = " || ' ' || ".join(f"w[i + {j}]" for j in range(DECON_NGRAM))
-    grams = (
-        f"CASE WHEN len(w) >= {DECON_NGRAM} THEN "
-        f"list_transform(generate_series(1, len(w) - {DECON_NGRAM} + 1), "
-        f"i -> {gram_i}) ELSE [] END"
-    )
+    grams = sql_word_grams("w", DECON_NGRAM)
     return f"""
     WITH tok AS (
-      SELECT doc_id, source, {_DUCK_TOKS} AS w FROM ({corpus_sql})
+      SELECT doc_id, source, {SQL_WORDS} AS w FROM ({corpus_sql})
     ),
     e AS (SELECT doc_id, source, unnest({grams}) AS gram FROM tok),
     bench_grams AS (
@@ -1010,7 +972,7 @@ def unigram_logprob(corpus: DataFrame) -> DataFrame:
     probability of the doc's tokens under the whole-corpus distribution.
     Docs with zero non-blank tokens are absent (nothing to score)."""
     toks = corpus.select(
-        "doc_id", F.explode(F.expr(_SPARK_TOKS)).alias("token")
+        "doc_id", F.explode(F.expr(WORDS)).alias("token")
     ).filter(F.col("token") != "")
     freq = toks.groupBy("token").agg(F.count("*").alias("n"))
     total = freq.agg(F.sum("n").alias("total"))
@@ -1032,7 +994,7 @@ def sql_unigram_logprob(corpus_sql: str) -> str:
     WITH toks AS (
       SELECT doc_id, t.token
       FROM ({corpus_sql}),
-           LATERAL (SELECT unnest({_DUCK_TOKS}) AS token) t
+           LATERAL (SELECT unnest({SQL_WORDS}) AS token) t
       WHERE t.token <> ''
     ),
     freq AS (SELECT token, count(*) AS n FROM toks GROUP BY token),
@@ -1202,7 +1164,7 @@ def bm25_topk(
     docs = corpus.select(
         "doc_id",
         F.expr(_N_TOKS_SPARK).cast("double").alias("dl"),
-        F.explode(F.expr(_SPARK_TOKS)).alias("term"),
+        F.explode(F.expr(WORDS)).alias("term"),
     )
     stats = corpus.select(
         F.count("*").alias("n_docs"),
@@ -1265,7 +1227,7 @@ def sql_bm25_topk(corpus_sql: str) -> str:
     WITH corpus AS ({corpus_sql}),
     docs AS (
       SELECT doc_id, CAST({_N_TOKS_DUCK} AS DOUBLE) AS dl, t.term
-      FROM corpus, LATERAL (SELECT unnest({_DUCK_TOKS}) AS term) t
+      FROM corpus, LATERAL (SELECT unnest({SQL_WORDS}) AS term) t
     ),
     stats AS (
       SELECT count(*) AS n_docs, avg({_N_TOKS_DUCK}) AS avgdl FROM corpus
@@ -1319,7 +1281,7 @@ def top_terms(corpus: DataFrame, k: int = TOP_TERMS_K) -> DataFrame:
     toks = corpus.select(
         "lang",
         "doc_id",
-        F.explode(F.expr(_SPARK_TOKS)).alias("token"),
+        F.explode(F.expr(WORDS)).alias("token"),
     ).filter(F.col("token") != "")
     counts = toks.groupBy("lang", "token").agg(
         F.count("*").alias("term_count"),
@@ -1336,7 +1298,7 @@ def sql_top_terms(corpus_sql: str) -> str:
     WITH toks AS (
       SELECT lang, doc_id, t.token
       FROM ({corpus_sql}),
-           LATERAL (SELECT unnest({_DUCK_TOKS}) AS token) t
+           LATERAL (SELECT unnest({SQL_WORDS}) AS token) t
       WHERE t.token <> ''
     ),
     counts AS (
@@ -1371,16 +1333,13 @@ def sql_top_terms(corpus_sql: str) -> str:
 # the strategy to AQE (broadcast when it fits, shuffle join when not).
 # --------------------------------------------------------------------------
 
-_SPARK_FTOKS = f"filter({_SPARK_TOKS}, t -> t != '')"
-_DUCK_FTOKS = f"list_filter({_DUCK_TOKS}, t -> t <> '')"
-
 
 def bigram_logprob(corpus: DataFrame) -> DataFrame:
     """(doc_id, n_bigrams, avg_logprob): mean ln(count(w1 w2)/count(w1·))
     over the doc's adjacent pairs. Docs with <2 tokens are absent.
     Tokens are whitespace-split, so the ' ' pair separator is unambiguous.
     """
-    toked = corpus.select("doc_id", F.expr(_SPARK_FTOKS).alias("_ts"))
+    toked = corpus.select("doc_id", F.expr(WORDS_NONEMPTY).alias("_ts"))
     n1 = F.greatest(F.size("_ts") - 1, F.lit(0))
     grams = (
         spread_for_compute(toked)
@@ -1417,7 +1376,7 @@ def bigram_logprob(corpus: DataFrame) -> DataFrame:
 def sql_bigram_logprob(corpus_sql: str) -> str:
     return f"""
     WITH toked AS (
-      SELECT doc_id, {_DUCK_FTOKS} AS ts FROM ({corpus_sql})
+      SELECT doc_id, {SQL_WORDS_NONEMPTY} AS ts FROM ({corpus_sql})
     ),
     grams AS (
       SELECT doc_id,
@@ -1523,11 +1482,10 @@ BOILERPLATE_MIN_DOCS = 2
 def boilerplate_ngrams(corpus: DataFrame) -> DataFrame:
     """(ngram, n_docs, n_total): every n-token span appearing in at
     least BOILERPLATE_MIN_DOCS distinct documents."""
+    # the tokens bind once per doc: the span body reads them per span
     spans = F.expr(
-        f"CASE WHEN size({_SPARK_FTOKS}) >= {BOILERPLATE_N} THEN "
-        f"transform(sequence(1, size({_SPARK_FTOKS}) - {BOILERPLATE_N} + 1), "
-        f"i -> array_join(slice({_SPARK_FTOKS}, i, {BOILERPLATE_N}), ' ')) "
-        "ELSE array() END"
+        f"transform(array({WORDS_NONEMPTY}), tk -> "
+        f"{word_grams('tk', BOILERPLATE_N)})[0]"
     )
     return (
         spread_for_compute(corpus)
@@ -1545,7 +1503,7 @@ def sql_boilerplate_ngrams(corpus_sql: str) -> str:
     return f"""
     WITH spans AS (
       SELECT doc_id, s.ngram
-      FROM (SELECT doc_id, {_DUCK_FTOKS} AS toks FROM ({corpus_sql})),
+      FROM (SELECT doc_id, {SQL_WORDS_NONEMPTY} AS toks FROM ({corpus_sql})),
            LATERAL (
              SELECT unnest(list_transform(range(1, len(toks) - {BOILERPLATE_N} + 2),
                     i -> array_to_string(toks[i:i + {BOILERPLATE_N} - 1], ' ')))
@@ -1580,7 +1538,7 @@ def tfidf_keywords(corpus: DataFrame) -> DataFrame:
     """(doc_id, token, tf, df, tfidf, rank): top-k terms per document."""
     toks = (
         spread_for_compute(corpus)
-        .select("doc_id", F.explode(F.expr(_SPARK_FTOKS)).alias("token"))
+        .select("doc_id", F.explode(F.expr(WORDS_NONEMPTY)).alias("token"))
     )
     tf = toks.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
     n_docs = corpus.agg(F.count("*").alias("_n"))
@@ -1606,7 +1564,7 @@ def sql_tfidf_keywords(corpus_sql: str) -> str:
     return f"""
     WITH toks AS (
       SELECT doc_id, t.token
-      FROM (SELECT doc_id, {_DUCK_FTOKS} AS ts FROM ({corpus_sql})),
+      FROM (SELECT doc_id, {SQL_WORDS_NONEMPTY} AS ts FROM ({corpus_sql})),
            LATERAL (SELECT unnest(ts) AS token) t
     ),
     tf AS (
@@ -1655,16 +1613,16 @@ def _gopher_exprs(dialect: str) -> dict[str, str]:
     """The rule expressions, built per SQL dialect from shared constants so
     the two dialects cannot drift."""
     if dialect == "spark":
-        ws, size, flt = _SPARK_FTOKS, "size", "filter"
+        ws, size, flt = WORDS_NONEMPTY, "size", "filter"
         lines = "filter(split(text, '\\n'), l -> trim(l) != '')"
         starts, ends = "startswith", "endswith"
         rx = "w rlike '[a-zA-Z]'"
         hits = _spark_hits("en")
         # Spark SQL literals process backslash escapes → '\\s+'; DuckDB
-        # literals don't → '\s+' (same split as _SPARK_TOKS/_DUCK_TOKS)
+        # literals don't → '\s+' (same split as WORDS/SQL_WORDS)
         nospace = "regexp_replace(trim(lower(text)), '\\\\s+', '')"
     else:
-        ws, size, flt = _DUCK_FTOKS, "len", "list_filter"
+        ws, size, flt = SQL_WORDS_NONEMPTY, "len", "list_filter"
         lines = "list_filter(string_split(text, chr(10)), l -> trim(l) <> '')"
         starts, ends = "starts_with", "ends_with"
         rx = "regexp_matches(w, '[a-zA-Z]')"
@@ -1776,7 +1734,7 @@ def dsir_weights(corpus: DataFrame) -> DataFrame:
     from ..functions.hashing import hash32_expr_lambda
 
     toked = corpus.select(
-        "doc_id", F.col("lang"), F.expr(_SPARK_FTOKS).alias("_ts")
+        "doc_id", F.col("lang"), F.expr(WORDS_NONEMPTY).alias("_ts")
     )
     n1 = F.greatest(F.size("_ts") - 1, F.lit(0))
     h = hash32_expr_lambda(_DSIR_SEED)
@@ -1821,7 +1779,7 @@ def sql_dsir_weights(corpus_sql: str) -> str:
     h = sql_hash32_lambda(_DSIR_SEED, "ts[i] || ' ' || ts[i + 1]")
     return f"""
     WITH toked AS (
-      SELECT doc_id, lang = 'en' AS tgt, {_DUCK_FTOKS} AS ts
+      SELECT doc_id, lang = 'en' AS tgt, {SQL_WORDS_NONEMPTY} AS ts
       FROM ({corpus_sql})
     ),
     grams AS (
@@ -1882,7 +1840,7 @@ def cdc_chunks(corpus: DataFrame) -> DataFrame:
 
     toks = corpus.select(
         "doc_id",
-        F.posexplode(F.expr(_SPARK_FTOKS)).alias("pos", "tok"),
+        F.posexplode(F.expr(WORDS_NONEMPTY)).alias("pos", "tok"),
     )
     bounded = toks.withColumn(
         "_b", (F.pmod(hash32(F.col("tok"), seed=_CDC_SEED), F.lit(CDC_DIVISOR)) == 0).cast("int")
@@ -1923,7 +1881,7 @@ def sql_cdc_chunks(corpus_sql: str) -> str:
     return f"""
     WITH toks AS (
       SELECT doc_id, t.pos - 1 AS pos, t.tok
-      FROM (SELECT doc_id, {_DUCK_FTOKS} AS ts FROM ({corpus_sql})),
+      FROM (SELECT doc_id, {SQL_WORDS_NONEMPTY} AS ts FROM ({corpus_sql})),
            LATERAL (
              SELECT unnest(ts) AS tok,
                     generate_subscripts(ts, 1) AS pos
@@ -1966,7 +1924,7 @@ def token_entropy(corpus: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, n_distinct, entropy): token-level Shannon
     entropy per document (empty docs drop — no distribution to measure)."""
     toks = corpus.select(
-        "doc_id", F.explode(F.expr(_SPARK_TOKS)).alias("token")
+        "doc_id", F.explode(F.expr(WORDS)).alias("token")
     ).filter(F.col("token") != "")
     cnt = toks.groupBy("doc_id", "token").agg(F.count("*").alias("_c"))
     return (
@@ -1991,7 +1949,7 @@ def sql_token_entropy(corpus_sql: str) -> str:
     return f"""
     WITH toks AS (
       SELECT doc_id, t.tok AS token
-      FROM (SELECT doc_id, {_DUCK_TOKS} AS ts FROM ({corpus_sql})),
+      FROM (SELECT doc_id, {SQL_WORDS} AS ts FROM ({corpus_sql})),
            LATERAL (SELECT unnest(ts) AS tok) t
       WHERE t.tok <> ''
     ),
@@ -2024,7 +1982,7 @@ def bpe_merge_candidates(corpus: DataFrame, top_n: int = BPE_TOP_N) -> DataFrame
     """(pair, n_occurrences): the ``top_n`` most frequent adjacent
     character pairs within tokens — BPE's first-iteration merge table."""
     words = corpus.select(
-        F.explode(F.expr(_SPARK_TOKS)).alias("w")
+        F.explode(F.expr(WORDS)).alias("w")
     ).filter(F.length("w") >= 2)
     pairs = words.select(
         F.explode(
@@ -2043,7 +2001,7 @@ def sql_bpe_merge_candidates(corpus_sql: str) -> str:
     return f"""
     WITH words AS (
       SELECT t.tok AS w
-      FROM (SELECT {_DUCK_TOKS} AS ts FROM ({corpus_sql})),
+      FROM (SELECT {SQL_WORDS} AS ts FROM ({corpus_sql})),
            LATERAL (SELECT unnest(ts) AS tok) t
       WHERE length(t.tok) >= 2
     ),
@@ -2099,7 +2057,7 @@ def substring_dedup(corpus: DataFrame) -> DataFrame:
     # referenced three times below; Spark's CollapseProject keeps the
     # expensive alias materialized instead of inlining it (the same
     # tokenize-once pattern as fingerprints).
-    toks_h = f"transform({_SPARK_FTOKS}, t -> {hash32_expr_lambda(83)})"
+    toks_h = f"transform({WORDS_NONEMPTY}, t -> {hash32_expr_lambda(83)})"
     wins_expr = (
         f"CASE WHEN size(_th) >= {SUBSTR_K} THEN "
         f"transform(sequence(1, size(_th) - {SUBSTR_K} + 1), "
@@ -2149,7 +2107,7 @@ def sql_substring_dedup(corpus_sql: str) -> str:
     return f"""
     WITH toks AS (
       SELECT doc_id,
-             list_transform({_DUCK_FTOKS}, t -> {sql_hash32_lambda(83)})
+             list_transform({SQL_WORDS_NONEMPTY}, t -> {sql_hash32_lambda(83)})
                AS th
       FROM ({corpus_sql})
     ),
@@ -2225,7 +2183,7 @@ def quality_classifier(corpus: DataFrame) -> DataFrame:
     w = _qc_weights()
     arr = F.array(*[F.lit(x) for x in w])
     toks = corpus.select(
-        "doc_id", F.explode(F.expr(_SPARK_FTOKS)).alias("token")
+        "doc_id", F.explode(F.expr(WORDS_NONEMPTY)).alias("token")
     )
     wint = F.element_at(
         arr, (hash32(F.col("token")) % QC_BUCKETS).cast("int") + 1
@@ -2259,7 +2217,7 @@ def sql_quality_classifier(corpus_sql: str) -> str:
     arr = "[" + ", ".join(str(x) for x in w) + "]"
     return f"""
     WITH toks AS (
-      SELECT doc_id, unnest({_DUCK_FTOKS}) AS token FROM ({corpus_sql})
+      SELECT doc_id, unnest({SQL_WORDS_NONEMPTY}) AS token FROM ({corpus_sql})
     ),
     weighted AS (
       SELECT doc_id,
@@ -2364,11 +2322,9 @@ def ngram_novelty(corpus: DataFrame) -> DataFrame:
     """(doc_id, n_trigrams, n_unique, novelty): distinct-trigram count,
     how many of those occur in no other doc, and their ratio (NULL for
     docs shorter than 3 tokens)."""
-    tris = f"""CASE WHEN size({_SPARK_FTOKS}) >= 3
-        THEN transform(array({_SPARK_FTOKS}), tk ->
-               transform(sequence(2, size(tk) - 1),
-                         i -> concat_ws(' ', tk[i-2], tk[i-1], tk[i])))[0]
-        ELSE array() END"""
+    tris = (
+        f"transform(array({WORDS_NONEMPTY}), tk -> {word_grams('tk', 3)})[0]"
+    )
     tri_h = (
         "CAST(conv(substring(md5(tri), 1, 15), 16, 10) AS BIGINT)"
     )
@@ -2406,7 +2362,7 @@ def ngram_novelty(corpus: DataFrame) -> DataFrame:
 def sql_ngram_novelty(corpus_sql: str) -> str:
     return f"""
     WITH toks AS (
-      SELECT doc_id, {_DUCK_FTOKS} AS tk FROM ({corpus_sql})
+      SELECT doc_id, {SQL_WORDS_NONEMPTY} AS tk FROM ({corpus_sql})
     ),
     tris AS (
       SELECT doc_id,
@@ -2464,7 +2420,7 @@ def zipf_fit(corpus: DataFrame) -> DataFrame:
     ln(freq) ~ ln(rank) over the top-ZIPF_TOP terms."""
     counts = (
         corpus.select(
-            "lang", F.explode(F.expr(_SPARK_FTOKS)).alias("token")
+            "lang", F.explode(F.expr(WORDS_NONEMPTY)).alias("token")
         )
         .groupBy("lang", "token")
         .agg(F.count("*").alias("cnt"))
@@ -2508,7 +2464,7 @@ def sql_zipf_fit(corpus_sql: str) -> str:
     return f"""
     WITH counts AS (
       SELECT lang, t.token, count(*) AS cnt
-      FROM (SELECT lang, {_DUCK_FTOKS} AS toks FROM ({corpus_sql})),
+      FROM (SELECT lang, {SQL_WORDS_NONEMPTY} AS toks FROM ({corpus_sql})),
            LATERAL (SELECT unnest(toks) AS token) t
       GROUP BY 1, 2
     ),
@@ -2633,7 +2589,7 @@ def heaps_law(corpus: DataFrame) -> DataFrame:
             )
             .cast("int")
             .alias("dec"),
-            F.explode(F.expr(_SPARK_FTOKS)).alias("token"),
+            F.explode(F.expr(WORDS_NONEMPTY)).alias("token"),
         )
     )
     per_dec = toks.groupBy("dec").agg(F.count("*").alias("_n_toks"))
@@ -2707,7 +2663,7 @@ def sql_heaps_law(corpus_sql: str) -> str:
                   AS INTEGER) AS dec,
              t.token
       FROM ({corpus_sql}) CROSS JOIN mx,
-           LATERAL (SELECT unnest({_DUCK_FTOKS}) AS token) t
+           LATERAL (SELECT unnest({SQL_WORDS_NONEMPTY}) AS token) t
     ),
     per_dec AS (SELECT dec, count(*) AS n_toks FROM toks GROUP BY 1),
     first_seen AS (
@@ -2772,7 +2728,7 @@ def token_burstiness(corpus: DataFrame) -> DataFrame:
     """(token, n_occurrences, n_docs, burstiness) for the BURSTY_TOP
     most frequent tokens."""
     occ = corpus.select(
-        "doc_id", F.explode(F.expr(_SPARK_FTOKS)).alias("token")
+        "doc_id", F.explode(F.expr(WORDS_NONEMPTY)).alias("token")
     )
     stats = occ.groupBy("token").agg(
         F.count("*").alias("n_occurrences"),
@@ -2801,7 +2757,7 @@ def sql_token_burstiness(corpus_sql: str) -> str:
     return f"""
     WITH occ AS (
       SELECT doc_id, t.token
-      FROM (SELECT doc_id, {_DUCK_FTOKS} AS toks FROM ({corpus_sql})),
+      FROM (SELECT doc_id, {SQL_WORDS_NONEMPTY} AS toks FROM ({corpus_sql})),
            LATERAL (SELECT unnest(toks) AS token) t
     ),
     stats AS (
@@ -2839,7 +2795,7 @@ def js_divergence_sources(corpus: DataFrame) -> DataFrame:
     (a < b)."""
     spark = corpus.sparkSession
     occ = corpus.select(
-        "source", F.explode(F.expr(_SPARK_FTOKS)).alias("token")
+        "source", F.explode(F.expr(WORDS_NONEMPTY)).alias("token")
     )
     totals_tok = occ.groupBy("token").agg(F.count("*").alias("_n"))
     # top-vocab via orderBy+limit (TakeOrderedAndProject): no
@@ -2915,7 +2871,7 @@ def sql_js_divergence_sources(corpus_sql: str) -> str:
     return f"""
     WITH occ AS (
       SELECT source, t.token
-      FROM (SELECT source, {_DUCK_FTOKS} AS toks FROM ({corpus_sql})),
+      FROM (SELECT source, {SQL_WORDS_NONEMPTY} AS toks FROM ({corpus_sql})),
            LATERAL (SELECT unnest(toks) AS token) t
     ),
     top AS (
@@ -2976,7 +2932,7 @@ def oov_rate_by_source(corpus: DataFrame) -> DataFrame:
     """(source, n_tokens, n_oov, oov_rate) against the corpus-wide
     top-OOV_VOCAB vocabulary."""
     occ = corpus.select(
-        "source", F.explode(F.expr(_SPARK_FTOKS)).alias("token")
+        "source", F.explode(F.expr(WORDS_NONEMPTY)).alias("token")
     )
     totals = occ.groupBy("token").agg(F.count("*").alias("_n"))
     # top-vocab via orderBy+limit (TakeOrderedAndProject): no
@@ -3010,7 +2966,7 @@ def sql_oov_rate_by_source(corpus_sql: str) -> str:
     return f"""
     WITH occ AS (
       SELECT source, t.token
-      FROM (SELECT source, {_DUCK_FTOKS} AS toks FROM ({corpus_sql})),
+      FROM (SELECT source, {SQL_WORDS_NONEMPTY} AS toks FROM ({corpus_sql})),
            LATERAL (SELECT unnest(toks) AS token) t
     ),
     top AS (
@@ -3045,7 +3001,7 @@ def lexical_diversity(corpus: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, n_types, ttr, hapax_ratio); docs with zero
     non-blank tokens are absent (nothing to measure)."""
     toks = corpus.select(
-        "doc_id", F.explode(F.expr(_SPARK_TOKS)).alias("token")
+        "doc_id", F.explode(F.expr(WORDS)).alias("token")
     ).filter(F.col("token") != "")
     per_word = toks.groupBy("doc_id", "token").agg(
         F.count("*").alias("_n")
@@ -3067,7 +3023,7 @@ def sql_lexical_diversity(corpus_sql: str) -> str:
     WITH toks AS (
       SELECT doc_id, t.token
       FROM ({corpus_sql}),
-           LATERAL (SELECT unnest({_DUCK_TOKS}) AS token) t
+           LATERAL (SELECT unnest({SQL_WORDS}) AS token) t
       WHERE t.token <> ''
     ),
     per_word AS (
@@ -3151,23 +3107,30 @@ def sql_tokenizer_fertility(corpus_sql: str) -> str:
 
 LINE_WORDS = 16
 LINE_DUP_MIN = 3
+# segment i of the bound token array _w, and the segment indices
+_LINE_SEG = f"slice(_w, i * {LINE_WORDS} + 1, {LINE_WORDS})"
+_LINE_SEGS = f"sequence(0, CAST(ceil(size(_w) / {LINE_WORDS}.0) AS INT) - 1)"
+
+
+def _line_words(corpus: DataFrame, *keep: str) -> DataFrame:
+    """(doc_id, *keep, _w): the non-empty token array of every doc with
+    at least one token, spread for the interpreted segment fan-out."""
+    return spread_for_compute(
+        corpus.select("doc_id", *keep, F.expr(WORDS_NONEMPTY).alias("_w"))
+        .filter(F.size("_w") > 0)
+    )
 
 
 def line_dedup(corpus: DataFrame) -> DataFrame:
     """(doc_id, n_segments, n_dup_segments, dup_ratio): share of the
     doc's LINE_WORDS-word segments occurring >= LINE_DUP_MIN times
     corpus-wide."""
-    words = F.expr(f"filter({_SPARK_TOKS}, t -> t <> '')")
-    base = spread_for_compute(
-        corpus.select("doc_id", words.alias("_w")).filter(
-            F.size("_w") > 0
-        )
-    )
     segs_expr = F.expr(
-        f"transform(sequence(0, CAST(ceil(size(_w) / {LINE_WORDS}.0) AS INT) - 1), "
-        f"i -> md5(array_join(slice(_w, i * {LINE_WORDS} + 1, {LINE_WORDS}), ' ')))"
+        f"transform({_LINE_SEGS}, i -> md5(array_join({_LINE_SEG}, ' ')))"
     )
-    segs = base.select("doc_id", F.explode(segs_expr).alias("_h"))
+    segs = _line_words(corpus).select(
+        "doc_id", F.explode(segs_expr).alias("_h")
+    )
     freq = segs.groupBy("_h").agg(F.count("*").alias("_n"))
     return (
         segs.join(freq, "_h")
@@ -3195,7 +3158,7 @@ def sql_line_dedup(corpus_sql: str) -> str:
     return f"""
     WITH words AS (
       SELECT doc_id,
-             list_filter({_DUCK_TOKS}, t -> t <> '') AS w
+             {SQL_WORDS_NONEMPTY} AS w
       FROM ({corpus_sql})
     ),
     nz AS (SELECT * FROM words WHERE len(w) > 0),
@@ -3300,7 +3263,7 @@ PMI_TOP_K = 20
 def pmi_collocations(corpus: DataFrame) -> DataFrame:
     """(bigram, n_pair, pmi): top-PMI_TOP_K collocations by rounded PMI
     (ties by bigram)."""
-    toked = corpus.select("doc_id", F.expr(_SPARK_FTOKS).alias("_ts"))
+    toked = corpus.select("doc_id", F.expr(WORDS_NONEMPTY).alias("_ts"))
     nb = F.greatest(F.size("_ts") - 1, F.lit(0))
     grams = spread_for_compute(toked).select(
         F.explode(
@@ -3375,7 +3338,7 @@ def pmi_collocations(corpus: DataFrame) -> DataFrame:
 def sql_pmi_collocations(corpus_sql: str) -> str:
     return f"""
     WITH toked AS (
-      SELECT doc_id, {_DUCK_FTOKS} AS ts FROM ({corpus_sql})
+      SELECT doc_id, {SQL_WORDS_NONEMPTY} AS ts FROM ({corpus_sql})
     ),
     grams AS (
       SELECT g.bigram FROM toked,
@@ -3439,7 +3402,7 @@ def idf_drift(corpus: DataFrame) -> DataFrame:
         .select(
             "doc_id",
             (F.col("doc_id") % 2).alias("_c"),
-            F.explode(F.expr(_SPARK_FTOKS)).alias("token"),
+            F.explode(F.expr(WORDS_NONEMPTY)).alias("token"),
         )
         .distinct()
     )
@@ -3491,7 +3454,7 @@ def sql_idf_drift(corpus_sql: str) -> str:
     WITH base AS ({corpus_sql}),
     occ AS (
       SELECT DISTINCT doc_id, doc_id % 2 AS c, t.token
-      FROM (SELECT doc_id, {_DUCK_FTOKS} AS ts FROM base),
+      FROM (SELECT doc_id, {SQL_WORDS_NONEMPTY} AS ts FROM base),
            LATERAL (SELECT unnest(ts) AS token) t
     ),
     nd AS (
@@ -3543,7 +3506,7 @@ def vocab_coverage(corpus: DataFrame) -> DataFrame:
 
     counts = (
         spread_for_compute(corpus)
-        .select(F.explode(F.expr(_SPARK_FTOKS)).alias("token"))
+        .select(F.explode(F.expr(WORDS_NONEMPTY)).alias("token"))
         .groupBy("token")
         .agg(F.count("*").alias("_n"))
     )
@@ -3585,7 +3548,7 @@ def sql_vocab_coverage(corpus_sql: str) -> str:
     return f"""
     WITH counts AS (
       SELECT t.token, count(*) AS n
-      FROM (SELECT {_DUCK_FTOKS} AS ts FROM ({corpus_sql})),
+      FROM (SELECT {SQL_WORDS_NONEMPTY} AS ts FROM ({corpus_sql})),
            LATERAL (SELECT unnest(ts) AS token) t
       GROUP BY 1
     ),
@@ -3679,24 +3642,16 @@ CONTAM_PAIR_MIN = 2  # >= 2 distinct shared grams = a reportable pair
 CONTAM_GRAM_MAX_DF = 8  # grams in more eval docs than this are boilerplate
 
 
-def contamination_pairs(
-    corpus: DataFrame,
-    n: int = DECON_NGRAM,
-    bench_mod: int = DECON_BENCH_MOD,
-    min_shared: int = CONTAM_PAIR_MIN,
-    max_df: int = CONTAM_GRAM_MAX_DF,
-) -> DataFrame:
+def contamination_pairs(corpus: DataFrame) -> DataFrame:
     """(train_doc_id, eval_doc_id, n_shared_grams): training/benchmark
-    doc pairs sharing >= ``min_shared`` distinct rare n-grams."""
-    grams = gram_stream(spread_for_compute(corpus), n).select(
-        "doc_id", "gram"
-    )
-    is_bench = F.col("doc_id") % bench_mod == 0
+    doc pairs sharing >= CONTAM_PAIR_MIN distinct rare n-grams."""
+    grams = gram_stream(spread_for_compute(corpus)).select("doc_id", "gram")
+    is_bench = F.col("doc_id") % DECON_BENCH_MOD == 0
     bench = grams.filter(is_bench).distinct()
     rare = (
         bench.groupBy("gram")
         .agg(F.count("*").alias("_df"))
-        .filter(F.col("_df") <= max_df)
+        .filter(F.col("_df") <= CONTAM_GRAM_MAX_DF)
         .select("gram")
     )
     evidence = bench.join(rare, "gram").select(
@@ -3707,7 +3662,7 @@ def contamination_pairs(
     # full (doc_id, gram) corpus (doc_id in the key makes it corpus-
     # sized, unlike contamination_direction's vocab-bounded (source,
     # gram) distincts); joining first means only the MATCHED rows
-    # (bounded by |eval grams| * max_df, the operator's own fan-out
+    # (bounded by |eval grams| * CONTAM_GRAM_MAX_DF, the operator's fan-out
     # bound) ever reach a shuffle, and ``countDistinct("gram")`` per
     # pair collapses within-doc gram repeats — result-identical to
     # distinct-then-count(*).  The broadcast hint is sound because a
@@ -3724,19 +3679,14 @@ def contamination_pairs(
         .agg(
             F.countDistinct("gram").cast("bigint").alias("n_shared_grams")
         )
-        .filter(F.col("n_shared_grams") >= min_shared)
+        .filter(F.col("n_shared_grams") >= CONTAM_PAIR_MIN)
     )
 
 
 def sql_contamination_pairs(corpus_sql: str) -> str:
-    gram_i = " || ' ' || ".join(f"w[i + {j}]" for j in range(DECON_NGRAM))
-    grams = (
-        f"CASE WHEN len(w) >= {DECON_NGRAM} THEN "
-        f"list_transform(generate_series(1, len(w) - {DECON_NGRAM} + 1), "
-        f"i -> {gram_i}) ELSE [] END"
-    )
+    grams = sql_word_grams("w", DECON_NGRAM)
     return f"""
-    WITH tok AS (SELECT doc_id, {_DUCK_TOKS} AS w FROM ({corpus_sql})),
+    WITH tok AS (SELECT doc_id, {SQL_WORDS} AS w FROM ({corpus_sql})),
     e AS (SELECT DISTINCT doc_id, unnest({grams}) AS gram FROM tok),
     bench AS (SELECT * FROM e WHERE doc_id % {DECON_BENCH_MOD} = 0),
     rare AS (
@@ -4114,7 +4064,7 @@ def readability(corpus: DataFrame) -> DataFrame:
     aggregation on source — the report is |sources| rows."""
     corpus = spread_for_compute(corpus)
     words = F.greatest(
-        F.lit(1), F.size(F.expr(_SPARK_FTOKS)).cast("bigint")
+        F.lit(1), F.size(F.expr(WORDS_NONEMPTY)).cast("bigint")
     )
     sents = F.greatest(
         F.lit(1),
@@ -4161,7 +4111,7 @@ def sql_readability(corpus_sql: str) -> str:
     return f"""
     WITH per_doc AS (
       SELECT source,
-             greatest(1, len({_DUCK_FTOKS})) AS w,
+             greatest(1, len({SQL_WORDS_NONEMPTY})) AS w,
              greatest(1, len(regexp_extract_all(text, '{_SENT_RE}')))
                AS s,
              greatest(1, len(regexp_extract_all(lower(text),
@@ -4945,19 +4895,8 @@ def split_leakage(corpus: DataFrame) -> DataFrame:
         ")), 1, 8), 16, 10) as bigint) % 100"
     )
     is_val = bucket >= 95
-    words = spread_for_compute(corpus).select(
-        "doc_id", is_val.alias("_v"), F.expr(_SPARK_TOKS).alias("w")
-    )
-    gram_i = "concat_ws(' ', " + ", ".join(
-        f"element_at(w, i + {j})" for j in range(DECON_NGRAM)
-    ) + ")"
-    gen = (
-        f"CASE WHEN size(w) >= {DECON_NGRAM} THEN "
-        f"transform(sequence(1, size(w) - {DECON_NGRAM} + 1), i -> {gram_i}) "
-        f"ELSE array() END"
-    )
-    grams = words.select(
-        "doc_id", "_v", F.explode(F.expr(gen)).alias("gram")
+    grams = gram_stream(
+        spread_for_compute(corpus).withColumn("_v", is_val), "_v"
     )
     val_grams = (
         grams.filter(F.col("_v")).select("doc_id", "gram").distinct()
@@ -4998,19 +4937,14 @@ def split_leakage(corpus: DataFrame) -> DataFrame:
 
 
 def sql_split_leakage(corpus_sql: str) -> str:
-    gram_i = " || ' ' || ".join(f"w[i + {j}]" for j in range(DECON_NGRAM))
-    grams = (
-        f"CASE WHEN len(w) >= {DECON_NGRAM} THEN "
-        f"list_transform(generate_series(1, len(w) - {DECON_NGRAM} + 1), "
-        f"i -> {gram_i}) ELSE [] END"
-    )
+    grams = sql_word_grams("w", DECON_NGRAM)
     is_val = (
         "CAST('0x' || substr(md5('SPLIT' || CAST(doc_id AS VARCHAR)), "
         "1, 8) AS BIGINT) % 100 >= 95"
     )
     return f"""
     WITH tok AS (
-      SELECT doc_id, {is_val} AS v, {_DUCK_TOKS} AS w
+      SELECT doc_id, {is_val} AS v, {SQL_WORDS} AS w
       FROM ({corpus_sql})
     ),
     e AS (SELECT doc_id, v, unnest({grams}) AS gram FROM tok),
@@ -5066,21 +5000,11 @@ def sql_split_leakage(corpus_sql: str) -> str:
 def boilerplate_scrub(corpus: DataFrame) -> DataFrame:
     """(source, n_docs, n_docs_touched, segs_total, segs_removed,
     words_removed, removal_rate) over (doc_id, text, source)."""
-    words = F.expr(f"filter({_SPARK_TOKS}, t -> t <> '')")
-    base = spread_for_compute(
-        corpus.select("doc_id", "source", words.alias("_w")).filter(
-            F.size("_w") > 0
-        )
-    )
     segs_expr = F.expr(
-        f"transform(sequence(0, CAST(ceil(size(_w) / {LINE_WORDS}.0) "
-        f"AS INT) - 1), "
-        f"i -> struct("
-        f"md5(array_join(slice(_w, i * {LINE_WORDS} + 1, {LINE_WORDS}), "
-        f"' ')) AS h, "
-        f"size(slice(_w, i * {LINE_WORDS} + 1, {LINE_WORDS})) AS wc))"
+        f"transform({_LINE_SEGS}, i -> struct("
+        f"md5(array_join({_LINE_SEG}, ' ')) AS h, size({_LINE_SEG}) AS wc))"
     )
-    segs = base.select(
+    segs = _line_words(corpus, "source").select(
         "doc_id", "source", F.explode(segs_expr).alias("_s")
     ).select("doc_id", "source", F.col("_s.h").alias("_h"), F.col("_s.wc").alias("_wc"))
     freq = segs.groupBy("_h").agg(F.count("*").alias("_n"))
@@ -5113,7 +5037,7 @@ def sql_boilerplate_scrub(corpus_sql: str) -> str:
     return f"""
     WITH words AS (
       SELECT doc_id, source,
-             list_filter({_DUCK_TOKS}, t -> t <> '') AS w
+             {SQL_WORDS_NONEMPTY} AS w
       FROM ({corpus_sql})
     ),
     nz AS (SELECT * FROM words WHERE len(w) > 0),
@@ -6115,9 +6039,7 @@ def bloom_decontaminate(corpus: DataFrame) -> DataFrame:
     docs per source. ``corpus`` carries (doc_id, text, source)."""
     nwords = BLOOM_M // _BLOOM_WORD
     src = corpus.select("doc_id", "source")
-    grams = gram_stream(
-        spread_for_compute(corpus.select("doc_id", "text")), DECON_NGRAM
-    )
+    grams = gram_stream(spread_for_compute(corpus.select("doc_id", "text")))
     bench = (
         grams.filter(F.col("doc_id") % DECON_BENCH_MOD == 0)
         .select("gram")
@@ -6209,12 +6131,7 @@ def bloom_decontaminate(corpus: DataFrame) -> DataFrame:
 
 def sql_bloom_decontaminate(corpus_sql: str) -> str:
     nwords = BLOOM_M // _BLOOM_WORD
-    gram_i = " || ' ' || ".join(f"w[i + {j}]" for j in range(DECON_NGRAM))
-    grams = (
-        f"CASE WHEN len(w) >= {DECON_NGRAM} THEN "
-        f"list_transform(generate_series(1, len(w) - {DECON_NGRAM} + 1), "
-        f"i -> {gram_i}) ELSE [] END"
-    )
+    grams = sql_word_grams("w", DECON_NGRAM)
     pos = [_bloom_pos_duck(i) for i in range(BLOOM_K)]
     probe = " AND ".join(
         f"((m.mask[CAST({p} // {_BLOOM_WORD} AS INT) + 1]"
@@ -6222,7 +6139,7 @@ def sql_bloom_decontaminate(corpus_sql: str) -> str:
         for p in pos
     )
     return f"""
-    WITH tok AS (SELECT doc_id, {_DUCK_TOKS} AS w FROM ({corpus_sql})),
+    WITH tok AS (SELECT doc_id, {SQL_WORDS} AS w FROM ({corpus_sql})),
     e AS (SELECT doc_id, unnest({grams}) AS gram FROM tok),
     bench AS (SELECT DISTINCT gram FROM e
               WHERE doc_id % {DECON_BENCH_MOD} = 0),
@@ -6322,8 +6239,8 @@ def watermark_detect(corpus: DataFrame) -> DataFrame:
     green = _wm_green_spark("p", "c")
     n_green = F.expr(
         f"aggregate(zip_with("
-        f"slice({_SPARK_TOKS}, 1, size({_SPARK_TOKS}) - 1), "
-        f"slice({_SPARK_TOKS}, 2, size({_SPARK_TOKS}) - 1), "
+        f"slice({WORDS}, 1, size({WORDS}) - 1), "
+        f"slice({WORDS}, 2, size({WORDS}) - 1), "
         f"(p, c) -> case when {green} then 1 else 0 end), "
         "0, (a, x) -> a + x)"
     )
@@ -6384,7 +6301,7 @@ def sql_watermark_detect(corpus_sql: str) -> str:
     green = _wm_green_duck("toks[i - 1]", "toks[i]")
     return f"""
     WITH toked AS (
-      SELECT source, {_N_TOKS_DUCK} AS n, {_DUCK_TOKS} AS toks
+      SELECT source, {_N_TOKS_DUCK} AS n, {SQL_WORDS} AS toks
       FROM ({corpus_sql})
     ),
     perdoc AS (

@@ -4,6 +4,7 @@ LSH-bucketed ANN), text analysis, and multimodal decode."""
 
 from __future__ import annotations
 
+from ..functions.text import SQL_WORDS, WORDS
 from ..operators import components, dedup, multimodal, similarity, text_analysis
 from ..operators.util import staged_frame, staged_path, top_k
 from ..registry import register
@@ -69,9 +70,17 @@ register(
     dedup.sql_minhash_lsh_pairs(_CORPUS_SQL),
 )
 
+
+def _ngram_jaccard(spark, sf_dir):
+    langs = dedup.dup_corpus(spark, sf_dir).select("doc_id", "lang")
+    return dedup.ngram_jaccard_pairs(
+        _staged_index(spark, sf_dir).join(langs, "doc_id")
+    )
+
+
 register(
     "dedup_ngram_jaccard",
-    lambda spark, sf_dir: dedup.ngram_jaccard_pairs(dedup.dup_corpus(spark, sf_dir)),
+    _ngram_jaccard,
     dedup.sql_ngram_jaccard_pairs(_CORPUS_SQL),
 )
 
@@ -1040,9 +1049,7 @@ def _fuzzy_match(spark, sf_dir):
 
     vocab = (
         _docs(spark, sf_dir)
-        .select(
-            F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("token")
-        )
+        .select(F.explode(F.expr(WORDS)).alias("token"))
         .filter(F.length("token") >= 4)
         .distinct()
     )
@@ -1055,7 +1062,7 @@ def _fuzzy_match(spark, sf_dir):
 def _sql_fuzzy_match() -> str:
     vocab = f"""
       SELECT DISTINCT t.token
-      FROM (SELECT string_split_regex(trim(lower(text)), '\\s+') AS ts
+      FROM (SELECT {SQL_WORDS} AS ts
             FROM ({_DOCS_SQL})),
            LATERAL (SELECT unnest(ts) AS token) t
       WHERE length(t.token) >= 4
@@ -3396,12 +3403,16 @@ def _rel_quarantine_rollup(spark, sf_dir):
         for _, frame in _quarantine_receipt_frames(
             spark, sf_dir
         ).items():
-            rcpt.append_receipts(frame, table, run_id="run-000001")
+            rcpt.append_receipts(
+                rcpt.GOVERNANCE, frame, table, run_id="run-000001"
+            )
 
     import os
 
     base = staged_path(spark, ("receipts_table", sf_dir), _build)
-    return rcpt.latest_rollup(spark, os.path.join(base, "receipts"))
+    return rcpt.latest_rollup(
+        rcpt.GOVERNANCE, spark, os.path.join(base, "receipts")
+    )
 
 
 def _sql_rel_quarantine_rollup() -> str:
@@ -4110,7 +4121,7 @@ def _ingest_receipt_producers(spark, sf_dir):
 
 def _ingest_receipt_frames(spark, sf_dir):
     """One (section, key, n, metric, flag) receipt frame per ingest
-    monitor — each is one append_ingest_receipts call (the PRODUCER
+    monitor — each is one append_receipts(INGEST, ...) call (the PRODUCER
     side of the materialized ingest-receipts table)."""
     return {
         name: thunk()
@@ -4216,8 +4227,8 @@ def _ingest_health(spark, sf_dir):
             )
             frame = thunk()
             with append_lock:
-                rcpt.append_ingest_receipts(
-                    frame, table, run_id=INGEST_RUN_ID
+                rcpt.append_receipts(
+                    rcpt.INGEST, frame, table, run_id=INGEST_RUN_ID
                 )
             spark.sparkContext.setJobDescription(None)
 
@@ -4230,8 +4241,8 @@ def _ingest_health(spark, sf_dir):
             )
 
     base = staged_path(spark, ("ingest_receipts_table", sf_dir), _build)
-    body = rcpt.latest_ingest_rollup(
-        spark, os.path.join(base, "ingest_receipts")
+    body = rcpt.latest_rollup(
+        rcpt.INGEST, spark, os.path.join(base, "ingest_receipts")
     )
     verdict = body.agg(
         F.coalesce(F.sum(F.col("flag").cast("int")), F.lit(0))

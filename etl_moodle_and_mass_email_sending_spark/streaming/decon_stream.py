@@ -5,12 +5,14 @@ stream, the held-out benchmark's distinct n-gram set is a STATIC frame
 training document is stamped with its hit count and a drop flag.
 
 Architecture: ``foreachBatch`` — each micro-batch runs the exact batch
-pipeline (gram fan-out → broadcast join against the static bench set →
-per-doc hit count → left join back so CLEAN docs emit too) and appends
-its verdicts. Documents arrive whole (a doc never spans batches), so
-per-doc results are complete within the batch that carried the doc and
-the emission is independent of how the replay batches — which is what
-makes the exact batch oracle in queries/streaming_q.py hold.
+pipeline (``gram_stream``'s fan-out, built from functions/text.py's
+``WORDS`` and ``word_grams`` → broadcast join against the static bench
+set → per-doc hit count → left join back so CLEAN docs emit too) and
+appends its verdicts. Documents arrive whole (a doc never spans
+batches), so per-doc results are complete within the batch that carried
+the doc and the emission is independent of how the replay batches —
+which is what makes the exact batch oracle in queries/streaming_q.py
+hold.
 
 100 TB shape: the bench set broadcasts into every batch join (no
 shuffle of stream data for the join); the per-doc count partial-
@@ -24,11 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.text_analysis import (
-    _SPARK_TOKS,
-    DECON_NGRAM,
-    gram_stream,
-)
+from ..functions.text import WORDS
+from ..operators.text_analysis import DECON_NGRAM, gram_stream
 from .replay import land_batch
 
 
@@ -41,7 +40,7 @@ def on_batch(
     plain append would duplicate the verdicts of a batch retried after a
     partial write)."""
     hits = (
-        gram_stream(batch, DECON_NGRAM)
+        gram_stream(batch)
         .join(F.broadcast(bench_grams), "gram")
         .groupBy("doc_id")
         .agg(F.count("*").alias("n_hit_ngrams"))
@@ -51,7 +50,7 @@ def on_batch(
     # oracle); short docs clamp to 0
     docs = batch.select(
         "doc_id",
-        F.greatest(F.size(F.expr(_SPARK_TOKS)) - (DECON_NGRAM - 1), F.lit(0))
+        F.greatest(F.size(F.expr(WORDS)) - (DECON_NGRAM - 1), F.lit(0))
         .cast("bigint")
         .alias("n_grams"),
     )

@@ -30,14 +30,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators import dedup
+from .replay import land_batch
 
 
 def on_batch(
     store_dir: str, out_dir: str, batch: DataFrame, batch_id: int
 ) -> None:
-    """Filter one (doc_id, text, ...) micro-batch. Decisions land in
-    ``out_dir`` as (doc_id, n_earlier_dups, dropped); the band/signature
-    index accumulates under ``store_dir``."""
+    """Filter one (doc_id, text, ...) micro-batch. Decisions land in the
+    batch's own partition of ``out_dir`` as (doc_id, n_earlier_dups,
+    dropped), so a batch re-run before its offset commit replaces its
+    verdicts instead of appending them twice; the band/signature index
+    accumulates under ``store_dir``."""
     bands_dir = os.path.join(store_dir, "bands")
     sigs_dir = os.path.join(store_dir, "sigs")
     if not batch.take(1):
@@ -96,7 +99,7 @@ def on_batch(
             ),
         )
     )
-    decisions.write.mode("append").parquet(out_dir)
+    land_batch(decisions, batch_id, out_dir)
     # grow the index AFTER the decisions are computed: a doc never
     # matches itself, and a replayed batch (failure recovery)
     # recomputes identical decisions because the candidate filter

@@ -16,6 +16,7 @@ map-side before the shuffle for the windowed count/sum.
 
 from __future__ import annotations
 
+import uuid
 from collections.abc import Iterable, Iterator
 
 import pandas as pd
@@ -29,6 +30,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from ..operators.util import scratch_dir
 
 __all__ = [
     "stream_events",
@@ -266,14 +269,11 @@ def state_shuffle(spark: SparkSession, n: int):
 
 
 def run_to_memory_sink(
-    stream_df: DataFrame,
-    query_name: str,
-    checkpoint_dir: str,
-    output_mode: str = "append",
+    stream_df: DataFrame, output_mode: str = "append"
 ) -> DataFrame:
     """Drain a bounded stream (availableNow) into a memory sink and return
     the collected table — the test/verification harness for streaming
-    plans.
+    plans. Each call gets its own query name and checkpoint directory.
 
     Every caller here is a STATEFUL stream (watermarked agg /
     dropDuplicates / stream-stream join), so the start-time shuffle conf
@@ -282,12 +282,13 @@ def run_to_memory_sink(
     rationale on state_shuffle). The foreachBatch sinks deliberately do
     NOT route through this: their per-batch plans are stateless and want
     full batch parallelism."""
+    query_name = f"mem_{uuid.uuid4().hex[:8]}"
     with state_shuffle(stream_df.sparkSession, 8):
         (
             stream_df.writeStream.format("memory")
             .queryName(query_name)
             .outputMode(output_mode)
-            .option("checkpointLocation", checkpoint_dir)
+            .option("checkpointLocation", scratch_dir("ck_mem_"))
             .trigger(availableNow=True)
             .start()
             .awaitTermination()

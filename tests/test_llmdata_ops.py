@@ -257,7 +257,7 @@ def test_ivf_recall_floor(spark):
 
 class TestDecontamAndUnigramLM:
     def test_decontaminate_flags_only_overlapping_train_docs(self, spark):
-        """bench_mod=10 → docs 0 and 10 are the benchmark. Doc 1 shares
+        """DECON_BENCH_MOD=10 → docs 0 and 10 are the benchmark. Doc 1 shares
         the 4-gram 'a b c d' (case-folded), doc 3 shares three 4-grams,
         doc 2 shares none and must be absent. Benchmark docs themselves
         never appear in the output."""
@@ -275,12 +275,12 @@ class TestDecontamAndUnigramLM:
             ],
             "doc_id long, text string, lang string",
         )
-        got = {
-            r.doc_id: (r.n_hit_ngrams, r.n_grams, r.contamination)
-            for r in text_analysis.decontaminate(
-                docs, n=4, bench_mod=10
-            ).collect()
-        }
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(text_analysis, "DECON_BENCH_MOD", 10)
+            got = {
+                r.doc_id: (r.n_hit_ngrams, r.n_grams, r.contamination)
+                for r in text_analysis.decontaminate(docs).collect()
+            }
         assert got == {1: (1, 2, 0.5), 3: (3, 4, 0.75)}
 
     def test_decontaminate_short_docs_produce_no_grams(self, spark):
@@ -294,9 +294,9 @@ class TestDecontamAndUnigramLM:
             [(0, "a b", "en"), (1, "a b", "en")],
             "doc_id long, text string, lang string",
         )
-        assert (
-            text_analysis.decontaminate(docs, n=4, bench_mod=10).count() == 0
-        )
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(text_analysis, "DECON_BENCH_MOD", 10)
+            assert text_analysis.decontaminate(docs).count() == 0
 
     def test_unigram_logprob_matches_hand_computation(self, spark):
         """counts a:2 b:2 c:1, total 5: doc 1 (a a b) scores ln(2/5);
@@ -1073,8 +1073,8 @@ def test_contamination_direction_separates_leak_directions(spark):
     text across most of its training docs (eval→train: high train rate,
     low eval rate, ratio > 1); source 'seed' has one training doc whose
     grams hit EVERY eval doc (train→eval: ratio < 1)."""
-    from etl_moodle_and_mass_email_sending_spark.operators.text_analysis import (
-        contamination_direction,
+    from etl_moodle_and_mass_email_sending_spark.operators import (
+        text_analysis,
     )
 
     eval_texts = {
@@ -1091,10 +1091,12 @@ def test_contamination_direction_separates_leak_directions(spark):
     rows.append((6, "alpha beta gamma delta one two three four red green blue yellow", "seed"))
     rows.append((7, "totally unrelated text goes here", "seed"))
     df = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    got = {
-        r["source"]: r
-        for r in contamination_direction(df, n=4, bench_mod=5).collect()
-    }
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(text_analysis, "DECON_BENCH_MOD", 5)
+        got = {
+            r["source"]: r
+            for r in text_analysis.contamination_direction(df).collect()
+        }
     assert set(got) == {"crawl", "seed"}
     c, s = got["crawl"], got["seed"]
     assert (c["n_train_docs"], c["n_contam_train_docs"]) == (4, 3)
@@ -1287,9 +1289,9 @@ def test_source_shift_conserves_mass_and_matches_keepers(spark):
 def test_contamination_pairs_find_planted_copy_and_cap_boilerplate(spark):
     """Pair drill-down: a train doc quoting one eval doc pairs with
     exactly that doc; a gram shared by MANY eval docs (boilerplate) is
-    excluded from evidence by the max_df cap."""
-    from etl_moodle_and_mass_email_sending_spark.operators.text_analysis import (
-        contamination_pairs,
+    excluded from evidence by the CONTAM_GRAM_MAX_DF cap."""
+    from etl_moodle_and_mass_email_sending_spark.operators import (
+        text_analysis,
     )
 
     boiler = "answer the following question carefully"
@@ -1304,13 +1306,14 @@ def test_contamination_pairs_find_planted_copy_and_cap_boilerplate(spark):
     # train doc 2 carries ONLY the boilerplate -> no rare evidence
     rows.append((2, f"{boiler} something else entirely here", "crawl"))
     df = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    got = {
-        (r["train_doc_id"], r["eval_doc_id"]): r["n_shared_grams"]
-        for r in contamination_pairs(
-            df, n=4, bench_mod=5, min_shared=2, max_df=1
-        ).collect()
-    }
-    # with max_df=1 the boilerplate grams (df=3) are dropped; doc 1
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(text_analysis, "DECON_BENCH_MOD", 5)
+        mp.setattr(text_analysis, "CONTAM_GRAM_MAX_DF", 1)
+        got = {
+            (r["train_doc_id"], r["eval_doc_id"]): r["n_shared_grams"]
+            for r in text_analysis.contamination_pairs(df).collect()
+        }
+    # with CONTAM_GRAM_MAX_DF=1 the boilerplate grams (df=3) are dropped; doc 1
     # still pairs with eval doc 0 through the unique-tail grams
     assert set(got) == {(1, 0)}
     assert got[(1, 0)] >= 2
@@ -2512,13 +2515,19 @@ class TestReceiptsTable:
         )
 
         path = str(tmp_path / "receipts")
-        rcpt.append_receipts(self._row(spark, "p1", 1), path, "run-000001")
-        rcpt.append_receipts(self._row(spark, "p2", 2), path, "run-000001")
+        rcpt.append_receipts(
+            rcpt.GOVERNANCE, self._row(spark, "p1", 1), path, "run-000001"
+        )
+        rcpt.append_receipts(
+            rcpt.GOVERNANCE, self._row(spark, "p2", 2), path, "run-000001"
+        )
         # re-running p1 for the SAME run replaces its partition — no
         # duplicate rows, p2 untouched
-        rcpt.append_receipts(self._row(spark, "p1", 1), path, "run-000001")
+        rcpt.append_receipts(
+            rcpt.GOVERNANCE, self._row(spark, "p1", 1), path, "run-000001"
+        )
         assert spark.read.parquet(path).count() == 2
-        assert rcpt.latest_rollup(spark, path).count() == 2
+        assert rcpt.latest_rollup(rcpt.GOVERNANCE, spark, path).count() == 2
 
     def test_latest_run_shadows_older(self, spark, tmp_path):
         from etl_moodle_and_mass_email_sending_spark.operators import (
@@ -2526,12 +2535,20 @@ class TestReceiptsTable:
         )
 
         path = str(tmp_path / "receipts")
-        rcpt.append_receipts(self._row(spark, "p1", 1), path, "run-000001")
-        rcpt.append_receipts(self._row(spark, "p2", 2), path, "run-000001")
-        rcpt.append_receipts(self._row(spark, "p1", 5), path, "run-000002")
+        rcpt.append_receipts(
+            rcpt.GOVERNANCE, self._row(spark, "p1", 1), path, "run-000001"
+        )
+        rcpt.append_receipts(
+            rcpt.GOVERNANCE, self._row(spark, "p2", 2), path, "run-000001"
+        )
+        rcpt.append_receipts(
+            rcpt.GOVERNANCE, self._row(spark, "p1", 5), path, "run-000002"
+        )
         got = {
             r["producer"]: r["n_flagged"]
-            for r in rcpt.latest_rollup(spark, path).collect()
+            for r in rcpt.latest_rollup(
+                rcpt.GOVERNANCE, spark, path
+            ).collect()
         }
         assert got == {"p1": 5, "p2": 2}
         # older run's rows remain in the table (audit history), only
@@ -3082,26 +3099,32 @@ class TestIngestHealth:
         frames = _ingest_receipt_frames(spark, SF_SMALL)
         table = str(tmp_path / "ingest_receipts")
         for frame in frames.values():
-            rcpt.append_ingest_receipts(frame, table, run_id="run-000001")
+            rcpt.append_receipts(
+                rcpt.INGEST, frame, table, run_id="run-000001"
+            )
 
         def snap():
             return sorted(
                 (r["section"], r["key"], r["n"], r["metric"], r["flag"])
-                for r in rcpt.latest_ingest_rollup(spark, table).collect()
+                for r in rcpt.latest_rollup(
+                    rcpt.INGEST, spark, table
+                ).collect()
             )
 
         first = snap()
         assert len(first) == len(set((s, k) for s, k, *_ in first))
         # rerun ONE producer for the SAME run: nothing changes
-        rcpt.append_ingest_receipts(
-            frames["fk"], table, run_id="run-000001"
+        rcpt.append_receipts(
+            rcpt.INGEST, frames["fk"], table, run_id="run-000001"
         )
         assert snap() == first
         # a NEWER run of one section shadows only that section
         doctored = frames["fk"].withColumn(
             "n", (F.col("n") + F.lit(100)).cast("bigint")
         )
-        rcpt.append_ingest_receipts(doctored, table, run_id="run-000002")
+        rcpt.append_receipts(
+            rcpt.INGEST, doctored, table, run_id="run-000002"
+        )
         second = snap()
         assert [r for r in second if r[0] != "fk"] == [
             r for r in first if r[0] != "fk"

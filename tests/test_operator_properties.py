@@ -195,19 +195,36 @@ def test_pack_sequences_matches_python_reference(spark_mod, sizes, budget):
     bench_mod=st.sampled_from([2, 3, 5]),
 )
 def test_decontaminate_matches_python_reference(spark_mod, docs, n, bench_mod):
-    """Occurrence counts against a brute-force Python n-gram overlap on
-    random small-vocab docs (small vocab forces real collisions)."""
-    from etl_moodle_and_mass_email_sending_spark.operators.text_analysis import (
-        decontaminate,
+    """Occurrence counts of decontaminate AND its DuckDB twin against a
+    brute-force Python n-gram overlap on random small-vocab docs (small
+    vocab forces real collisions), with the gram width and benchmark
+    slice driven through the module constants both engines read."""
+    import duckdb
+    import pandas as pd
+
+    from etl_moodle_and_mass_email_sending_spark.operators import (
+        text_analysis as ta,
     )
 
     spark = spark_mod
     rows = [(i, " ".join(words), "en") for i, words in enumerate(docs)]
     df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    got = {
-        r.doc_id: (r.n_hit_ngrams, r.n_grams)
-        for r in decontaminate(df, n=n, bench_mod=bench_mod).collect()
-    }
+    con = duckdb.connect()
+    con.register("c", pd.DataFrame(rows, columns=["doc_id", "text", "lang"]))
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(ta, "DECON_NGRAM", n)
+        mp.setattr(ta, "DECON_BENCH_MOD", bench_mod)
+        got = {
+            r.doc_id: (r.n_hit_ngrams, r.n_grams)
+            for r in ta.decontaminate(df).collect()
+        }
+        duck = {
+            d: (h, g)
+            for d, h, g, _ in con.execute(
+                ta.sql_decontaminate("SELECT doc_id, text FROM c")
+            ).fetchall()
+        }
+    con.close()
 
     def grams(words):
         return [
@@ -229,6 +246,7 @@ def test_decontaminate_matches_python_reference(spark_mod, docs, n, bench_mod):
         if hits:
             want[i] = (hits, len(gs))
     assert got == want
+    assert duck == want
 
 
 @settings(max_examples=10, deadline=None)
@@ -934,8 +952,8 @@ def test_contamination_direction_matches_set_arithmetic(spark_mod, docs):
     both doc rates agree with a plain Python set-arithmetic reference
     on random corpora — including gram-less docs (short/empty texts)
     and sources with no contamination (absent from the report)."""
-    from etl_moodle_and_mass_email_sending_spark.operators.text_analysis import (
-        contamination_direction,
+    from etl_moodle_and_mass_email_sending_spark.operators import (
+        text_analysis as ta,
     )
 
     spark = spark_mod
@@ -947,10 +965,13 @@ def test_contamination_direction_matches_set_arithmetic(spark_mod, docs):
     df = spark.createDataFrame(
         rows, "doc_id long, text string, source string"
     )
-    got = {
-        r["source"]: r
-        for r in contamination_direction(df, n=n, bench_mod=mod).collect()
-    }
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(ta, "DECON_NGRAM", n)
+        mp.setattr(ta, "DECON_BENCH_MOD", mod)
+        got = {
+            r["source"]: r
+            for r in ta.contamination_direction(df).collect()
+        }
 
     def grams(text):
         w = text.strip().lower().split()
@@ -1481,9 +1502,8 @@ def test_decontaminate_execute_matches_python_oracle(spark_mod, docs):
     """Round-12 scrub executor: per-source receipt over random corpora
     must equal the sequential oracle (detect via gram overlap with the
     bench slice, drop at threshold, count docs/tokens per source)."""
-    from etl_moodle_and_mass_email_sending_spark.operators.text_analysis import (
-        DECON_SCRUB_THRESHOLD,
-        decontaminate_execute,
+    from etl_moodle_and_mass_email_sending_spark.operators import (
+        text_analysis as ta,
     )
 
     spark = spark_mod
@@ -1492,17 +1512,18 @@ def test_decontaminate_execute_matches_python_oracle(spark_mod, docs):
     df = spark.createDataFrame(
         rows, "doc_id long, text string, source string"
     )
-    got = {
-        r["source"]: (
-            r["n_train_docs"],
-            r["n_dropped"],
-            r["tokens_kept"],
-            r["tokens_dropped"],
-        )
-        for r in decontaminate_execute(
-            df, n=N, bench_mod=MOD, threshold=DECON_SCRUB_THRESHOLD
-        ).collect()
-    }
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(ta, "DECON_NGRAM", N)
+        mp.setattr(ta, "DECON_BENCH_MOD", MOD)
+        got = {
+            r["source"]: (
+                r["n_train_docs"],
+                r["n_dropped"],
+                r["tokens_kept"],
+                r["tokens_dropped"],
+            )
+            for r in ta.decontaminate_execute(df).collect()
+        }
 
     def grams(toks):
         return [
@@ -1520,7 +1541,7 @@ def test_decontaminate_execute_matches_python_oracle(spark_mod, docs):
         g = grams(toks)
         hits = sum(1 for x in g if x in bench_grams)
         contamination = hits / len(g) if g else 0.0
-        dropped = g and round(contamination, 6) >= DECON_SCRUB_THRESHOLD
+        dropped = g and round(contamination, 6) >= ta.DECON_SCRUB_THRESHOLD
         nt, nd, tk, td = want.get(src, (0, 0, 0, 0))
         want[src] = (
             nt + 1,

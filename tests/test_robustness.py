@@ -187,9 +187,9 @@ def test_lsh_pairs_build_once_and_ledgered(spark, tmp_path, monkeypatch):
 
 
 def test_minhash_index_built_once_per_corpus(spark, tmp_path, monkeypatch):
-    """The five LSH queries over the dup corpus read one staged MinHash
-    index: it is built once per (session, sf_dir), and it and the pairs
-    on top of it are that corpus's only staged builds."""
+    """The six shingle-set queries over the dup corpus read one staged
+    MinHash index: it is built once per (session, sf_dir), and it and the
+    pairs on top of it are that corpus's only staged builds."""
     from conftest import SF_SMALL
 
     from etl_moodle_and_mass_email_sending_spark import registry
@@ -214,6 +214,7 @@ def test_minhash_index_built_once_per_corpus(spark, tmp_path, monkeypatch):
         "dedup_minhash_calibration",
         "dedup_jaccard_lsh_verified",
         "dedup_containment",
+        "dedup_ngram_jaccard",
     ):
         queries[name](spark, str(sf_dir))
     assert len(calls) == 1
@@ -222,6 +223,36 @@ def test_minhash_index_built_once_per_corpus(spark, tmp_path, monkeypatch):
         f"minhash_index/{sf_dir}",
         f"pairs/{sf_dir}",
     }
+
+
+def test_near_dup_stream_rerun_batch_keeps_one_decision_per_doc(
+    spark, tmp_path
+):
+    """A micro-batch re-run after its decisions were written but before
+    its offset commit must replace those decisions, not add a second
+    copy: the re-run lands in the same batch_id partition."""
+    from etl_moodle_and_mass_email_sending_spark.streaming import (
+        neardup_stream,
+    )
+
+    batch = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog"),
+            (2, "the quick brown fox jumps over the lazy dog"),
+            (3, "an entirely different sentence about nothing much"),
+        ],
+        "doc_id long, text string",
+    )
+    store, out = str(tmp_path / "store"), str(tmp_path / "out")
+    for _ in range(2):
+        neardup_stream.on_batch(store, out, batch, 0)
+    rows = spark.read.parquet(out).drop("batch_id").collect()
+    assert sorted((r.doc_id, r.dropped) for r in rows) == [
+        (1, False),
+        (2, True),
+        (3, False),
+    ]
+
 
 def test_staging_ledger_records_each_build_own_seconds(monkeypatch):
     """A staged build that stages another key inside it records only its

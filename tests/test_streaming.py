@@ -16,14 +16,12 @@ pytestmark = pytest.mark.slow
 
 
 class TestWindowedCounts:
-    def test_matches_batch_rollup(self, spark, tmp_path, duck):
+    def test_matches_batch_rollup(self, spark, duck):
         from etl_moodle_and_mass_email_sending_spark.streaming import windows
 
         ev = windows.stream_events(spark, SF_SMALL, max_files_per_trigger=1)
         agg = windows.windowed_event_counts(ev, "1 hour", "2 hours")
-        got = windows.run_to_memory_sink(
-            agg, "win_counts", str(tmp_path / "ck")
-        )
+        got = windows.run_to_memory_sink(agg)
         oracle = duck.execute(
             """
             SELECT date_trunc('hour', ts) AS window_start, event_type,
@@ -48,14 +46,12 @@ class TestWindowedCounts:
             )
         assert len(rows) >= 0.9 * len(want)
 
-    def test_sessionize_matches_gaps_and_islands(self, spark, tmp_path, duck):
+    def test_sessionize_matches_gaps_and_islands(self, spark, duck):
         from etl_moodle_and_mass_email_sending_spark.streaming import windows
 
         ev = windows.stream_events(spark, SF_SMALL)
         sessions = windows.sessionize(ev, gap_seconds=1800)
-        got = windows.run_to_memory_sink(
-            sessions, "sessions", str(tmp_path / "ck2")
-        )
+        got = windows.run_to_memory_sink(sessions)
         oracle = duck.execute(
             """
             WITH marked AS (
@@ -88,7 +84,7 @@ class TestWindowedCounts:
 
 
 class TestStreamStreamJoin:
-    def test_interval_join_matches_batch(self, spark, tmp_path, duck):
+    def test_interval_join_matches_batch(self, spark, duck):
         """Watermarked stream-stream interval join: every emitted pair is
         in the batch inequality-join result, with near-total coverage."""
         from etl_moodle_and_mass_email_sending_spark.streaming import (
@@ -98,9 +94,7 @@ class TestStreamStreamJoin:
 
         ev = windows.stream_events(spark, SF_SMALL)
         joined = joins.clicks_errors_join(ev, "inner")
-        got = windows.run_to_memory_sink(
-            joined, "ssj", str(tmp_path / "ck_ssj")
-        )
+        got = windows.run_to_memory_sink(joined)
         oracle = duck.execute(
             """
             SELECT c.event_id, c.user_id, c.ts, e.event_id, e.ts
@@ -122,9 +116,6 @@ class TestStreamStaticEnrich:
     def test_enrich_matches_batch_join(self, spark):
         """Stream-static join emission equals the batch join + the
         final-watermark window filter (the oracle's emission model)."""
-        import tempfile
-        import uuid
-
         from etl_moodle_and_mass_email_sending_spark.catalog import load_table
         from etl_moodle_and_mass_email_sending_spark.streaming import (
             joins,
@@ -136,9 +127,7 @@ class TestStreamStaticEnrich:
         ev = sw.stream_events(spark, sf)
         cust = load_table(spark, sf, "customer")
         out = sw.run_to_memory_sink(
-            joins.enrich_with_segment(ev, cust),
-            f"tse_{uuid.uuid4().hex[:8]}",
-            tempfile.mkdtemp(prefix="ck_tse_"),
+            joins.enrich_with_segment(ev, cust)
         ).collect()
         assert out
         # batch twin
@@ -272,11 +261,7 @@ class TestStreamEventsTsTypes:
         # both physical types must arrive as the session-zone TIMESTAMP
         # (anything else throws EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE below)
         assert isinstance(stream.schema["ts"].dataType, TimestampType)
-        out = run_to_memory_sink(
-            windowed_event_counts(stream),
-            f"ts_types_{unit}",
-            str(tmp_path / f"ckpt_{unit}"),
-        )
+        out = run_to_memory_sink(windowed_event_counts(stream))
         rows = {
             (r["window_start"].isoformat(), r["event_type"]): r["n_events"]
             for r in out.collect()
