@@ -33,7 +33,13 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.hashing import SEED_SEP
+from ..functions.hashing import (
+    SEED_SEP,
+    hash32,
+    hash_frac,
+    sql_hash32,
+    sql_hash_frac,
+)
 from ..functions.text import (
     CASED_WORDS,
     SQL_CASED_WORDS,
@@ -184,8 +190,7 @@ _SPARK_MINS = ", ".join(
     for a, b in _mh_params()
 )
 _SPARK_SIG_OF_SH = f"""
-    transform(array(transform(sh, s ->
-        cast(conv(substring(md5(concat('M{SEED_SEP}', s)), 1, 8), 16, 10) as bigint))),
+    transform(array(transform(sh, s -> {hash32(f"concat('M{SEED_SEP}', s)")})),
       sh_h -> array({_SPARK_MINS})
     )[0]
 """
@@ -199,8 +204,7 @@ _DUCK_SHINGLES = f"""
     END
 """
 _DUCK_SHINGLE_HASH = f"""
-    list_transform(sh, s ->
-      CAST('0x' || substr(md5('M{SEED_SEP}' || s), 1, 8) AS BIGINT))
+    list_transform(sh, s -> {sql_hash32(f"'M{SEED_SEP}' || s")})
 """
 _DUCK_MINHASH_SIG = (
     "["
@@ -255,6 +259,17 @@ def _band_frame(index: DataFrame) -> DataFrame:
             )
         ).alias("band", "key"),
     )
+
+
+# DuckDB twin of _band_frame: a LATERAL of the (band, key) rows of the
+# ``sig`` column in scope, joined as ``b``.
+_DUCK_BANDS = f"""LATERAL (
+        SELECT i AS band,
+               array_to_string(list_transform(
+                 sig[i * {LSH_ROWS} + 1 : i * {LSH_ROWS} + {LSH_ROWS}],
+                 x -> CAST(x AS VARCHAR)), '-') AS key
+        FROM (SELECT unnest(generate_series(0, {LSH_BANDS - 1})) AS i)
+      ) b"""
 
 
 def _lsh_candidates(index: DataFrame) -> DataFrame:
@@ -321,12 +336,7 @@ def sql_minhash_lsh_pairs(corpus_sql: str) -> str:
     WITH sigs AS ({sig}),
     bands AS (
       SELECT doc_id, sig, b.band, b.key FROM sigs,
-      LATERAL (
-        SELECT i AS band,
-               array_to_string(list_transform(sig[i * {LSH_ROWS} + 1 : i * {LSH_ROWS} + {LSH_ROWS}],
-                               x -> CAST(x AS VARCHAR)), '-') AS key
-        FROM (SELECT unnest(generate_series(0, {LSH_BANDS - 1})) AS i)
-      ) b
+      {_DUCK_BANDS}
     )
     SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
            CAST(len(list_filter(generate_series(1, {MINHASH_K}),
@@ -445,10 +455,8 @@ def simhash_fingerprints(corpus: DataFrame) -> DataFrame:
     FASTER (≈5×) than the 'clever' single aggregate+zip_with pass — the
     zip_with form allocates a 32-int array per token hash, while each
     filter() pass is a flat allocation-free scan inside codegen."""
-    toks_h = (
-        f"array_distinct(transform({WORDS}, t -> "
-        f"cast(conv(substring(md5(concat('S{SEED_SEP}', t)), 1, 8), 16, 10) as bigint)))"
-    )
+    h = hash32(f"concat('S{SEED_SEP}', t)")
+    toks_h = f"array_distinct(transform({WORDS}, t -> {h}))"
     bits = " + ".join(
         f"(CASE WHEN 2 * size(filter(th, h -> (shiftright(h, {i}) % 2) = 1)) "
         f"> size(th) THEN cast({1 << i} as bigint) ELSE cast(0 as bigint) END)"
@@ -460,10 +468,8 @@ def simhash_fingerprints(corpus: DataFrame) -> DataFrame:
 
 
 def sql_simhash_fingerprints(corpus_sql: str) -> str:
-    toks_h = (
-        f"list_distinct(list_transform({SQL_WORDS}, t -> "
-        f"CAST('0x' || substr(md5('S{SEED_SEP}' || t), 1, 8) AS BIGINT)))"
-    )
+    h = sql_hash32(f"'S{SEED_SEP}' || t")
+    toks_h = f"list_distinct(list_transform({SQL_WORDS}, t -> {h}))"
     bits = " + ".join(
         f"(CASE WHEN 2 * len(list_filter(th, h -> ((h >> {i}) % 2) = 1)) "
         f"> len(th) THEN CAST({1 << i} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
@@ -543,12 +549,7 @@ def sql_ngram_jaccard_lsh_verified(corpus_sql: str) -> str:
     bands AS (
       SELECT s.doc_id, sh.sh, b.band, b.key
       FROM sigs s JOIN sh USING (doc_id),
-      LATERAL (
-        SELECT i AS band,
-               array_to_string(list_transform(sig[i * {LSH_ROWS} + 1 : i * {LSH_ROWS} + {LSH_ROWS}],
-                               x -> CAST(x AS VARCHAR)), '-') AS key
-        FROM (SELECT unnest(generate_series(0, {LSH_BANDS - 1})) AS i)
-      ) b
+      {_DUCK_BANDS}
     )
     SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
            round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
@@ -603,12 +604,7 @@ def sql_containment_pairs(corpus_sql: str) -> str:
     bands AS (
       SELECT s.doc_id, b.band, b.key
       FROM sigs s,
-      LATERAL (
-        SELECT i AS band,
-               array_to_string(list_transform(sig[i * {LSH_ROWS} + 1 : i * {LSH_ROWS} + {LSH_ROWS}],
-                               x -> CAST(x AS VARCHAR)), '-') AS key
-        FROM (SELECT unnest(generate_series(0, {LSH_BANDS - 1})) AS i)
-      ) b
+      {_DUCK_BANDS}
     ),
     cand AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -749,12 +745,7 @@ def sql_minhash_calibration(corpus_sql: str) -> str:
     docs AS (SELECT s.doc_id, sh.sh, s.sig FROM sigs s JOIN sh USING (doc_id)),
     bands AS (
       SELECT doc_id, b.band, b.key FROM docs,
-      LATERAL (
-        SELECT i AS band,
-               array_to_string(list_transform(sig[i * {LSH_ROWS} + 1 : i * {LSH_ROWS} + {LSH_ROWS}],
-                               x -> CAST(x AS VARCHAR)), '-') AS key
-        FROM (SELECT unnest(generate_series(0, {LSH_BANDS - 1})) AS i)
-      ) b
+      {_DUCK_BANDS}
     ),
     cand AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -821,12 +812,7 @@ def sql_threshold_sweep(corpus_sql: str) -> str:
     WITH sigs AS ({sig}),
     bands AS (
       SELECT doc_id, sig, b.band, b.key FROM sigs,
-      LATERAL (
-        SELECT i AS band,
-               array_to_string(list_transform(sig[i * {LSH_ROWS} + 1 : i * {LSH_ROWS} + {LSH_ROWS}],
-                               x -> CAST(x AS VARCHAR)), '-') AS key
-        FROM (SELECT unnest(generate_series(0, {LSH_BANDS - 1})) AS i)
-      ) b
+      {_DUCK_BANDS}
     ),
     pairs AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -948,12 +934,7 @@ def sql_incremental_dedup(frozen_sql: str, incoming_sql: str) -> str:
     def bands(src: str) -> str:
         return f"""
       SELECT doc_id, sig, b.band, b.key FROM ({src}),
-      LATERAL (
-        SELECT i AS band,
-               array_to_string(list_transform(sig[i * {LSH_ROWS} + 1 : i * {LSH_ROWS} + {LSH_ROWS}],
-                               x -> CAST(x AS VARCHAR)), '-') AS key
-        FROM (SELECT unnest(generate_series(0, {LSH_BANDS - 1})) AS i)
-      ) b
+      {_DUCK_BANDS}
     """
 
     return f"""
@@ -1156,9 +1137,8 @@ RECALL_EVAL_LANG = "de"  # smallest language block = cheapest truth
 RECALL_EVAL_TARGET = 500  # fixed-size eval sample: truth cost is
 # constant at ANY corpus scale (an 8x shape run showed the unsampled
 # stratum's all-pairs truth scaling 9.2x — the labeled sample must not
-# grow with the corpus). Deterministic md5-fraction thinning; at small
+# grow with the corpus). Deterministic hash_frac thinning; at small
 # scales the fraction saturates at 1.0 and the whole stratum is kept.
-_RE_SCALE = 16**15
 
 
 def lsh_recall(corpus: DataFrame) -> DataFrame:
@@ -1170,23 +1150,7 @@ def lsh_recall(corpus: DataFrame) -> DataFrame:
         "doc_id", "text", "lang"
     )
     n = block.agg(F.count(F.lit(1)).cast("double").alias("_n"))
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(f"LR{SEED_SEP}"),
-                        F.col("doc_id").cast("string"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        / F.lit(float(_RE_SCALE))
-    )
+    u = F.expr(hash_frac(f"concat('LR{SEED_SEP}', cast(doc_id as string))"))
     stratum = (
         block.crossJoin(F.broadcast(n))
         .filter(
@@ -1228,11 +1192,7 @@ def lsh_recall(corpus: DataFrame) -> DataFrame:
 
 
 def sql_lsh_recall(corpus_sql: str) -> str:
-    u = (
-        f"CAST('0x' || substr(md5('LR{SEED_SEP}' || "
-        f"CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) "
-        f"/ {float(_RE_SCALE)!r}"
-    )
+    u = sql_hash_frac(f"'LR{SEED_SEP}' || CAST(doc_id AS VARCHAR)")
     stratum = (
         f"SELECT doc_id, text, lang FROM ({corpus_sql}) "
         f"CROSS JOIN (SELECT CAST(count(*) AS DOUBLE) AS n "

@@ -31,6 +31,7 @@ from pyspark.sql.types import (
 )
 
 from ..catalog import load_table
+from ..functions.hashing import hash32, sql_hash32
 from ..functions.text import SQL_WORDS_NONEMPTY, WORDS_NONEMPTY
 
 MEDIA_TYPES = ("image", "audio", "video")
@@ -689,13 +690,11 @@ CLIP_THRESHOLD = 0.5
 def clip_align(media: DataFrame, docs: DataFrame) -> DataFrame:
     """(doc_id, clip_score, keep): caption↔image cosine for every image
     doc (captionless/tokenless docs drop — no text tower input)."""
-    from ..functions.hashing import hash32
-
     feats = extract_features(media.filter(F.col("media_type") == "image"))
     toks = docs.select(
         "doc_id", F.explode(F.expr(WORDS_NONEMPTY)).alias("token")
     )
-    h = hash32(F.col("token"))
+    h = F.expr(hash32("token"))
     temb = toks.select(
         "doc_id",
         F.pmod(h, F.lit(N_FEATURES)).alias("_b"),
@@ -726,8 +725,6 @@ def clip_align(media: DataFrame, docs: DataFrame) -> DataFrame:
 
 def sql_clip_align() -> str:
     """DuckDB twin: same fake towers, same cosine."""
-    from ..functions.hashing import sql_hash32
-
     h = sql_hash32("token")
     tsums = ", ".join(
         f"CAST(sum(CASE WHEN ({h}) % {N_FEATURES} = {i} "

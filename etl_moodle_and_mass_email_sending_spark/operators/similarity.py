@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from .util import spread_for_compute, staged_frame, top_k
-from ..functions.hashing import SEED_SEP
+from ..functions.hashing import SEED_SEP, py_hash32
 
 TOP_K = 5
 N_QUERIES = 10  # vec_id < 10 form the query batch
@@ -185,21 +185,9 @@ def _hyperplanes(n_planes: int) -> list[list[float]]:
     exact 3-decimal literals, so both engines parse identical doubles.
     SHARED by the ANN index and the near-dup bands: plane p is the same
     plane everywhere, derived once."""
-    import hashlib
-
     return [
         [
-            (
-                int(
-                    hashlib.md5(
-                        f"{p}{SEED_SEP}{d}".encode()
-                    ).hexdigest()[:8],
-                    16,
-                )
-                % 2000
-                - 1000
-            )
-            / 1000.0
+            (py_hash32(f"{p}{SEED_SEP}{d}") % 2000 - 1000) / 1000.0
             for d in range(DIM)
         ]
         for p in range(n_planes)

@@ -3,9 +3,9 @@ estimators a 100 TB pipeline uses where exact distinct counts would
 shuffle every key.
 
 The KMV (k-minimum-values) distinct sketch here is DETERMINISTIC on both
-engines: the value hash is md5 of the key's decimal string, its top 60
-bits scaled to a [0, 1) double (16^15 = 2^60 divides exactly, so the
-double is the same bit pattern in Spark and DuckDB), and the estimator
+engines: the value hash is ``hashing.hash_frac`` of the key's decimal
+string (md5's top 60 bits over 2^60, the same double in Spark and
+DuckDB), and the estimator
 is the textbook unbiased (k-1)/h_(k) (Beyer et al., "On Synopses for
 Distinct-Value Estimation Under Multiset Operations", SIGMOD'07), with
 the exact count substituted when a group holds fewer than k keys. That
@@ -26,17 +26,18 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import (
+    SEED_SEP,
+    hash32,
+    hash60,
+    hash_frac,
+    sql_hash32,
+    sql_hash60,
+    sql_hash_frac,
+)
 from .util import salt, salted_top_k
 
 KMV_K = 64
-_SCALE = 16**15  # top 60 bits of the md5 → exact double in [0, 1)
-
-
-def _hash_frac(key: Column) -> Column:
-    """md5(key-as-string) top-60-bits as a [0,1) double — identical
-    literal arithmetic on both engines."""
-    v = F.conv(F.substring(F.md5(key.cast("string")), 1, 15), 16, 10)
-    return v.cast("bigint") / F.lit(float(_SCALE))
 
 
 def kmv_distinct(df: DataFrame, group_col: str, key_col: str) -> DataFrame:
@@ -48,7 +49,9 @@ def kmv_distinct(df: DataFrame, group_col: str, key_col: str) -> DataFrame:
     """
     pairs = df.select(group_col, key_col).distinct()
     hashed = pairs.select(
-        group_col, _hash_frac(F.col(key_col)).alias("_frac"), salt(key_col)
+        group_col,
+        F.expr(hash_frac(f"cast({key_col} as string)")).alias("_frac"),
+        salt(key_col),
     )
     topk = salted_top_k(hashed, [group_col], ["_frac"], KMV_K)
     exact = pairs.groupBy(group_col).agg(F.count("*").alias("n_exact"))
@@ -76,8 +79,7 @@ def sql_kmv_distinct(table_sql: str, group_col: str, key_col: str) -> str:
     ),
     hashed AS (
       SELECT {group_col},
-             CAST('0x' || substr(md5(CAST({key_col} AS VARCHAR)), 1, 15)
-                  AS BIGINT) / {float(_SCALE)!r} AS frac
+             {sql_hash_frac(f"CAST({key_col} AS VARCHAR)")} AS frac
       FROM pairs
     ),
     ranked AS (
@@ -166,15 +168,19 @@ CMS_WIDTH = 256
 CMS_TOP_K = 20
 
 
+def _seeded_hash32(r: int, key: str) -> Column:
+    """hash32 of seed row ``r`` and the key column named ``key``, as the
+    CMS and Bloom oracles spell it (``r§key``)."""
+    return F.expr(hash32(f"concat('{r}{SEED_SEP}', cast({key} as string))"))
+
+
 def _cms_bucket_structs() -> Column:
     """Array of (r, bucket) structs for the key column, one per hash row."""
-    from ..functions.hashing import hash32
-
     return F.array(
         *[
             F.struct(
                 F.lit(r).alias("r"),
-                F.pmod(hash32(F.col("key"), seed=r), F.lit(CMS_WIDTH)).alias(
+                F.pmod(_seeded_hash32(r, "key"), F.lit(CMS_WIDTH)).alias(
                     "bucket"
                 ),
             )
@@ -183,10 +189,8 @@ def _cms_bucket_structs() -> Column:
     )
 
 
-def cms_heavy_hitters(
-    df: DataFrame, key_col: str, k: int = CMS_TOP_K
-) -> DataFrame:
-    """(key, n_exact, cms_estimate) for the top-``k`` keys by CMS
+def cms_heavy_hitters(df: DataFrame, key_col: str) -> DataFrame:
+    """(key, n_exact, cms_estimate) for the top-``CMS_TOP_K`` keys by CMS
     estimate (ties broken by key). ``n_exact`` rides along to expose the
     sketch's one-sided error (estimate ≥ exact, always)."""
     keyed = df.select(F.col(key_col).alias("key"))
@@ -202,7 +206,7 @@ def cms_heavy_hitters(
     )
     return (
         est.orderBy(F.col("cms_estimate").desc(), F.col("key"))
-        .limit(k)
+        .limit(CMS_TOP_K)
         .select(
             F.col("key").alias(key_col), "n_exact", "cms_estimate"
         )
@@ -210,12 +214,9 @@ def cms_heavy_hitters(
 
 
 def sql_cms_heavy_hitters(table_sql: str, key_col: str) -> str:
-    from ..functions.hashing import SEED_SEP
-
-    bucket = (
-        f"CAST('0x' || substr(md5(CAST(t.r AS VARCHAR) || '{SEED_SEP}' || "
-        f"CAST(key AS VARCHAR)), 1, 8) AS BIGINT) % {CMS_WIDTH}"
-    )
+    bucket = sql_hash32(
+        f"CAST(t.r AS VARCHAR) || '{SEED_SEP}' || CAST(key AS VARCHAR)"
+    ) + f" % {CMS_WIDTH}"
     return f"""
     WITH keyed AS (SELECT {key_col} AS key FROM ({table_sql})),
     cells AS (
@@ -259,15 +260,14 @@ BLOOM_BITS = 1024
 BLOOM_HASHES = 3
 
 
-def _bloom_buckets(key: Column) -> Column:
-    """Distinct bucket ids for a key (k seed hashes; duplicates collapse
-    so the all-bits-present probe can count matches = size)."""
-    from ..functions.hashing import hash32
-
+def _bloom_buckets(key: str) -> Column:
+    """Distinct bucket ids for the key column named ``key`` (k seed
+    hashes; duplicates collapse so the all-bits-present probe can count
+    matches = size)."""
     return F.array_distinct(
         F.array(
             *[
-                F.pmod(hash32(key, seed=r), F.lit(BLOOM_BITS))
+                F.pmod(_seeded_hash32(r, key), F.lit(BLOOM_BITS))
                 for r in range(BLOOM_HASHES)
             ]
         )
@@ -294,7 +294,7 @@ def bloom_prejoin_stats(
     oracle's count(DISTINCT bit) ignores NULLs giving need=0=hit (always
     passes); see sql_bloom_prejoin_stats for the mirrored predicate."""
     bits = (
-        build.select(F.explode(_bloom_buckets(F.col(build_key))).alias("bit"))
+        build.select(F.explode(_bloom_buckets(build_key)).alias("bit"))
         .distinct()
     )
     # probe each DISTINCT (key, group) once, weighted by its row count —
@@ -315,7 +315,7 @@ def bloom_prejoin_stats(
         "_k",
         group_col,
         "_n",
-        _bloom_buckets(F.col("_k")).alias("_buckets"),
+        _bloom_buckets("_k").alias("_buckets"),
     ).select(
         "_k",
         group_col,
@@ -365,13 +365,10 @@ def sql_bloom_prejoin_stats(
     build_sql: str,
     build_key: str,
 ) -> str:
-    from ..functions.hashing import SEED_SEP
-
     def bucket(key: str) -> str:
-        return (
-            f"CAST('0x' || substr(md5(CAST(t.r AS VARCHAR) || '{SEED_SEP}' || "
-            f"CAST({key} AS VARCHAR)), 1, 8) AS BIGINT) % {BLOOM_BITS}"
-        )
+        return sql_hash32(
+            f"CAST(t.r AS VARCHAR) || '{SEED_SEP}' || CAST({key} AS VARCHAR)"
+        ) + f" % {BLOOM_BITS}"
 
     return f"""
     WITH bits AS (
@@ -449,7 +446,7 @@ def kmv_setops(
     )
     hashed = pairs.select(
         part_col,
-        _hash_frac(F.col(key_col)).alias("_frac"),
+        F.expr(hash_frac(f"cast({key_col} as string)")).alias("_frac"),
         salt(key_col),
     )
     topk = salted_top_k(hashed, [part_col], ["_frac"], KMV_K).select(
@@ -506,10 +503,7 @@ def sql_kmv_setops(
     table_sql: str, part_col: str, key_col: str, a: str, b: str
 ) -> str:
     """DuckDB twin: identical hash, merge, ρ algebra."""
-    frac = (
-        f"CAST('0x' || substr(md5(CAST({key_col} AS VARCHAR)), 1, 15) "
-        f"AS BIGINT) / {float(_SCALE)!r}"
-    )
+    frac = sql_hash_frac(f"CAST({key_col} AS VARCHAR)")
     return f"""
     WITH pairs AS (
       SELECT DISTINCT {part_col} AS part, {key_col} FROM ({table_sql})
@@ -607,9 +601,7 @@ def hll_registers(
     streaming variant exploits)."""
     m = _HLL_M
     pairs = df.select(group_col, key_col).distinct()
-    v = F.conv(
-        F.substring(F.md5(F.col(key_col).cast("string")), 1, 15), 16, 10
-    ).cast("bigint")
+    v = F.expr(hash60(f"cast({key_col} as string)"))
     # integer division, NOT `/` (double's 53-bit mantissa would corrupt
     # the 60-bit hash)
     hashed = pairs.select(
@@ -680,8 +672,7 @@ def sql_hll_distinct(table_sql: str, group_col: str, key_col: str) -> str:
     ),
     hashed AS (
       SELECT {group_col},
-             CAST('0x' || substr(md5(CAST({key_col} AS VARCHAR)), 1, 15)
-                  AS BIGINT) AS v
+             {sql_hash60(f"CAST({key_col} AS VARCHAR)")} AS v
       FROM pairs
     ),
     rhos AS (
@@ -751,7 +742,7 @@ def sample_quantiles(
         group_col,
         F.col(key_col).alias("_k"),
         F.col(value_col).alias("_v"),
-        _hash_frac(F.col(key_col)).alias("_frac"),
+        F.expr(hash_frac(f"cast({key_col} as string)")).alias("_frac"),
         salt(key_col),
     )
     sample = salted_top_k(
@@ -800,8 +791,7 @@ def sql_sample_quantiles(
     return f"""
     WITH src AS (
       SELECT {group_col} AS g, {key_col} AS k, {value_col} AS v,
-             CAST('0x' || substr(md5(CAST({key_col} AS VARCHAR)), 1, 15)
-                  AS BIGINT) / {float(_SCALE)!r} AS frac
+             {sql_hash_frac(f"CAST({key_col} AS VARCHAR)")} AS frac
       FROM ({table_sql}) WHERE {value_col} IS NOT NULL
     ),
     sample AS (

@@ -18,7 +18,16 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.hashing import SEED_SEP
+from ..functions.hashing import (
+    SEED_SEP,
+    hash32,
+    hash60,
+    hash_frac,
+    py_hash32,
+    sql_hash32,
+    sql_hash60,
+    sql_hash_frac,
+)
 from ..functions.text import (
     CASED_WORDS,
     SQL_CASED_WORDS,
@@ -199,10 +208,8 @@ def fingerprints(corpus: DataFrame) -> DataFrame:
     - ``rolling_fp``: Rabin-Karp rolling hash folded over the token-hash
       sequence in document order (order-SENSITIVE → exact-content key).
     Identical docs agree on both; shuffled docs agree only on the first."""
-    toks_h_ordered = (
-        f"transform({WORDS}, t -> "
-        f"cast(conv(substring(md5(concat('F{SEED_SEP}', t)), 1, 8), 16, 10) as bigint))"
-    )
+    h = hash32(f"concat('F{SEED_SEP}', t)")
+    toks_h_ordered = f"transform({WORDS}, t -> {h})"
     toks_h_sorted = "array_sort(array_distinct(_th))"
     fp = (
         f"array_join(transform(slice({toks_h_sorted}, 1, {FINGERPRINT_K}), "
@@ -229,10 +236,8 @@ def fingerprints(corpus: DataFrame) -> DataFrame:
 
 
 def sql_fingerprints(corpus_sql: str) -> str:
-    toks_h_ordered = (
-        f"list_transform({SQL_WORDS}, t -> "
-        f"CAST('0x' || substr(md5('F{SEED_SEP}' || t), 1, 8) AS BIGINT))"
-    )
+    h = sql_hash32(f"'F{SEED_SEP}' || t")
+    toks_h_ordered = f"list_transform({SQL_WORDS}, t -> {h})"
     toks_h_sorted = f"list_sort(list_distinct({toks_h_ordered}))"
     fp = (
         f"array_to_string(list_transform(({toks_h_sorted})[1:{FINGERPRINT_K}], "
@@ -271,19 +276,20 @@ def chunk_documents(
     ride along the fan-out so callers don't re-join the corpus (a re-join
     would recompute the upstream subtree — Catalyst has no CSE across
     join branches)."""
-    toks = CASED_WORDS
-    n = f"size({toks})"
     # number of chunks: 1 + ceil(max(0, n - chunk)/stride)
     n_chunks = (
-        f"(1 + CAST(ceil(greatest(0, {n} - {chunk_tokens}) / "
+        f"(1 + CAST(ceil(greatest(0, size(tk) - {chunk_tokens}) / "
         f"CAST({stride} AS DOUBLE)) AS INT))"
     )
-    chunks = f"""transform(sequence(0, {n_chunks} - 1), i ->
+    # the tokens bind once as ``tk``: read unbound, each slice below
+    # would re-split the whole text per chunk
+    chunks = f"""transform(array({CASED_WORDS}), tk ->
+      transform(sequence(0, {n_chunks} - 1), i ->
         named_struct(
           'chunk_index', i,
-          'chunk_text', array_join(slice({toks}, i * {stride} + 1, {chunk_tokens}), ' '),
-          'n_tokens', size(slice({toks}, i * {stride} + 1, {chunk_tokens}))
-        ))"""
+          'chunk_text', array_join(slice(tk, i * {stride} + 1, {chunk_tokens}), ' '),
+          'n_tokens', size(slice(tk, i * {stride} + 1, {chunk_tokens}))
+        )))[0]"""
     return (
         spread_for_compute(corpus)
         .select("doc_id", *keep, F.explode(F.expr(chunks)).alias("c"))
@@ -1425,19 +1431,7 @@ def stratified_sample(docs: DataFrame) -> DataFrame:
     kept iff hash-bucket(doc_id) < rate[source] (default
     STRATIFIED_DEFAULT_RATE %)."""
     bucket = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(_STRAT_SALT), F.col("doc_id").cast("string")
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        F.expr(hash32(f"concat('{_STRAT_SALT}', cast(doc_id as string))"))
         % 100
     )
     rate = F.lit(STRATIFIED_DEFAULT_RATE)
@@ -1454,7 +1448,7 @@ def sql_stratified_sample(docs_sql: str) -> str:
     return f"""
     SELECT doc_id, source, lang
     FROM ({docs_sql})
-    WHERE CAST('0x' || substr(md5('{_STRAT_SALT}' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % 100
+    WHERE {sql_hash32(f"'{_STRAT_SALT}' || CAST(doc_id AS VARCHAR)")} % 100
           < CASE {cases} ELSE {STRATIFIED_DEFAULT_RATE} END
     """
 
@@ -1731,13 +1725,11 @@ _DSIR_SEED = 77
 
 def dsir_weights(corpus: DataFrame) -> DataFrame:
     """(doc_id, n_bigrams, dsir_weight) for every doc with ≥1 bigram."""
-    from ..functions.hashing import hash32_expr_lambda
-
     toked = corpus.select(
         "doc_id", F.col("lang"), F.expr(WORDS_NONEMPTY).alias("_ts")
     )
     n1 = F.greatest(F.size("_ts") - 1, F.lit(0))
-    h = hash32_expr_lambda(_DSIR_SEED)
+    h = hash32(f"concat('{_DSIR_SEED}{SEED_SEP}', t)")
     grams = spread_for_compute(toked).select(
         "doc_id",
         (F.col("lang") == "en").alias("_tgt"),
@@ -1774,9 +1766,7 @@ def dsir_weights(corpus: DataFrame) -> DataFrame:
 
 
 def sql_dsir_weights(corpus_sql: str) -> str:
-    from ..functions.hashing import sql_hash32_lambda
-
-    h = sql_hash32_lambda(_DSIR_SEED, "ts[i] || ' ' || ts[i + 1]")
+    h = sql_hash32(f"'{_DSIR_SEED}{SEED_SEP}' || ts[i] || ' ' || ts[i + 1]")
     return f"""
     WITH toked AS (
       SELECT doc_id, lang = 'en' AS tgt, {SQL_WORDS_NONEMPTY} AS ts
@@ -1836,14 +1826,19 @@ def cdc_chunks(corpus: DataFrame) -> DataFrame:
     """Token-level content-defined chunks with global duplicate counts."""
     from pyspark.sql import Window
 
-    from ..functions.hashing import hash32
-
     toks = corpus.select(
         "doc_id",
         F.posexplode(F.expr(WORDS_NONEMPTY)).alias("pos", "tok"),
     )
     bounded = toks.withColumn(
-        "_b", (F.pmod(hash32(F.col("tok"), seed=_CDC_SEED), F.lit(CDC_DIVISOR)) == 0).cast("int")
+        "_b",
+        (
+            F.pmod(
+                F.expr(hash32(f"concat('{_CDC_SEED}{SEED_SEP}', tok)")),
+                F.lit(CDC_DIVISOR),
+            )
+            == 0
+        ).cast("int"),
     )
     w = (
         Window.partitionBy("doc_id")
@@ -1875,9 +1870,7 @@ def cdc_chunks(corpus: DataFrame) -> DataFrame:
 
 
 def sql_cdc_chunks(corpus_sql: str) -> str:
-    from ..functions.hashing import sql_hash32_lambda
-
-    h = sql_hash32_lambda(_CDC_SEED, "tok")
+    h = sql_hash32(f"'{_CDC_SEED}{SEED_SEP}' || tok")
     return f"""
     WITH toks AS (
       SELECT doc_id, t.pos - 1 AS pos, t.tok
@@ -2048,8 +2041,6 @@ def substring_dedup(corpus: DataFrame) -> DataFrame:
     """(doc_id, n_windows, n_dup_windows, dup_fraction, flagged):
     per-doc distinct K-token windows, how many are owned by an earlier
     doc, and the ExactSubstr-style removal flag."""
-    from ..functions.hashing import hash32_expr_lambda
-
     # Hash each token ONCE (md5 per token), then derive every window's
     # hash as a Rabin-Karp polynomial fold over the K-token integer
     # slice — no per-window string building and no per-window md5
@@ -2057,7 +2048,8 @@ def substring_dedup(corpus: DataFrame) -> DataFrame:
     # referenced three times below; Spark's CollapseProject keeps the
     # expensive alias materialized instead of inlining it (the same
     # tokenize-once pattern as fingerprints).
-    toks_h = f"transform({WORDS_NONEMPTY}, t -> {hash32_expr_lambda(83)})"
+    h = hash32(f"concat('83{SEED_SEP}', t)")
+    toks_h = f"transform({WORDS_NONEMPTY}, t -> {h})"
     wins_expr = (
         f"CASE WHEN size(_th) >= {SUBSTR_K} THEN "
         f"transform(sequence(1, size(_th) - {SUBSTR_K} + 1), "
@@ -2102,12 +2094,11 @@ def substring_dedup(corpus: DataFrame) -> DataFrame:
 
 
 def sql_substring_dedup(corpus_sql: str) -> str:
-    from ..functions.hashing import sql_hash32_lambda
-
+    h = sql_hash32(f"'83{SEED_SEP}' || t")
     return f"""
     WITH toks AS (
       SELECT doc_id,
-             list_transform({SQL_WORDS_NONEMPTY}, t -> {sql_hash32_lambda(83)})
+             list_transform({SQL_WORDS_NONEMPTY}, t -> {h})
                AS th
       FROM ({corpus_sql})
     ),
@@ -2165,12 +2156,8 @@ QC_SEED = "qc"
 
 def _qc_weights() -> list[int]:
     """Per-bucket weights in integer thousandths ∈ [-1000, 1000]."""
-    import hashlib
-
     return [
-        int(hashlib.md5(f"{QC_SEED}{SEED_SEP}{b}".encode()).hexdigest()[:8], 16)
-        % 2001
-        - 1000
+        py_hash32(f"{QC_SEED}{SEED_SEP}{b}") % 2001 - 1000
         for b in range(QC_BUCKETS)
     ]
 
@@ -2178,15 +2165,13 @@ def _qc_weights() -> list[int]:
 def quality_classifier(corpus: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, quality_prob, keep): hashed-linear classifier
     probability per doc (empty docs drop — nothing to score)."""
-    from ..functions.hashing import hash32
-
     w = _qc_weights()
     arr = F.array(*[F.lit(x) for x in w])
     toks = corpus.select(
         "doc_id", F.explode(F.expr(WORDS_NONEMPTY)).alias("token")
     )
     wint = F.element_at(
-        arr, (hash32(F.col("token")) % QC_BUCKETS).cast("int") + 1
+        arr, (F.expr(hash32("token")) % QC_BUCKETS).cast("int") + 1
     )
     return (
         toks.select("doc_id", wint.alias("_w"))
@@ -2211,8 +2196,6 @@ def quality_classifier(corpus: DataFrame) -> DataFrame:
 
 
 def sql_quality_classifier(corpus_sql: str) -> str:
-    from ..functions.hashing import sql_hash32
-
     w = _qc_weights()
     arr = "[" + ", ".join(str(x) for x in w) + "]"
     return f"""
@@ -2250,24 +2233,12 @@ def sql_quality_classifier(corpus_sql: str) -> str:
 # --------------------------------------------------------------------------
 
 WSAMPLE_N = 25
-_WS_SCALE = 16**15
 
 
 def weighted_sample(corpus: DataFrame) -> DataFrame:
     """(lang, doc_id, n_chars, rank): per-language weighted sample of n
     docs, weight = n_chars (longer docs proportionally likelier)."""
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(f"WS{SEED_SEP}"), F.col("doc_id").cast("string"))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        / F.lit(float(_WS_SCALE))
-    )
+    u = F.expr(hash_frac(f"concat('WS{SEED_SEP}', cast(doc_id as string))"))
     keyed = corpus.select(
         "lang",
         "doc_id",
@@ -2281,10 +2252,7 @@ def weighted_sample(corpus: DataFrame) -> DataFrame:
 
 
 def sql_weighted_sample(corpus_sql: str) -> str:
-    u = (
-        f"CAST('0x' || substr(md5('WS{SEED_SEP}' || CAST(doc_id AS VARCHAR)), 1, 15) "
-        f"AS BIGINT) / {float(_WS_SCALE)!r}"
-    )
+    u = sql_hash_frac(f"'WS{SEED_SEP}' || CAST(doc_id AS VARCHAR)")
     return f"""
     WITH keyed AS (
       SELECT lang, doc_id, n_chars,
@@ -2325,12 +2293,9 @@ def ngram_novelty(corpus: DataFrame) -> DataFrame:
     tris = (
         f"transform(array({WORDS_NONEMPTY}), tk -> {word_grams('tk', 3)})[0]"
     )
-    tri_h = (
-        "CAST(conv(substring(md5(tri), 1, 15), 16, 10) AS BIGINT)"
-    )
     per_doc = (
         corpus.select("doc_id", F.explode_outer(F.expr(tris)).alias("tri"))
-        .select("doc_id", F.expr(tri_h).alias("h"))
+        .select("doc_id", F.expr(hash60("tri")).alias("h"))
         .distinct()
     )
     docfreq = per_doc.filter(F.col("h").isNotNull()).groupBy("h").agg(
@@ -2374,7 +2339,7 @@ def sql_ngram_novelty(corpus_sql: str) -> str:
     ),
     per_doc AS (
       SELECT DISTINCT doc_id,
-             CAST('0x' || substr(md5(t.tg), 1, 15) AS BIGINT) AS h
+             {sql_hash60("t.tg")} AS h
       FROM tris LEFT JOIN LATERAL (SELECT unnest(tri) AS tg) t ON true
     ),
     docfreq AS (
@@ -3833,9 +3798,7 @@ def sql_temperature_mixture(corpus_sql: str) -> str:
 # --------------------------------------------------------------------------
 
 
-def _mixture_plan(
-    corpus: DataFrame, temperature: float, max_epochs: float
-) -> DataFrame:
+def _mixture_plan(corpus: DataFrame) -> DataFrame:
     """(source, n_docs, n_tokens, epochs): the capped temperature plan
     (same math as temperature_mixture, kept to the columns the executor
     needs)."""
@@ -3847,7 +3810,9 @@ def _mixture_plan(
     )
     powed = toks.withColumn(
         "_p",
-        F.pow(F.col("n_tokens").cast("double"), F.lit(1.0 / temperature)),
+        F.pow(
+            F.col("n_tokens").cast("double"), F.lit(1.0 / MIX_TEMPERATURE)
+        ),
     )
     totals = powed.agg(
         F.sum("n_tokens").alias("_tot"), F.sum("_p").alias("_ptot")
@@ -3857,7 +3822,7 @@ def _mixture_plan(
             (F.col("_p") / F.col("_ptot")) * F.col("_tot"),
             F.col("n_tokens"),
         ),
-        F.lit(float(max_epochs)),
+        F.lit(float(MIX_MAX_EPOCHS)),
     )
     return (
         powed.crossJoin(F.broadcast(totals))
@@ -3866,42 +3831,28 @@ def _mixture_plan(
 
 
 def mixture_execute(
-    corpus: DataFrame,
-    temperature: float = MIX_TEMPERATURE,
-    max_epochs: float = MIX_MAX_EPOCHS,
-    plan: DataFrame | None = None,
+    corpus: DataFrame, plan: DataFrame | None = None
 ) -> DataFrame:
     """The emitted sample spine: (source, doc_id, n_toks, copy) — one
     row per emitted copy of each admitted document. ``corpus`` must
     carry (doc_id, text, source).
 
     ``plan``: optionally a PRE-COMPUTED ``_mixture_plan`` frame over
-    the same (corpus, temperature, max_epochs) (round 15, guide §1.2 —
-    the plan is a full-corpus token pass; the registered queries
-    session-stage one plan and share it across every consumer that
-    needs the identical per-source totals)."""
+    the same corpus (round 15, guide §1.2 — the plan is a full-corpus
+    token pass; the registered queries session-stage one plan and share
+    it across every consumer that needs the identical per-source
+    totals)."""
     from .util import two_pass_running_sum_in_groups
 
     if plan is None:
-        plan = _mixture_plan(corpus, temperature, max_epochs)
+        plan = _mixture_plan(corpus)
     hashed = corpus.select(
         "source",
         "doc_id",
         F.expr(_N_TOKS_SPARK).cast("bigint").alias("_t"),
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(f"MX{SEED_SEP}"),
-                        F.col("doc_id").cast("string"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint").alias("_h"),
+        F.expr(
+            hash60(f"concat('MX{SEED_SEP}', cast(doc_id as string))")
+        ).alias("_h"),
     )
     cum = two_pass_running_sum_in_groups(
         hashed,
@@ -3951,9 +3902,9 @@ def mixture_report(
     ``_mixture_plan`` frame over the same inputs (round 15 — skips
     this call's own full-corpus token pass)."""
     if plan is None:
-        plan = _mixture_plan(corpus, MIX_TEMPERATURE, MIX_MAX_EPOCHS)
+        plan = _mixture_plan(corpus)
     if emitted is None:
-        emitted = mixture_execute(corpus, MIX_TEMPERATURE, MIX_MAX_EPOCHS)
+        emitted = mixture_execute(corpus)
     rolled = emitted.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows_emitted"),
         F.sum("n_toks").cast("bigint").alias("emitted_tokens"),
@@ -3983,10 +3934,7 @@ def mixture_report(
 def sql_mixture_report(corpus_sql: str) -> str:
     inv_t = repr(1.0 / MIX_TEMPERATURE)
     cap = repr(float(MIX_MAX_EPOCHS))
-    h = (
-        f"CAST('0x' || substr(md5('MX{SEED_SEP}' || "
-        f"CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)"
-    )
+    h = sql_hash60(f"'MX{SEED_SEP}' || CAST(doc_id AS VARCHAR)")
     return f"""
     WITH toks AS (
       SELECT doc_id, source, CAST({_N_TOKS_DUCK} AS BIGINT) AS t
@@ -4497,20 +4445,9 @@ def shard_assign(
     toks = corpus.select(
         "doc_id",
         F.expr(_N_TOKS_SPARK).cast("bigint").alias("_t"),
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(f"SH{SEED_SEP}"),
-                        F.col("doc_id").cast("string"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint").alias("_h"),
+        F.expr(
+            hash60(f"concat('SH{SEED_SEP}', cast(doc_id as string))")
+        ).alias("_h"),
     )
     cum = two_pass_running_sum(
         toks, [F.col("_h"), F.col("doc_id")], "_t", out_col="_cin"
@@ -4550,10 +4487,7 @@ def shard_balance(corpus: DataFrame, n_shards: int = N_SHARDS) -> DataFrame:
 def _sql_shard_assign_ctes(corpus_sql: str, n_shards: int) -> str:
     """The shared toks/tot/cum CTE chain of the shard cut; ``cum``
     carries doc_id so the assignment is readable per doc."""
-    h = (
-        f"CAST('0x' || substr(md5('SH{SEED_SEP}' || "
-        f"CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)"
-    )
+    h = sql_hash60(f"'SH{SEED_SEP}' || CAST(doc_id AS VARCHAR)")
     return f"""toks AS (
       SELECT doc_id, CAST({_N_TOKS_DUCK} AS BIGINT) AS t
       FROM ({corpus_sql})
@@ -4697,10 +4631,7 @@ def sql_mixture_emitted(corpus_sql: str) -> str:
     oracle fragment downstream audits (deletion propagation) build on."""
     inv_t = repr(1.0 / MIX_TEMPERATURE)
     cap = repr(float(MIX_MAX_EPOCHS))
-    h = (
-        f"CAST('0x' || substr(md5('MX{SEED_SEP}' || "
-        f"CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)"
-    )
+    h = sql_hash60(f"'MX{SEED_SEP}' || CAST(doc_id AS VARCHAR)")
     return f"""
     WITH toks AS (
       SELECT doc_id, source, CAST({_N_TOKS_DUCK} AS BIGINT) AS t
@@ -4890,10 +4821,7 @@ def sql_curriculum_stages(corpus_sql: str) -> str:
 def split_leakage(corpus: DataFrame) -> DataFrame:
     """(n_train, n_val, n_leaked_val, leak_rate, max_shared_grams) over
     (doc_id, text) under the SPLIT-hash 95/5 assignment."""
-    bucket = F.expr(
-        "cast(conv(substring(md5(concat('SPLIT', cast(doc_id as string)"
-        ")), 1, 8), 16, 10) as bigint) % 100"
-    )
+    bucket = F.expr(hash32("concat('SPLIT', cast(doc_id as string))")) % 100
     is_val = bucket >= 95
     grams = gram_stream(
         spread_for_compute(corpus).withColumn("_v", is_val), "_v"
@@ -4938,10 +4866,7 @@ def split_leakage(corpus: DataFrame) -> DataFrame:
 
 def sql_split_leakage(corpus_sql: str) -> str:
     grams = sql_word_grams("w", DECON_NGRAM)
-    is_val = (
-        "CAST('0x' || substr(md5('SPLIT' || CAST(doc_id AS VARCHAR)), "
-        "1, 8) AS BIGINT) % 100 >= 95"
-    )
+    is_val = sql_hash32("'SPLIT' || CAST(doc_id AS VARCHAR)") + " % 100 >= 95"
     return f"""
     WITH tok AS (
       SELECT doc_id, {is_val} AS v, {SQL_WORDS} AS w
@@ -5147,7 +5072,7 @@ def corpus_release(
     if emitted is None:
         emitted = mixture_execute(corpus, plan=plan).localCheckpoint()
     if plan is None:
-        plan = _mixture_plan(corpus, MIX_TEMPERATURE, MIX_MAX_EPOCHS)
+        plan = _mixture_plan(corpus)
     plan = plan.select(
         "source", "epochs", F.col("n_tokens").alias("n_tokens_src")
     )
@@ -5177,22 +5102,12 @@ def corpus_release(
         "doc_id",
         "copy",
         F.col("n_toks").alias("_t"),
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(f"RL{SEED_SEP}"),
-                        F.col("doc_id").cast("string"),
-                        F.lit("#"),
-                        F.col("copy").cast("string"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint").alias("_h"),
+        F.expr(
+            hash60(
+                f"concat('RL{SEED_SEP}', cast(doc_id as string), '#', "
+                "cast(copy as string))"
+            )
+        ).alias("_h"),
     )
     cum = two_pass_running_sum(
         hashed,
@@ -5301,10 +5216,8 @@ def sql_corpus_release(corpus_sql: str) -> str:
     # column is named cp (COPY is a DuckDB statement keyword); the hash
     # input string is identical to the Spark side's, so names don't
     # matter for parity
-    h = (
-        f"CAST('0x' || substr(md5('RL{SEED_SEP}' || "
-        f"CAST(doc_id AS VARCHAR) || '#' || CAST(cp AS VARCHAR)), "
-        f"1, 15) AS BIGINT)"
+    h = sql_hash60(
+        f"'RL{SEED_SEP}' || CAST(doc_id AS VARCHAR) || '#' || CAST(cp AS VARCHAR)"
     )
     return f"""
     WITH em AS ({em}),
@@ -5401,23 +5314,7 @@ def dsir_execute(corpus: DataFrame) -> DataFrame:
     importance sample; ``corpus`` must carry (doc_id, text, lang).
     n_docs counts the eligible pool (docs with ≥1 bigram)."""
     w = dsir_weights(corpus)
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(f"DX{SEED_SEP}"),
-                        F.col("doc_id").cast("string"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        / F.lit(float(16**15))
-    )
+    u = F.expr(hash_frac(f"concat('DX{SEED_SEP}', cast(doc_id as string))"))
     # the DSIR sampling weight is the per-doc SUM of bigram
     # log-ratios (avg · n_bigrams) — the mean alone is O(1e-3) and
     # Gumbel noise would drown the selection pressure entirely
@@ -5460,11 +5357,7 @@ def dsir_execute(corpus: DataFrame) -> DataFrame:
 
 def sql_dsir_execute(corpus_sql: str) -> str:
     weights = sql_dsir_weights(corpus_sql)
-    u = (
-        f"CAST('0x' || substr(md5('DX{SEED_SEP}' || "
-        f"CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) "
-        f"/ {float(16**15)!r}"
-    )
+    u = sql_hash_frac(f"'DX{SEED_SEP}' || CAST(doc_id AS VARCHAR)")
     return f"""
     WITH w AS ({weights}),
     scored AS (
@@ -5723,20 +5616,7 @@ def fold_balance(corpus: DataFrame) -> DataFrame:
     balance receipt over the md5(doc_id) fold assignment. ``corpus``
     must carry (doc_id, text, source)."""
     fold = F.pmod(
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(f"FB{SEED_SEP}"),
-                        F.col("doc_id").cast("string"),
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint"),
+        F.expr(hash32(f"concat('FB{SEED_SEP}', cast(doc_id as string))")),
         F.lit(FOLD_K),
     )
     assigned = corpus.select(
@@ -5812,10 +5692,7 @@ def fold_balance(corpus: DataFrame) -> DataFrame:
 
 
 def sql_fold_balance(corpus_sql: str) -> str:
-    fold = (
-        f"CAST('0x' || substr(md5('FB{SEED_SEP}' || "
-        f"CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % {FOLD_K}"
-    )
+    fold = sql_hash32(f"'FB{SEED_SEP}' || CAST(doc_id AS VARCHAR)") + f" % {FOLD_K}"
     return f"""
     WITH assigned AS (
       SELECT {fold} AS fold, source,
@@ -5907,7 +5784,9 @@ def shuffle_quality(corpus: DataFrame) -> DataFrame:
             "_n",
             h.alias("_h"),
             F.pmod(
-                F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint"),
+                F.expr(
+                    hash32(f"concat('SH{SEED_SEP}', cast(doc_id as string))")
+                ),
                 F.col("_nb"),
             ).alias("_block"),
         )
@@ -5951,7 +5830,7 @@ def shuffle_quality(corpus: DataFrame) -> DataFrame:
 
 
 def sql_shuffle_quality(corpus_sql: str) -> str:
-    h = f"md5('SH{SEED_SEP}' || CAST(doc_id AS VARCHAR))"
+    sh = f"'SH{SEED_SEP}' || CAST(doc_id AS VARCHAR)"
     return f"""
     WITH n AS (
       SELECT ceil(CAST(count(*) AS DOUBLE) / {float(SHUFFLE_BLOCK_TARGET)!r})
@@ -5960,9 +5839,8 @@ def sql_shuffle_quality(corpus_sql: str) -> str:
       FROM ({corpus_sql})
     ),
     keyed AS (
-      SELECT source, doc_id, {h} AS h,
-             CAST('0x' || substr({h}, 1, 8) AS BIGINT)
-               % CAST(nb AS BIGINT) AS block
+      SELECT source, doc_id, md5({sh}) AS h,
+             {sql_hash32(sh)} % CAST(nb AS BIGINT) AS block
       FROM ({corpus_sql}) CROSS JOIN n
     ),
     pairs AS (
@@ -6019,7 +5897,7 @@ _BLOOM_WORD = 32  # word width: shifts stay <= 31 (DuckDB 1<<63 throws)
 
 def _bloom_pos_spark(i: int) -> str:
     """SQL expr: probe i's bit position for column ``gram``."""
-    h1 = "cast(conv(substring(md5(gram), 1, 8), 16, 10) as bigint)"
+    h1 = hash32("gram")
     h2 = (
         "(cast(conv(substring(md5(gram), 9, 8), 16, 10) as bigint)"
         " * 2 + 1)"
@@ -6028,7 +5906,7 @@ def _bloom_pos_spark(i: int) -> str:
 
 
 def _bloom_pos_duck(i: int) -> str:
-    h1 = "(('0x' || substr(md5(gram), 1, 8))::BIGINT)"
+    h1 = sql_hash32("gram")
     h2 = "((('0x' || substr(md5(gram), 9, 8))::BIGINT) * 2 + 1)"
     return f"(({h1} + {i} * {h2}) % {BLOOM_M})"
 
@@ -6214,37 +6092,37 @@ WM_GAMMA = 1.0 / GREEN_MOD
 
 
 def _wm_green_spark(prev: str, cur: str) -> str:
-    return (
-        f"cast(conv(substring(md5(concat('{WM_SEED}§', {prev}, '§', {cur})),"
-        f" 1, 8), 16, 10) as bigint) % {GREEN_MOD} = 0"
-    )
+    h = hash32(f"concat('{WM_SEED}{SEED_SEP}', {prev}, '{SEED_SEP}', {cur})")
+    return f"{h} % {GREEN_MOD} = 0"
 
 
 def _wm_green_duck(prev: str, cur: str) -> str:
-    return (
-        f"CAST('0x' || substr(md5('{WM_SEED}§' || {prev} || '§' || {cur}),"
-        f" 1, 8) AS BIGINT) % {GREEN_MOD} = 0"
-    )
+    h = sql_hash32(f"'{WM_SEED}{SEED_SEP}' || {prev} || '{SEED_SEP}' || {cur}")
+    return f"{h} % {GREEN_MOD} = 0"
 
 
 def watermark_detect(corpus: DataFrame) -> DataFrame:
     """Per-source green-list watermark audit over (doc_id, text,
     source): docs scored, z>2 / z>3 flag counts, mean green fraction
     and mean z (quantized-decimal exact means)."""
-    n = F.expr(_N_TOKS_SPARK)
-    # pair values bind as zip_with lambda VARIABLES (p, c): referencing
-    # the split expression via element_at inside the lambda instead
-    # re-tokenizes the document once per pair — O(tokens²) splits
-    # (measured 6.6 s → 1.15 s at sf0.1)
+    # the tokens are one projected column ``_w``, so the projection
+    # splits each text once (the `_np >= 1` filter Catalyst pushes below
+    # it keeps its own split); pair values bind as zip_with lambda
+    # VARIABLES (p, c) — an element_at over the split expression inside
+    # the lambda re-tokenized the document once per pair, O(tokens²)
+    # splits (measured 6.6 s → 1.15 s at sf0.1)
+    n = F.expr("CASE WHEN trim(text) = '' THEN 0 ELSE size(_w) END")
     green = _wm_green_spark("p", "c")
     n_green = F.expr(
-        f"aggregate(zip_with("
-        f"slice({WORDS}, 1, size({WORDS}) - 1), "
-        f"slice({WORDS}, 2, size({WORDS}) - 1), "
+        "aggregate(zip_with("
+        "slice(_w, 1, size(_w) - 1), "
+        "slice(_w, 2, size(_w) - 1), "
         f"(p, c) -> case when {green} then 1 else 0 end), "
         "0, (a, x) -> a + x)"
     )
     perdoc = corpus.select(
+        "source", "text", F.expr(WORDS).alias("_w")
+    ).select(
         "source",
         n.alias("_n"),
         F.when(n >= 2, n_green).otherwise(F.lit(0)).alias("_ng"),

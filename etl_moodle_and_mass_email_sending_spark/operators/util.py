@@ -351,7 +351,6 @@ def two_pass_running_max(
     order_by: list[Column],
     value_col: str,
     out_col: str = "running_max",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Global running max of ``value_col`` in ``order_by`` order WITHOUT
     an unpartitioned window: per-partition cumulative max + the max of
@@ -360,7 +359,7 @@ def two_pass_running_max(
     type (max reassociates). Use it for watermark simulation and skyline
     prefix-dominance, where the carried statistic is an extremum."""
     return _two_pass(
-        df, None, order_by, num_partitions,
+        df, None, order_by, None,
         F.max(value_col), _running(F.max(value_col)),
         lambda off, local: F.greatest(local, off), out_col, kind="max",
     )

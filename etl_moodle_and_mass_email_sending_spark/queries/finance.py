@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, load_tables
+from ..functions.hashing import SEED_SEP, hash32, sql_hash32
 from ..registry import register
 from .tpch import _dec
 from ..operators import sketches as _sketches
@@ -1966,15 +1967,18 @@ def poisson_bootstrap_ci(
 
 
 def _poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.hashing import hash32
+    def h(seed: int) -> Column:
+        return F.expr(
+            hash32(f"concat('{seed}{SEED_SEP}', cast(o_orderkey as string))")
+        )
 
     o = (
         load_table(spark, sf_dir, "orders")
         .select(
             F.col("o_orderpriority").alias("priority"),
             _dec(F.col("o_totalprice")).alias("v"),
-            hash32(F.col("o_orderkey"), seed=BOOT_SEED0).alias("_ha"),
-            hash32(F.col("o_orderkey"), seed=BOOT_SEED0 + 1).alias("_hb"),
+            h(BOOT_SEED0).alias("_ha"),
+            h(BOOT_SEED0 + 1).alias("_hb"),
         )
         # barrier: stops CollapseProject substituting the md5 trees
         # into every aggregate expression (2R re-evaluations per row;
@@ -1988,7 +1992,8 @@ def _poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_poisson_bootstrap() -> str:
-    from ..functions.hashing import sql_hash32
+    def h(seed: int) -> str:
+        return sql_hash32(f"'{seed}{SEED_SEP}' || CAST(o_orderkey AS VARCHAR)")
 
     def mult(r: int) -> str:
         u = (
@@ -2016,8 +2021,8 @@ def _sql_poisson_bootstrap() -> str:
     WITH o AS (
       SELECT o_orderpriority AS priority,
              CAST(o_totalprice AS DECIMAL(18,2)) AS v,
-             {sql_hash32('o_orderkey', BOOT_SEED0)} AS ha,
-             {sql_hash32('o_orderkey', BOOT_SEED0 + 1)} AS hb
+             {h(BOOT_SEED0)} AS ha,
+             {h(BOOT_SEED0 + 1)} AS hb
       FROM orders
     ),
     wide AS (

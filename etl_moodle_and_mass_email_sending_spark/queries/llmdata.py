@@ -4,6 +4,7 @@ LSH-bucketed ANN), text analysis, and multimodal decode."""
 
 from __future__ import annotations
 
+from ..functions.hashing import hash32, sql_hash32
 from ..functions.text import SQL_WORDS, WORDS
 from ..operators import components, dedup, multimodal, similarity, text_analysis
 from ..operators.util import staged_frame, staged_path, top_k
@@ -791,9 +792,7 @@ def _train_val_split(spark, sf_dir):
     from pyspark.sql import functions as F
 
     docs = _docs(spark, sf_dir)
-    bucket = F.expr(
-        "cast(conv(substring(md5(concat('SPLIT', cast(doc_id as string))), 1, 8), 16, 10) as bigint) % 100"
-    )
+    bucket = F.expr(hash32("concat('SPLIT', cast(doc_id as string))")) % 100
     split = F.when(bucket < 95, "train").otherwise("val")
     return (
         docs.select("lang", split.alias("split"))
@@ -805,9 +804,9 @@ def _train_val_split(spark, sf_dir):
 register(
     "text_train_val_split",
     _train_val_split,
-    """
+    f"""
     SELECT lang,
-           CASE WHEN CAST('0x' || substr(md5('SPLIT' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % 100 < 95
+           CASE WHEN {sql_hash32("'SPLIT' || CAST(doc_id AS VARCHAR)")} % 100 < 95
                 THEN 'train' ELSE 'val' END AS split,
            count(*) AS n_docs
     FROM documents
@@ -2776,11 +2775,7 @@ def _staged_mixture_plan(spark, sf_dir):
     return staged_frame(
         spark,
         ("mixture_plan", sf_dir),
-        lambda: text_analysis._mixture_plan(
-            _docs_sourced(spark, sf_dir),
-            text_analysis.MIX_TEMPERATURE,
-            text_analysis.MIX_MAX_EPOCHS,
-        ),
+        lambda: text_analysis._mixture_plan(_docs_sourced(spark, sf_dir)),
     )
 
 

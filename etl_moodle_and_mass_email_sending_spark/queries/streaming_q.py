@@ -533,13 +533,11 @@ def stream_cms_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stream_cms_sql() -> str:
-    from ..functions.hashing import SEED_SEP
+    from ..functions.hashing import SEED_SEP, sql_hash32
     from ..operators.sketches import CMS_ROWS, CMS_WIDTH
 
-    bucket = (
-        f"CAST('0x' || substr(md5(CAST(t.r AS VARCHAR) || '{SEED_SEP}' || "
-        f"CAST(key AS VARCHAR)), 1, 8) AS BIGINT) % {CMS_WIDTH}"
-    )
+    h = sql_hash32(f"CAST(t.r AS VARCHAR) || '{SEED_SEP}' || CAST(key AS VARCHAR)")
+    bucket = f"{h} % {CMS_WIDTH}"
     return f"""
     WITH keyed AS (SELECT user_id AS key FROM events),
     cells AS (
@@ -662,8 +660,8 @@ def stream_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine = spark.range(200).select(F.col("id").alias("user_id"))
     probe = spine.select(
         "user_id",
-        F.explode(_bloom_buckets(F.col("user_id"))).alias("bit"),
-        F.size(_bloom_buckets(F.col("user_id"))).alias("_need"),
+        F.explode(_bloom_buckets("user_id")).alias("bit"),
+        F.size(_bloom_buckets("user_id")).alias("_need"),
     )
     return (
         probe.join(
@@ -683,14 +681,12 @@ def stream_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stream_bloom_sql() -> str:
-    from ..functions.hashing import SEED_SEP
+    from ..functions.hashing import SEED_SEP, sql_hash32
     from ..operators.sketches import BLOOM_BITS, BLOOM_HASHES
 
     def bucket(r: int, key: str) -> str:
-        return (
-            f"CAST('0x' || substr(md5('{r}{SEED_SEP}' || "
-            f"CAST({key} AS VARCHAR)), 1, 8) AS BIGINT) % {BLOOM_BITS}"
-        )
+        h = sql_hash32(f"'{r}{SEED_SEP}' || CAST({key} AS VARCHAR)")
+        return f"{h} % {BLOOM_BITS}"
 
     seen_arms = " UNION ALL ".join(
         f"SELECT {bucket(r, 'user_id')} AS bit FROM events "

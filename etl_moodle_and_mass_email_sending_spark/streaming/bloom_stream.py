@@ -33,7 +33,7 @@ def on_batch(store_dir: str, batch: DataFrame, batch_id: int) -> None:
         return
     bits = (
         batch.filter(F.col("user_id").isNotNull())
-        .select(F.explode(_bloom_buckets(F.col("user_id"))).alias("bit"))
+        .select(F.explode(_bloom_buckets("user_id")).alias("bit"))
         .distinct()
     )
 

@@ -14,8 +14,11 @@ about; it cannot enumerate heavy hitters without a candidate set
 probes a fixed key spine.
 
 The store commit is ``replay.swap_store``; a crash between its renames
-restores the pre-batch counters, and the checkpoint replays the batch,
-so no batch is ever summed twice.
+restores the pre-batch counters, and the checkpoint replays the batch.
+A batch can also re-run after its commit, when the process dies before
+the checkpoint records it: the store version carries the id of the
+last batch it summed, and ``swap_store`` skips a batch it already holds,
+so no batch is summed twice.
 """
 
 from __future__ import annotations
@@ -46,4 +49,4 @@ def on_batch(store_dir: str, batch: DataFrame, batch_id: int) -> None:
             .agg(F.sum("_cnt").alias("_cnt"))
         )
 
-    swap_store(os.path.join(store_dir, "counters"), merged)
+    swap_store(os.path.join(store_dir, "counters"), merged, batch_id)

@@ -141,7 +141,24 @@ def has_parquet(d: str) -> bool:
     )
 
 
-def swap_store(live: str, build: Callable[[str | None], DataFrame]) -> None:
+# the file inside a store version that names the last batch it applied
+# (leading underscore: parquet readers skip it)
+_APPLIED = "_batch_id"
+
+
+def _applied_batch(live: str) -> int:
+    try:
+        with open(os.path.join(live, _APPLIED)) as f:
+            return int(f.read())
+    except FileNotFoundError:
+        return -1
+
+
+def swap_store(
+    live: str,
+    build: Callable[[str | None], DataFrame],
+    batch_id: int | None = None,
+) -> None:
     """Replace the parquet store at ``live`` with ``build(prior)``, where
     ``prior`` is ``live`` when it holds data and None otherwise.
 
@@ -153,15 +170,27 @@ def swap_store(live: str, build: Callable[[str | None], DataFrame]) -> None:
     renames leaves no live dir, and the next call restores ``.old``
     before building (re-applying the interrupted batch, which the
     stream's checkpoint replays). A stale ``.staging`` from a crash
-    before the first rename is overwritten."""
+    before the first rename is overwritten.
+
+    A stream batch can also re-run after its swap, when the process dies
+    before the checkpoint commits it. For a store that merges by sum
+    that would apply the batch twice, so such a store passes
+    ``batch_id``: it is written into the new version and commits with
+    it, and a call whose ``batch_id`` the live version already holds
+    (or passed) returns without building."""
     live = live.rstrip("/")
     old, staging = live + ".old", live + ".staging"
     if not os.path.isdir(live) and has_parquet(old):
         os.rename(old, live)
     shutil.rmtree(old, ignore_errors=True)
+    if batch_id is not None and _applied_batch(live) >= batch_id:
+        return
     build(live if has_parquet(live) else None).write.mode(
         "overwrite"
     ).parquet(staging)
+    if batch_id is not None:
+        with open(os.path.join(staging, _APPLIED), "w") as f:
+            f.write(str(batch_id))
     if os.path.isdir(live):
         os.rename(live, old)
     os.rename(staging, live)

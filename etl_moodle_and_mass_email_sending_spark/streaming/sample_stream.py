@@ -13,9 +13,10 @@ exact quantile would need every value retained; this is the streaming
 quantile answer at fixed state.
 
 The two stores commit through ``replay.swap_store`` one after the
-other; the dropDuplicates on (group, key) makes a re-merge of the sample
-idempotent, so a crash between the two commits only re-adds the batch
-to the counts it never reached.
+other, each recording the batch id it applied, so a batch re-run after
+either commit skips the store that already holds it: the sum-merged
+counts never add a batch twice (the dropDuplicates on (group, key)
+already made a re-merge of the sample idempotent).
 """
 
 from __future__ import annotations
@@ -25,7 +26,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.sketches import QSK_K, _hash_frac
+from ..functions.hashing import hash_frac
+from ..operators.sketches import QSK_K
 from ..operators.util import top_k
 from .replay import swap_store
 
@@ -41,7 +43,7 @@ def on_batch(store_dir: str, batch: DataFrame, batch_id: int) -> None:
         F.col("event_id").alias("_k"),
         F.col("value").alias("_v"),
     )
-    hashed = rows.withColumn("_frac", _hash_frac(F.col("_k")))
+    hashed = rows.withColumn("_frac", F.expr(hash_frac("cast(_k as string)")))
     counts = rows.groupBy("g").agg(F.count("*").alias("n_rows"))
 
     def merged_sample(prior: str | None) -> DataFrame:
@@ -62,5 +64,5 @@ def on_batch(store_dir: str, batch: DataFrame, batch_id: int) -> None:
             .agg(F.sum("n_rows").alias("n_rows"))
         )
 
-    swap_store(os.path.join(store_dir, "sample"), merged_sample)
-    swap_store(os.path.join(store_dir, "counts"), merged_counts)
+    swap_store(os.path.join(store_dir, "sample"), merged_sample, batch_id)
+    swap_store(os.path.join(store_dir, "counts"), merged_counts, batch_id)

@@ -666,7 +666,9 @@ def test_cms_estimate_dominates_exact_and_ranks_heavy_keys(spark):
     df = spark.createDataFrame(rows, "key string").select(
         F.col("key").alias("user_id")
     )
-    out = sketches.cms_heavy_hitters(df, "user_id", k=5).collect()
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(sketches, "CMS_TOP_K", 5)
+        out = sketches.cms_heavy_hitters(df, "user_id").collect()
     assert out[0]["user_id"] == "hot" and out[0]["n_exact"] == 200
     # CMS error is one-sided: estimate >= exact, always
     assert all(r["cms_estimate"] >= r["n_exact"] for r in out)
@@ -1522,15 +1524,17 @@ class TestMixtureExecute:
         """At temperature 1 the plan is the natural distribution:
         epochs = 1.0 for every source, so the executor must emit each
         document exactly once (floor = 1, fractional epoch = 0)."""
-        from etl_moodle_and_mass_email_sending_spark.operators.text_analysis import (
-            mixture_execute,
+        from etl_moodle_and_mass_email_sending_spark.operators import (
+            text_analysis,
         )
 
         df = spark.createDataFrame(
             [(i, "w " * (i % 7 + 1), f"s{i % 3}") for i in range(60)],
             "doc_id long, text string, source string",
         )
-        out = mixture_execute(df, temperature=1.0).collect()
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(text_analysis, "MIX_TEMPERATURE", 1.0)
+            out = text_analysis.mixture_execute(df).collect()
         assert len(out) == 60
         assert {r["doc_id"] for r in out} == set(range(60))
         assert all(r["copy"] == 1 for r in out)
@@ -1555,7 +1559,7 @@ class TestMixtureExecute:
         df = spark.createDataFrame(
             rows, "doc_id long, text string, source string"
         )
-        out = mixture_execute(df, temperature=2.0, max_epochs=4.0)
+        out = mixture_execute(df)  # MIX_TEMPERATURE 2.0, MIX_MAX_EPOCHS 4.0
         per_doc = {
             (r["source"], r["doc_id"]): r["n"]
             for r in out.groupBy("source", "doc_id")

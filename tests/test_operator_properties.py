@@ -394,7 +394,9 @@ def test_cms_estimate_upper_bounds_exact_on_random_input(spark_mod, keys):
 
     spark = spark_mod
     df = spark.createDataFrame([(k,) for k in keys], "user_id long")
-    out = sketches.cms_heavy_hitters(df, "user_id", k=50).collect()
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(sketches, "CMS_TOP_K", 50)
+        out = sketches.cms_heavy_hitters(df, "user_id").collect()
     truth = Counter(keys)
     assert all(r["cms_estimate"] >= r["n_exact"] for r in out)
     assert all(truth[r["user_id"]] == r["n_exact"] for r in out)
@@ -610,8 +612,8 @@ def test_bottomk_sample_is_rank_mergeable(spark_mod, keys, split):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from etl_moodle_and_mass_email_sending_spark.operators.sketches import (
-        _hash_frac,
+    from etl_moodle_and_mass_email_sending_spark.functions.hashing import (
+        hash_frac,
     )
 
     spark = spark_mod
@@ -624,7 +626,7 @@ def test_bottomk_sample_is_rank_mergeable(spark_mod, keys, split):
         df = spark.createDataFrame(
             [("g", kk, float(kk % 7)) for kk in rows],
             "g string, _k long, _v double",
-        ).withColumn("_frac", _hash_frac(F.col("_k")))
+        ).withColumn("_frac", F.expr(hash_frac("cast(_k as string)")))
         w = Window.partitionBy("g").orderBy("_frac", "_k")
         return (
             df.withColumn("_rn", F.row_number().over(w))
@@ -651,7 +653,7 @@ def test_bottomk_sample_is_rank_mergeable(spark_mod, keys, split):
 def test_two_pass_running_max_matches_reference_window(spark):
     """two_pass_running_max == the textbook unpartitioned cummax window
     on a shuffled integer sequence (including ties and a decreasing
-    tail), across an awkward partition count."""
+    tail), range-split across the session's default parallelism."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -665,7 +667,7 @@ def test_two_pass_running_max_matches_reference_window(spark):
     got = {
         r["ord"]: r["rm"]
         for r in two_pass_running_max(
-            df, [F.col("ord")], "v", out_col="rm", num_partitions=5
+            df, [F.col("ord")], "v", out_col="rm"
         ).collect()
     }
     w = Window.orderBy("ord").rowsBetween(Window.unboundedPreceding, 0)
@@ -1212,12 +1214,14 @@ def test_mixture_execute_matches_bruteforce(spark_mod, docs):
     import math
 
     from etl_moodle_and_mass_email_sending_spark.operators.text_analysis import (
+        MIX_MAX_EPOCHS,
+        MIX_TEMPERATURE,
         SEED_SEP,
         mixture_execute,
     )
 
     spark = spark_mod
-    tau, cap = 2.0, 4.0
+    tau, cap = MIX_TEMPERATURE, MIX_MAX_EPOCHS
     rows = [
         (i, "tok " * nt, f"s{srcix}") for i, (nt, srcix) in enumerate(docs)
     ]
@@ -1250,7 +1254,7 @@ def test_mixture_execute_matches_bruteforce(spark_mod, docs):
                 want[d] = copies
     got = {}
     for r in (
-        mixture_execute(df, temperature=tau, max_epochs=cap)
+        mixture_execute(df)
         .groupBy("doc_id")
         .count()
         .collect()
@@ -1872,6 +1876,7 @@ def test_poisson_bootstrap_matches_python_oracle(spark_mod, rows):
     from pyspark.sql import types as T
 
     from etl_moodle_and_mass_email_sending_spark.functions.hashing import (
+        SEED_SEP,
         hash32,
     )
     from etl_moodle_and_mass_email_sending_spark.queries.finance import (
@@ -1898,8 +1903,12 @@ def test_poisson_bootstrap_matches_python_oracle(spark_mod, rows):
     prepared = df.select(
         "grp",
         "v",
-        hash32(F.col("key"), seed=BOOT_SEED0).alias("_ha"),
-        hash32(F.col("key"), seed=BOOT_SEED0 + 1).alias("_hb"),
+        *[
+            F.expr(
+                hash32(f"concat('{seed}{SEED_SEP}', cast(key as string))")
+            ).alias(name)
+            for name, seed in (("_ha", BOOT_SEED0), ("_hb", BOOT_SEED0 + 1))
+        ],
     )
     got = {
         r["grp"]: r

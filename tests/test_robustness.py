@@ -76,13 +76,19 @@ def test_merge_upsert_rerun_after_crash_matches_uninterrupted(
     assert not os.path.exists(snap + ".staging")
 
 
-@pytest.mark.parametrize("point", sorted(CRASH_POINTS))
+# A batch can also die after the swap committed it but before the
+# stream's checkpoint did: the stream re-runs the whole batch.
+SKETCH_CRASH_POINTS = [*sorted(CRASH_POINTS), "after_second_rename"]
+
+
+@pytest.mark.parametrize("point", SKETCH_CRASH_POINTS)
 def test_sketch_merge_rerun_after_crash_matches_uninterrupted(
     spark, tmp_path, monkeypatch, point
 ):
     """The CMS store sum-merges, so re-applying a batch on top of its own
     leftover output would double its counts: the rerun must start from
-    the pre-batch version, as the stream's checkpoint replay assumes."""
+    the pre-batch version, and a batch the store already summed must be
+    skipped."""
     from etl_moodle_and_mass_email_sending_spark.streaming import cms_stream
 
     b1 = spark.range(0, 60).selectExpr("id % 17 AS user_id")
@@ -95,16 +101,56 @@ def test_sketch_merge_rerun_after_crash_matches_uninterrupted(
     store = str(tmp_path / "store")
     live = os.path.join(store, "counters")
     cms_stream.on_batch(store, b1, 0)
-    _crash_on_rename(monkeypatch, CRASH_POINTS[point](live))
-    with pytest.raises(_Crash):
+    if point == "after_second_rename":
         cms_stream.on_batch(store, b2, 1)
-    monkeypatch.undo()
+    else:
+        _crash_on_rename(monkeypatch, CRASH_POINTS[point](live))
+        with pytest.raises(_Crash):
+            cms_stream.on_batch(store, b2, 1)
+        monkeypatch.undo()
 
     cms_stream.on_batch(store, b2, 1)  # the checkpoint replays batch 1
     assert _rows(spark, live) == _rows(
         spark, os.path.join(want, "counters")
     )
     assert sorted(os.listdir(store)) == ["counters"]
+
+
+def test_sample_stream_rerun_between_its_commits_counts_once(
+    spark, tmp_path, monkeypatch
+):
+    """The bottom-k sample stream commits its sample, then its sum-merged
+    counts. A batch that dies before the counts commit re-runs whole, and
+    one that dies after it re-runs again: both stores end as if the batch
+    ran once."""
+    from etl_moodle_and_mass_email_sending_spark.streaming import (
+        sample_stream,
+    )
+
+    def batch(lo: int, hi: int):
+        return spark.range(lo, hi).selectExpr(
+            "id AS event_id",
+            "CAST(id % 3 AS STRING) AS event_type",
+            "CAST(id % 11 AS DOUBLE) AS value",
+        )
+
+    b1, b2 = batch(0, 60), batch(60, 150)
+    want = str(tmp_path / "want")
+    sample_stream.on_batch(want, b1, 0)
+    sample_stream.on_batch(want, b2, 1)
+
+    store = str(tmp_path / "store")
+    sample_stream.on_batch(store, b1, 0)
+    _crash_on_rename(monkeypatch, os.path.join(store, "counts.staging"))
+    with pytest.raises(_Crash):
+        sample_stream.on_batch(store, b2, 1)
+    monkeypatch.undo()
+    sample_stream.on_batch(store, b2, 1)
+    sample_stream.on_batch(store, b2, 1)
+    for name in ("sample", "counts"):
+        assert _rows(spark, os.path.join(store, name)) == _rows(
+            spark, os.path.join(want, name)
+        )
 
 
 def _stopped_session(barrier: threading.Barrier):
@@ -340,6 +386,7 @@ def test_poisson_bootstrap_overflow_guard_fires(spark):
     from pyspark.sql import types as T
 
     from etl_moodle_and_mass_email_sending_spark.functions.hashing import (
+        SEED_SEP,
         hash32,
     )
     from etl_moodle_and_mass_email_sending_spark.queries.finance import (
@@ -361,8 +408,46 @@ def test_poisson_bootstrap_overflow_guard_fires(spark):
     prepared = df.select(
         "grp",
         "v",
-        hash32(F.col("key"), seed=BOOT_SEED0).alias("_ha"),
-        hash32(F.col("key"), seed=BOOT_SEED0 + 1).alias("_hb"),
+        *[
+            F.expr(
+                hash32(f"concat('{seed}{SEED_SEP}', cast(key as string))")
+            ).alias(name)
+            for name, seed in (("_ha", BOOT_SEED0), ("_hb", BOOT_SEED0 + 1))
+        ],
     )
     with pytest.raises(Exception, match="integer-cents bound"):
         poisson_bootstrap_ci(prepared, group_col="grp").collect()
+
+
+def test_sessionize_emits_a_gap_closed_session_before_the_watermark(
+    spark, tmp_path
+):
+    """The Python sessionizer emits a session as soon as a later event
+    closes it (the stream_sessionize oracle's ``rn > 1`` branch), even
+    when the watermark has not passed the session's end. Spark's
+    ``session_window`` in append mode holds such a session until the
+    watermark passes it, so it cannot replace this path: here one user's
+    two sessions both end inside the last 2 h (the watermark delay)."""
+    import datetime as dt
+
+    from etl_moodle_and_mass_email_sending_spark.streaming import windows
+
+    t0 = dt.datetime(2024, 1, 1, 12, 0)
+    minutes = [0, 5, 60, 65]  # 55 min apart: two sessions at a 30 min gap
+    rows = [
+        (i, t0 + dt.timedelta(minutes=m), 7, "click", float(i + 1), None)
+        for i, m in enumerate(minutes)
+    ]
+    spark.createDataFrame(
+        rows,
+        "event_id long, ts timestamp_ntz, user_id long, event_type string, "
+        "value double, props string",
+    ).coalesce(1).write.parquet(str(tmp_path / "events.parquet"))
+    ev = windows.stream_events(
+        spark, str(tmp_path), staging_dir=str(tmp_path / "stage")
+    )
+    got = windows.run_to_memory_sink(windows.sessionize(ev)).collect()
+    assert [
+        (r.user_id, r.session_start, r.session_end, r.n_events, r.sum_value)
+        for r in got
+    ] == [(7, t0, t0 + dt.timedelta(minutes=5), 2, 3.0)]
