@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .util import top_k
+from .util import sql_top_k, top_k
 
 
 CC_MAX_ITER = 20
@@ -126,15 +126,13 @@ def sql_keep_best_per_cluster(clusters_sql: str, quality_sql: str) -> str:
     return f"""
     WITH clusters AS ({clusters_sql}),
     quality AS ({quality_sql}),
-    ranked AS (
-      SELECT c.component, c.doc_id, q.quality, c.cluster_size,
-             row_number() OVER (PARTITION BY c.component
-                                ORDER BY q.quality DESC, c.doc_id) AS rn
+    scored AS (
+      SELECT c.component, c.doc_id, q.quality, c.cluster_size
       FROM clusters c JOIN quality q USING (doc_id)
     )
     SELECT component, doc_id AS kept_doc_id, quality AS kept_quality,
            cluster_size, cluster_size - 1 AS n_dropped
-    FROM ranked WHERE rn = 1
+    FROM ({sql_top_k("scored", ["component"], ["quality DESC", "doc_id"], 1)})
     """
 
 

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from .util import spread_for_compute, staged_frame, top_k
+from .util import spread_for_compute, sql_top_k, staged_frame, top_k
 from ..functions.hashing import SEED_SEP, py_hash32
 
 TOP_K = 5
@@ -79,6 +79,12 @@ def _nearest(pairs: DataFrame, k: int) -> DataFrame:
     )
 
 
+def _sql_nearest(rel: str, k: int) -> str:
+    """DuckDB twin of ``_nearest`` over a (query_id, vec_id, cosine, ...)
+    relation."""
+    return sql_top_k(rel, ["query_id"], ["cosine DESC", "vec_id"], k)
+
+
 def topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-K neighbors for each query vector (vec_id < N_QUERIES),
     self-match excluded."""
@@ -102,12 +108,7 @@ def sql_topk_bruteforce() -> str:
       SELECT q.query_id, v.vec_id, {cos} AS cosine
       FROM v CROSS JOIN q WHERE v.vec_id <> q.query_id
     )
-    SELECT query_id, vec_id, cosine, rank FROM (
-      SELECT query_id, vec_id, cosine,
-             CAST(row_number() OVER (PARTITION BY query_id
-                  ORDER BY cosine DESC, vec_id) AS INTEGER) AS rank
-      FROM sims
-    ) WHERE rank <= {TOP_K}
+    {_sql_nearest("sims", TOP_K)}
     """
 
 
@@ -161,12 +162,7 @@ def sql_filtered_topk() -> str:
       SELECT q.query_id, v.vec_id, v.label, {cos} AS cosine
       FROM corpus v CROSS JOIN q WHERE v.vec_id <> q.query_id
     )
-    SELECT query_id, vec_id, label, cosine, rank FROM (
-      SELECT query_id, vec_id, label, cosine,
-             CAST(row_number() OVER (PARTITION BY query_id
-                  ORDER BY cosine DESC, vec_id) AS INTEGER) AS rank
-      FROM sims
-    ) WHERE rank <= {TOP_K}
+    {_sql_nearest("sims", TOP_K)}
     """
 
 
@@ -246,12 +242,7 @@ def sql_ann_lsh_topk() -> str:
       SELECT q.query_id, v.vec_id, {cos} AS cosine
       FROM v JOIN q ON v.bucket = q.bucket WHERE v.vec_id <> q.query_id
     )
-    SELECT query_id, vec_id, cosine, rank FROM (
-      SELECT query_id, vec_id, cosine,
-             CAST(row_number() OVER (PARTITION BY query_id
-                  ORDER BY cosine DESC, vec_id) AS INTEGER) AS rank
-      FROM sims
-    ) WHERE rank <= {TOP_K}
+    {_sql_nearest("sims", TOP_K)}
     """
 
 
@@ -338,15 +329,15 @@ def ivf_topk_with_centroids(v: DataFrame, cent: DataFrame) -> DataFrame:
     )
 
 
-def _duck_ivf_assign(src: str, n_best: int) -> str:
+def _duck_ivf_assign(src: str, n_best: int, cent: str = "cent") -> str:
     cos = _duck_cosine("s.vec", "c.cvec")
+    scored = f"""
+        SELECT s.vec_id, s.vec, c.cid, {cos} AS cosine
+        FROM ({src}) s CROSS JOIN {cent} c"""
     return f"""
       SELECT vec_id, vec, cid FROM (
-        SELECT s.vec_id, s.vec, c.cid,
-               row_number() OVER (PARTITION BY s.vec_id
-                    ORDER BY {cos} DESC, c.cid) AS crank
-        FROM ({src}) s CROSS JOIN cent c
-      ) WHERE crank <= {n_best}
+        {sql_top_k(scored, ["vec_id"], ["cosine DESC", "cid"], n_best)}
+      )
     """
 
 
@@ -367,12 +358,7 @@ def sql_ivf_topk(nprobe: int = NPROBE) -> str:
       FROM corpus v JOIN probes q ON v.cid = q.cid
       WHERE v.vec_id <> q.query_id
     )
-    SELECT query_id, vec_id, cosine, rank FROM (
-      SELECT query_id, vec_id, cosine,
-             CAST(row_number() OVER (PARTITION BY query_id
-                  ORDER BY cosine DESC, vec_id) AS INTEGER) AS rank
-      FROM sims
-    ) WHERE rank <= {TOP_K}
+    {_sql_nearest("sims", TOP_K)}
     """
 
 
@@ -456,12 +442,12 @@ def sql_kmeans_refined_assign(
     a1 AS ({_duck_ivf_assign("SELECT vec_id, vec FROM base", 1)}),
     cent1 AS (SELECT cid, {mean_vec} AS cvec FROM a1 GROUP BY cid),
     scored AS (
-      SELECT v.vec_id, c.cid AS cluster, {cos} AS cos_to_centroid,
-             row_number() OVER (PARTITION BY v.vec_id
-                  ORDER BY {cos} DESC, c.cid) AS rn
+      SELECT v.vec_id, c.cid AS cluster, {cos} AS cos_to_centroid
       FROM base v CROSS JOIN cent1 c
     )
-    SELECT vec_id, cluster, cos_to_centroid FROM scored WHERE rn = 1
+    SELECT vec_id, cluster, cos_to_centroid FROM (
+      {sql_top_k("scored", ["vec_id"], ["cos_to_centroid DESC", "cluster"], 1)}
+    )
     """
 
 
@@ -645,12 +631,7 @@ def sql_sq_topk() -> str:
                  i -> q.qq[i] * v.qvec[i])) AS BIGINT) AS qscore
       FROM qv v CROSS JOIN q WHERE v.vec_id <> q.query_id
     )
-    SELECT query_id, vec_id, qscore, rank FROM (
-      SELECT query_id, vec_id, qscore,
-             CAST(row_number() OVER (PARTITION BY query_id
-                  ORDER BY qscore DESC, vec_id) AS INTEGER) AS rank
-      FROM sims
-    ) WHERE rank <= {TOP_K}
+    {sql_top_k("sims", ["query_id"], ["qscore DESC", "vec_id"], TOP_K)}
     """
 
 
@@ -753,9 +734,8 @@ def sql_semantic_dedup() -> str:
       WHERE {cos} >= {SEMDEDUP_THRESHOLD!r}
     )
     SELECT b_id AS vec_id, cluster, a_id AS dup_of, cosine FROM (
-      SELECT pairs.*, row_number() OVER (PARTITION BY b_id ORDER BY a_id) AS rn
-      FROM pairs
-    ) WHERE rn = 1
+      {sql_top_k("pairs", ["b_id"], ["a_id"], 1)}
+    )
     """
 
 
@@ -802,12 +782,7 @@ def sql_hard_negatives() -> str:
              {cos} AS cosine
       FROM v CROSS JOIN q WHERE v.label <> q.query_label
     )
-    SELECT query_id, query_label, vec_id, neg_label, cosine, rank FROM (
-      SELECT sims.*,
-             CAST(row_number() OVER (PARTITION BY query_id
-                  ORDER BY cosine DESC, vec_id) AS INTEGER) AS rank
-      FROM sims
-    ) WHERE rank <= {HARD_NEG_K}
+    {_sql_nearest("sims", HARD_NEG_K)}
     """
 
 
@@ -851,6 +826,18 @@ def _l2sq_duck(a: str, b: str) -> str:
     return (
         f"round(list_dot_product({a}, {a}) - 2 * list_dot_product({a}, {b})"
         f" + list_dot_product({b}, {b}), 6)"
+    )
+
+
+def _sql_pq_nearest(subs: str, books: str) -> str:
+    """Each (vec_id, m, sub) row of ``subs`` with its nearest (m, cid,
+    cvec) codeword of ``books`` at squared-L2 distance ``d``, ties by
+    cid."""
+    d = _l2sq_duck("s.sub", "b.cvec")
+    return sql_top_k(
+        f"SELECT s.vec_id, s.m, s.sub, b.cid, {d} AS d"
+        f" FROM {subs} s JOIN {books} b USING (m)",
+        ["vec_id", "m"], ["d", "cid"], 1,
     )
 
 
@@ -954,7 +941,6 @@ def pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def sql_pq_topk() -> str:
-    d_seed = _l2sq_duck("s.sub", "c.cvec")
     d_lut = _l2sq_duck("s.sub", "b.cvec")
     sub_means = ", ".join(
         f"round(avg(sub[{i + 1}]), 6)" for i in range(PQ_SUB)
@@ -969,25 +955,13 @@ def sql_pq_topk() -> str:
     seed AS (
       SELECT m, vec_id AS cid, sub AS cvec FROM subs WHERE vec_id < {PQ_K}
     ),
-    a1 AS (
-      SELECT vec_id, m, sub, cid FROM (
-        SELECT s.vec_id, s.m, s.sub, c.cid,
-               row_number() OVER (PARTITION BY s.vec_id, s.m
-                    ORDER BY {d_seed}, c.cid) AS rn
-        FROM subs s JOIN seed c USING (m)
-      ) WHERE rn = 1
-    ),
+    a1 AS (SELECT vec_id, m, sub, cid FROM ({_sql_pq_nearest("subs", "seed")})),
     books AS (
       SELECT m, cid, [{sub_means}] AS cvec
       FROM a1 GROUP BY m, cid
     ),
     codes AS (
-      SELECT vec_id, m, cid AS code FROM (
-        SELECT s.vec_id, s.m, b.cid,
-               row_number() OVER (PARTITION BY s.vec_id, s.m
-                    ORDER BY {d_lut}, b.cid) AS rn
-        FROM subs s JOIN books b USING (m)
-      ) WHERE rn = 1
+      SELECT vec_id, m, cid AS code FROM ({_sql_pq_nearest("subs", "books")})
     ),
     lut AS (
       SELECT s.vec_id AS query_id, s.m, b.cid AS code, {d_lut} AS d
@@ -1000,12 +974,7 @@ def sql_pq_topk() -> str:
       WHERE c.vec_id <> l.query_id
       GROUP BY 1, 2
     )
-    SELECT query_id, vec_id, adc_dist, rank FROM (
-      SELECT query_id, vec_id, adc_dist,
-             CAST(row_number() OVER (PARTITION BY query_id
-                  ORDER BY adc_dist, vec_id) AS INTEGER) AS rank
-      FROM adc
-    ) WHERE rank <= {TOP_K}
+    {sql_top_k("adc", ["query_id"], ["adc_dist", "vec_id"], TOP_K)}
     """
 
 
@@ -1057,27 +1026,24 @@ def mrl_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sql_mrl_topk() -> str:
     pcos = _duck_cosine("q.pqvec", "p.pvec")
     cos = _duck_cosine("q.qvec", "v.vec")
+    cand = sql_top_k(
+        f"SELECT q.query_id, p.vec_id, {pcos} AS pcos"
+        " FROM pv p CROSS JOIN q WHERE p.vec_id <> q.query_id",
+        ["query_id"], ["pcos DESC", "vec_id"], MRL_CAND,
+    )
     return f"""
     WITH v AS (SELECT vec_id, vec FROM ({_DUCK_VECTORS})),
     pv AS (SELECT vec_id, vec, vec[1:{MRL_DIM}] AS pvec FROM v),
     q AS (SELECT vec_id AS query_id, vec AS qvec, pvec AS pqvec
           FROM pv WHERE vec_id < {N_QUERIES}),
-    cand AS (
-      SELECT query_id, vec_id FROM (
-        SELECT q.query_id, p.vec_id,
-               row_number() OVER (PARTITION BY q.query_id
-                    ORDER BY {pcos} DESC, p.vec_id) AS rn
-        FROM pv p CROSS JOIN q WHERE p.vec_id <> q.query_id
-      ) WHERE rn <= {MRL_CAND}
-    )
-    SELECT query_id, vec_id, cosine, rank FROM (
-      SELECT c.query_id, c.vec_id, {cos} AS cosine,
-             CAST(row_number() OVER (PARTITION BY c.query_id
-                  ORDER BY {cos} DESC, c.vec_id) AS INTEGER) AS rank
+    cand AS (SELECT query_id, vec_id FROM ({cand})),
+    sims AS (
+      SELECT c.query_id, c.vec_id, {cos} AS cosine
       FROM cand c
       JOIN v ON c.vec_id = v.vec_id
       JOIN q ON c.query_id = q.query_id
-    ) WHERE rank <= {TOP_K}
+    )
+    {_sql_nearest("sims", TOP_K)}
     """
 
 
@@ -1127,17 +1093,17 @@ def _knn_directed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_knn_directed() -> str:
     cos = _duck_cosine("a.vec", "b.vec")
-    return f"""
-      SELECT src, dst, cosine FROM (
-        SELECT a.vec_id AS src, b.vec_id AS dst, {cos} AS cosine,
-               row_number() OVER (PARTITION BY a.vec_id
-                    ORDER BY {cos} DESC, b.vec_id) AS rn
+    pairs = f"""
+        SELECT a.vec_id AS src, b.vec_id AS dst, {cos} AS cosine
         FROM (SELECT vec_id, vec, {_duck_bucket('vec')} AS bucket
               FROM ({_DUCK_VECTORS})) a
         JOIN (SELECT vec_id, vec, {_duck_bucket('vec')} AS bucket
               FROM ({_DUCK_VECTORS})) b
-          ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-      ) WHERE rn <= {KNN_K}
+          ON a.bucket = b.bucket AND a.vec_id <> b.vec_id"""
+    return f"""
+      SELECT src, dst, cosine FROM (
+        {sql_top_k(pairs, ["src"], ["cosine DESC", "dst"], KNN_K)}
+      )
     """
 
 
@@ -1158,18 +1124,8 @@ def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def sql_knn_graph() -> str:
-    cos = _duck_cosine("a.vec", "b.vec")
     return f"""
-    WITH v AS (SELECT vec_id, vec, {_duck_bucket('vec')} AS bucket
-               FROM ({_DUCK_VECTORS})),
-    directed AS (
-      SELECT src, dst, cosine FROM (
-        SELECT a.vec_id AS src, b.vec_id AS dst, {cos} AS cosine,
-               row_number() OVER (PARTITION BY a.vec_id
-                    ORDER BY {cos} DESC, b.vec_id) AS rn
-        FROM v a JOIN v b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-      ) WHERE rn <= {KNN_K}
-    )
+    WITH directed AS ({_sql_knn_directed()})
     SELECT d.src, d.dst, d.cosine
     FROM directed d
     JOIN directed r ON d.src = r.dst AND d.dst = r.src
@@ -1290,12 +1246,8 @@ def sql_graph_ann_topk() -> str:
     def hop(prev: str, beam: str, fresh: str, nxt: str) -> str:
         return f"""
     {beam} AS (
-      SELECT query_id, cand_id FROM (
-        SELECT query_id, cand_id,
-               row_number() OVER (PARTITION BY query_id
-                    ORDER BY cosine DESC, cand_id) AS rn
-        FROM {prev}
-      ) WHERE rn <= {GA_BEAM}
+      SELECT query_id, cand_id FROM ({sql_top_k(
+          prev, ["query_id"], ["cosine DESC", "cand_id"], GA_BEAM)})
     ),
     {fresh} AS (
       SELECT DISTINCT b.query_id, e.dst AS cand_id
@@ -1324,12 +1276,8 @@ def sql_graph_ann_topk() -> str:
            FROM q CROSS JOIN e0),
     s0 AS ({score('c0')}
     ),{hops}
-    SELECT query_id, cand_id AS vec_id, cosine, rank FROM (
-      SELECT query_id, cand_id, cosine,
-             CAST(row_number() OVER (PARTITION BY query_id
-                  ORDER BY cosine DESC, cand_id) AS INTEGER) AS rank
-      FROM s{GA_HOPS}
-    ) WHERE rank <= {TOP_K}
+    SELECT query_id, cand_id AS vec_id, cosine, rank FROM ({sql_top_k(
+        f"s{GA_HOPS}", ["query_id"], ["cosine DESC", "cand_id"], TOP_K)})
     """
 
 
@@ -1472,8 +1420,6 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def sql_ivfpq_topk() -> str:
-    cos = _duck_cosine("s.vec", "c.cvec")
-    d_seed = _l2sq_duck("s.sub", "c.cvec")
     d_book = _l2sq_duck("s.sub", "b.cvec")
     resid = (
         f"list_transform(range(1, {DIM + 1}), i -> vec[i] - cvec[i])"
@@ -1481,17 +1427,22 @@ def sql_ivfpq_topk() -> str:
     sub_means = ", ".join(
         f"round(avg(sub[{i + 1}]), 6)" for i in range(PQ_SUB)
     )
+    codes = sql_top_k(
+        f"SELECT s.vec_id, s.cid, s.m, b.code, {d_book} AS d"
+        " FROM rsubs s JOIN books b USING (m)",
+        ["vec_id", "cid", "m"], ["d", "code"], 1,
+    )
+    probes = _duck_ivf_assign(
+        f"SELECT vec_id, vec FROM v WHERE vec_id < {N_QUERIES}", NPROBE
+    )
     return f"""
     WITH v AS (SELECT vec_id, vec FROM ({_DUCK_VECTORS})),
     cent AS (SELECT vec_id AS cid, vec AS cvec FROM v
              WHERE vec_id < {N_CENTROIDS}),
     assigned AS (
-      SELECT vec_id, cid, {resid} AS rvec FROM (
-        SELECT s.vec_id, s.vec, c.cid, c.cvec,
-               row_number() OVER (PARTITION BY s.vec_id
-                    ORDER BY {cos} DESC, c.cid) AS rn
-        FROM v s CROSS JOIN cent c
-      ) WHERE rn = 1
+      SELECT vec_id, cid, {resid} AS rvec
+      FROM ({_duck_ivf_assign("SELECT vec_id, vec FROM v", 1)})
+      JOIN cent USING (cid)
     ),
     rsubs AS (
       SELECT vec_id, cid, CAST(t.r AS INTEGER) AS m,
@@ -1503,32 +1454,16 @@ def sql_ivfpq_topk() -> str:
       WHERE vec_id < {PQ_K}
     ),
     a1 AS (
-      SELECT vec_id, m, sub, cid FROM (
-        SELECT s.vec_id, s.m, s.sub, c.cid,
-               row_number() OVER (PARTITION BY s.vec_id, s.m
-                    ORDER BY {d_seed}, c.cid) AS rn
-        FROM rsubs s JOIN seed c USING (m)
-      ) WHERE rn = 1
+      SELECT vec_id, m, sub, cid FROM ({_sql_pq_nearest("rsubs", "seed")})
     ),
     books AS (
       SELECT m, cid AS code, [{sub_means}] AS cvec
       FROM a1 GROUP BY m, cid
     ),
-    codes AS (
-      SELECT vec_id, cid, m, code FROM (
-        SELECT s.vec_id, s.cid, s.m, b.code,
-               row_number() OVER (PARTITION BY s.vec_id, s.cid, s.m
-                    ORDER BY {d_book}, b.code) AS rn
-        FROM rsubs s JOIN books b USING (m)
-      ) WHERE rn = 1
-    ),
+    codes AS (SELECT vec_id, cid, m, code FROM ({codes})),
     probes AS (
-      SELECT vec_id AS query_id, cid, {resid} AS rvec FROM (
-        SELECT s.vec_id, s.vec, c.cid, c.cvec,
-               row_number() OVER (PARTITION BY s.vec_id
-                    ORDER BY {cos} DESC, c.cid) AS rn
-        FROM v s CROSS JOIN cent c WHERE s.vec_id < {N_QUERIES}
-      ) WHERE rn <= {NPROBE}
+      SELECT vec_id AS query_id, cid, {resid} AS rvec
+      FROM ({probes}) JOIN cent USING (cid)
     ),
     qsubs AS (
       SELECT query_id, cid, CAST(t.r AS INTEGER) AS m,
@@ -1546,12 +1481,7 @@ def sql_ivfpq_topk() -> str:
       WHERE c.vec_id <> l.query_id
       GROUP BY 1, 2
     )
-    SELECT query_id, vec_id, adc_dist, rank FROM (
-      SELECT query_id, vec_id, adc_dist,
-             CAST(row_number() OVER (PARTITION BY query_id
-                  ORDER BY adc_dist, vec_id) AS INTEGER) AS rank
-      FROM adc
-    ) WHERE rank <= {TOP_K}
+    {sql_top_k("adc", ["query_id"], ["adc_dist", "vec_id"], TOP_K)}
     """
 
 
@@ -1724,15 +1654,12 @@ def sql_label_prop() -> str:
       SELECT vec_id AS dst, label AS nlabel FROM v
       WHERE vec_id % {LP_SEED_MOD} = 0
     ),
-    pred AS (
-      SELECT src, nlabel, n_votes FROM (
-        SELECT src, nlabel, count(*) AS n_votes,
-               row_number() OVER (PARTITION BY src
-                    ORDER BY count(*) DESC, nlabel) AS rn
-        FROM und JOIN seeds USING (dst)
-        GROUP BY src, nlabel
-      ) WHERE rn = 1
-    )
+    votes AS (
+      SELECT src, nlabel, count(*) AS n_votes
+      FROM und JOIN seeds USING (dst)
+      GROUP BY src, nlabel
+    ),
+    pred AS ({sql_top_k("votes", ["src"], ["n_votes DESC", "nlabel"], 1)})
     SELECT v.vec_id, v.label AS true_label, p.nlabel AS predicted_label,
            CAST(coalesce(p.n_votes, 0) AS BIGINT) AS n_votes,
            p.nlabel = v.label AS correct
@@ -1831,12 +1758,7 @@ def sql_ann_multiprobe_topk() -> str:
       SELECT q.query_id, v.vec_id, {cos} AS cosine
       FROM v JOIN q ON v.bucket = q.bucket WHERE v.vec_id <> q.query_id
     )
-    SELECT query_id, vec_id, cosine, rank FROM (
-      SELECT query_id, vec_id, cosine,
-             CAST(row_number() OVER (PARTITION BY query_id
-                  ORDER BY cosine DESC, vec_id) AS INTEGER) AS rank
-      FROM sims
-    ) WHERE rank <= {TOP_K}
+    {_sql_nearest("sims", TOP_K)}
     """
 
 
@@ -2272,23 +2194,17 @@ def sql_cluster_purity() -> str:
     WITH base AS ({_DUCK_VECTORS}),
     cent AS (SELECT vec_id AS cid, vec AS cvec FROM base
              WHERE vec_id < {N_CENTROIDS}),
+    scored AS (
+      SELECT s.vec_id, s.label, c.cid, {cos} AS cosine
+      FROM base s CROSS JOIN cent c
+    ),
     assigned AS (
-      SELECT vec_id, label, cid FROM (
-        SELECT s.vec_id, s.label, c.cid,
-               row_number() OVER (PARTITION BY s.vec_id
-                    ORDER BY {cos} DESC, c.cid) AS r
-        FROM base s CROSS JOIN cent c
-      ) WHERE r = 1
+      SELECT vec_id, label, cid
+      FROM ({sql_top_k("scored", ["vec_id"], ["cosine DESC", "cid"], 1)})
     ),
     per AS (SELECT cid, label, count(*) AS n FROM assigned GROUP BY 1, 2),
     tot AS (SELECT cid, sum(n) AS nt FROM per GROUP BY 1),
-    maj AS (
-      SELECT cid, label, n FROM (
-        SELECT *, row_number() OVER (PARTITION BY cid
-                       ORDER BY n DESC, label) AS r
-        FROM per
-      ) WHERE r = 1
-    )
+    maj AS ({sql_top_k("per", ["cid"], ["n DESC", "label"], 1)})
     SELECT m.cid, CAST(t.nt AS BIGINT) AS n_vectors,
            m.label AS majority_label,
            round(CAST(m.n AS DOUBLE) / t.nt, 6) AS purity
@@ -2585,8 +2501,6 @@ def pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def sql_pq_distortion() -> str:
-    d_seed = _l2sq_duck("s.sub", "c.cvec")
-    d_book = _l2sq_duck("s.sub", "b.cvec")
     sub_means = ", ".join(
         f"round(avg(sub[{i + 1}]), 6)" for i in range(PQ_SUB)
     )
@@ -2600,25 +2514,11 @@ def sql_pq_distortion() -> str:
     seed AS (
       SELECT m, vec_id AS cid, sub AS cvec FROM subs WHERE vec_id < {PQ_K}
     ),
-    a1 AS (
-      SELECT vec_id, m, sub, cid FROM (
-        SELECT s.vec_id, s.m, s.sub, c.cid,
-               row_number() OVER (PARTITION BY s.vec_id, s.m
-                    ORDER BY {d_seed}, c.cid) AS rn
-        FROM subs s JOIN seed c USING (m)
-      ) WHERE rn = 1
-    ),
+    a1 AS (SELECT vec_id, m, sub, cid FROM ({_sql_pq_nearest("subs", "seed")})),
     books AS (
       SELECT m, cid, [{sub_means}] AS cvec FROM a1 GROUP BY m, cid
     ),
-    best AS (
-      SELECT m, d FROM (
-        SELECT s.m, {d_book} AS d,
-               row_number() OVER (PARTITION BY s.vec_id, s.m
-                    ORDER BY {d_book}, b.cid) AS rn
-        FROM subs s JOIN books b USING (m)
-      ) WHERE rn = 1
-    )
+    best AS (SELECT m, d FROM ({_sql_pq_nearest("subs", "books")}))
     SELECT m, CAST(count(*) AS BIGINT) AS n_vectors,
            round(CAST(avg(CAST(d AS DECIMAL(18,6))) AS DOUBLE), 6)
              AS avg_dist,
@@ -3033,22 +2933,11 @@ def sql_bq_topk() -> str:
                   + bit_count(xor(p.hi, q.qhi)) AS INTEGER) AS hamming
       FROM packed p CROSS JOIN q WHERE p.vec_id <> q.query_id
     ),
-    ranked_cand AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                ORDER BY hamming, vec_id) AS crank
-      FROM cand
-    ),
     rer AS (
-      SELECT query_id, vec_id, hamming, {cos} AS cosine
-      FROM ranked_cand c WHERE crank <= {BQ_RERANK}
+      SELECT query_id, vec_id, hamming, {cos} AS cosine FROM ({sql_top_k(
+          "cand", ["query_id"], ["hamming", "vec_id"], BQ_RERANK)}) c
     )
-    SELECT query_id, vec_id, hamming, cosine,
-           CAST(rank AS INTEGER) AS rank
-    FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                ORDER BY cosine DESC, vec_id) AS rank
-      FROM rer
-    ) WHERE rank <= {TOP_K}
+    {_sql_nearest("rer", TOP_K)}
     """
 
 
@@ -3193,10 +3082,8 @@ def sql_mmr_topk() -> str:
       GROUP BY 1, 2, 3
     ),
     p{k} AS (
-      SELECT query_id, vec_id, rel, score, {k} AS rank FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                  ORDER BY score DESC, vec_id) AS rn
-        FROM sc{k}) WHERE rn = 1
+      SELECT query_id, vec_id, rel, score, {k} AS rank FROM ({sql_top_k(
+          f"sc{k}", ["query_id"], ["score DESC", "vec_id"], 1)})
     ),
     sel{k} AS (SELECT query_id, vec_id FROM sel{prev}
                UNION ALL SELECT query_id, vec_id FROM p{k})"""
@@ -3213,10 +3100,8 @@ def sql_mmr_topk() -> str:
       FROM v CROSS JOIN q WHERE v.vec_id <> q.query_id
     ),
     cands AS (
-      SELECT query_id, vec_id, rel FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                  ORDER BY rel DESC, vec_id) AS rn FROM sims
-      ) WHERE rn <= {MMR_CANDIDATES}
+      SELECT query_id, vec_id, rel FROM ({sql_top_k(
+          "sims", ["query_id"], ["rel DESC", "vec_id"], MMR_CANDIDATES)})
     ),
     pv AS (
       SELECT c.query_id, c.vec_id, c.rel, v.vec
@@ -3231,10 +3116,7 @@ def sql_mmr_topk() -> str:
       SELECT query_id, vec_id, rel,
              floor({MMR_LAMBDA}e0 * rel * 1e6 + 0.5) / 1e6 AS score,
              1 AS rank
-      FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                  ORDER BY rel DESC, vec_id) AS rn FROM pv
-      ) WHERE rn = 1
+      FROM ({sql_top_k("pv", ["query_id"], ["rel DESC", "vec_id"], 1)})
     ),
     sel1 AS (SELECT query_id, vec_id FROM p1){"".join(layers)}
     SELECT query_id, CAST(rank AS INTEGER) AS rank, vec_id,
@@ -3356,23 +3238,18 @@ def sql_knn_classifier() -> str:
     WITH v AS ({_DUCK_VECTORS}),
     q AS (SELECT vec_id AS query_id, vec, label AS true_label
           FROM v WHERE vec_id < {N_QUERIES}),
-    knn AS (
-      SELECT query_id, vec_id, label FROM (
-        SELECT q.query_id, v.vec_id, v.label,
-               row_number() OVER (PARTITION BY q.query_id
-                 ORDER BY {cos} DESC, v.vec_id) AS rank
-        FROM v CROSS JOIN q WHERE v.vec_id <> q.query_id
-      ) WHERE rank <= {TOP_K}
+    sims AS (
+      SELECT q.query_id, v.vec_id, v.label, {cos} AS cosine
+      FROM v CROSS JOIN q WHERE v.vec_id <> q.query_id
     ),
+    knn AS (SELECT query_id, vec_id, label FROM ({_sql_nearest("sims", TOP_K)})),
     votes AS (
       SELECT query_id, label, CAST(count(*) AS BIGINT) AS n_votes
       FROM knn GROUP BY 1, 2
     ),
     pred AS (
-      SELECT query_id, label AS pred_label, n_votes FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                  ORDER BY n_votes DESC, label) AS rn FROM votes
-      ) WHERE rn = 1
+      SELECT query_id, label AS pred_label, n_votes FROM ({sql_top_k(
+          "votes", ["query_id"], ["n_votes DESC", "label"], 1)})
     )
     SELECT q.query_id, q.true_label, p.pred_label, p.n_votes,
            p.pred_label = q.true_label AS correct
@@ -3869,14 +3746,14 @@ def sql_ivf_recluster() -> str:
     WITH {_sql_recluster_ctes()},
     routed AS (
       SELECT m.cid, m.vec_id, c.sub,
-             row_number() OVER (PARTITION BY m.cid, m.vec_id
-                  ORDER BY {_duck_cosine("m.vec", "c.cvec")} DESC,
-                           c.sub) AS rn
+             {_duck_cosine("m.vec", "c.cvec")} AS cosine
       FROM members m JOIN centc c USING (cid)
     ),
     child AS (
       SELECT cid, sub, CAST(count(*) AS BIGINT) AS n_after
-      FROM routed WHERE rn = 1 GROUP BY 1, 2
+      FROM ({sql_top_k(
+          "routed", ["cid", "vec_id"], ["cosine DESC", "sub"], 1)})
+      GROUP BY 1, 2
     )
     SELECT cid, CAST(0 AS INTEGER) AS sub, false AS split,
            n_before, share_before,
@@ -3994,17 +3871,6 @@ def recall_after_recluster(
 def sql_recall_after_recluster() -> str:
     cos = _duck_cosine("q.qvec", "v.vec")
 
-    def assign2(src: str, n_best: int) -> str:
-        c = _duck_cosine("s.vec", "c.cvec")
-        return f"""
-          SELECT vec_id, vec, cid FROM (
-            SELECT s.vec_id, s.vec, c.cid,
-                   row_number() OVER (PARTITION BY s.vec_id
-                        ORDER BY {c} DESC, c.cid) AS crank
-            FROM ({src}) s CROSS JOIN cent2 c
-          ) WHERE crank <= {n_best}
-        """
-
     def arm_rows(name: str) -> str:
         return " UNION ALL ".join(
             f"""
@@ -4029,10 +3895,15 @@ def sql_recall_after_recluster() -> str:
     ),
     truth AS ({sql_topk_bruteforce()}),
     pre_arm AS ({sql_ivf_topk()}),
-    post_corpus AS ({assign2("SELECT vec_id, vec FROM base", 1)}),
+    post_corpus AS (
+      {_duck_ivf_assign("SELECT vec_id, vec FROM base", 1, "cent2")}
+    ),
     post_probes AS (
       SELECT vec_id AS query_id, vec AS qvec, cid FROM (
-        {assign2(f"SELECT vec_id, vec FROM base WHERE vec_id < {N_QUERIES}", NPROBE)}
+        {_duck_ivf_assign(
+            f"SELECT vec_id, vec FROM base WHERE vec_id < {N_QUERIES}",
+            NPROBE, "cent2",
+        )}
       )
     ),
     post_sims AS (
@@ -4041,12 +3912,7 @@ def sql_recall_after_recluster() -> str:
       WHERE v.vec_id <> q.query_id
     ),
     post_arm AS (
-      SELECT query_id, vec_id, cosine, rank FROM (
-        SELECT query_id, vec_id, cosine,
-               CAST(row_number() OVER (PARTITION BY query_id
-                    ORDER BY cosine DESC, vec_id) AS INTEGER) AS rank
-        FROM post_sims
-      ) WHERE rank <= {TOP_K}
+      {_sql_nearest("post_sims", TOP_K)}
     )
     {arm_rows("pre")}
     UNION ALL
@@ -4133,8 +3999,6 @@ def sql_pq_refresh() -> str:
     sub_means = ", ".join(
         f"round(avg(sub[{i + 1}]), 6)" for i in range(PQ_SUB)
     )
-    d_seed = _l2sq_duck("s.sub", "c.cvec")
-    d_book = _l2sq_duck("s.sub", "b.cvec")
 
     def train_and_score(tag: str, train_filter: str) -> str:
         """CTE fragment: train books on the filtered slice, score ALL
@@ -4146,25 +4010,15 @@ def sql_pq_refresh() -> str:
       WHERE vec_id < {PQ_K}
     ),
     a1_{tag} AS (
-      SELECT vec_id, m, sub, cid FROM (
-        SELECT s.vec_id, s.m, s.sub, c.cid,
-               row_number() OVER (PARTITION BY s.vec_id, s.m
-                    ORDER BY {d_seed}, c.cid)
-                 AS rn
-        FROM tsubs_{tag} s JOIN seed_{tag} c USING (m)
-      ) WHERE rn = 1
+      SELECT vec_id, m, sub, cid
+      FROM ({_sql_pq_nearest(f"tsubs_{tag}", f"seed_{tag}")})
     ),
     books_{tag} AS (
       SELECT m, cid, [{sub_means}] AS cvec
       FROM a1_{tag} GROUP BY m, cid
     ),
     best_{tag} AS (
-      SELECT m, d FROM (
-        SELECT s.m, {d_book} AS d,
-               row_number() OVER (PARTITION BY s.vec_id, s.m
-                    ORDER BY {d_book}, b.cid) AS rn
-        FROM subs s JOIN books_{tag} b USING (m)
-      ) WHERE rn = 1
+      SELECT m, d FROM ({_sql_pq_nearest("subs", f"books_{tag}")})
     )"""
 
     return f"""
@@ -4527,23 +4381,18 @@ def sql_label_noise_audit() -> str:
     WITH v AS ({_DUCK_VECTORS}),
     q AS (SELECT vec_id AS query_id, vec, label AS own_label
           FROM v WHERE vec_id < {NOISE_AUDIT_N}),
-    knn AS (
-      SELECT query_id, vec_id, label FROM (
-        SELECT q.query_id, v.vec_id, v.label,
-               row_number() OVER (PARTITION BY q.query_id
-                 ORDER BY {cos} DESC, v.vec_id) AS rank
-        FROM v CROSS JOIN q WHERE v.vec_id <> q.query_id
-      ) WHERE rank <= {NOISE_K}
+    sims AS (
+      SELECT q.query_id, v.vec_id, v.label, {cos} AS cosine
+      FROM v CROSS JOIN q WHERE v.vec_id <> q.query_id
     ),
+    knn AS (SELECT query_id, vec_id, label FROM ({_sql_nearest("sims", NOISE_K)})),
     votes AS (
       SELECT query_id, label, CAST(count(*) AS BIGINT) AS n_votes
       FROM knn GROUP BY 1, 2
     ),
     maj AS (
-      SELECT query_id, label AS maj_label FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                  ORDER BY n_votes DESC, label) AS rn FROM votes
-      ) WHERE rn = 1
+      SELECT query_id, label AS maj_label FROM ({sql_top_k(
+          "votes", ["query_id"], ["n_votes DESC", "label"], 1)})
     ),
     per_ex AS (
       SELECT q.query_id, q.own_label,
@@ -4555,13 +4404,13 @@ def sql_label_noise_audit() -> str:
         ON vo.query_id = q.query_id AND vo.label = q.own_label
       JOIN maj m ON m.query_id = q.query_id
     ),
+    confusions AS (
+      SELECT own_label, maj_label, count(*) AS c
+      FROM per_ex WHERE flagged GROUP BY own_label, maj_label
+    ),
     conf AS (
-      SELECT own_label, maj_label AS top_confused_with FROM (
-        SELECT own_label, maj_label, count(*) AS c,
-               row_number() OVER (PARTITION BY own_label
-                 ORDER BY count(*) DESC, maj_label) AS rn
-        FROM per_ex WHERE flagged GROUP BY own_label, maj_label
-      ) WHERE rn = 1
+      SELECT own_label, maj_label AS top_confused_with FROM ({sql_top_k(
+          "confusions", ["own_label"], ["c DESC", "maj_label"], 1)})
     ),
     cls AS (
       SELECT own_label, CAST(count(*) AS BIGINT) AS n_audited,

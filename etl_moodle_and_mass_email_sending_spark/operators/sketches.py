@@ -35,7 +35,7 @@ from ..functions.hashing import (
     sql_hash60,
     sql_hash_frac,
 )
-from .util import salt, salted_top_k
+from .util import salt, salted_top_k, sql_top_k
 
 KMV_K = 64
 
@@ -82,18 +82,12 @@ def sql_kmv_distinct(table_sql: str, group_col: str, key_col: str) -> str:
              {sql_hash_frac(f"CAST({key_col} AS VARCHAR)")} AS frac
       FROM pairs
     ),
-    ranked AS (
-      SELECT {group_col}, frac,
-             row_number() OVER (PARTITION BY {group_col} ORDER BY frac)
-               AS rn
-      FROM hashed
-    ),
     exact AS (
       SELECT {group_col}, count(*) AS n_exact FROM pairs GROUP BY 1
     ),
     kth AS (
-      SELECT {group_col}, max(frac) AS hk FROM ranked
-      WHERE rn <= {KMV_K} GROUP BY 1
+      SELECT {group_col}, max(frac) AS hk
+      FROM ({sql_top_k("hashed", [group_col], ["frac"], KMV_K)}) GROUP BY 1
     )
     SELECT e.{group_col}, e.n_exact,
            CASE WHEN e.n_exact < {KMV_K} THEN CAST(e.n_exact AS DOUBLE)
@@ -511,11 +505,8 @@ def sql_kmv_setops(
     ),
     hashed AS (SELECT part, {frac} AS frac FROM pairs),
     topk AS (
-      SELECT part, frac FROM (
-        SELECT part, frac,
-               row_number() OVER (PARTITION BY part ORDER BY frac) AS rn
-        FROM hashed
-      ) WHERE rn <= {KMV_K}
+      SELECT part, frac
+      FROM ({sql_top_k("hashed", ["part"], ["frac"], KMV_K)})
     ),
     flags AS (
       SELECT frac,
@@ -523,13 +514,7 @@ def sql_kmv_setops(
              max(CASE WHEN part = '{b}' THEN 1 ELSE 0 END) AS in_b
       FROM topk GROUP BY 1
     ),
-    merged AS (
-      SELECT * FROM (
-        SELECT frac, in_a, in_b,
-               row_number() OVER (ORDER BY frac) AS rn
-        FROM flags
-      ) WHERE rn <= {KMV_K}
-    ),
+    merged AS ({sql_top_k("flags", [], ["frac"], KMV_K)}),
     sketch AS (
       SELECT max(frac) AS hk, count(*) AS n_merged,
              sum(in_a * in_b) AS n_both
@@ -795,11 +780,7 @@ def sql_sample_quantiles(
       FROM ({table_sql}) WHERE {value_col} IS NOT NULL
     ),
     sample AS (
-      SELECT g, k, v FROM (
-        SELECT g, k, v,
-               row_number() OVER (PARTITION BY g ORDER BY frac, k) AS rn
-        FROM src
-      ) WHERE rn <= {QSK_K}
+      SELECT g, k, v FROM ({sql_top_k("src", ["g"], ["frac", "k"], QSK_K)})
     ),
     exact_r AS (
       SELECT g, v,

@@ -14,7 +14,7 @@ lambdas (which evaluate interpreted, outside codegen) are preceded by
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
@@ -38,7 +38,9 @@ from ..functions.text import (
     sql_word_grams,
     word_grams,
 )
-from .util import salt, salted_top_k, spread_for_compute, top_k
+from .util import (
+    salt, salted_top_k, spread_for_compute, sql_top_k, top_k,
+)
 
 # Tiny built-in stopword lists (shared constants for both engines).
 STOPWORDS = {
@@ -1256,12 +1258,8 @@ def sql_bm25_topk(corpus_sql: str) -> str:
       CROSS JOIN stats s
       GROUP BY q.query_id, tf.doc_id
     )
-    SELECT query_id, doc_id, score, rank FROM (
-      SELECT query_id, doc_id, score,
-             CAST(row_number() OVER (PARTITION BY query_id
-                  ORDER BY score DESC, doc_id) AS INTEGER) AS rank
-      FROM scored
-    ) WHERE rank <= {BM25_TOP_K}
+    SELECT query_id, doc_id, score, rank FROM ({sql_top_k(
+        "scored", ["query_id"], ["score DESC", "doc_id"], BM25_TOP_K)})
     """
 
 
@@ -1312,12 +1310,8 @@ def sql_top_terms(corpus_sql: str) -> str:
              count(DISTINCT doc_id) AS doc_count
       FROM toks GROUP BY lang, token
     )
-    SELECT lang, token, term_count, doc_count, rank FROM (
-      SELECT lang, token, term_count, doc_count,
-             CAST(row_number() OVER (PARTITION BY lang
-                  ORDER BY term_count DESC, token) AS INTEGER) AS rank
-      FROM counts
-    ) WHERE rank <= {TOP_TERMS_K}
+    SELECT lang, token, term_count, doc_count, rank FROM ({sql_top_k(
+        "counts", ["lang"], ["term_count DESC", "token"], TOP_TERMS_K)})
     """
 
 
@@ -1571,11 +1565,8 @@ def sql_tfidf_keywords(corpus_sql: str) -> str:
              round(tf.tf * ln((n_docs.n + 1) / (df.df + 1.0)), 9) AS tfidf
       FROM tf JOIN df USING (token) CROSS JOIN n_docs
     )
-    SELECT doc_id, token, tf, df, tfidf, rank FROM (
-      SELECT *, CAST(row_number() OVER (PARTITION BY doc_id
-               ORDER BY tfidf DESC, token) AS INTEGER) AS rank
-      FROM scored
-    ) WHERE rank <= {TFIDF_TOP_K}
+    SELECT doc_id, token, tf, df, tfidf, rank FROM ({sql_top_k(
+        "scored", ["doc_id"], ["tfidf DESC", "token"], TFIDF_TOP_K)})
     """
 
 
@@ -2259,12 +2250,8 @@ def sql_weighted_sample(corpus_sql: str) -> str:
              round(ln({u}) / n_chars, 12) AS key
       FROM ({corpus_sql})
     )
-    SELECT lang, doc_id, n_chars, CAST(rank AS INTEGER) AS rank FROM (
-      SELECT lang, doc_id, n_chars,
-             row_number() OVER (PARTITION BY lang
-                  ORDER BY key DESC, doc_id) AS rank
-      FROM keyed
-    ) WHERE rank <= {WSAMPLE_N}
+    SELECT lang, doc_id, n_chars, rank FROM ({sql_top_k(
+        "keyed", ["lang"], ["key DESC", "doc_id"], WSAMPLE_N)})
     """
 
 
@@ -2434,10 +2421,7 @@ def sql_zipf_fit(corpus_sql: str) -> str:
       GROUP BY 1, 2
     ),
     ranked AS (
-      SELECT lang, cnt,
-             row_number() OVER (PARTITION BY lang
-                  ORDER BY cnt DESC, token) AS rank
-      FROM counts QUALIFY rank <= {ZIPF_TOP}
+      {sql_top_k("counts", ["lang"], ["cnt DESC", "token"], ZIPF_TOP)}
     ),
     pts AS (
       SELECT lang,
@@ -3167,24 +3151,21 @@ def sql_line_dedup(corpus_sql: str) -> str:
 def ppl_buckets(corpus: DataFrame) -> DataFrame:
     """(doc_id, lang, avg_logprob, ppl_bucket): per-language
     head/middle/tail thirds by unigram-LM score."""
-    from .util import ntile_from_rank, two_pass_rank_in_groups
+    from .util import ntile
 
     scored = unigram_logprob(corpus).select("doc_id", "avg_logprob")
     labeled = scored.join(corpus.select("doc_id", "lang"), "doc_id")
-    ranked = two_pass_rank_in_groups(
-        labeled,
-        "lang",
-        [F.col("avg_logprob").desc(), F.col("doc_id")],
-        out_col="_rank",
+    tiled = ntile(
+        labeled, "lang", [F.col("avg_logprob").desc(), F.col("doc_id")], 3,
+        "_tile",
     )
-    totals = ranked.groupBy("lang").agg(F.count("*").alias("_n"))
-    tile = ntile_from_rank(F.col("_rank"), F.col("_n"), 3)
+    tile = F.col("_tile")
     bucket = (
         F.when(tile == 1, F.lit("head"))
         .when(tile == 2, F.lit("middle"))
         .otherwise(F.lit("tail"))
     )
-    return ranked.join(F.broadcast(totals), "lang").select(
+    return tiled.select(
         "doc_id", "lang", "avg_logprob", bucket.alias("ppl_bucket")
     )
 
@@ -4701,7 +4682,7 @@ def curriculum_stages(
     frame over the same corpus — the registered query passes the
     session-staged score scan shared with llm_corpus_release
     (round 12, VERDICT r11 item 4)."""
-    from .util import ntile_from_rank, two_pass_rank
+    from .util import ntile
 
     if quality is None:
         quality = quality_score(corpus.select("doc_id", "text")).select(
@@ -4715,13 +4696,9 @@ def curriculum_stages(
         .alias("_qm"),
     )
     labeled = scored.join(corpus.select("doc_id", "source"), "doc_id")
-    ranked = two_pass_rank(
-        labeled, [F.col("_qm"), F.col("doc_id")], out_col="_rank"
-    )
-    total = ranked.agg(F.max("_rank").alias("_n"))
-    staged = ranked.crossJoin(F.broadcast(total)).withColumn(
+    staged = ntile(
+        labeled, None, [F.col("_qm"), F.col("doc_id")], CURRICULUM_STAGES,
         "stage",
-        ntile_from_rank(F.col("_rank"), F.col("_n"), CURRICULUM_STAGES),
     )
     per = staged.groupBy("stage").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -5057,7 +5034,7 @@ def corpus_release(
     that pass from this call). The registered queries session-stage
     each once and share them, instead of re-deriving the gram
     fan-out / sampler / score scan / plan totals per query."""
-    from .util import ntile_from_rank, two_pass_rank, two_pass_running_sum
+    from .util import ntile, two_pass_running_sum
 
     # The emitted sample spine feeds THREE sections (source, shard,
     # stage); without a checkpoint Catalyst re-runs the whole sampler
@@ -5160,17 +5137,13 @@ def corpus_release(
         .cast("bigint")
         .alias("_qm"),
     )
-    ranked = two_pass_rank(
-        percopy.join(q, "doc_id"),
-        [F.col("_qm"), F.col("doc_id")],
-        out_col="_rank",
-    )
-    totn = ranked.agg(F.max("_rank").alias("_n"))
     stage = (
-        ranked.crossJoin(F.broadcast(totn))
-        .withColumn(
+        ntile(
+            percopy.join(q, "doc_id"),
+            None,
+            [F.col("_qm"), F.col("doc_id")],
+            RELEASE_STAGES,
             "stage",
-            ntile_from_rank(F.col("_rank"), F.col("_n"), RELEASE_STAGES),
         )
         .groupBy("stage")
         .agg(
@@ -5369,11 +5342,7 @@ def sql_dsir_execute(corpus_sql: str) -> str:
       FROM w JOIN ({corpus_sql}) c USING (doc_id)
     ),
     samp AS (
-      SELECT * FROM (
-        SELECT *, row_number() OVER (ORDER BY score DESC, doc_id)
-                 AS rk
-        FROM scored
-      ) WHERE rk <= {DSIR_SAMPLE_N}
+      {sql_top_k("scored", [], ["score DESC", "doc_id"], DSIR_SAMPLE_N)}
     ),
     a AS (
       SELECT lang, CAST(count(*) AS BIGINT) AS n_docs, sum(wm) AS wa
@@ -6106,8 +6075,9 @@ def watermark_detect(corpus: DataFrame) -> DataFrame:
     source): docs scored, z>2 / z>3 flag counts, mean green fraction
     and mean z (quantized-decimal exact means)."""
     # the tokens are one projected column ``_w``, so the projection
-    # splits each text once (the `_np >= 1` filter Catalyst pushes below
-    # it keeps its own split); pair values bind as zip_with lambda
+    # splits each text once; the scored-doc condition lives in the
+    # aggregates, since a `_np >= 1` filter is pushed below the
+    # projection with its own split. Pair values bind as zip_with lambda
     # VARIABLES (p, c) — an element_at over the split expression inside
     # the lambda re-tokenized the document once per pair, O(tokens²)
     # splits (measured 6.6 s → 1.15 s at sf0.1)
@@ -6131,19 +6101,21 @@ def watermark_detect(corpus: DataFrame) -> DataFrame:
         (F.col("_n") - 1).alias("_np"),
         F.col("_ng").alias("_g"),
     )
+    scored = F.col("_np") >= 1
     gf = F.col("_g").cast("double") / F.col("_np")
     z = (
         (gf - F.lit(WM_GAMMA))
         * F.sqrt(F.col("_np").cast("double"))
         / F.sqrt(F.lit(WM_GAMMA * (1.0 - WM_GAMMA)))
     )
-    scored = perdoc.filter(F.col("_np") >= 1).select(
+    rolled = perdoc.select(
         "source",
-        F.round(gf, 6).cast("decimal(18,6)").alias("_gf6"),
-        F.round(z, 6).cast("decimal(18,6)").alias("_z6"),
-    )
-    rolled = scored.groupBy("source").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_scored"),
+        scored.alias("_scored"),
+        F.when(scored, F.round(gf, 6).cast("decimal(18,6)")).alias("_gf6"),
+        F.when(scored, F.round(z, 6).cast("decimal(18,6)")).alias("_z6"),
+    ).groupBy("source").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+        F.count_if("_scored").cast("bigint").alias("n_scored"),
         F.coalesce(
             F.sum((F.col("_z6") > 2).cast("long")), F.lit(0)
         ).cast("bigint").alias("n_flagged_z2"),
@@ -6153,25 +6125,25 @@ def watermark_detect(corpus: DataFrame) -> DataFrame:
         F.sum("_gf6").alias("_sgf"),
         F.sum("_z6").alias("_sz"),
     )
-    totals = corpus.groupBy("source").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs")
-    )
-    return totals.join(rolled, "source", "left").select(
+
+    def mean(total: str) -> Column:
+        """NULL for a source with no scored doc."""
+        return F.round(
+            F.when(
+                F.col("n_scored") > 0,
+                F.col(total).cast("double") / F.col("n_scored"),
+            ),
+            6,
+        )
+
+    return rolled.select(
         "source",
         "n_docs",
-        F.coalesce("n_scored", F.lit(0)).cast("bigint").alias("n_scored"),
-        F.coalesce("n_flagged_z2", F.lit(0)).cast("bigint").alias(
-            "n_flagged_z2"
-        ),
-        F.coalesce("n_flagged_z3", F.lit(0)).cast("bigint").alias(
-            "n_flagged_z3"
-        ),
-        F.round(
-            F.col("_sgf").cast("double") / F.col("n_scored"), 6
-        ).alias("avg_green_frac"),
-        F.round(F.col("_sz").cast("double") / F.col("n_scored"), 6).alias(
-            "avg_z"
-        ),
+        "n_scored",
+        "n_flagged_z2",
+        "n_flagged_z3",
+        mean("_sgf").alias("avg_green_frac"),
+        mean("_sz").alias("avg_z"),
     )
 
 

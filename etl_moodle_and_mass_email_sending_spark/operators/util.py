@@ -404,6 +404,21 @@ def top_k(
     )
 
 
+def sql_top_k(rel: str, by: list, order: list, k: int | str) -> str:
+    """DuckDB twin of ``top_k``: a query over ``rel`` (a relation name or
+    a query) keeping the ``k`` first rows of each ``by`` group in
+    ``order``, numbered 1..k as INTEGER in ``rank`` after ``rel``'s
+    columns. ``by`` and ``order`` are SQL terms over ``rel``'s columns;
+    an empty ``by`` ranks globally, and ``k`` may be a SQL expression."""
+    part = f"PARTITION BY {', '.join(by)} " if by else ""
+    src = rel if rel.isidentifier() else f"({rel})"
+    return (
+        f"SELECT *, CAST(row_number() OVER ({part}ORDER BY "
+        f"{', '.join(order)}) AS INTEGER) AS rank "
+        f"FROM {src} QUALIFY rank <= {k}"
+    )
+
+
 TOP_K_SALTS = 16
 
 
@@ -452,3 +467,24 @@ def ntile_from_rank(
         )
         .cast("int")
     )
+
+
+def ntile(
+    frame: DataFrame, by: str | None, order: list, n: int, col: str
+) -> DataFrame:
+    """Spark twin of ``ntile(n) OVER ([PARTITION BY by] ORDER BY order)``
+    into ``col``, without a single-task sort: a two-pass rank (per ``by``
+    group when given), each group's row count, broadcast back, and
+    ``ntile_from_rank``. ``order`` must totally order rows within a
+    group."""
+    if by:
+        ranked = two_pass_rank_in_groups(frame, by, order, out_col="_rank")
+        totals = ranked.groupBy(by).agg(F.count(F.lit(1)).alias("_n"))
+        counted = ranked.join(F.broadcast(totals), by)
+    else:
+        ranked = two_pass_rank(frame, order, out_col="_rank")
+        totals = ranked.agg(F.count(F.lit(1)).alias("_n"))
+        counted = ranked.crossJoin(F.broadcast(totals))
+    return counted.withColumn(
+        col, ntile_from_rank(F.col("_rank"), F.col("_n"), n)
+    ).drop("_rank", "_n")

@@ -575,7 +575,7 @@ register(
 
 def _zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sketches import zorder_value
-    from ..operators.util import ntile_from_rank, two_pass_rank
+    from ..operators.util import ntile
 
     e = load_table(spark, sf_dir, "events").select(
         "event_id",
@@ -585,25 +585,9 @@ def _zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("epoch_hour"),
     )
     z = e.withColumn("zvalue", zorder_value("user_id", "epoch_hour"))
-    ranked = two_pass_rank(
-        z, [F.col("zvalue"), F.col("event_id")], out_col="_rank"
-    )
-    # total row count as a broadcast 1-row aggregate over the ranked frame
-    # (cheap: the rank's range shuffle is checkpointed) — never collected
-    # driver-side.
-    total = ranked.agg(F.max("_rank").alias("_n"))
-    return (
-        ranked.crossJoin(F.broadcast(total))
-        .select(
-            "event_id",
-            "user_id",
-            "epoch_hour",
-            "zvalue",
-            ntile_from_rank(
-                F.col("_rank"), F.col("_n"), 32
-            ).alias("file_bucket"),
-        )
-    )
+    return ntile(
+        z, None, [F.col("zvalue"), F.col("event_id")], 32, "file_bucket"
+    ).select("event_id", "user_id", "epoch_hour", "zvalue", "file_bucket")
 
 
 def _sql_zorder_layout() -> str:
@@ -1611,7 +1595,7 @@ ZX_N_PROBES = 16  # probes per dimension, evenly spaced in the domain
 
 def _zorder_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sketches import zorder_value
-    from ..operators.util import ntile_from_rank, two_pass_rank_in_groups
+    from ..operators.util import ntile
 
     e = load_table(spark, sf_dir, "events").select(
         "event_id",
@@ -1646,20 +1630,9 @@ def _zorder_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id",
         )
     )
-    ranked = two_pass_rank_in_groups(
-        both_in,
-        "layout",
-        [F.col("_ord"), F.col("event_id")],
-        out_col="_rank",
-    )
-    tot = ranked.groupBy("layout").agg(F.max("_rank").alias("_n"))
-    both = ranked.join(F.broadcast(tot), "layout").select(
-        "layout",
-        "user_id",
-        "epoch_hour",
-        ntile_from_rank(F.col("_rank"), F.col("_n"), ZX_BUCKETS).alias(
-            "_bucket"
-        ),
+    both = ntile(
+        both_in, "layout", [F.col("_ord"), F.col("event_id")], ZX_BUCKETS,
+        "_bucket",
     )
     env = both.groupBy("layout", "_bucket").agg(
         F.min("user_id").alias("_minu"),

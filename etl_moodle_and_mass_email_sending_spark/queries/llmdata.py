@@ -7,7 +7,7 @@ from __future__ import annotations
 from ..functions.hashing import hash32, sql_hash32
 from ..functions.text import SQL_WORDS, WORDS
 from ..operators import components, dedup, multimodal, similarity, text_analysis
-from ..operators.util import staged_frame, staged_path, top_k
+from ..operators.util import sql_top_k, staged_frame, staged_path, top_k
 from ..registry import register
 
 _CORPUS_SQL = dedup.sql_dup_corpus()
@@ -2366,11 +2366,8 @@ def _sql_dedup_survivor_quality() -> str:
     ),
     minid AS (SELECT component, min(doc_id) AS doc_id FROM cq GROUP BY 1),
     best AS (
-      SELECT doc_id FROM (
-        SELECT doc_id, row_number() OVER (PARTITION BY component
-             ORDER BY quality DESC, doc_id) AS rn
-        FROM cq
-      ) WHERE rn = 1
+      SELECT doc_id FROM ({sql_top_k(
+          "cq", ["component"], ["quality DESC", "doc_id"], 1)})
     ),
     sel AS (
       SELECT 'all' AS policy, doc_id FROM cq
@@ -2930,11 +2927,9 @@ def _sql_dedup_mirror_score() -> str:
       GROUP BY 1, 2
     ),
     top AS (
-      SELECT source, counterpart, counterpart_docs FROM (
-        SELECT *, row_number() OVER (PARTITION BY source
-             ORDER BY counterpart_docs DESC, counterpart) AS rn
-        FROM pairwise
-      ) WHERE rn = 1
+      SELECT source, counterpart, counterpart_docs FROM ({sql_top_k(
+          "pairwise", ["source"], ["counterpart_docs DESC", "counterpart"],
+          1)})
     )
     SELECT p.source, p.n_docs, p.n_cross_dup,
            round(CAST(p.n_cross_dup AS DOUBLE) / p.n_docs, 6)

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.text import SQL_WORDS, sql_word_grams
-from ..operators.util import scratch_dir
+from ..operators.util import scratch_dir, sql_top_k
 from ..registry import register
 from ..streaming import joins
 from ..streaming import windows as sw
@@ -395,13 +395,11 @@ def stream_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STREAM_UPSERT_LATEST_SQL = """
-SELECT user_id, event_id, event_type, value FROM (
-  SELECT user_id, event_id, event_type, value,
-         row_number() OVER (PARTITION BY user_id
-              ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) AS rn
-  FROM events
-) WHERE rn = 1
+STREAM_UPSERT_LATEST_SQL = f"""
+SELECT user_id, event_id, event_type, value FROM ({sql_top_k(
+    "SELECT user_id, event_id, event_type, value, CAST(ts AS TIMESTAMP) AS ts"
+    " FROM events",
+    ["user_id"], ["ts DESC", "event_id DESC"], 1)})
 """
 
 register("stream_upsert_latest", stream_upsert_latest, STREAM_UPSERT_LATEST_SQL)

@@ -12,7 +12,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, load_tables
-from ..operators.util import top_k
+from ..operators.util import sql_top_k, top_k
 from ..registry import register
 from .tpch import _dec
 
@@ -41,14 +41,12 @@ def _top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 register(
     "rel_top_orders_per_customer",
     _top_orders,
-    """
+    f"""
     SELECT o_custkey, o_orderkey,
            CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS totalprice, rank
-    FROM (
-      SELECT o_custkey, o_orderkey, o_totalprice,
-             CAST(row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS INTEGER) AS rank
-      FROM orders
-    ) WHERE rank <= 3
+    FROM ({sql_top_k(
+        "SELECT o_custkey, o_orderkey, o_totalprice FROM orders",
+        ["o_custkey"], ["o_totalprice DESC", "o_orderkey"], 3)})
     """,
 )
 
@@ -182,18 +180,14 @@ register(
     _latest_per_key,
     # oracle = the textbook window form; equivalent because the
     # (ts, event_id) tie-break is a total order per user
-    """
+    f"""
     SELECT user_id,
            event_id AS last_event_id,
            CAST(ts AS TIMESTAMP) AS last_ts,
            event_type AS last_event_type,
            CAST(CAST(value AS DECIMAL(18,2)) AS DOUBLE) AS last_value
-    FROM (
-        SELECT *, row_number() OVER (
-                 PARTITION BY user_id ORDER BY ts DESC, event_id DESC
-               ) AS rn
-        FROM events
-    ) WHERE rn = 1
+    FROM ({sql_top_k(
+        "events", ["user_id"], ["ts DESC", "event_id DESC"], 1)})
     """,
 )
 

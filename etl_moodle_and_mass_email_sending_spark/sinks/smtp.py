@@ -23,6 +23,7 @@ not a transformation; throughput is connection-bound, not CPU-bound.
 
 from __future__ import annotations
 
+import smtplib
 import time
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass
@@ -78,14 +79,23 @@ def _send_partition_factory(
         n = fail_spec[email]
         return n < 0 or attempt <= n
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        conn = None
-        try:
-            if not cfg.dry_run:
-                import smtplib
+    def connect() -> smtplib.SMTP_SSL:
+        conn = smtplib.SMTP_SSL(cfg.host, cfg.port)
+        conn.login(cfg.sender, cfg.password)
+        return conn
 
-                conn = smtplib.SMTP_SSL(cfg.host, cfg.port)
-                conn.login(cfg.sender, cfg.password)
+    def close(conn: smtplib.SMTP_SSL) -> None:
+        try:
+            conn.quit()
+        except smtplib.SMTPServerDisconnected:
+            pass  # the server already dropped it: nothing left to close
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # None in a dry run, and after the server drops the connection:
+        # the next attempt reconnects, so a drop costs one attempt, not
+        # every remaining row's retries on a dead socket
+        conn = None if cfg.dry_run else connect()
+        try:
             for pdf in batches:
                 out = []
                 for row in pdf.itertuples(index=False):
@@ -95,12 +105,19 @@ def _send_partition_factory(
                         try:
                             if fail_hook(row.email, attempt):
                                 raise RuntimeError("injected failure")
-                            if conn is not None:
+                            if not cfg.dry_run:
+                                if conn is None:
+                                    conn = connect()
                                 msg = _build_message(cfg.sender, row)
                                 conn.send_message(msg)
                             break
                         except Exception as exc:  # noqa: BLE001
                             error = str(exc)
+                            if conn is not None and isinstance(
+                                exc, smtplib.SMTPServerDisconnected
+                            ):
+                                close(conn)
+                                conn = None
                             if attempt == MAX_RETRIES:
                                 status = "FAILED"
                             elif not cfg.dry_run:
@@ -120,7 +137,7 @@ def _send_partition_factory(
                 )
         finally:
             if conn is not None:
-                conn.quit()
+                close(conn)
 
     return run
 

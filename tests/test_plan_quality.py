@@ -951,3 +951,66 @@ def test_manifest_scan_prunes_file_mo_as_partition_filter(
     assert any(
         "file_mo" in f and (" IN (" in f or " INSET " in f) for f in pf
     ), plan
+
+
+def test_watermark_detect_splits_each_text_once(spark, registry_queries):
+    """The tokenizer runs in one operator: a `_np >= 1` filter would be
+    pushed below the token projection with its own split (the scan's
+    DataFilters line only echoes a pushed filter, so it is not
+    counted)."""
+    plan = _plan(registry_queries["text_watermark_detect"](spark, SF_SMALL))
+    splits = [
+        ln for ln in plan.splitlines()
+        if "split(" in ln and "FileScan" not in ln
+    ]
+    assert len(splits) == 1, plan
+
+
+def test_plan_dump_is_identical_across_fresh_sessions():
+    """tests/plan_dump.py is the executed-plan identity check between two
+    commits, so two dumps of one query, each planned in its own fresh
+    session, must be byte-identical."""
+    import pathlib
+    import subprocess
+    import sys
+
+    script = pathlib.Path(__file__).with_name("plan_dump.py")
+    dumps = [
+        subprocess.run(
+            [sys.executable, str(script), "rel_profile_table", "--sf", SF_SMALL],
+            capture_output=True, text=True, check=True, timeout=600,
+        ).stdout
+        for _ in range(2)
+    ]
+    assert "Expand" in dumps[0] and "gid#" in dumps[0]
+    assert dumps[0] == dumps[1]
+
+
+def test_plan_dump_normalises_each_expand_on_its_own():
+    """Each Expand's gid renumbering reaches only the filters of the
+    aggregates above it, and only lambda variables lose their numeric
+    suffix: a real column named ``sub_1`` is still told from ``sub_2``."""
+    from tests.plan_dump import normalise
+
+    def expand(node, rows, filters):
+        return (
+            f"({node}) Expand\nArguments: [{rows}], [x#1, y#2, gid#3]\n\n"
+            f"({node + 1}) HashAggregate\nFunctions [2]: [count(x#1) "
+            f"FILTER (WHERE (gid#3 = {filters[0]})), count(y#2) "
+            f"FILTER (WHERE (gid#3 = {filters[1]}))]\n\n"
+        )
+
+    second = expand(5, "[b#4, null, 0], [null, b#4, 1]", (0, 1))
+    plan = expand(3, "[a#4, null, 1], [null, a#4, 0]", (1, 0)) + second
+    reordered = (
+        expand(3, "[null, a#4, 1], [a#4, null, 0]", (0, 1)) + second
+    )
+    assert normalise(plan) == normalise(reordered)
+    swapped = plan.replace(
+        second, expand(5, "[b#4, null, 0], [null, b#4, 1]", (1, 0))
+    )
+    assert normalise(plan) != normalise(swapped)
+
+    scan = "PushedFilters: [IsNotNull(sub_1), LessThan(sub_2,5)]"
+    assert normalise(scan) != normalise(scan.replace("sub_1", "sub_9"))
+    assert normalise("[lambda x_7#12 + 1]") == normalise("[lambda x_9#4 + 1]")

@@ -126,10 +126,12 @@ def test_csv_single_file_sink(spark, tmp_path):
     assert sorted(lines[1:]) == ["a,1", "b,2"]
 
 
-def _drive_worker(monkeypatch, cfg, fail_spec=None, n=3):
+def _drive_worker(monkeypatch, cfg, fail_spec=None, n=3, drop_after=None):
     """Run the send worker in-process on one pandas batch (no Spark) with
     a fake SMTP_SSL connection; return (receipts, sleeps, sent emails,
-    connections opened)."""
+    connections opened). With ``drop_after``, the first connection is
+    dropped by the server once that many messages are sent: every later
+    call on it raises, as ``smtplib`` does on a closed socket."""
     import smtplib
 
     import pandas as pd
@@ -141,15 +143,28 @@ def _drive_worker(monkeypatch, cfg, fail_spec=None, n=3):
     class FakeSMTP:
         def __init__(self, host, port):
             opened.append((host, port))
+            self.dropped = False
 
         def login(self, user, password):
             pass
 
+        def _check(self):
+            if self.dropped:
+                raise smtplib.SMTPServerDisconnected(
+                    "please run connect() first"
+                )
+
         def send_message(self, msg):
+            self._check()
+            if len(opened) == 1 and len(sent) == drop_after:
+                self.dropped = True
+                raise smtplib.SMTPServerDisconnected(
+                    "Connection unexpectedly closed"
+                )
             sent.append(msg["To"])
 
         def quit(self):
-            pass
+            self._check()
 
     monkeypatch.setattr(smtplib, "SMTP_SSL", FakeSMTP)
     monkeypatch.setattr(smtp.time, "sleep", sleeps.append)
@@ -190,6 +205,25 @@ def test_retry_backoff_is_linear_then_sends(monkeypatch):
     assert row["status"] == "SENT" and row["attempts"] == 3
     assert row["error"] is None
     assert sent == [f"user{i}@x.cl" for i in range(3)]
+
+
+def test_dropped_connection_reconnects_and_sends_each_row_once(monkeypatch):
+    """A server drop after row 2 costs row 3 one attempt and one backoff:
+    the worker reconnects, every row ends SENT exactly once, and closing
+    the dead connection does not fail the task."""
+    from etl_moodle_and_mass_email_sending_spark.sinks.smtp import SmtpConfig
+
+    receipts, sleeps, sent, opened = _drive_worker(
+        monkeypatch, SmtpConfig(dry_run=False), n=5, drop_after=2
+    )
+    emails = [f"user{i}@x.cl" for i in range(5)]
+    assert sent == emails
+    assert len(opened) == 2 and sleeps == [2.0]
+    assert (receipts["status"] == "SENT").all()
+    assert receipts["error"].isna().all()
+    assert receipts["attempts"].to_dict() == {
+        e: 2 if e == "user2@x.cl" else 1 for e in emails
+    }
 
 
 def test_dry_run_never_sleeps_or_connects(monkeypatch):
